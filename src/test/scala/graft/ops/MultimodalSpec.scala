@@ -1,21 +1,59 @@
 package graft.ops
 
+import java.nio.file.{Files, Path, Paths}
+
 import graft.SparkTestBase
+import graft.formats.SoABin
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 /** Multimodal tests. Round 2: the decode kernel is REAL for image
   * (javax.imageio) and WAV audio (javax.sound) — pure-JDK codecs, decoded
   * distributed inside the batched mapPartitions boundary, with generated
   * PNG/WAV fixtures asserting true dimensions, luminance grids, RMS
   * envelopes, and payload resize. The deterministic stub remains the
-  * fallback for codecs the JDK lacks (video), and ingest schema, batch
-  * shape, metadata transforms, and the feature-table contract are
-  * exercised on the reference's own binary snapshots either way.
+  * fallback for codecs the JDK lacks (video). The ingest, batch-shape,
+  * metadata, feature-table and frame-sampling tests treat SoA snapshots as
+  * opaque binary payloads: they run on the reference's own snapshot files
+  * when present, and otherwise on deterministic SoA snapshots synthesized
+  * with [[graft.formats.SoABin.writeOne]] into a suite-owned temp directory.
   */
-class MultimodalSpec extends SparkTestBase {
+class MultimodalSpec extends SparkTestBase with BeforeAndAfterAll {
 
-  // opaque binary payloads: the reference's own snapshot files
-  private val binGlob = "/root/reference/BrazilSplitTest/Output/MLSOut0000[0-3]*.bin"
+  private val referenceDir = "/root/reference/BrazilSplitTest/Output"
+  private var synthDir: Option[Path] = None
+
+  // opaque binary payloads: the reference's own snapshot files, else
+  // synthesized ones under the same name template. Particle counts give
+  // payloads below one 100000-byte frame stride up to the reference size
+  // (n = 49400, 790,404 B), so frame sampling sees 1, 1, 2 and 7 frames.
+  private lazy val binGlob: String = {
+    val dir =
+      if (Files.exists(Paths.get(referenceDir, "MLSOut00000000.bin"))) referenceDir
+      else {
+        val tmp = Files.createTempDirectory("mm_soa")
+        synthDir = Some(tmp)
+        Seq(1000, 6250, 12500, 49400).zipWithIndex.foreach { case (n, k) =>
+          val snap = spark.range(n).select(
+            col("id").as("particle_id"),
+            (col("id") * 1e-4).cast("float").as("ux"),
+            (col("id") * -2e-4).cast("float").as("uy"),
+            (lit(k) * 0.5).cast("float").as("uz"),
+            lit(1.0f).as("flag"))
+          SoABin.writeOne(snap, tmp.resolve(f"MLSOut${k * 250}%08d.bin").toString)
+        }
+        tmp.toString
+      }
+    s"$dir/MLSOut0000[0-3]*.bin"
+  }
+
+  // the synthesized directory is flat, and deleteOnExit would skip it
+  // while it still holds files
+  override def afterAll(): Unit =
+    try synthDir.foreach { d =>
+      d.toFile.listFiles().foreach(f => Files.delete(f.toPath))
+      Files.delete(d)
+    } finally super.afterAll()
 
   test("binaryFile ingest: asset schema, stable ids, byte counts") {
     val assets = Multimodal.ingest(spark, binGlob, "sim-snapshot")
