@@ -161,17 +161,17 @@ object Graph {
     * driver union-find, labels identical (min node id per component).
     * Falls back to the generic op past `maxEdges` (the same 2M
     * local-finish bound — the distributed contraction still guards an
-    * adversarial batch) or on non-integral ids. Duplicates and either
-    * orientation are fine; self-loops are the CALLER's contract (the
-    * flows' pair tables exclude them by construction).
+    * adversarial batch) or when either id column is not integral.
+    * Duplicates and either orientation are fine; self-loops are the
+    * CALLER's contract (the flows' pair tables exclude them by
+    * construction).
     */
   private[graft] def batchComponents(edges: DataFrame,
                                    maxEdges: Long = 2000000L): DataFrame = {
     val dstType = edges.schema("dst").dataType
-    val integral = {
+    val integral = Seq("src", "dst").forall { c =>
       import org.apache.spark.sql.types._
-      dstType == LongType || dstType == IntegerType ||
-        dstType == ShortType || dstType == ByteType
+      Seq(LongType, IntegerType, ShortType, ByteType).contains(edges.schema(c).dataType)
     }
     if (!integral || edges.count() > maxEdges) connectedComponents(edges)
     else localUnionFind(

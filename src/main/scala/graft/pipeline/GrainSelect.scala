@@ -1,39 +1,34 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.pipeline.VoronoiMesh.Facet
 
 /** The reference's two-layer grain selection + taper shrink
-  * (`GenerateColumnar.py:250-306`) re-specified deterministically:
+  * (`GenerateColumnar.py:250-306`) re-specified deterministically. All of
+  * it is bounded by grain count (≤10⁴), not particle count, so it runs as
+  * plain Scala on the driver — SURVEY §7.3's documented exception:
   *
-  *  - adjacency (J1/J2): elements sharing a node, built with an exploded
-  *    self-join — the DataFrame-scaling part;
-  *  - greedy independent set (G2): lowest-id-first over the COLLECTED
-  *    adjacency list. Driver-side by design: the adjacency is bounded by
-  *    grain count (≤10⁴), not particle count — SURVEY §7.3's documented
-  *    exception. The reference's shuffled greedy is unseeded; ours is a
-  *    deterministic total order, so properties (independence, size) are
-  *    testable;
+  *  - adjacency (J1/J2): grains sharing a node;
+  *  - greedy independent set (G2): lowest id first. The reference's
+  *    shuffled greedy is unseeded; ours is a deterministic total order, so
+  *    properties (independence, size) are testable;
   *  - layer-2 pool exclusion (SO1): eligible − (layer1 ∪ neighbors(layer1));
   *  - taper shrink (F3/P6/A5): z-linear scale about the grain centroid with
   *    a clamped angle drawn by seeded weighted choice.
   */
 object GrainSelect {
 
-  /** J2 — grain adjacency via shared nodes: explode + self-join on node_id.
-    * `elements` columns: (grain_id, pos, node_id).
+  /** J2 — grain adjacency via shared nodes: sorted pairs (a < b).
+    * `elements` rows: (grain_id, pos, node_id).
     */
-  def adjacency(elements: DataFrame): DataFrame = {
-    val a = elements.select(col("node_id"), col("grain_id").as("g_a"))
-    val b = elements.select(col("node_id"), col("grain_id").as("g_b"))
-    a.join(b, Seq("node_id"))
-      .filter(col("g_a") < col("g_b"))
-      .select("g_a", "g_b").distinct()
-  }
+  def adjacency(elements: Seq[(Long, Int, Long)]): Seq[(Long, Long)] =
+    elements.groupBy(_._3).values.flatMap { es =>
+      val gs = es.map(_._1).distinct.sorted
+      for (a <- gs; b <- gs if a < b) yield (a, b)
+    }.toSeq.distinct.sorted
 
   /** G2 — deterministic greedy independent set: scan candidates in
     * ascending id, take a grain iff no neighbor is already taken, stop at
-    * `k`. Driver-side over the collected (grain-bounded) adjacency.
+    * `k`.
     */
   def greedyIndependentSet(adjPairs: Seq[(Long, Long)], candidates: Seq[Long],
                            k: Int): Seq[Long] = {
@@ -49,60 +44,41 @@ object GrainSelect {
     taken.toSeq
   }
 
-  /** Layer-2 pool: eligible − (selected ∪ neighbors(selected))
-    * (`GenerateColumnar.py:285-289`), as an anti-join (SO1).
+  /** SO1 — layer-2 pool: eligible − (selected ∪ neighbors(selected))
+    * (`GenerateColumnar.py:285-289`).
     */
-  def excludePool(spark: SparkSession, eligible: DataFrame, adj: DataFrame,
-                  selected: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    val sel = selected.toDF("grain_id")
-    val selNbrs = adj.join(sel, adj("g_a") === sel("grain_id")).select(col("g_b").as("grain_id"))
-      .union(adj.join(sel, adj("g_b") === sel("grain_id")).select(col("g_a").as("grain_id")))
-    eligible.join(sel.union(selNbrs).distinct(), Seq("grain_id"), "left_anti")
+  def excludePool(eligible: Seq[Long], adj: Seq[(Long, Long)], selected: Seq[Long]): Seq[Long] = {
+    val sel = selected.toSet
+    val gone = sel ++ adj.collect { case (a, b) if sel(a) => b; case (a, b) if sel(b) => a }
+    eligible.filterNot(gone)
   }
 
-  /** A5/F5 — seeded weighted choice of taper angle per grain
+  private val Mults = Seq(0.5, 0.9, 1.1, 1.25)
+  private val Cdf = Seq(0.45, 0.25, 0.20, 0.10).scanLeft(0.0)(_ + _).tail
+
+  /** A5/F5 — seeded weighted choice of a grain's taper angle
     * (`GenerateColumnar.py:182-184`: angles [0.5,0.9,1.1,1.25]·base with
-    * weights [0.45,0.25,0.20,0.10]) via inverse-CDF on `rand(seed)`.
+    * weights [0.45,0.25,0.20,0.10]) by inverse CDF on a draw of
+    * (seed, grain id), clamped to [0.01, 15] degrees (P6).
     */
-  def weightedAngle(grains: DataFrame, baseAngleDeg: Double, seed: Long): DataFrame = {
-    val mults = Seq(0.5, 0.9, 1.1, 1.25)
-    val weights = Seq(0.45, 0.25, 0.20, 0.10)
-    val cdf = weights.scanLeft(0.0)(_ + _).tail
-    val u = rand(seed)
-    val angle = mults.zip(cdf).reverse.foldLeft(lit(mults.last * baseAngleDeg)) {
-      case (acc, (m, c)) => when(u < c, lit(m * baseAngleDeg)).otherwise(acc)
-    }
-    grains.withColumn("taper_deg",
-      least(greatest(angle, lit(0.01)), lit(15.0))) // P6 clamp [0.01, 15]
+  def taperAngle(seed: Long, grainId: Long, baseAngleDeg: Double): Double = {
+    val u = VoronoiMesh.uniform(seed, 4, grainId)
+    val m = Mults.zip(Cdf).collectFirst { case (m, c) if u < c => m }.getOrElse(Mults.last)
+    math.min(math.max(m * baseAngleDeg, 0.01), 15.0)
   }
 
-  /** F3 — taper ("cone") shrink of facet vertices about each grain's
-    * centroid: scale factor decreases linearly with z so the top is
-    * narrower (`GenerateColumnar.py:189-218`). Facet columns x1..z4 from
-    * [[VoronoiMesh.facetQuads]]; `grains` provides (grain_id, taper_deg).
-    * Pure column arithmetic — stays in WholeStageCodegen.
+  /** F3 — taper ("cone") shrink of one grain's quads about its centroid
+    * (mean of x1, y1 — A1): the scale factor decreases linearly with z,
+    * clamped at 0.01 (P6), so the top is narrower
+    * (`GenerateColumnar.py:189-218`).
     */
-  def taperShrink(facets: DataFrame, grains: DataFrame, extrusion: Double): DataFrame = {
-    val centroids = facets.groupBy("grain_id")
-      .agg(avg(col("x1")).as("cx"), avg(col("y1")).as("cy")) // A1 centroid
-    val withMeta = facets
-      .join(broadcast(centroids), Seq("grain_id"))
-      .join(broadcast(grains.select("grain_id", "taper_deg")), Seq("grain_id"))
-    val p = tan(radians(col("taper_deg"))) // F1: shrink slope per unit z
-    def sx(x: String, z: org.apache.spark.sql.Column) = {
-      val s = greatest(lit(1.0) - p * z / extrusion, lit(0.01)) // P6 clamp
-      (col("cx") + (col(x) - col("cx")) * s)
-    }
-    def sy(y: String, z: org.apache.spark.sql.Column) = {
-      val s = greatest(lit(1.0) - p * z / extrusion, lit(0.01))
-      (col("cy") + (col(y) - col("cy")) * s)
-    }
-    withMeta.select(
-      col("grain_id"), col("pos"),
-      sx("x1", col("z1")).as("x1"), sy("y1", col("z1")).as("y1"), col("z1"),
-      sx("x2", col("z2")).as("x2"), sy("y2", col("z2")).as("y2"), col("z2"),
-      sx("x3", col("z3")).as("x3"), sy("y3", col("z3")).as("y3"), col("z3"),
-      sx("x4", col("z4")).as("x4"), sy("y4", col("z4")).as("y4"), col("z4"))
+  def taperShrink(quads: Seq[Facet], taperDeg: Double, extrusion: Double): Seq[Facet] = {
+    val cx = quads.map(_.xyz(0)).sum / quads.size
+    val cy = quads.map(_.xyz(1)).sum / quads.size
+    val p = math.tan(math.toRadians(taperDeg)) // F1: shrink slope per unit z
+    quads.map(f => f.copy(xyz = f.xyz.grouped(3).flatMap { v =>
+      val s = math.max(1.0 - p * v(2) / extrusion, 0.01)
+      Seq(cx + (v(0) - cx) * s, cy + (v(1) - cy) * s, v(2))
+    }.toVector))
   }
 }

@@ -1,8 +1,12 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import graft.formats.DeckCodec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.pipeline.VoronoiMesh.Facet
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** End-to-end recomposition of the reference's two pipelines
   * (SURVEY §3.1-§3.2), seeded and deterministic:
@@ -10,10 +14,14 @@ import org.apache.spark.sql.functions._
   *  `generate(...)` = `GenerateColumnar.py`'s process_logic: seeds → Lloyd
   *  relaxation → Voronoi topology → node dedup → boundary detection →
   *  two-layer greedy selection → taper shrink → facet export
-  *  ("InitialColumnarIce.txt" shape: 12 fixed-8dp floats per line).
+  *  ("InitialColumnarIce.txt" shape: 12 fixed-8dp floats per line). Lloyd
+  *  is the only Spark work (one job per iteration over the sample cloud);
+  *  the rest is one driver pass over the grain-bounded cells, and the
+  *  facet, node and element tables come back as one local frame each.
   *
-  *  `cut(...)` = `BooleanOperation.py`: import → dedup → rotate → cut by
-  *  specimen solid → chained plane anti-filters → translate → vertex export.
+  *  `cut(...)` = `BooleanOperation.py`: import → dedup → subdivide and
+  *  rotate → cut by specimen solid → chained plane anti-filters, all in
+  *  Spark over the facet file.
   */
 object IcePipeline {
 
@@ -26,39 +34,43 @@ object IcePipeline {
     */
   def generate(spark: SparkSession, cfg: VoronoiMesh.MeshConfig,
                baseAngleDeg: Double = 8.0, nJoint: Int = 6): Result = {
+    import spark.implicits._
     val (seeds, _) = VoronoiMesh.lloydRelax(spark, cfg)
-    val vertices = VoronoiMesh.voronoiVertices(spark, seeds, cfg).cache()
-    val (nodes, elements) = VoronoiMesh.dedupNodes(vertices)
-
+    val cells = VoronoiMesh.cells(seeds, cfg)
+    val (nodes, elements) = VoronoiMesh.dedupNodes(cells)
+    val adj = GrainSelect.adjacency(elements)
     // eligible pool: interior grains only (boundary grains excluded,
     // GenerateColumnar.py:246)
-    val eligible = VoronoiMesh.boundaryGrains(vertices, cfg)
-      .filter(col("is_boundary") === 0).select("grain_id")
-    val adjDf = GrainSelect.adjacency(elements).cache()
-    val adj = adjDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val eligibleIds = eligible.collect().map(_.getLong(0)).toSeq
+    val boundary = VoronoiMesh.boundaryGrains(cells, cfg)
+    val eligible = cells.map(_.grainId).filterNot(boundary)
     // layer size is ceil(|eligible| / n_joint) — over the INTERIOR pool,
     // not all grains (GenerateColumnar.py:252 "num_select =
     // ceil(len(eligible_indices) / n_joint)")
-    val k = math.ceil(eligibleIds.size.toDouble / nJoint).toInt
-
-    val layer1 = GrainSelect.greedyIndependentSet(adj, eligibleIds, k)
-    val pool2 = GrainSelect.excludePool(spark, eligible, adjDf, layer1)
-      .collect().map(_.getLong(0)).toSeq
-    val layer2 = GrainSelect.greedyIndependentSet(adj, pool2, k)
-
-    import spark.implicits._
-    val selectedDf = (layer1 ++ layer2).toDF("grain_id")
-    val quads = VoronoiMesh.facetQuads(vertices, cfg)
-      .join(selectedDf, Seq("grain_id")) // only selected grains export facets
-    val grains = GrainSelect.weightedAngle(
-      selectedDf, baseAngleDeg, cfg.seed + 10)
-    val tapered = GrainSelect.taperShrink(quads, grains, cfg.extrusion)
-    Result(tapered, layer1, layer2, nodes, elements)
+    val k = math.ceil(eligible.size.toDouble / nJoint).toInt
+    val layer1 = GrainSelect.greedyIndependentSet(adj, eligible, k)
+    val layer2 = GrainSelect.greedyIndependentSet(
+      adj, GrainSelect.excludePool(eligible, adj, layer1), k)
+    val chosen = (layer1 ++ layer2).toSet // only selected grains export facets
+    val tapered = cells.filter(c => chosen(c.grainId)).flatMap(c => GrainSelect.taperShrink(
+      VoronoiMesh.facetQuads(c, cfg.extrusion),
+      GrainSelect.taperAngle(cfg.seed, c.grainId, baseAngleDeg), cfg.extrusion))
+    Result(facetFrame(spark, tapered), layer1, layer2,
+      nodes.zipWithIndex.map { case ((x, y), id) => (id.toLong, x, y) }.toDF("node_id", "x", "y"),
+      elements.toDF("grain_id", "pos", "node_id"))
   }
 
   val FacetCols: Seq[String] =
     (1 to 4).flatMap(v => Seq(s"x$v", s"y$v", s"z$v"))
+
+  private val FacetSchema = StructType(
+    Seq(StructField("grain_id", LongType, nullable = false),
+      StructField("pos", IntegerType, nullable = false)) ++
+    FacetCols.map(StructField(_, DoubleType, nullable = false)))
+
+  /** The facet table (grain_id, pos, x1..z4) of driver-side facets. */
+  def facetFrame(spark: SparkSession, facets: Seq[Facet]): DataFrame =
+    spark.createDataFrame(
+      facets.map(f => Row.fromSeq(Seq[Any](f.grainId, f.pos) ++ f.xyz)).asJava, FacetSchema)
 
   /** Export the facet table in the reference's facet-sink format (S6). */
   def exportFacets(facets: DataFrame, path: String): Unit =
@@ -77,15 +89,11 @@ object IcePipeline {
       .filter(size(parts) === 12)
       .select(FacetCols.zipWithIndex.map { case (c, i) =>
         element_at(parts, i + 1).cast("double").as(c)
-      }: _*)
-      .withColumn("grain_id", monotonically_increasing_id()) // synthetic face id
-      .withColumn("pos", lit(0))
+      } :+ monotonically_increasing_id().as("grain_id") :+ lit(0).as("pos"): _*) // synthetic face id
     val deduped = SpecimenCut.dedupByCentroid(parsed, 1e-6)
-    val strips = SpecimenCut.subdivideZ(deduped, zStrips)
-    val rotated = if (rotateDeg == 0) strips
-      else SpecimenCut.rotateZ(strips, rotateDeg, cx, cy)
-    val inSolid = SpecimenCut.cutBySolid(rotated, solid)
-    SpecimenCut.removePlaneCrossers(
-      SpecimenCut.removePlaneCrossers(inSolid, planeLo), planeHi)
+    val kept = SpecimenCut.strips(deduped, zStrips, rotateDeg, cx, cy, field =>
+      SpecimenCut.cutBySolid(solid)(field) && SpecimenCut.removePlaneCrossers(planeLo)(field) &&
+        SpecimenCut.removePlaneCrossers(planeHi)(field))
+    kept.select((Seq("grain_id", "pos", "strip") ++ FacetCols).map(col): _*)
   }
 }

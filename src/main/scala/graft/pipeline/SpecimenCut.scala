@@ -5,8 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** The reference's Boolean-cutting pipeline (`BooleanOperation.py`)
   * recomposed as a linear DataFrame filter/map chain — which is what it is:
-  * import → dedup → rotate → cut against a specimen solid → two chained
-  * anti-filters against clipping planes → translate → export.
+  * import → dedup → subdivide and rotate → cut against a specimen solid →
+  * two chained anti-filters against clipping planes → export. It reads a
+  * facet file of any size, so all of it stays in Spark; one `explode` per
+  * face carries the per-strip geometry, and the filters read its
+  * precomputed centroid and z range (see [[strips]]).
   *
   * We cut by FACE-CENTROID membership tests against analytic solids
   * (box/sphere/cylinder — `BooleanOperation.py:24-39`) instead of calling
@@ -14,7 +17,7 @@ import org.apache.spark.sql.functions._
   * plane-crossers) match `BooleanOperation.py:118-149`.
   *
   * Facet frame columns: grain_id, pos, x1..z4 (see
-  * [[VoronoiMesh.facetQuads]]).
+  * [[IcePipeline.facetFrame]]).
   */
 object SpecimenCut {
 
@@ -42,88 +45,85 @@ object SpecimenCut {
     (col(s"${c}1") + col(s"${c}2") + col(s"${c}3") + col(s"${c}4")) / 4
 
   /** The `_Split` analogue (`BooleanOperation.py:99-114` delegates this to
-    * Rhino): subdivide each extruded quad into `n` z-strips so subsequent
-    * solid cuts and plane filters act on locally small faces rather than
-    * dropping whole full-height walls. Vertices interpolate linearly
-    * between the bottom edge (v1→v2) and top edge (v4→v3) — exact for the
-    * extruded (and tapered, z-linear) facets this pipeline produces.
-    * One `explode` over a generated strip index: row count ×n, no shuffle.
+    * Rhino) fused with the rotation about z (F3,
+    * `BooleanOperation.py:199-210`): each extruded quad becomes `n`
+    * z-strips, so the solid cut and the plane filters act on locally small
+    * faces rather than dropping whole full-height walls. Vertices
+    * interpolate linearly between the bottom edge (v1→v2) and the top edge
+    * (v4→v3) — exact for the extruded (and tapered, z-linear) facets this
+    * pipeline produces — then turn `deg` degrees about (cx, cy).
+    *
+    * Columns: grain_id, pos, strip, x1..z4, plus each strip's centroid
+    * (fx, fy, fz) and z range (zlo, zhi), computed once. Only strips that
+    * `keep` accepts (given a field getter, e.g. [[cutBySolid]]) come out.
+    * Strips are built and kept inside one `transform`/`filter` over the
+    * strip index and then exploded, so the optimizer sees no filter over
+    * the lerp and rotation expressions (its constraint propagation grows
+    * with every alias a filter contains) and the generated code does not
+    * change with the solid or the angle. Row count ×n at most, no shuffle.
     */
-  def subdivideZ(facets: DataFrame, n: Int): DataFrame = {
-    val j = col("strip")
-    def lerp(b: String, t: String, f: Column): Column =
-      col(b) + (col(t) - col(b)) * f
-    val t0 = j.cast("double") / n
-    val t1 = (j + 1).cast("double") / n
-    facets
-      .withColumn("strip", explode(sequence(lit(0), lit(n - 1))))
-      .select(col("grain_id"), col("pos"), col("strip"),
-        lerp("x1", "x4", t0).as("x1"), lerp("y1", "y4", t0).as("y1"), lerp("z1", "z4", t0).as("z1"),
-        lerp("x2", "x3", t0).as("x2"), lerp("y2", "y3", t0).as("y2"), lerp("z2", "z3", t0).as("z2"),
-        lerp("x2", "x3", t1).as("x3"), lerp("y2", "y3", t1).as("y3"), lerp("z2", "z3", t1).as("z3"),
-        lerp("x1", "x4", t1).as("x4"), lerp("y1", "y4", t1).as("y4"), lerp("z1", "z4", t1).as("z4"))
+  def strips(facets: DataFrame, n: Int, deg: Double = 0.0, cx: Double = 0.0, cy: Double = 0.0,
+             keep: (String => Column) => Column = _ => lit(true)): DataFrame = {
+    val (c, s) = (math.cos(math.toRadians(deg)), math.sin(math.toRadians(deg)))
+    def strip(j: Column): Column = {
+      def lerp(v: String, b: Int, t: Int, f: Column) = col(s"$v$b") + (col(s"$v$t") - col(s"$v$b")) * f
+      val (t0, t1) = (j.cast("double") / n, (j + 1).cast("double") / n)
+      struct(j.as("strip") +: Seq((1, 4, t0), (2, 3, t0), (2, 3, t1), (1, 4, t1)).zipWithIndex.flatMap {
+        case ((b, t, f), i) =>
+          val (x, y) = (lerp("x", b, t, f), lerp("y", b, t, f))
+          val (rx, ry) = if (deg == 0) (x, y)
+            else (lit(cx) + (x - cx) * c - (y - cy) * s, lit(cy) + (x - cx) * s + (y - cy) * c)
+          Seq(rx.as(s"x${i + 1}"), ry.as(s"y${i + 1}"), lerp("z", b, t, f).as(s"z${i + 1}"))
+      }: _*)
+    }
+    // the centroid and z range read the strip's fields, not its expressions
+    def measured(st: Column): Column = {
+      def v(a: String) = (1 to 4).map(i => st.getField(s"$a$i"))
+      struct((Seq("strip") ++ IcePipeline.FacetCols).map(f => st.getField(f).as(f)) ++
+        Seq("x", "y", "z").map(a => (v(a).reduce(_ + _) / 4).as(s"f$a")) :+
+        least(v("z"): _*).as("zlo") :+ greatest(v("z"): _*).as("zhi"): _*)
+    }
+    val all = transform(transform(sequence(lit(0), lit(n - 1)), j => strip(j)), st => measured(st))
+    facets.select(col("grain_id"), col("pos"),
+        explode(filter(all, st => keep(st.getField))).as("s"))
+      .select("grain_id", "pos", "s.*")
   }
 
-  /** Keep faces whose centroid lies inside the specimen solid (the "cut". */
-  def cutBySolid(facets: DataFrame, solid: Solid): DataFrame =
-    facets.filter(solid.contains(centroid("x"), centroid("y"), centroid("z")))
+  /** Keep strips whose centroid lies inside the specimen solid (the "cut"). */
+  def cutBySolid(solid: Solid)(field: String => Column): Column =
+    solid.contains(field("fx"), field("fy"), field("fz"))
 
-  /** P4 — drop faces crossing the horizontal plane z = planeZ (vertices on
+  /** P4 — drop strips crossing the horizontal plane z = planeZ (vertices on
     * both sides), the "remove results intersecting plant1/plant2" step
-    * (`BooleanOperation.py:129-149`). Chain twice for the two planes.
+    * (`BooleanOperation.py:129-149`). And it with itself for two planes.
     */
-  def removePlaneCrossers(facets: DataFrame, planeZ: Double): DataFrame = {
-    val zs = Seq("z1", "z2", "z3", "z4").map(col)
-    val below = zs.map(_ < planeZ).reduce(_ || _)
-    val above = zs.map(_ > planeZ).reduce(_ || _)
-    facets.filter(!(below && above))
-  }
+  def removePlaneCrossers(planeZ: Double)(field: String => Column): Column =
+    !(field("zlo") < planeZ && field("zhi") > planeZ)
 
   /** DD2 — approximate face dedup: duplicate iff centroid within eps
     * (`BooleanOperation.py:85-95`'s O(n²) scan), via 3-D cell binning:
-    * each face probes its 27 neighbor cells on one side of an equi-join;
-    * the kept face is the lowest (grain_id, pos). Scales like the engine's
-    * CellSize grid instead of quadratically.
+    * every face registers in the 27 cells around its own, and a face is
+    * dropped by one anti-join iff a lower (grain_id, pos) within eps
+    * registered in its cell. Scales like the engine's CellSize grid instead
+    * of quadratically.
     */
   def dedupByCentroid(facets: DataFrame, eps: Double): DataFrame = {
-    val keyed = facets
-      .withColumn("fcx", centroid("x")).withColumn("fcy", centroid("y"))
-      .withColumn("fcz", centroid("z"))
-      .withColumn("bx", floor(col("fcx") / eps).cast("long"))
-      .withColumn("by", floor(col("fcy") / eps).cast("long"))
-      .withColumn("bz", floor(col("fcz") / eps).cast("long"))
-      .withColumn("fid", struct(col("grain_id"), col("pos")))
-    val probes = keyed.select(col("fid"), col("fcx"), col("fcy"), col("fcz"),
-        explode(array((-1 to 1).flatMap(dx => (-1 to 1).flatMap(dy => (-1 to 1).map(dz =>
-          struct((col("bx") + dx).as("bx"), (col("by") + dy).as("by"),
-            (col("bz") + dz).as("bz"))))): _*)).as("cell"))
-    val build = keyed.select(col("fid").as("fid_b"), col("fcx").as("bx2"),
+    val Seq(fx, fy, fz) = Seq("x", "y", "z").map(centroid)
+    val keyed = facets.select(col("*"), fx.as("fcx"), fy.as("fcy"), fz.as("fcz"),
+      floor(fx / eps).cast("long").as("bx"), floor(fy / eps).cast("long").as("by"),
+      floor(fz / eps).cast("long").as("bz"), struct(col("grain_id"), col("pos")).as("fid"))
+    val registered = keyed.select(col("fid").as("fid_b"), col("fcx").as("bx2"),
       col("fcy").as("by2"), col("fcz").as("bz2"),
-      struct(col("bx"), col("by"), col("bz")).as("cell"))
-    val dupOf = probes.join(build,
-        probes("cell") === build("cell") &&
+      explode(array((-1 to 1).flatMap(dx => (-1 to 1).flatMap(dy => (-1 to 1).map(dz =>
+        struct((col("bx") + dx).as("bx"), (col("by") + dy).as("by"),
+          (col("bz") + dz).as("bz"))))): _*)).as("cell"))
+    keyed.join(registered,
+        struct(col("bx"), col("by"), col("bz")) === col("cell") &&
         col("fid_b") < col("fid") &&
         abs(col("fcx") - col("bx2")) < eps &&
         abs(col("fcy") - col("by2")) < eps &&
-        abs(col("fcz") - col("bz2")) < eps)
-      .select(col("fid")).distinct()
-    keyed.join(dupOf, Seq("fid"), "left_anti")
+        abs(col("fcz") - col("bz2")) < eps, "left_anti")
       .drop("fcx", "fcy", "fcz", "bx", "by", "bz", "fid")
-  }
-
-  /** F3 — rotate all vertices about the z axis by `deg` degrees around
-    * (cx, cy) (`BooleanOperation.py:199-210`), then translate
-    * (`:252-253`). Column arithmetic only.
-    */
-  def rotateZ(facets: DataFrame, deg: Double, cx: Double, cy: Double): DataFrame = {
-    val c = cos(radians(lit(deg)));
-    val s = sin(radians(lit(deg)))
-    (1 to 4).foldLeft(facets) { (df, i) =>
-      df.withColumn(s"rx$i", lit(cx) + (col(s"x$i") - cx) * c - (col(s"y$i") - cy) * s)
-        .withColumn(s"ry$i", lit(cy) + (col(s"x$i") - cx) * s + (col(s"y$i") - cy) * c)
-    }.drop((1 to 4).flatMap(i => Seq(s"x$i", s"y$i")): _*)
-      .withColumnsRenamed((1 to 4).flatMap(i =>
-        Seq(s"rx$i" -> s"x$i", s"ry$i" -> s"y$i")).toMap)
   }
 
   def translate(facets: DataFrame, dx: Double, dy: Double, dz: Double): DataFrame =

@@ -94,6 +94,16 @@ class GraphSpec extends SparkTestBase {
     assert(m === Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
   }
 
+  test("batchComponents: a non-integral src column takes the distributed path") {
+    import spark.implicits._
+    // src double, dst long: the driver union-find would truncate 0.5 and
+    // 1.5 to longs, so the schema guard must check both columns
+    val edges = Seq((0.5, 1L), (1.5, 1L), (7.0, 8L)).toDF("src", "dst")
+    val m = Graph.batchComponents(edges).collect().map(r =>
+      r.get(0).asInstanceOf[Number].doubleValue -> r.get(1).asInstanceOf[Number].doubleValue).toMap
+    assert(m === Map(0.5 -> 0.5, 1.0 -> 0.5, 1.5 -> 0.5, 7.0 -> 7.0, 8.0 -> 7.0))
+  }
+
   test("real bond graph: MLSBond.dat components and degrees") {
     val path = "/root/reference/UniaxialCompressionTest/MLSBond.dat"
     assume(Files.exists(Paths.get(path)))
