@@ -2,8 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** Fail fast (clear usage error, not a late SparkException inside
-    * `local[...]`) on a non-numeric or non-positive cpu count. Shared with
-    * tools.CCBench, which mirrors this handling.
+    * `local[...]`) on a non-numeric or non-positive cpu count.
     */
   def parseCpus(s: String): Int = {
     val n = try s.trim.toInt catch { case _: NumberFormatException =>

@@ -25,16 +25,21 @@ object Dev {
     println(s"layer2=${res.layer2.length} ids=${res.layer2.take(8)}...")
     println(s"nodes=${res.nodes.count()} elementRows=${res.elements.count()} facets=${res.facets.count()}")
 
-    val out = "/tmp/ice_facets"
-    IcePipeline.exportFacets(res.facets, out)
-    val raw = spark.read.text(out)
-    println(s"exported lines=${raw.count()}")
-    raw.show(2, truncate = false)
+    // a fresh temp dir per run, removed on exit: a fixed path would
+    // overwrite (and leave behind) whatever another run wrote there
+    val tmp = java.nio.file.Files.createTempDirectory("ice_facets")
+    try {
+      val out = tmp.resolve("facets").toString
+      IcePipeline.exportFacets(res.facets, out)
+      val raw = spark.read.text(out)
+      println(s"exported lines=${raw.count()}")
+      raw.show(2, truncate = false)
 
-    val cutRes = IcePipeline.cut(spark, out,
-      SpecimenCut.CylinderZ(100, 100, 0, 25, 60), planeLo = 2.0, planeHi = 23.0)
-    println(s"after cut=${cutRes.count()} (from ${res.facets.count()})")
-    cutRes.agg(min("z1"), max("z3"), min("x1"), max("x1")).show()
+      val cutRes = IcePipeline.cut(spark, out,
+        SpecimenCut.CylinderZ(100, 100, 0, 25, 60), planeLo = 2.0, planeHi = 23.0)
+      println(s"after cut=${cutRes.count()} (from ${res.facets.count()})")
+      cutRes.agg(min("z1"), max("z3"), min("x1"), max("x1")).show()
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(tmp.toFile)
     spark.stop()
   }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Incremental ([[ingest]]): the same stages per arriving batch under
   * FIRST-WINS crawl semantics against persisted state — a digest index
   * and an LSH band index (both the bucketed, crash-safe
-  * [[Dedup.bandIndexAppendPrecomputed]] machinery), plus a carried
+  * [[Dedup.bandIndexAppend]] machinery), plus a carried
   * token cursor so packed sequence ids continue across batches. The
   * 100 TB shape is the band-index contract: the arriving batch
   * broadcasts, history is a bucket-PRUNED scan-local read, and per-batch
@@ -191,7 +191,7 @@ object CurationFlow {
     * decide-then-commit.
     *
     * `maxBucket` is the crawl-hardening dial: a finite cap routes the
-    * near-dup probe through [[Dedup.bandIndexProbeBounded]]'s hot-band
+    * near-dup probe through [[Dedup.bandIndexProbe]]'s hot-band
     * STAR (per hot band, arrivals pair with the representative instead
     * of all members — candidate output linear in the band, the 1.26 GB
     * peak-task class bounded away; saturated bands land in
@@ -302,9 +302,9 @@ object CurationFlow {
     // inputs are the pinned exact survivors and the caller's bench
     // shingles, so its shingle pass fills the cores the tiny
     // probe/flag/edge shuffles below leave idle instead of running
-    // serially inside the tail checkpoint. Read-only — a failure on
-    // the main chain leaves no orphaned writer, the stray future just
-    // finishes its scan.
+    // serially inside the tail checkpoint. Read-only, and drained
+    // before any failure of the main chain propagates (below), so a
+    // failed decide leaves no scan running Spark jobs behind it.
     val hitsF = scala.concurrent.Future {
       sc.setJobDescription("decide:hits-ckpt")
       try org.apache.spark.sql.graftbridge.Bridge.dropCheckpointConstraints(
@@ -313,100 +313,92 @@ object CurationFlow {
       finally sc.setJobDescription(null)
     }(scala.concurrent.ExecutionContext.global)
 
-    // stage 5: near-dup band candidates vs stored ∪ batch (the
-    // incremental-dedup probe; bounded star route under a finite cap).
-    // Checkpointed BEFORE the append.
-    label("probe")
-    val (rawPairs, overflow, batchBands) =
-      if (maxBucket == Int.MaxValue) {
-        val (cand, bands) = Dedup.bandIndexProbeWithBands(bandsDir,
-          afterEx, "doc_id", "text", buckets = buckets)
-        // the exact route reports no saturated bands — but with the
-        // SAME schema as the bounded report, so callers that persist
-        // or inspect it don't fork on the route (review find)
-        (cand, emptyOverflow(batch.sparkSession), bands)
-      } else {
-        val (b, bands) = Dedup.bandIndexProbeBoundedWithBands(bandsDir,
-          afterEx, "doc_id", "text", buckets = buckets,
-          maxBucket = maxBucket)
-        // overflow reads the index too — checkpoint it like the pairs,
-        // or a post-commit evaluation would count the batch's own
-        // just-appended bands as occupancy (review find)
-        (b.pairs, org.apache.spark.sql.graftbridge.Bridge
-          .dropCheckpointConstraints(b.overflow.localCheckpoint()), bands)
-      }
-    // the pair table pins WITH its in-batch flags (r17: when only the
-    // raw pairs were pinned, histDrop and edges each re-built the two
-    // batchIds broadcasts per evaluation — four extra jobs a wave)
-    val batchIds = afterEx.select(col("doc_id"))
-    label("flagged-ckpt")
-    val flagged = org.apache.spark.sql.graftbridge.Bridge
-      .dropCheckpointConstraints(rawPairs
-        .join(broadcast(batchIds.select(col("doc_id").as("a_id"),
-          lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
-        .join(broadcast(batchIds.select(col("doc_id").as("b_id"),
-          lit(true).as("b_in"))), col("doc_b") === col("b_id"), "left")
-        .select(col("doc_a"), col("doc_b"), col("a_in"), col("b_in"))
-        .localCheckpoint())
-    // pinned like exBatchDrop: the min-keeper aggregate now feeds the
-    // survivor anti-join AND the decisions union
-    label("histdrop-ckpt")
-    val histDrop = org.apache.spark.sql.graftbridge.Bridge
-      .dropCheckpointConstraints(
-        flagged.filter(col("a_in").isNull || col("b_in").isNull)
-          .select(when(col("a_in").isNotNull, col("doc_a"))
-              .otherwise(col("doc_b")).as("doc_id"),
-            when(col("a_in").isNotNull, col("doc_b"))
-              .otherwise(col("doc_a")).as("stored_id"))
-          .groupBy("doc_id").agg(min(col("stored_id")).as("matched_id"))
+    val (overflow, batchBands, histDrop, withKeep) = try {
+      // stage 5: near-dup band candidates vs stored ∪ batch (the
+      // incremental-dedup probe; bounded star route under a finite cap,
+      // whose overflow the probe pins BEFORE the append).
+      label("probe")
+      val (cands, batchBands) = Dedup.bandIndexProbe(bandsDir, afterEx,
+        "doc_id", "text", buckets = buckets, maxBucket = maxBucket)
+      // the pair table pins WITH its in-batch flags (r17: when only the
+      // raw pairs were pinned, histDrop and edges each re-built the two
+      // batchIds broadcasts per evaluation — four extra jobs a wave)
+      val batchIds = afterEx.select(col("doc_id"))
+      label("flagged-ckpt")
+      val flagged = org.apache.spark.sql.graftbridge.Bridge
+        .dropCheckpointConstraints(cands.pairs
+          .join(broadcast(batchIds.select(col("doc_id").as("a_id"),
+            lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
+          .join(broadcast(batchIds.select(col("doc_id").as("b_id"),
+            lit(true).as("b_in"))), col("doc_b") === col("b_id"), "left")
+          .select(col("doc_a"), col("doc_b"), col("a_in"), col("b_in"))
           .localCheckpoint())
-    val afterNdHist = afterEx.join(histDrop.select("doc_id"),
-      Seq("doc_id"), "left_anti")
+      // pinned like exBatchDrop: the min-keeper aggregate now feeds the
+      // survivor anti-join AND the decisions union
+      label("histdrop-ckpt")
+      val histDrop = org.apache.spark.sql.graftbridge.Bridge
+        .dropCheckpointConstraints(
+          flagged.filter(col("a_in").isNull || col("b_in").isNull)
+            .select(when(col("a_in").isNotNull, col("doc_a"))
+                .otherwise(col("doc_b")).as("doc_id"),
+              when(col("a_in").isNotNull, col("doc_b"))
+                .otherwise(col("doc_a")).as("stored_id"))
+            .groupBy("doc_id").agg(min(col("stored_id")).as("matched_id"))
+            .localCheckpoint())
+      val afterNdHist = afterEx.join(histDrop.select("doc_id"),
+        Seq("doc_id"), "left_anti")
 
-    // stage 6: batch-internal components among the REMAINING docs,
-    // keep-longest keeper (ties → min doc_id), mirroring
-    // Dedup.dupClustersKeepLongest
-    val rem = afterNdHist.select(col("doc_id"))
-    // edges are CHECKPOINTED (r15 diet): the r14 shape evaluated this
-    // broadcast-join plan TWICE — once for the clean-batch emptiness
-    // probe, once inside the CC collect — at ~27 jobs per evaluation
-    // (each broadcast build is its own job). One pinned evaluation;
-    // the probe and the CC read materialized blocks.
-    label("edges-ckpt")
-    val edges = org.apache.spark.sql.graftbridge.Bridge
-      .dropCheckpointConstraints(flagged
-        .filter(col("a_in").isNotNull && col("b_in").isNotNull)
-        .select(col("doc_a"), col("doc_b"))
-        .join(broadcast(rem.select(col("doc_id").as("doc_a"))), Seq("doc_a"),
-          "left_semi")
-        .join(broadcast(rem.select(col("doc_id").as("doc_b"))), Seq("doc_b"),
-          "left_semi")
-        .localCheckpoint())
-    // a clean batch (no internal band pairs — the common case on a
-    // healthy corpus) skips the CC machinery entirely
-    label("edges-empty-probe")
-    val memb =
-      if (edges.isEmpty) afterNdHist.withColumn("grp", col("doc_id"))
-      else {
-        val labels = Graph.batchComponents(
-          edges.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-        afterNdHist
-          .join(labels.withColumnRenamed("node_id", "doc_id"),
-            Seq("doc_id"), "left")
-          .withColumn("grp", coalesce(col("component"), col("doc_id")))
-      }
-    // stages 6-7 land in ONE checkpointed TAIL frame (r15 diet): the
-    // keeper election via a grp-window (single lineage — the old
-    // groupBy + self-join duplicated the whole anti-join chain inside
-    // one plan, and the decisions and commit evaluations then re-ran it
-    // once more EACH) plus the contamination verdict as a column. Every
-    // downstream frame — ndBatchDrop, benchDrop, contamDrop, kept, the
-    // pack, the cursor — is a FILTER of this one pinned evaluation. The
-    // window partitions by grp (batch-bounded; no corpus sort), and the
-    // max_by ties break identically to the old aggregate form.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("grp")
-    val withKeep = memb.withColumn("keep_id",
-      max_by(col("doc_id"), struct(col("n_chars"), -col("doc_id"))).over(w))
+      // stage 6: batch-internal components among the REMAINING docs,
+      // keep-longest keeper (ties → min doc_id), mirroring
+      // Dedup.dupClustersKeepLongest
+      val rem = afterNdHist.select(col("doc_id"))
+      // edges are CHECKPOINTED (r15 diet): the r14 shape evaluated this
+      // broadcast-join plan TWICE — once for the clean-batch emptiness
+      // probe, once inside the CC collect — at ~27 jobs per evaluation
+      // (each broadcast build is its own job). One pinned evaluation;
+      // the probe and the CC read materialized blocks.
+      label("edges-ckpt")
+      val edges = org.apache.spark.sql.graftbridge.Bridge
+        .dropCheckpointConstraints(flagged
+          .filter(col("a_in").isNotNull && col("b_in").isNotNull)
+          .select(col("doc_a"), col("doc_b"))
+          .join(broadcast(rem.select(col("doc_id").as("doc_a"))), Seq("doc_a"),
+            "left_semi")
+          .join(broadcast(rem.select(col("doc_id").as("doc_b"))), Seq("doc_b"),
+            "left_semi")
+          .localCheckpoint())
+      // a clean batch (no internal band pairs — the common case on a
+      // healthy corpus) skips the CC machinery entirely
+      label("edges-empty-probe")
+      val memb =
+        if (edges.isEmpty) afterNdHist.withColumn("grp", col("doc_id"))
+        else {
+          val labels = Graph.batchComponents(
+            edges.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+          afterNdHist
+            .join(labels.withColumnRenamed("node_id", "doc_id"),
+              Seq("doc_id"), "left")
+            .withColumn("grp", coalesce(col("component"), col("doc_id")))
+        }
+      // stages 6-7 land in ONE checkpointed TAIL frame (r15 diet): the
+      // keeper election via a grp-window (single lineage — the old
+      // groupBy + self-join duplicated the whole anti-join chain inside
+      // one plan, and the decisions and commit evaluations then re-ran it
+      // once more EACH) plus the contamination verdict as a column. Every
+      // downstream frame — ndBatchDrop, benchDrop, contamDrop, kept, the
+      // pack, the cursor — is a FILTER of this one pinned evaluation. The
+      // window partitions by grp (batch-bounded; no corpus sort), and the
+      // max_by ties break identically to the old aggregate form.
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("grp")
+      val withKeep = memb.withColumn("keep_id",
+        max_by(col("doc_id"), struct(col("n_chars"), -col("doc_id"))).over(w))
+      (cands.overflow, batchBands, histDrop, withKeep)
+    } catch { case t: Throwable =>
+      // the fork's drain: its jobs finish before decide's failure does
+      scala.concurrent.Await.ready(hitsF,
+        scala.concurrent.duration.Duration.Inf)
+      throw t
+    }
     // contamination hits probe the PINNED exact-survivors, not the
     // elected keepers (r17 diet): the keeper restriction made the hits
     // broadcast re-evaluate the CC join + keeper window as its own job
@@ -476,19 +468,14 @@ object CurationFlow {
     // surface only after BOTH sides finished, so a caller's retry never
     // races an orphaned writer (the r16 ADVICE rule).
     awaitLabeled(
-      ("commit:digest", () => Dedup.bandIndexAppendPrecomputed(dir + "/digest",
+      ("commit:digest", () => Dedup.bandIndexAppend(dir + "/digest",
         kept.select(col("doc_id"), md5(col("text")).as("band")), buckets)),
       // a decide-supplied pinned band table skips the second minhash
       // derivation; the no-bands form (the streaming REPLAY path, which
       // reconstructs kept from the recorded decisions) re-derives
-      ("commit:bands", () => keptBands match {
-        case Some(b) =>
-          Dedup.bandIndexAppendPrecomputed(dir + "/bands",
-            b.select(col("doc_id"), col("band")), buckets)
-        case None =>
-          Dedup.bandIndexAppend(dir + "/bands", kept, "doc_id", "text",
-            buckets = buckets)
-      }))
+      ("commit:bands", () => Dedup.bandIndexAppend(dir + "/bands",
+        keptBands.getOrElse(Dedup.ingestBands(kept, "doc_id", "text")),
+        buckets)))
   }
 
   /** Run independent store mutations concurrently; rethrow the FIRST
@@ -638,26 +625,6 @@ object CurationFlow {
     if (fs.exists(new org.apache.hadoop.fs.Path(path)))
       Dedup.compactSwap(spark, path, textMetaSchema, "mbkt", targetParts,
         stamped)
-  }
-
-  /** An empty frame with [[Dedup.BoundedCandidates]]' overflow schema —
-    * what [[decide]] reports on the exact route, so the report's shape
-    * does not fork on `maxBucket`.
-    */
-  private[ops] def emptyOverflowFrame(
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    emptyOverflow(spark)
-
-  private def emptyOverflow(spark: org.apache.spark.sql.SparkSession)
-      : DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("band", StringType),
-        StructField("occupancy", LongType),
-        StructField("n_new", LongType),
-        StructField("emitted", LongType),
-        StructField("suppressed", LongType))))
   }
 
   /** The streaming cursor LEDGER: one record (batchId, startCursor,

@@ -229,29 +229,12 @@ object Dedup {
       .select(col("doc_id"), explode(array(bandKeys: _*)).as("band"))
   }
 
-  /** Incremental near-dup candidates: an ARRIVING batch against a stored
-    * band index plus itself — the continuous-ingest shape
-    * (`lshCandidatePairs` over history ∪ batch would re-self-join the
-    * whole corpus for every batch). `storedBands` is a persisted
-    * [[lshBandTable]] (same banding parameters — the band hash is part of
-    * the index contract, like IVF's frozen centroids); `newBands` is the
-    * arriving batch's table, computed batch-side only.
-    *
-    * One equi-join: new bands probe (stored ∪ new) on the band key —
-    * history NEVER self-joins, so per-batch cost is
-    * |new bands| × bucket occupancy regardless of corpus size. new↔new
-    * pairs surface from the union side (found from either end, normalized
-    * and deduped); old↔old pairs are by definition already known. Returns
-    * normalized (doc_a < doc_b) distinct pairs where at least one side is
-    * an arrival — exactly `lshCandidatePairs(history ∪ batch)` restricted
-    * to arrival-touching pairs (OpsSpec pins the equivalence; the
-    * `q_dedup_incremental` oracle is that restriction in SQL).
-    */
   /** One full ingest step against a PERSISTED band index at `path`:
     * compute the arriving batch's bands, probe them against the stored
-    * index ([[lshIncrementalCandidates]]), and append them INTO the index
-    * so the next batch sees this one as history. Returns the candidate
-    * pairs for this batch.
+    * index, and append them INTO the index so the next batch sees this
+    * one as history. Returns this batch's candidates through
+    * [[symmetricCandidates]]: the exact pairs by default, the hot-band
+    * star and its overflow report under a finite `maxBucket`.
     *
     * Sharded-ingest completeness: a pair (a, b) is arrival-touching in
     * exactly ONE batch — the one its LATER member arrives in (the earlier
@@ -294,91 +277,79 @@ object Dedup {
   def bandIndexIngest(path: String, arrivals: DataFrame,
                       idCol: String, textCol: String,
                       numBands: Int = 2, rowsPerBand: Int = 2,
-                      shingleN: Int = 3, buckets: Int = 16): DataFrame = {
+                      shingleN: Int = 3, buckets: Int = 16,
+                      maxBucket: Int = Int.MaxValue): BoundedCandidates = {
     val spark = arrivals.sparkSession
     val newBands = ckptBands(ingestBands(arrivals, idCol, textCol,
-      numBands, rowsPerBand, shingleN, buckets))
-    val candidates = probeAgainstIndex(spark, path, newBands, buckets)
+      numBands, rowsPerBand, shingleN).withColumn("bkt", bktOf(buckets)))
+    val candidates = symmetricCandidates(
+      prunedStored(spark, path, newBands, buckets),
+      newBands.select("doc_id", "band"), maxBucket)
     stampLayout(spark, path, buckets) // BEFORE the append: see stampAhead
     appendBands(newBands, path)
     candidates
   }
 
-  /** Write-only [[bandIndexIngest]]: append `arrivals` into the index
-    * WITHOUT probing — the bulk-load/bootstrap shape (seeding an index
-    * from an existing corpus whose internal pairs are already known, or
-    * not wanted). One derivation job, one bucketed write; skips the
-    * probe's touched-bucket collect and candidate plan entirely.
+  /** Write-only [[bandIndexIngest]]: append a PRECOMPUTED `(doc_id,
+    * band)` table into the index WITHOUT probing — the bulk-load /
+    * bootstrap shape, and the commit half of a decide-then-commit flow.
+    * The index is not text-specific: any (doc_id, band-string)
+    * derivation can live in one — [[ingestBands]] rows for text,
+    * hyperplane home
+    * signatures for embeddings ([[Similarity.embIndexIngest]]). One
+    * bucketed write; no touched-bucket collect, no candidate plan.
     */
-  def bandIndexAppend(path: String, arrivals: DataFrame,
-                      idCol: String, textCol: String,
-                      numBands: Int = 2, rowsPerBand: Int = 2,
-                      shingleN: Int = 3, buckets: Int = 16): Unit = {
+  def bandIndexAppend(path: String, bands: DataFrame,
+                      buckets: Int = 16): Unit = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+    val spark = bands.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(arrivals.sparkSession.sparkContext.hadoopConfiguration)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverBandIndex(fs, path)
     bandLayout(fs, path, buckets)
     LayoutSidecar.stampAhead(fs, path, buckets)
-    appendBands(ingestBands(arrivals, idCol, textCol,
-      numBands, rowsPerBand, shingleN, buckets), path)
+    appendBands(bands.select(col("doc_id"), col("band"))
+      .withColumn("bkt", bktOf(buckets)), path)
   }
 
   /** Read-only [[bandIndexIngest]]: probe `arrivals` against the stored
-    * index WITHOUT appending them — serving-side duplicate lookup (is
-    * this batch near-anything-indexed?) and the bench's repeated-probe
-    * loop. Same pruned read, same candidate contract.
+    * index WITHOUT appending them — serving-side duplicate lookup and the
+    * decide half of a decide-then-commit flow. Same pruned read, same
+    * candidate contract and cap. Also RETURNS the batch's checkpointed
+    * band table `(doc_id, band, bkt)` (r15 diet): a flow that probes in
+    * `decide` and appends the kept slice in a later `commit` hands it to
+    * [[bandIndexAppend]] instead of deriving the minhash bands twice —
+    * the heaviest per-doc CPU in the whole chain. Under a finite cap the
+    * overflow report is checkpointed too: it reads the index, so it must
+    * be pinned before that commit appends.
+    *
+    * Bucketed probe (VERDICT r13 #1): candidate pairs only arise on EQUAL
+    * band hashes, and bkt is a pure function of the band, so the stored
+    * side is pruned to the batch's touched buckets BEFORE any join
+    * ([[prunedStored]]). OpsSpec pins partitionCount == touched-bucket
+    * count on the executed scan.
     */
   def bandIndexProbe(path: String, arrivals: DataFrame,
                      idCol: String, textCol: String,
                      numBands: Int = 2, rowsPerBand: Int = 2,
-                     shingleN: Int = 3, buckets: Int = 16): DataFrame =
-    bandIndexProbeWithBands(path, arrivals, idCol, textCol, numBands,
-      rowsPerBand, shingleN, buckets)._1
-
-  /** [[bandIndexProbe]] that also RETURNS the batch's checkpointed band
-    * table `(doc_id, band, bkt)` — the decide-then-commit hook (r15
-    * diet): a flow that probes in `decide` and appends the kept slice in
-    * a later `commit` was deriving the minhash bands TWICE per batch —
-    * the heaviest per-doc CPU in the whole chain. The returned pinned
-    * frame lets the committer append precomputed
-    * ([[bandIndexAppendPrecomputed]]) instead of re-shingling.
-    */
-  def bandIndexProbeWithBands(path: String, arrivals: DataFrame,
-                              idCol: String, textCol: String,
-                              numBands: Int = 2, rowsPerBand: Int = 2,
-                              shingleN: Int = 3, buckets: Int = 16)
-      : (DataFrame, DataFrame) = {
+                     shingleN: Int = 3, buckets: Int = 16,
+                     maxBucket: Int = Int.MaxValue)
+      : (BoundedCandidates, DataFrame) = {
     val spark = arrivals.sparkSession
     val newBands = ckptBands(ingestBands(arrivals, idCol, textCol,
-      numBands, rowsPerBand, shingleN, buckets))
-    (probeAgainstIndex(spark, path, newBands, buckets), newBands)
+      numBands, rowsPerBand, shingleN).withColumn("bkt", bktOf(buckets)))
+    (symmetricCandidates(prunedStored(spark, path, newBands, buckets),
+      newBands.select("doc_id", "band"), maxBucket, pinOverflow = true),
+      newBands)
   }
 
-  /** Shared probe core: heal, prune the stored read to the batch's
-    * touched buckets, candidate-join. `newBands` carries (doc_id, band,
-    * bkt).
-    *
-    * Bucketed probe (VERDICT r13 #1): candidate pairs only arise on EQUAL
-    * band hashes, and bkt is a pure function of the band, so the stored
-    * side can be pruned to the batch's touched buckets BEFORE any join.
-    * The touched set is collected (<= buckets ints — bounded like the
-    * broadcast batch itself) and pushed as a static `bkt IN (...)`
-    * partition filter: planning-time directory pruning, so a probe
-    * against a 100 TB index lists and reads only the band buckets this
-    * batch can possibly collide in (same discipline as IvfIndex.save's
-    * cell-partitioned inverted file). OpsSpec pins partitionCount ==
-    * touched-bucket count on the executed scan.
-    */
-  private def probeAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-                                path: String, newBands: DataFrame,
-                                buckets: Int): DataFrame =
-    lshIncrementalCandidates(prunedStored(spark, path, newBands, buckets),
-      newBands.select("doc_id", "band"))
-
-  /** The pruned stored-index read described on [[probeAgainstIndex]]'s
-    * callers: heal, collect the batch's touched buckets, read only those
-    * partition directories. Returns a (doc_id, band) frame.
+  /** The pruned stored-index read: heal, collect the batch's touched
+    * buckets (<= buckets ints — bounded like the broadcast batch itself)
+    * and push them as a static `bkt IN (...)` partition filter —
+    * planning-time directory pruning, so a probe against a 100 TB index
+    * lists and reads only the band buckets this batch can possibly
+    * collide in (same discipline as IvfIndex.save's cell-partitioned
+    * inverted file). Returns a (doc_id, band) frame.
     */
   private def prunedStored(spark: org.apache.spark.sql.SparkSession,
                            path: String, newBands: DataFrame,
@@ -473,14 +444,14 @@ object Dedup {
     *     measured 2.3× the wall here — recomputed per reference).
     *
     * The shuffled payload is the batch's raw text — bounded by the
-    * ingest-batch contract, never the corpus.
+    * ingest-batch contract, never the corpus. [[bandIndexAppend]] takes
+    * these rows to bulk-load a text corpus without probing.
     */
-  private def ingestBands(arrivals: DataFrame, idCol: String,
-                          textCol: String, numBands: Int, rowsPerBand: Int,
-                          shingleN: Int, buckets: Int): DataFrame =
+  def ingestBands(arrivals: DataFrame, idCol: String, textCol: String,
+                  numBands: Int = 2, rowsPerBand: Int = 2,
+                  shingleN: Int = 3): DataFrame =
     lshBandTable(arrivals.repartition(col(idCol)), idCol, textCol,
       numBands, rowsPerBand, shingleN)
-      .withColumn("bkt", bktOf(buckets))
 
   /** Materialize a batch's band table ONCE for the ingest/probe flow:
     * the table is referenced by up to three consumers (touched-bucket
@@ -821,30 +792,11 @@ object Dedup {
     BoundedCandidates(pairs, overflow)
   }
 
-  /** GENERIC persisted-index surface (r14): the bucketed band index is
-    * not text-specific — any (doc_id, band-string) derivation can live in
-    * one (hyperplane-LSH embedding signatures do,
-    * [[Similarity.embIndexIngest]]). These two entry points take
-    * PRECOMPUTED band frames; the text wrappers above are thin
-    * compositions over them with [[lshBandTable]].
-    */
-  def bandIndexAppendPrecomputed(path: String, bands: DataFrame,
-                                 buckets: Int = 16): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val spark = bands.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverBandIndex(fs, path)
-    bandLayout(fs, path, buckets)
-    LayoutSidecar.stampAhead(fs, path, buckets)
-    appendBands(bands.select(col("doc_id"), col("band"))
-      .withColumn("bkt", bktOf(buckets)), path)
-  }
-
   /** The bucket-PRUNED stored read for precomputed PROBE bands: heals,
     * validates the layout, lists only the probe's touched buckets.
-    * Returns (doc_id, band) — the caller owns the candidate join (e.g.
-    * the embedding path's asymmetric multi-probe join).
+    * Returns (doc_id, band) — the caller owns the candidate join (the
+    * embedding path's [[multiProbeCandidates]], the flows' digest
+    * lookups).
     */
   def bandIndexPrunedStored(path: String, probeBands: DataFrame,
                             buckets: Int = 16): DataFrame = {
@@ -854,76 +806,70 @@ object Dedup {
         .withColumn("bkt", bktOf(buckets)), buckets)
   }
 
-  /** [[bandIndexProbe]] with the hot-band cap — probe ONLY, no append:
-    * [[lshIncrementalCandidatesBounded]]'s star semantics and overflow
-    * report against the bucket-pruned stored read. For callers (the
-    * curation flow) that decide separately which arrivals the index
-    * should ever hold.
+  /** The SYMMETRIC candidate route (text bands: the batch's member rows
+    * are its probe rows) — the one place that chooses between the exact
+    * form and the hot-band cap. `maxBucket == Int.MaxValue` runs
+    * [[lshIncrementalCandidates]] and reports an empty overflow with the
+    * capped report's schema, so callers never fork on the route; any
+    * finite cap runs [[lshIncrementalCandidatesBounded]]. `pinOverflow`
+    * checkpoints the capped report (for callers that append to the index
+    * before reading it); building the exact route's empty report runs no
+    * job. With an empty stored side every row is an arrival and this is the
+    * one-shot self-join ([[lshCandidatePairs]], or its star-capped form).
     */
-  def bandIndexProbeBounded(path: String, arrivals: DataFrame,
-                            idCol: String, textCol: String,
-                            numBands: Int = 2, rowsPerBand: Int = 2,
-                            shingleN: Int = 3, buckets: Int = 16,
-                            maxBucket: Int = 1024): BoundedCandidates =
-    bandIndexProbeBoundedWithBands(path, arrivals, idCol, textCol,
-      numBands, rowsPerBand, shingleN, buckets, maxBucket)._1
+  private[ops] def symmetricCandidates(stored: DataFrame,
+                                       newBands: DataFrame, maxBucket: Int,
+                                       pinOverflow: Boolean = false)
+      : BoundedCandidates =
+    if (maxBucket == Int.MaxValue)
+      BoundedCandidates(lshIncrementalCandidates(stored, newBands),
+        emptyOverflow(newBands.sparkSession, "n_new"))
+    else {
+      val b = lshIncrementalCandidatesBounded(stored, newBands, maxBucket)
+      if (pinOverflow) b.copy(overflow = ckptBands(b.overflow)) else b
+    }
 
-  /** [[bandIndexProbeBounded]] returning the pinned band table too —
-    * [[bandIndexProbeWithBands]]' bounded twin.
+  /** The MULTI-PROBE candidate route (embedding bands: the batch's HOME
+    * rows join the searched side, its PROBE rows — home plus every
+    * 1-bit flip — probe it), with [[symmetricCandidates]]' choice and
+    * overflow contract. Exact: the asymmetric join of `probes` against
+    * stored ∪ home (new↔new pairs within Hamming 1 surface from the flip
+    * probes, home==home pairs from the zero-flip probe). Capped:
+    * [[boundedProbeCandidates]] over the `is_new`-tagged member union.
     */
-  def bandIndexProbeBoundedWithBands(path: String, arrivals: DataFrame,
-                                     idCol: String, textCol: String,
-                                     numBands: Int = 2, rowsPerBand: Int = 2,
-                                     shingleN: Int = 3, buckets: Int = 16,
-                                     maxBucket: Int = 1024)
-      : (BoundedCandidates, DataFrame) = {
-    val spark = arrivals.sparkSession
-    val newBands = ckptBands(ingestBands(arrivals, idCol, textCol,
-      numBands, rowsPerBand, shingleN, buckets))
-    (lshIncrementalCandidatesBounded(
-      prunedStored(spark, path, newBands, buckets),
-      newBands.select("doc_id", "band"), maxBucket), newBands)
-  }
+  private[ops] def multiProbeCandidates(stored: DataFrame, home: DataFrame,
+                                        probes: DataFrame, maxBucket: Int,
+                                        pinOverflow: Boolean = false)
+      : BoundedCandidates =
+    if (maxBucket == Int.MaxValue)
+      BoundedCandidates(stored.unionByName(home)
+        .join(broadcast(probes.select(col("doc_id").as("doc_n"),
+            col("band").as("band_n"))),
+          col("band") === col("band_n") && col("doc_id") =!= col("doc_n"))
+        .select(least(col("doc_id"), col("doc_n")).as("doc_a"),
+          greatest(col("doc_id"), col("doc_n")).as("doc_b"))
+        .distinct(), emptyOverflow(probes.sparkSession, "n_probe"))
+    else {
+      val searched = stored.withColumn("is_new", lit(false))
+        .unionByName(home.withColumn("is_new", lit(true)))
+      val b = boundedProbeCandidates(searched, probes, maxBucket)
+      if (pinOverflow) b.copy(overflow = ckptBands(b.overflow)) else b
+    }
 
-  /** One-shot [[lshCandidatePairs]] with the hot-band cap — the batch
-    * self-join form for crawl-grade duplicate density: with an empty
-    * stored side every doc is an "arrival", so
-    * [[lshIncrementalCandidatesBounded]]'s machinery reduces exactly to
-    * the one-shot semantics (occupancy = band size, exact pairs below the
-    * cap, a star onto the band minimum above it, same overflow
-    * accounting). OpsSpec pins equality with the exact form under a high
-    * cap and the star shape on a planted bucket.
+  /** The exact route's overflow report: no band saturated, in the capped
+    * report's schema — `nCol` is `n_new` (symmetric) or `n_probe`
+    * (multi-probe). It reads no index, so it never needs pinning.
     */
-  def lshCandidatePairsBounded(docs: DataFrame, idCol: String,
-                               textCol: String, numBands: Int = 2,
-                               rowsPerBand: Int = 2, shingleN: Int = 3,
-                               maxBucket: Int = 1024): BoundedCandidates = {
-    val bands = lshBandTable(docs.repartition(col(idCol)), idCol, textCol,
-      numBands, rowsPerBand, shingleN)
-    val empty = docs.sparkSession.createDataFrame(
-      docs.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      bandSchema)
-    lshIncrementalCandidatesBounded(empty, bands, maxBucket)
-  }
-
-  /** [[bandIndexIngest]] with the hot-band cap: probe through
-    * [[lshIncrementalCandidatesBounded]], then append the batch into the
-    * bucketed index. Same layout, same single-writer contract.
-    */
-  def bandIndexIngestBounded(path: String, arrivals: DataFrame,
-                             idCol: String, textCol: String,
-                             numBands: Int = 2, rowsPerBand: Int = 2,
-                             shingleN: Int = 3, buckets: Int = 16,
-                             maxBucket: Int = 1024): BoundedCandidates = {
-    val spark = arrivals.sparkSession
-    val newBands = ckptBands(ingestBands(arrivals, idCol, textCol,
-      numBands, rowsPerBand, shingleN, buckets))
-    val stored = prunedStored(spark, path, newBands, buckets)
-    val bounded = lshIncrementalCandidatesBounded(
-      stored, newBands.select("doc_id", "band"), maxBucket)
-    stampLayout(spark, path, buckets) // BEFORE the append: see stampAhead
-    appendBands(newBands, path)
-    bounded
+  private def emptyOverflow(spark: org.apache.spark.sql.SparkSession,
+                            nCol: String): DataFrame = {
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("band", StringType),
+        StructField("occupancy", LongType),
+        StructField(nCol, LongType),
+        StructField("emitted", LongType),
+        StructField("suppressed", LongType))))
   }
 
   /** Hot-bucket cap for an ASYMMETRIC probe (r14): the searched side is
@@ -931,7 +877,7 @@ object Dedup {
     * (is_new=false) plus the batch's own home rows (is_new=true) — and
     * the probe side a `(doc_id, band)` PROBE set whose rows need not be
     * members of the bands they probe (the embedding index's 1-bit-flip
-    * multi-probe, [[Similarity.embIndexIngestBounded]]). Text banding is
+    * multi-probe, [[multiProbeCandidates]]). Text banding is
     * the symmetric special case (probes == the batch's member rows);
     * this generalizes [[lshIncrementalCandidatesBounded]]'s star cap: a
     * band whose DISTINCT-member occupancy exceeds `maxBucket` emits one
@@ -1016,6 +962,24 @@ object Dedup {
     BoundedCandidates(pairs, overflow)
   }
 
+  /** Incremental near-dup candidates: an ARRIVING batch against a stored
+    * band index plus itself — the continuous-ingest shape
+    * (`lshCandidatePairs` over history ∪ batch would re-self-join the
+    * whole corpus for every batch). `storedBands` is a persisted
+    * [[lshBandTable]] (same banding parameters — the band hash is part of
+    * the index contract, like IVF's frozen centroids); `newBands` is the
+    * arriving batch's table, computed batch-side only.
+    *
+    * One equi-join: new bands probe (stored ∪ new) on the band key —
+    * history NEVER self-joins, so per-batch cost is
+    * |new bands| × bucket occupancy regardless of corpus size. new↔new
+    * pairs surface from the union side (found from either end, normalized
+    * and deduped); old↔old pairs are by definition already known. Returns
+    * normalized (doc_a < doc_b) distinct pairs where at least one side is
+    * an arrival — exactly `lshCandidatePairs(history ∪ batch)` restricted
+    * to arrival-touching pairs (OpsSpec pins the equivalence; the
+    * `q_dedup_incremental` oracle is that restriction in SQL).
+    */
   def lshIncrementalCandidates(storedBands: DataFrame,
                                newBands: DataFrame): DataFrame = {
     // the BATCH side broadcasts (bounded by the ingest-batch contract,

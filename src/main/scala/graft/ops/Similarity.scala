@@ -270,7 +270,7 @@ object Similarity {
 
   /** The (doc_id, band) HOME-bucket table of an embedding frame — the
     * embedding analog of [[Dedup.lshBandTable]], sharing the same
-    * persisted-index machinery ([[Dedup.bandIndexAppendPrecomputed]]).
+    * persisted-index machinery ([[Dedup.bandIndexAppend]]).
     * One row per (vector, family); band = that family's `bits`-bit
     * hyperplane signature as a string. `families > 1` is the
     * OR-amplification dial (the text index's numBands shape): a pair is
@@ -361,87 +361,46 @@ object Similarity {
     * contract to Hamming≤1 in ANY family — see [[embBandTable]]).
     * foreachBatch-serial writers, same single-writer contract and layout
     * sidecar as the text index (it IS the same on-disk machinery).
+    *
+    * HOT-BUCKET CAP: a saturated HOME bucket (a spam/boilerplate cluster
+    * of near-identical vectors all hashing to one signature) makes the
+    * exact probe emit O(occupancy · n_probe) pairs per batch. A finite
+    * `maxBucket` routes through [[Dedup.boundedProbeCandidates]] (via
+    * [[Dedup.multiProbeCandidates]]): cold buckets keep the exact join,
+    * hot buckets emit the prober star onto the bucket representative
+    * plus the min-chain bridge — linear output, connectivity preserved
+    * across batches, suppression reported in the overflow frame. Both
+    * routes are interchangeable on one index.
     */
   def embIndexIngest(path: String, arrivals: DataFrame,
                      idCol: String = "vec_id", embCol: String = "embedding",
                      bits: Int = 8, seed: Long = 42L, dim: Int = -1,
-                     buckets: Int = 16, families: Int = 1): DataFrame = {
+                     buckets: Int = 16, families: Int = 1,
+                     maxBucket: Int = Int.MaxValue): Dedup.BoundedCandidates = {
     val (home, probes) =
       signedBatch(arrivals, idCol, embCol, bits, seed, dim, families)
-    val stored = Dedup.bandIndexPrunedStored(path, probes, buckets)
-    // asymmetric multi-probe join: the probe side (batch, broadcast)
-    // carries the flips; the searched side is stored HOME rows ∪ the
-    // batch's own home rows (new↔new pairs within Hamming 1 surface from
-    // the flip probes; home==home pairs from the zero-flip probe)
-    val all = stored.unionByName(home)
-    val candidates = all
-      .join(broadcast(probes.select(col("doc_id").as("doc_n"),
-          col("band").as("band_n"))),
-        col("band") === col("band_n") && col("doc_id") =!= col("doc_n"))
-      .select(least(col("doc_id"), col("doc_n")).as("doc_a"),
-        greatest(col("doc_id"), col("doc_n")).as("doc_b"))
-      .distinct()
-    Dedup.bandIndexAppendPrecomputed(path, home, buckets)
+    val candidates = Dedup.multiProbeCandidates(
+      Dedup.bandIndexPrunedStored(path, probes, buckets), home, probes,
+      maxBucket)
+    Dedup.bandIndexAppend(path, home, buckets)
     candidates
   }
 
-  /** [[embIndexIngest]] with the hot-bucket cap: a saturated HOME bucket
-    * (a spam/boilerplate cluster of near-identical vectors all hashing to
-    * one signature — the crawl-adversarial input, same shape the text
-    * index is bounded against) makes the exact probe emit
-    * O(occupancy · n_probe) pairs per batch. This routes through
-    * [[Dedup.boundedProbeCandidates]]: cold buckets keep the exact
-    * asymmetric multi-probe join, hot buckets emit the prober star onto
-    * the bucket representative plus the min-chain bridge — linear output,
-    * connectivity preserved across batches, suppression reported in the
-    * overflow frame (no silent truncation). Same index layout and
-    * single-writer contract as [[embIndexIngest]]; the two ingest forms
-    * are interchangeable on one index.
+  /** Read-only [[embIndexIngest]] — probe without appending, from
+    * PRECOMPUTED (doc_id, band) home/probe tables ([[signedBatch]], or
+    * [[embBandTable]]/[[embProbeTable]]): a caller that already derived
+    * — and pinned — the arrivals' signatures (the hyperplane dots are the
+    * dominant CPU of the incremental-embedding keys) probes without
+    * re-running them (r21). Same candidate contract and cap; under a
+    * finite cap the overflow report is checkpointed, because a flow's
+    * later commit appends to the index it reads.
     */
-  def embIndexIngestBounded(path: String, arrivals: DataFrame,
-                            idCol: String = "vec_id",
-                            embCol: String = "embedding",
-                            bits: Int = 8, seed: Long = 42L, dim: Int = -1,
-                            buckets: Int = 16, maxBucket: Int = 1024,
-                            families: Int = 1): Dedup.BoundedCandidates = {
-    val (home, probes) =
-      signedBatch(arrivals, idCol, embCol, bits, seed, dim, families)
-    val stored = Dedup.bandIndexPrunedStored(path, probes, buckets)
-    val searched = stored.withColumn("is_new", lit(false))
-      .unionByName(home.withColumn("is_new", lit(true)))
-    val bounded = Dedup.boundedProbeCandidates(searched, probes, maxBucket)
-    Dedup.bandIndexAppendPrecomputed(path, home, buckets)
-    bounded
-  }
-
-  /** Read-only [[embIndexIngest]] — probe without appending. */
-  def embIndexProbe(path: String, arrivals: DataFrame,
-                    idCol: String = "vec_id", embCol: String = "embedding",
-                    bits: Int = 8, seed: Long = 42L, dim: Int = -1,
-                    buckets: Int = 16, families: Int = 1): DataFrame =
-    embIndexProbePrecomputed(path,
-      embBandTable(arrivals, idCol, embCol, bits, seed, dim, families),
-      embProbeTable(arrivals, idCol, embCol, bits, seed, dim, families),
-      buckets)
-
-  /** [[embIndexProbe]] from PRECOMPUTED (doc_id, band) home/probe
-    * tables (r21): a caller that already derived — and pinned — the
-    * arrivals' signatures (the hyperplane dots are the dominant CPU of
-    * the incremental-embedding keys) probes without re-running them;
-    * candidate contract identical.
-    */
-  def embIndexProbePrecomputed(path: String, home: DataFrame,
-                               probes: DataFrame,
-                               buckets: Int = 16): DataFrame = {
-    val stored = Dedup.bandIndexPrunedStored(path, probes, buckets)
-    stored.unionByName(home)
-      .join(broadcast(probes.select(col("doc_id").as("doc_n"),
-          col("band").as("band_n"))),
-        col("band") === col("band_n") && col("doc_id") =!= col("doc_n"))
-      .select(least(col("doc_id"), col("doc_n")).as("doc_a"),
-        greatest(col("doc_id"), col("doc_n")).as("doc_b"))
-      .distinct()
-  }
+  def embIndexProbe(path: String, home: DataFrame, probes: DataFrame,
+                    buckets: Int = 16,
+                    maxBucket: Int = Int.MaxValue): Dedup.BoundedCandidates =
+    Dedup.multiProbeCandidates(
+      Dedup.bandIndexPrunedStored(path, probes, buckets), home, probes,
+      maxBucket, pinOverflow = true)
 
   /** Keeper rule for [[semanticDedup]]: which member of a duplicate
     * group survives. [[KeepMinId]] is the deterministic stand-in (min
@@ -581,7 +540,7 @@ object Similarity {
     * are byte-identical to [[semanticDedup]]. Routed cells are
     * REPORTED, not silent: `routedCells` lists (cell, n_rows,
     * n_buckets, max_bucket), so a saturated sign bucket inside a routed
-    * cell — the spam shape [[embIndexIngestBounded]] caps on the index
+    * cell — the spam shape [[embIndexIngest]] caps on the index
     * path — is visible to the operator.
     */
   def semanticDedupBounded(emb: DataFrame, nlist: Int = 16,

@@ -350,20 +350,11 @@ object UnifiedFlow {
           Seq("band"))
         .select(col("l_id"), col("doc_id").as("s_id")).distinct())
     label("ltprobe")
-    val (rawPairs, overflow, lateBands) =
-      if (maxBucket == Int.MaxValue) {
-        val (cand, bands) = Dedup.bandIndexProbeWithBands(dir + "/bands",
-          afterExB, "doc_id", "text", buckets = buckets)
-        (cand, CurationFlow.emptyOverflowFrame(spark), bands)
-      } else {
-        val (b, bands) = Dedup.bandIndexProbeBoundedWithBands(
-          dir + "/bands", afterExB, "doc_id", "text", buckets = buckets,
-          maxBucket = maxBucket)
-        (b.pairs, ckpt(b.overflow), bands)
-      }
+    val (cands, lateBands) = Dedup.bandIndexProbe(dir + "/bands",
+      afterExB, "doc_id", "text", buckets = buckets, maxBucket = maxBucket)
     val batchIds = afterExB.select(col("doc_id"))
     label("ltpairs-ckpt")
-    val flagged = ckpt(rawPairs
+    val flagged = ckpt(cands.pairs
       .join(broadcast(batchIds.select(col("doc_id").as("a_id"),
         lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
       .join(broadcast(batchIds.select(col("doc_id").as("b_id"),
@@ -550,7 +541,7 @@ object UnifiedFlow {
     val attachBands = lateBands.join(broadcast(attach.select("doc_id")),
       Seq("doc_id"), "left_semi")
     LateTextStaged(corrections, cursor + tokTotal, attach, attachBands,
-      evictText, evictVecIds, overflow)
+      evictText, evictVecIds, cands.overflow)
   }
 
   /** Apply a [[lateTextDecide]]d batch: TEXT evictions first (digest,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Persisted state under `dir` (all three on the bucketed, planning-time
   * pruned, crash-safe machinery):
   *   - `digest/` — a band index of embedding content digests
-  *     (exact-duplicate lookups; [[Dedup.bandIndexAppendPrecomputed]]);
+  *     (exact-duplicate lookups; [[Dedup.bandIndexAppend]]);
   *   - `bands/`  — the hyperplane home-signature band index
   *     (near-duplicate candidates, Hamming≤1 multi-probe contract);
   *   - `vectors/` — the kept vectors themselves, hive-partitioned by
@@ -240,30 +240,14 @@ object VectorFlow {
     label("signed-ckpt")
     val (home, probes) = Similarity.signedBatch(afterEx, "vec_id",
       "embedding", params.bits, params.seed, d, params.families)
-    val stored = Dedup.bandIndexPrunedStored(dir + "/bands", probes,
-      params.buckets)
-    val (rawPairs, overflow) =
-      if (params.maxBucket == Int.MaxValue)
-        (stored.unionByName(home)
-          .join(broadcast(probes.select(col("doc_id").as("doc_n"),
-              col("band").as("band_n"))),
-            col("band") === col("band_n") && col("doc_id") =!= col("doc_n"))
-          .select(least(col("doc_id"), col("doc_n")).as("doc_a"),
-            greatest(col("doc_id"), col("doc_n")).as("doc_b"))
-          .distinct(), emptyOverflow(spark))
-      else {
-        val searched = stored.withColumn("is_new", lit(false))
-          .unionByName(home.withColumn("is_new", lit(true)))
-        val b = Dedup.boundedProbeCandidates(searched, probes,
-          params.maxBucket)
-        (b.pairs, ckpt(b.overflow))
-      }
+    val cands = Similarity.embIndexProbe(dir + "/bands", home, probes,
+      params.buckets, params.maxBucket)
     // the pair table pins WITH its in-batch flags (r17: the raw-pairs
     // pin left the two batchIds broadcasts to be re-built by every
     // downstream evaluation)
     val batchIds = afterEx.select(col("vec_id"))
     label("flagged-ckpt")
-    val flagged = ckpt(rawPairs
+    val flagged = ckpt(cands.pairs
       .join(broadcast(batchIds.select(col("vec_id").as("a_id"),
         lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
       .join(broadcast(batchIds.select(col("vec_id").as("b_id"),
@@ -408,7 +392,7 @@ object VectorFlow {
     // on the kept vectors (r15 diet, the text flow's keptBands shape)
     val keptBands = home.join(broadcast(kept.select(
       col("vec_id").as("doc_id"))), Seq("doc_id"), "left_semi")
-    Staged(decisions, kept, newCursor, overflow, keptBands)
+    Staged(decisions, kept, newCursor, cands.overflow, keptBands)
   }
 
   /** Append a [[decide]]d batch's kept vectors to all three stores. The
@@ -439,13 +423,13 @@ object VectorFlow {
     // CONCURRENTLY, surfacing failures only after all three finished
     // (r17 diet; CurationFlow.awaitBoth's single-writer rationale)
     CurationFlow.awaitLabeled(
-      ("vcommit:digest", () => Dedup.bandIndexAppendPrecomputed(dir + "/digest",
+      ("vcommit:digest", () => Dedup.bandIndexAppend(dir + "/digest",
         clean.select(col("vec_id").as("doc_id"), digestOf(spark).as("band")),
         params.buckets)),
       // a decide-supplied pinned home-band table skips the second
       // hyperplane-signature derivation; the no-bands form (the streaming
       // REPLAY path) re-derives
-      ("vcommit:bands", () => Dedup.bandIndexAppendPrecomputed(dir + "/bands",
+      ("vcommit:bands", () => Dedup.bandIndexAppend(dir + "/bands",
         keptBands.map(_.select(col("doc_id"), col("band")))
           .getOrElse(Similarity.embBandTable(clean, "vec_id", "embedding",
             params.bits, params.seed,
@@ -577,26 +561,10 @@ object VectorFlow {
     label("signed-ckpt")
     val (home, probes) = Similarity.signedBatch(afterExB, "vec_id",
       "embedding", params.bits, params.seed, d, params.families)
-    val stored = Dedup.bandIndexPrunedStored(dir + "/bands", probes,
-      params.buckets)
-    val (rawNear, overflow) =
-      if (params.maxBucket == Int.MaxValue)
-        (stored.unionByName(home)
-          .join(broadcast(probes.select(col("doc_id").as("doc_n"),
-              col("band").as("band_n"))),
-            col("band") === col("band_n") && col("doc_id") =!= col("doc_n"))
-          .select(least(col("doc_id"), col("doc_n")).as("doc_a"),
-            greatest(col("doc_id"), col("doc_n")).as("doc_b"))
-          .distinct(), emptyOverflow(spark))
-      else {
-        val searched = stored.withColumn("is_new", lit(false))
-          .unionByName(home.withColumn("is_new", lit(true)))
-        val b = Dedup.boundedProbeCandidates(searched, probes,
-          params.maxBucket)
-        (b.pairs, ckpt(b.overflow))
-      }
+    val cands = Similarity.embIndexProbe(dir + "/bands", home, probes,
+      params.buckets, params.maxBucket)
     label("near-ckpt")
-    val nearPairs = ckpt(rawNear)
+    val nearPairs = ckpt(cands.pairs)
 
     label("empty-probe")
     val (lostA, lostB, attach, evictWin, evictRows, redundant) =
@@ -763,7 +731,7 @@ object VectorFlow {
         lit("attached").as("status"), nullM))
     val attachBands = home.join(broadcast(attach.select(
       col("vec_id").as("doc_id"))), Seq("doc_id"), "left_semi")
-    LateStaged(corrections, attach, attachBands, evictRows, overflow)
+    LateStaged(corrections, attach, attachBands, evictRows, cands.overflow)
   }
 
   /** Apply a [[lateDecide]]d batch to the three stores: evictions
@@ -826,10 +794,10 @@ object VectorFlow {
     val dAuth = freezeParams(spark, dir, params, inferred = None,
       stamp = false)
     evictStored(dir, evict, params)
-    Dedup.bandIndexAppendPrecomputed(dir + "/digest",
+    Dedup.bandIndexAppend(dir + "/digest",
       attach.select(col("vec_id").as("doc_id"),
         digestOf(spark).as("band")), params.buckets)
-    Dedup.bandIndexAppendPrecomputed(dir + "/bands",
+    Dedup.bandIndexAppend(dir + "/bands",
       attachBands.map(_.select(col("doc_id"), col("band")))
         .getOrElse(Similarity.embBandTable(attach, "vec_id", "embedding",
           params.bits, params.seed, dAuth.getOrElse(params.dim),
@@ -1095,16 +1063,4 @@ object VectorFlow {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField(b,
           org.apache.spark.sql.types.LongType))))
-
-  private def emptyOverflow(spark: org.apache.spark.sql.SparkSession)
-      : DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("band", StringType),
-        StructField("occupancy", LongType),
-        StructField("n_probe", LongType),
-        StructField("emitted", LongType),
-        StructField("suppressed", LongType))))
-  }
 }

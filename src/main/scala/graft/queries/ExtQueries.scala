@@ -574,7 +574,7 @@ object ExtQueries {
       val (arrHome, arrProbes) = Similarity.signedBatch(arrivals,
         "vec_id", "embedding", bits = 8, seed = 42L, dim = dim,
         families = 1)
-      Dedup.bandIndexAppendPrecomputed(dir.toString, home)
+      Dedup.bandIndexAppend(dir.toString, home)
       val direct = home.unionByName(arrHome)
         .join(arrProbes
           .select(col("doc_id").as("doc_n"), col("band").as("band_n")),
@@ -582,8 +582,7 @@ object ExtQueries {
         .select(least(col("doc_id"), col("doc_n")).as("doc_a"),
           greatest(col("doc_id"), col("doc_n")).as("doc_b"))
       Verdicts.withPairSetOk(
-        Similarity.embIndexProbePrecomputed(dir.toString, arrHome,
-          arrProbes),
+        Similarity.embIndexProbe(dir.toString, arrHome, arrProbes).pairs,
         direct, "doc_a", "doc_b")
         .orderBy("doc_a", "doc_b")
     }),
@@ -681,9 +680,10 @@ object ExtQueries {
       // arrivals probed through the pruned read (static bkt IN (...)
       // partition filter — the probe lists only touched buckets)
       val dir = CoreQueries.pidScopedDir("graft_band_index", d)
-      Dedup.bandIndexAppend(dir.toString, history, "doc_id", "text")
+      Dedup.bandIndexAppend(dir.toString,
+        Dedup.ingestBands(history, "doc_id", "text"))
       Dedup.bandIndexProbe(dir.toString, arrivals, "doc_id", "text")
-        .orderBy("doc_a", "doc_b")
+        ._1.pairs.orderBy("doc_a", "doc_b")
     }),
 
     // North star — the HOT-BAND-CAPPED incremental probe (r14): bands
@@ -699,8 +699,9 @@ object ExtQueries {
       val history = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
       val arrivals = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
       val dir = CoreQueries.pidScopedDir("graft_band_bounded", d)
-      Dedup.bandIndexAppend(dir.toString, history, "doc_id", "text")
-      Dedup.bandIndexIngestBounded(dir.toString, arrivals, "doc_id", "text",
+      Dedup.bandIndexAppend(dir.toString,
+        Dedup.ingestBands(history, "doc_id", "text"))
+      Dedup.bandIndexIngest(dir.toString, arrivals, "doc_id", "text",
           maxBucket = 2)
         .pairs.orderBy("doc_a", "doc_b")
     }),

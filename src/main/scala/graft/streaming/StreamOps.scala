@@ -662,7 +662,7 @@ object StreamOps {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         graft.ops.Dedup.bandIndexIngest(indexPath, batch, "doc_id", "text")
-          .withColumn("batch_id", lit(id))
+          .pairs.withColumn("batch_id", lit(id))
           .write.mode("append").parquet(outPath)
         if (dueForCompact(compactEvery, id))
           graft.ops.Dedup.bandIndexCompact(batch.sparkSession, indexPath)
@@ -861,7 +861,7 @@ object StreamOps {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         graft.ops.Similarity.embIndexIngest(indexPath, batch,
             "vec_id", "embedding", bits, seed, dim, buckets, families)
-          .withColumn("batch_id", lit(id))
+          .pairs.withColumn("batch_id", lit(id))
           .write.mode("append").parquet(outPath)
         if (dueForCompact(compactEvery, id))
           graft.ops.Dedup.bandIndexCompact(batch.sparkSession, indexPath)

@@ -1,9 +1,28 @@
 package graft.ops
 
 import graft.{SparkTestBase, Tables}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class IvfIndexSpec extends SparkTestBase {
+
+  /** Batched exact ground truth: identical scoring/ordering contract to
+    * cosineTopK (4dp rounding, vec_id tie-break), all probes in one job.
+    */
+  def bruteTopK(corpus: DataFrame, probeIds: Seq[Long], k: Int): DataFrame = {
+    graft.functions.DotProductF.register(corpus.sparkSession)
+    val probes = corpus.filter(col("vec_id").isInCollection(probeIds))
+      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
+    corpus.crossJoin(broadcast(probes))
+      .filter(col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id"),
+        round(expr("graft_dot_f(embedding, probe_emb)"), 4).as("cos_sim"))
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy("probe_id").orderBy(col("cos_sim").desc, col("vec_id"))))
+      .filter(col("__rn") <= k)
+      .drop("__rn")
+  }
 
   private lazy val emb = Tables.embeddings(spark, Sf0001).cache()
   private lazy val model = IvfIndex.build(emb, nlist = 16, iters = 2)
@@ -64,7 +83,7 @@ class IvfIndexSpec extends SparkTestBase {
       .join(broadcast(m.centroids.select("cell")), Seq("cell")).count()
     assert(reachable === 2000L, "every assignment row must survive the cell join")
     val ids = (0L until 32L).toSeq
-    val truth = graft.tools.IvfRecallBench.bruteTopK(m.assignments, ids, 10)
+    val truth = bruteTopK(m.assignments, ids, 10)
     val batch = IvfIndex.searchTopKBatch(m, ids, 10, nprobe = 16)
     val hits = batch.join(truth, Seq("probe_id", "vec_id")).count()
     assert(hits === 32L * 10, s"full probe must reproduce brute force, matched $hits/320")
@@ -455,7 +474,7 @@ class IvfIndexSpec extends SparkTestBase {
     // full-probe search is exact on ANY cell structure: refined == brute
     val ids = Seq(0L, 5L, 100005L)
     val ncells = r.centroids.count().toInt
-    val truth = graft.tools.IvfRecallBench.bruteTopK(corpus, ids, 10)
+    val truth = bruteTopK(corpus, ids, 10)
     val got = IvfIndex.searchTopKBatch(r, ids, 10, nprobe = ncells)
     assert(got.join(truth, Seq("probe_id", "vec_id")).count() === 30,
       "full-probe search over the refined index must reproduce brute force")
@@ -591,7 +610,7 @@ class IvfIndexSpec extends SparkTestBase {
     // fresh path: one-shot build over the full corpus, same nlist
     val fresh = IvfIndex.build(corpus, nlist = 16, iters = 2)
     val ids = Seq(0L, 5L, 17L, 100005L, 100017L, 100042L)
-    val truth = graft.tools.IvfRecallBench.bruteTopK(corpus, ids, 10)
+    val truth = bruteTopK(corpus, ids, 10)
     def recallAt(m: IvfIndex.Model, nprobe: Int): Double =
       IvfIndex.searchTopKBatch(m, ids, 10, nprobe)
         .join(truth, Seq("probe_id", "vec_id")).count().toDouble / (ids.size * 10)

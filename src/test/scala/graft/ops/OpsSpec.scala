@@ -83,7 +83,7 @@ class OpsSpec extends SparkTestBase {
       docs.filter(pmod(col("doc_id"), lit(3)) === i))
     val perBatch = batches.map(b =>
       Dedup.bandIndexIngest(dir, b, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+        .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val full = Dedup.lshCandidatePairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(full.nonEmpty, "fixture produced no pairs — vacuous")
@@ -98,7 +98,7 @@ class OpsSpec extends SparkTestBase {
     // three ingests -> >= 3 small file groups in the index
     (0 until 3).foreach(i =>
       Dedup.bandIndexIngest(dir, docs.filter(pmod(col("doc_id"), lit(4)) === i),
-        "doc_id", "text").collect())
+        "doc_id", "text").pairs.collect())
     // r14 bucketed layout: data files live under bkt= partition dirs
     def walk(f: java.io.File): Int =
       if (f.isDirectory) f.listFiles().map(walk).sum
@@ -111,7 +111,7 @@ class OpsSpec extends SparkTestBase {
     // candidates of the NEXT batch must be identical before/after compact
     val batch4 = docs.filter(pmod(col("doc_id"), lit(4)) === 3)
     def probe() = Dedup.bandIndexProbe(dir, batch4, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      ._1.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val wantPairs = probe()
     assert(wantPairs.nonEmpty, "fixture produced no candidates — vacuous")
     Dedup.bandIndexCompact(spark, dir)
@@ -132,7 +132,7 @@ class OpsSpec extends SparkTestBase {
       spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir)))
     val healedPairs = Dedup.bandIndexIngest(dir, batch4, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(healedPairs === wantPairs, "post-crash ingest lost index history")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".aside")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".tmp")))
@@ -147,7 +147,7 @@ class OpsSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("band_prune").toString + "/idx"
     (0 until 2).foreach(i =>
       Dedup.bandIndexIngest(dir, docs.filter(pmod(col("doc_id"), lit(2)) === i),
-        "doc_id", "text").collect())
+        "doc_id", "text").pairs.collect())
     // a SMALL batch — a realistic micro-ingest touches a sliver of the
     // bucket space; that sliver is exactly what the probe may read
     val batch = docs.filter(pmod(col("doc_id"), lit(211)) === 5)
@@ -161,7 +161,7 @@ class OpsSpec extends SparkTestBase {
     val expectedDirs = (touched & existing).size
     assert(expectedDirs > 0 && existing.size > expectedDirs,
       s"fixture vacuous: touched=$expectedDirs of ${existing.size} buckets")
-    val probe = Dedup.bandIndexProbe(dir, batch, "doc_id", "text")
+    val probe = Dedup.bandIndexProbe(dir, batch, "doc_id", "text")._1.pairs
     val plan = probe.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan
@@ -244,7 +244,7 @@ class OpsSpec extends SparkTestBase {
     val allPairs = scala.collection.mutable.Set[(Long, Long)]()
     batches.foreach { ids =>
       val b = ids.map(i => (i, spam)).toDF("doc_id", "text")
-      val r = Dedup.bandIndexIngestBounded(dir, b, "doc_id", "text", maxBucket = 4)
+      val r = Dedup.bandIndexIngest(dir, b, "doc_id", "text", maxBucket = 4)
       allPairs ++= r.pairs.collect().map(x => (x.getLong(0), x.getLong(1)))
       assert(r.overflow.count() > 0, "the spam bucket must saturate")
     }
@@ -281,7 +281,7 @@ class OpsSpec extends SparkTestBase {
     // the cross-batch duplicate it would have silently lost
     Dedup.bandIndexMigrate(spark, dir)
     val got = Dedup.bandIndexProbe(dir, probe2, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      ._1.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((1L, 2L)), s"post-migration probe lost pairs: $got")
     // bucket count is frozen at creation: a mismatched caller fails loudly
     // instead of pruning away colliding directories (r14 review #4)
@@ -293,7 +293,7 @@ class OpsSpec extends SparkTestBase {
     // compact preserves the stamped layout across the staged swap
     Dedup.bandIndexCompact(spark, dir)
     assert(Dedup.bandIndexProbe(dir, probe2, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
+      ._1.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
   }
 
   test("stamp-ahead: sidecar lands BEFORE the first append, so a crash between them is benign") {
@@ -310,23 +310,31 @@ class OpsSpec extends SparkTestBase {
     // it reads as an EMPTY index (not a legacy-flat refusal): the probe
     // still finds the within-batch pair and the bucket count is frozen
     assert(Dedup.bandIndexProbe(dir, docs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
+      ._1.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
     intercept[IllegalArgumentException] {
       Dedup.bandIndexIngest(dir, docs, "doc_id", "text", buckets = 8) }
     // a real ingest then proceeds under the stamped count
     Dedup.bandIndexIngest(dir, docs.filter(col("doc_id") === 1L), "doc_id", "text")
     assert(Dedup.bandIndexProbe(dir, docs.filter(col("doc_id") === 2L),
         "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
+      ._1.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
   }
 
   test("lshCandidatePairsBounded: one-shot form == exact pairs under a high cap; stars a planted bucket") {
     import spark.implicits._
+    // the one-shot form: the symmetric route with an EMPTY stored side,
+    // so every doc is an arrival
+    def oneShot(d: org.apache.spark.sql.DataFrame, maxBucket: Int) =
+      Dedup.symmetricCandidates(
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          Dedup.bandSchema),
+        Dedup.ingestBands(d, "doc_id", "text"),
+        maxBucket)
     val docs = Tables.documents(spark, Sf0001)
     val exact = Dedup.lshCandidatePairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val high = Dedup.lshCandidatePairsBounded(docs, "doc_id", "text",
-      maxBucket = 1 << 20)
+    val high = oneShot(docs, maxBucket = 1 << 20)
     assert(high.overflow.isEmpty)
     assert(exact.nonEmpty &&
       high.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === exact)
@@ -334,8 +342,7 @@ class OpsSpec extends SparkTestBase {
     val spam = (0 until 20).map(i =>
       (i.toLong, "same spam text repeated for every single document here"))
       .toDF("doc_id", "text")
-    val capped = Dedup.lshCandidatePairsBounded(spam, "doc_id", "text",
-      maxBucket = 8)
+    val capped = oneShot(spam, maxBucket = 8)
     val pairs = capped.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs === (1 until 20).map(i => (0L, i.toLong)).toSet,
       s"expected the star onto doc 0, got $pairs")
@@ -369,14 +376,14 @@ class OpsSpec extends SparkTestBase {
     // (r13 review find — explicit-schema read)
     val dir = java.nio.file.Files.createTempDirectory("band_empty").toString + "/idx"
     val shorts = Seq((1L, "too short"), (2L, "tiny")).toDF("doc_id", "text")
-    val first = Dedup.bandIndexIngest(dir, shorts, "doc_id", "text").collect()
+    val first = Dedup.bandIndexIngest(dir, shorts, "doc_id", "text").pairs.collect()
     assert(first.isEmpty)
     val real = Seq(
       (10L, "the quick brown fox jumps over the lazy dog"),
       (11L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
     val second = Dedup.bandIndexIngest(dir, real, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(second === Set((10L, 11L)), s"got $second")
   }
 
@@ -766,7 +773,7 @@ class OpsSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("bktrm").toString + "/idx"
     // 40 docs x 1 band each across 4 buckets
     val bands = (0L until 40L).map(i => (i, s"band_$i")).toDF("doc_id", "band")
-    Dedup.bandIndexAppendPrecomputed(dir, bands, buckets = 4)
+    Dedup.bandIndexAppend(dir, bands, buckets = 4)
     val victims = Seq(3L, 17L, 31L)
     val vbands = bands.filter(col("doc_id").isInCollection(victims))
     Dedup.bandIndexRemove(dir, vbands, buckets = 4)
@@ -782,7 +789,7 @@ class OpsSpec extends SparkTestBase {
     assert(fs.rename(someBkt, new Path(dir + "/.rm_aside", someBkt.getName)))
     assert(!fs.exists(someBkt))
     // any index entry point heals (the probe path calls recoverBandIndex)
-    Dedup.bandIndexAppendPrecomputed(dir,
+    Dedup.bandIndexAppend(dir,
       Seq((100L, "band_x")).toDF("doc_id", "band"), buckets = 4)
     assert(fs.exists(someBkt), "torn removal must restore the aside bucket")
     assert(served() === ((0L until 40L).toSet -- victims) + 100L)

@@ -10,6 +10,15 @@ import org.apache.spark.sql.functions._
   */
 class SimilaritySpec extends SparkTestBase {
 
+  /** [[Similarity.embIndexProbe]] from raw 16-dim arrivals: derive the
+    * home and probe tables the entry takes precomputed.
+    */
+  private def probeRaw(dir: String, arrivals: org.apache.spark.sql.DataFrame) =
+    Similarity.embIndexProbe(dir,
+      Similarity.embBandTable(arrivals, "vec_id", "embedding", dim = 16),
+      Similarity.embProbeTable(arrivals, "vec_id", "embedding", dim = 16))
+      .pairs
+
   // synthetic corpus with PLANTED near-dups: per block, `nBase` random
   // unit vectors, each followed by a tiny perturbation of itself
   private def planted(nBlocks: Int, nBase: Int, dim: Int) = {
@@ -102,7 +111,7 @@ class SimilaritySpec extends SparkTestBase {
       emb.filter(pmod(col("vec_id"), lit(3)) === i))
     val perBatch = batches.map(b =>
       Similarity.embIndexIngest(dir, b, dim = 16)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+        .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     // full-corpus contract: pairs whose HOME signatures differ in <= 1 bit
     val homes = Similarity.embBandTable(emb, "vec_id", "embedding", dim = 16)
       .collect().map(r => (r.getLong(0), r.getString(1).toLong))
@@ -117,7 +126,7 @@ class SimilaritySpec extends SparkTestBase {
     // probe-only twin: arrival-restricted contract, nothing appended
     val probeBatch = batches(2)
     val before = spark.read.schema(Dedup.bandSchemaBkt).parquet(dir).count()
-    val got = Similarity.embIndexProbe(dir, probeBatch, dim = 16)
+    val got = probeRaw(dir, probeBatch)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val arrivals = probeBatch.select("vec_id").collect().map(_.getLong(0)).toSet
     assert(got === full.filter { case (a, b) =>
@@ -134,13 +143,13 @@ class SimilaritySpec extends SparkTestBase {
     val arrivals = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
     val base = java.nio.file.Files.createTempDirectory("emb_bnd").toString
     val dirA = base + "/a"; val dirB = base + "/b"
-    Dedup.bandIndexAppendPrecomputed(dirA,
+    Dedup.bandIndexAppend(dirA,
       Similarity.embBandTable(history, "vec_id", "embedding", dim = 16))
-    Dedup.bandIndexAppendPrecomputed(dirB,
+    Dedup.bandIndexAppend(dirB,
       Similarity.embBandTable(history, "vec_id", "embedding", dim = 16))
-    val exact = Similarity.embIndexProbe(dirA, arrivals, dim = 16)
+    val exact = probeRaw(dirA, arrivals)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val high = Similarity.embIndexIngestBounded(dirB, arrivals, dim = 16,
+    val high = Similarity.embIndexIngest(dirB, arrivals, dim = 16,
       maxBucket = 1 << 20)
     assert(high.overflow.isEmpty, "no bucket saturates the high cap")
     val highPairs = high.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -155,10 +164,10 @@ class SimilaritySpec extends SparkTestBase {
     }
     val hotAll = (0L until 30L).map(i => (i, same))
     val dirC = base + "/c"
-    Dedup.bandIndexAppendPrecomputed(dirC, Similarity.embBandTable(
+    Dedup.bandIndexAppend(dirC, Similarity.embBandTable(
       hotAll.filter(_._1 % 2 == 0).toDF("vec_id", "embedding"),
       "vec_id", "embedding", dim = 16))
-    val bounded = Similarity.embIndexIngestBounded(dirC,
+    val bounded = Similarity.embIndexIngest(dirC,
       hotAll.filter(_._1 % 2 == 1).toDF("vec_id", "embedding"),
       dim = 16, maxBucket = 8)
     val pairs = bounded.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -187,7 +196,7 @@ class SimilaritySpec extends SparkTestBase {
     val allPairs = scala.collection.mutable.Set[(Long, Long)]()
     Seq(20L until 30L, 10L until 20L, 0L until 10L).foreach { ids =>
       val b = ids.map(i => (i, same)).toDF("vec_id", "embedding")
-      val r = Similarity.embIndexIngestBounded(dir, b, dim = 16, maxBucket = 4)
+      val r = Similarity.embIndexIngest(dir, b, dim = 16, maxBucket = 4)
       allPairs ++= r.pairs.collect().map(x => (x.getLong(0), x.getLong(1)))
       assert(r.overflow.count() > 0, "the hot bucket must saturate")
     }
@@ -210,8 +219,9 @@ class SimilaritySpec extends SparkTestBase {
     val before = spark.read.schema(Dedup.bandSchemaBkt).parquet(dir)
       .collect().map(_.toSeq).toSet
     val empty = emb.filter(lit(false))
-    assert(Similarity.embIndexIngest(dir, empty).count() === 0)
-    assert(Similarity.embIndexIngestBounded(dir, empty).pairs.count() === 0)
+    assert(Similarity.embIndexIngest(dir, empty).pairs.count() === 0)
+    assert(Similarity.embIndexIngest(dir, empty, maxBucket = 1024)
+      .pairs.count() === 0)
     assert(spark.read.schema(Dedup.bandSchemaBkt).parquet(dir)
       .collect().map(_.toSeq).toSet === before, "empty ingest must not mutate")
   }
@@ -226,7 +236,7 @@ class SimilaritySpec extends SparkTestBase {
       .toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("emb_null").toString + "/idx"
     val pairs = Similarity.embIndexIngest(dir, arrivals) // dim inferred
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((2L, 3L)),
       s"identical vectors must still pair under inferred dim: $pairs")
     // an ALL-null batch is the empty-batch shape: safe no-op probe
@@ -353,7 +363,7 @@ class SimilaritySpec extends SparkTestBase {
     val perBatch = (0 until 3).map(i =>
       Similarity.embIndexIngest(dir,
           emb.filter(pmod(col("vec_id"), lit(3)) === i), dim = 16, families = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+        .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     // expected: pairs within Hamming<=1 in ANY family, derived from the
     // band table's own f:sig strings
     val sigs = Similarity.embBandTable(emb, "vec_id", "embedding",
@@ -399,10 +409,10 @@ class SimilaritySpec extends SparkTestBase {
       val d = s"$base/f$families"
       Similarity.embIndexIngest(d, bases.toDF("vec_id", "embedding"),
         dim = dim, bits = 32, families = families)
-        .write.format("noop").mode("overwrite").save()
+        .pairs.write.format("noop").mode("overwrite").save()
       Similarity.embIndexIngest(d, twins.toDF("vec_id", "embedding"),
           dim = dim, bits = 32, families = families)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+        .pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
         .collect { case (a, b) if b == a + 1000L => a }.toSet
     }
     val one = recovered(1)
@@ -426,7 +436,7 @@ class SimilaritySpec extends SparkTestBase {
     (0 until 4).foreach { i =>
       Similarity.embIndexIngest(dir,
         emb.filter(pmod(col("vec_id"), lit(4)) === i), dim = 16)
-        .write.format("noop").mode("overwrite").save()
+        .pairs.write.format("noop").mode("overwrite").save()
     }
     def files(): Int = {
       def walk(f: java.io.File): Int =
@@ -435,12 +445,12 @@ class SimilaritySpec extends SparkTestBase {
       walk(new java.io.File(dir))
     }
     val probe = emb.filter(pmod(col("vec_id"), lit(4)) === 0)
-    val before = Similarity.embIndexProbe(dir, probe, dim = 16)
+    val before = probeRaw(dir, probe)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val nBefore = files()
     Dedup.bandIndexCompact(spark, dir)
     assert(files() < nBefore, s"compaction must fold files ($nBefore -> ${files()})")
-    val after = Similarity.embIndexProbe(dir, probe, dim = 16)
+    val after = probeRaw(dir, probe)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(before.nonEmpty && after === before, "compaction changed the candidate set")
   }
@@ -465,7 +475,7 @@ class SimilaritySpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("emb_twin").toString + "/idx"
     Similarity.embIndexIngest(dir, bases.toDF("vec_id", "embedding"), dim = dim)
     val got = Similarity.embIndexIngest(dir, twins.toDF("vec_id", "embedding"), dim = dim)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recovered = (0L until 20L).count(i => got.contains((i, i + 1000L)))
     assert(recovered >= 14,
       s"multi-probe should catch most planted twins, got $recovered/20")

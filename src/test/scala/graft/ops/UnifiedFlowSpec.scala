@@ -307,4 +307,48 @@ class UnifiedFlowSpec extends SparkTestBase {
     assert(all.count() === all.select("batch_id", "doc_id").distinct().count())
     assert(CurationFlow.readLedger(spark, s"$base/idx").get._1 === 2L)
   }
+
+  test("decide drains the contamination scan when the band probe throws after the fork") {
+    val dir = java.nio.file.Files.createTempDirectory("uni_drain").toString + "/c"
+    // bands/ is stamped with 8 buckets, so decide's 16-bucket band probe
+    // — which runs after the contamination scan has forked — fails its
+    // layout check (the digest probe before the fork sees no index)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    LayoutSidecar.stamp(fs, dir + "/bands", 8)
+    // a scan that outlasts the failing probe: the bench's one partition
+    // takes 3 s to produce its (never matching) shingle, on one core of
+    // four, so the probe's own jobs are not starved behind it
+    val slow = udf { (i: Long) => Thread.sleep(3000); s"no such shingle $i" }
+    val bench = spark.range(0, 1, 1, 1).select(slow(col("id")).as("shingle"))
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties
+            .getProperty("spark.job.description") == "decide:hits-ckpt")
+          starts.put(j.jobId, j.time)
+      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ends.put(j.jobId, j.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val e = intercept[IllegalArgumentException] {
+        UnifiedFlow.decide(dir, df(Seq((1L, goodText("a"), rot(0)))), bench, 0L)
+      }
+      val thrownAt = System.currentTimeMillis()
+      assert(e.getMessage.contains("frozen"), e.getMessage)
+      // a scan left running would start or finish jobs in this window
+      Thread.sleep(4000)
+      org.apache.spark.sql.graftbridge.Bridge.awaitListenerBusEmpty(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      val hitJobs = starts.asScala.toMap
+      assert(hitJobs.nonEmpty, "the contamination scan never ran — vacuous")
+      hitJobs.foreach { case (id, start) =>
+        assert(start <= thrownAt, s"hits job $id started after decide threw")
+        assert(ends.containsKey(id) && ends.get(id) <= thrownAt,
+          s"hits job $id was still running when decide threw")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -1327,6 +1327,118 @@ class StreamingSpec extends SparkTestBase {
     assert(served === Map(42L -> 8L, 44L -> 8L, 66L -> 8L))
   }
 
+  /** Every row under `path` (partition columns included), in a stable
+    * order — the equality key for a stream run and its step twin.
+    */
+  private def storeRows(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+
+  test("lateEmbeddingStream: one MemoryStream micro-batch == its lateEmbeddingStep twin (corrections, vec stores, ledger)") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val vec = graft.ops.VectorFlow.Params(minCos = 0.99, dim = 8)
+    def rot(a: Double): Seq[Float] = {
+      val v = Array.fill(8)(0f)
+      v(0) = math.cos(a).toFloat; v(1) = math.sin(a).toFloat; v.toSeq
+    }
+    def goodText(seed: String): String =
+      "the of " + (0 until 20).map(j => s"w$seed$j").mkString(" ")
+    def udf2(rows: Seq[(Long, String, Seq[Float])]) =
+      rows.toDF("doc_id", "text", "embedding")
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .withColumn("embedding", col("embedding").cast("array<float>"))
+        .select("doc_id", "text", "n_chars", "embedding")
+    val noEmb = null.asInstanceOf[Seq[Float]]
+    val bench = graft.ops.CurationFlow.benchShingles(
+      udf2(Seq((100L, goodText("bench"), noEmb))))
+    // two identical unified corpora: doc 3 text-kept WITHOUT its
+    // embedding, doc 21 kept with one near-identical to 3's late vector
+    def corpus(): String = {
+      val base = java.nio.file.Files.createTempDirectory("lateembstream").toString
+      StreamOps.unifiedStep(s"$base/idx", s"$base/out", bench, 256L, 16,
+        vec = vec)(udf2(Seq((1L, goodText("a"), rot(0)),
+          (3L, goodText("c"), noEmb))), 0L)
+      StreamOps.unifiedStep(s"$base/idx", s"$base/out", bench, 256L, 16,
+        vec = vec)(udf2(Seq((21L, goodText("k"), rot(2.02)))), 1L)
+      base
+    }
+    val late = Seq((3L, rot(2.0).toArray, 0L))
+    val streamed = corpus()
+    val mem = MemoryStream[(Long, Array[Float], Long)]
+    val q = StreamOps.lateEmbeddingStream(
+      mem.toDF().toDF("doc_id", "embedding", "prio"),
+      s"$streamed/idx", s"$streamed/lateout", s"$streamed/ckpt", vec)
+    try {
+      mem.addData(late)
+      q.processAllAvailable()
+    } finally q.stop()
+    val stepped = corpus()
+    StreamOps.lateEmbeddingStep(s"$stepped/idx", s"$stepped/lateout", vec)(
+      late.toDF("doc_id", "embedding", "prio"), 0L)
+    val cor = storeRows(s"$streamed/lateout")
+    assert(cor.nonEmpty, "the micro-batch decided nothing — vacuous")
+    assert(cor === storeRows(s"$stepped/lateout"))
+    for (store <- Seq("vec/digest", "vec/bands", "vec/vectors"))
+      assert(storeRows(s"$streamed/idx/$store") ===
+        storeRows(s"$stepped/idx/$store"), store)
+    assert(graft.ops.CurationFlow.readLedger(spark, s"$streamed/idx/vec") ===
+      graft.ops.CurationFlow.readLedger(spark, s"$stepped/idx/vec"))
+  }
+
+  test("lateTextStream: one MemoryStream micro-batch == its lateTextStep twin (corrections, text and vec stores, ledger)") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val vec = graft.ops.VectorFlow.Params(minCos = 0.99, dim = 8)
+    def rot(a: Double): Seq[Float] = {
+      val v = Array.fill(8)(0f)
+      v(0) = math.cos(a).toFloat; v(1) = math.sin(a).toFloat; v.toSeq
+    }
+    def goodText(seed: String): String =
+      "the of " + (0 until 20).map(j => s"w$seed$j").mkString(" ")
+    def udf2(rows: Seq[(Long, String, Seq[Float])]) =
+      rows.toDF("doc_id", "text", "embedding")
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .withColumn("embedding", col("embedding").cast("array<float>"))
+        .select("doc_id", "text", "n_chars", "embedding")
+    val noEmb = null.asInstanceOf[Seq[Float]]
+    val t = goodText("t42")
+    val bench = graft.ops.CurationFlow.benchShingles(
+      udf2(Seq((100L, goodText("bench"), noEmb))))
+    // two identical unified corpora: doc 8 kept PENDING (vector only),
+    // doc 42 kept with the text doc 8 later delivers
+    def corpus(): String = {
+      val base = java.nio.file.Files.createTempDirectory("latetextstream").toString
+      StreamOps.unifiedStep(s"$base/idx", s"$base/out", bench, 256L, 16,
+        vec = vec)(udf2(Seq((1L, goodText("a"), rot(0)),
+          (8L, null.asInstanceOf[String], rot(1.0)))), 0L)
+      StreamOps.unifiedStep(s"$base/idx", s"$base/out", bench, 256L, 16,
+        vec = vec)(udf2(Seq((42L, t, noEmb))), 1L)
+      base
+    }
+    val late = Seq((8L, t, t.length.toLong, 0L))
+    val streamed = corpus()
+    val mem = MemoryStream[(Long, String, Long, Long)]
+    val q = StreamOps.lateTextStream(
+      mem.toDF().toDF("doc_id", "text", "n_chars", "prio"),
+      s"$streamed/idx", s"$streamed/ltout", s"$streamed/ckpt", bench,
+      vec = vec)
+    try {
+      mem.addData(late)
+      q.processAllAvailable()
+    } finally q.stop()
+    val stepped = corpus()
+    StreamOps.lateTextStep(s"$stepped/idx", s"$stepped/ltout", bench,
+      vec = vec)(late.toDF("doc_id", "text", "n_chars", "prio"), 0L)
+    val cor = storeRows(s"$streamed/ltout")
+    assert(cor.nonEmpty, "the micro-batch decided nothing — vacuous")
+    assert(cor === storeRows(s"$stepped/ltout"))
+    for (store <- Seq("digest", "bands", "textmeta", "vec/vectors"))
+      assert(storeRows(s"$streamed/idx/$store") ===
+        storeRows(s"$stepped/idx/$store"), store)
+    assert(graft.ops.CurationFlow.readLedger(spark, s"$streamed/idx/ltext") ===
+      graft.ops.CurationFlow.readLedger(spark, s"$stepped/idx/ltext"))
+  }
+
   test("late-TEXT lane serving removals: a retroactive gate drop tombstones the pending vector in-loop (empty-append watch cycle)") {
     import spark.implicits._
     val vec = graft.ops.VectorFlow.Params(minCos = 0.99, dim = 8)
