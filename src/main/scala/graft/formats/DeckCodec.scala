@@ -1,5 +1,6 @@
 package graft.formats
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -11,13 +12,13 @@ import org.apache.spark.sql.types._
   * formats (SURVEY §2.1 S1-S3, S5-S7).
   *
   * Design split (100 TB discipline):
-  *  - data-sized tables (particles, bonds, facets, series) parse
-  *    DISTRIBUTED via `spark.read.text` — whitespace split + casts, all
-  *    codegen'd; invalid rows are dropped, mirroring the reference's
-  *    skip-with-warning policy (`BooleanOperation.py:60-61`);
-  *  - config-sized files (materials, load curves, manifest, masks) parse
-  *    driver-side — they are broadcast-dimension sized by construction
-  *    (`MLSMat00.dat` has 1 row).
+  *  - data-sized tables (particles, bonds, series) parse DISTRIBUTED via
+  *    `spark.read.text` — whitespace split + casts, all codegen'd; invalid
+  *    rows are dropped, mirroring the reference's skip-with-warning policy
+  *    (`BooleanOperation.py:60-61`);
+  *  - grain-bounded facet files (S6) and config-sized files (materials,
+  *    load curves, manifest, masks) read and write driver-side — they are
+  *    broadcast-dimension sized by construction (`MLSMat00.dat` has 1 row).
   */
 object DeckCodec {
 
@@ -254,8 +255,7 @@ object DeckCodec {
     */
   def writePosItemMask(mask: Seq[Int], path: String): Unit = {
     require(mask.forall(f => f == 0 || f == 1), s"mask flags must be 0/1: $mask")
-    Files.write(Paths.get(path),
-      (mask.mkString(" ") + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeText(path, mask.mkString(" ") + "\n")
   }
 
   /** Inverse of [[maskToColumns]]: which of `allItems` a projection keeps. */
@@ -269,9 +269,11 @@ object DeckCodec {
   def writeManifest(m: Manifest, path: String): Unit = {
     val lines = Seq(m.settings, m.geometry, m.material, m.boundary,
       m.outputPrefix, m.restart.toString)
-    Files.write(Paths.get(path),
-      (lines.mkString("\n") + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeText(path, lines.mkString("\n") + "\n")
   }
+
+  private def writeText(path: String, text: String): Unit =
+    Files.write(Paths.get(path), text.getBytes(UTF_8))
 
   /** Compact numeric rendering for deck text: integers print bare
     * ("0", "50"), everything else via Double.toString — value-preserving
@@ -287,35 +289,40 @@ object DeckCodec {
     * engine-readable text file (a single-writer export boundary, like the
     * reference's own exports), so rows stream through `toLocalIterator` —
     * no full driver materialization; data-sized analytics outputs go
-    * through the parquet / SoA sinks (S8) instead.
+    * through the parquet / SoA sinks (S8) instead. `header` gets the row
+    * count of the same pass, which streams the body via a sibling temp file.
     */
-  def writeDeckTable(df: DataFrame, header: Seq[String], path: String): Unit = {
-    val w = Files.newBufferedWriter(Paths.get(path))
+  def writeDeckTable(df: DataFrame, header: Long => Seq[String], path: String): Unit = {
+    val out = Paths.get(path).toAbsolutePath
+    val body = Files.createTempFile(out.getParent, s".${out.getFileName}", ".body")
     try {
-      header.foreach { h => w.write(h); w.write("\n") }
-      df.toLocalIterator().asScala.foreach { r =>
-        val line = r.toSeq.map {
+      val w = Files.newBufferedWriter(body)
+      val n = try df.toLocalIterator().asScala.foldLeft(0L) { (n, r) =>
+        w.write(r.toSeq.map {
           case d: Double => fmtNum(d)
           case f: Float  => fmtNum(f.toDouble)
           case x         => String.valueOf(x)
-        }.mkString(" ")
-        w.write(line); w.write("\n")
-      }
-    } finally w.close()
+        }.mkString(" ") + "\n")
+        n + 1
+      } finally w.close()
+      val o = Files.newOutputStream(out)
+      try { o.write(header(n).map(_ + "\n").mkString.getBytes(UTF_8)); Files.copy(body, o) }
+      finally o.close()
+    } finally Files.deleteIfExists(body)
   }
 
   /** D5 writer — count-prefixed particle table (`BALL3D_PSLICE.dat`). */
   def writeParticles(df: DataFrame, path: String): Unit =
     writeDeckTable(df.select(Schemas.particle.fieldNames.map(col).toIndexedSeq: _*),
-      Seq(df.count().toString), path)
+      n => Seq(n.toString), path)
 
   /** D6 writer — bond edge list with its flag-line header (`MLSBond.dat:1`). */
   def writeBonds(df: DataFrame, path: String): Unit =
-    writeDeckTable(df.select("src", "dst", "group"), Seq("0"), path)
+    writeDeckTable(df.select("src", "dst", "group"), _ => Seq("0"), path)
 
   /** D8 writer — count-prefixed material dimension table (`MLSMat00.dat`). */
   def writeMaterials(df: DataFrame, path: String): Unit =
-    writeDeckTable(df, Seq(df.count().toString), path)
+    writeDeckTable(df, n => Seq(n.toString), path)
 
   /** D9 writer — boundary conditions + load curves in `MLSLD00.dat` layout
     * (count; per BC: 3 range lines, `type dir`, npoints, times, values).
@@ -332,8 +339,7 @@ object DeckCodec {
       bc.curve.foreach { case (t, _) => sb.append(fmtNum(t)).append('\n') }
       bc.curve.foreach { case (_, v) => sb.append(fmtNum(v)).append('\n') }
     }
-    Files.write(Paths.get(path),
-      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeText(path, sb.toString)
   }
 
   /** D10 writer — measure-point ids in `MeasurePar.dat` layout
@@ -341,8 +347,7 @@ object DeckCodec {
     */
   def writeMeasurePoints(ids: Seq[Long], path: String): Unit = {
     val lines = Seq("0", ids.length.toString, ids.length.toString) ++ ids.map(_.toString)
-    Files.write(Paths.get(path),
-      (lines.mkString("\n") + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeText(path, lines.mkString("\n") + "\n")
   }
 
   /** A whole job deck as tables: the manifest plus every file it names
@@ -384,9 +389,7 @@ object DeckCodec {
     val m = deck.manifest
     def p(name: String) = Paths.get(dir, name).toString
     writeManifest(m, p("mls.c"))
-    Files.write(Paths.get(dir, m.settings),
-      (deck.settingsLines.mkString("\n") + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeText(p(m.settings), deck.settingsLines.mkString("\n") + "\n")
     writeMaterials(deck.materials, p(m.material))
     writeBoundaryConditions(deck.boundaries, p(m.boundary))
     deck.particles.foreach(writeParticles(_, p(m.geometry)))
@@ -394,14 +397,26 @@ object DeckCodec {
     if (deck.measureIds.nonEmpty) writeMeasurePoints(deck.measureIds, p("MeasurePar.dat"))
   }
 
-  /** S6 — facet quad sink: 12 fixed-8dp floats per line, CRLF, single
-    * deterministic partition (`GenerateColumnar.py:308-332`).
+  /** S6 — facet quad sink (`GenerateColumnar.py:308-332`): one file, 12
+    * `%.8f` floats (`Locale.US`, as Spark's `format_string`) per line, CRLF.
     */
-  def writeFacetQuads(df: DataFrame, cols: Seq[String], path: String): Unit = {
-    val fmt = cols.map(_ => "%.8f").mkString(" ") + "\r"
-    df.select(format_string(fmt, cols.map(col): _*).as("value"))
-      .coalesce(1)
-      .write.mode("overwrite").text(path)
+  def writeFacetQuads(quads: Seq[Seq[Double]], path: String): Unit = {
+    Files.createDirectories(Paths.get(path).toAbsolutePath.getParent)
+    writeText(path,
+      quads.map(_.map("%.8f".formatLocal(java.util.Locale.US, _)).mkString(" ") + "\r\n").mkString)
+  }
+
+  /** S6 reader — the 12-float rows of a facet file or of a directory of
+    * text parts (name order, no `_`/`.` files, as Spark's text reader), in
+    * order; lines with another field count (split as `split(trim(_))`) drop.
+    */
+  def readFacetQuads(path: String): IndexedSeq[IndexedSeq[Double]] = {
+    val f = new java.io.File(path)
+    val files = if (!f.isDirectory) Seq(f)
+      else f.listFiles().toSeq.filter(g => g.isFile && !"_.".contains(g.getName.head)).sortBy(_.getName)
+    files.flatMap(g => Files.readAllLines(g.toPath).asScala)
+      .map(_.replaceAll("^ +| +$", "").split("\\s+", -1))
+      .collect { case a if a.length == 12 => a.map(_.toDouble).toIndexedSeq }.toIndexedSeq
   }
 
   /** S7 — vertex sink: one space-joined line per row

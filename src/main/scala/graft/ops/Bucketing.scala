@@ -14,7 +14,7 @@ object Bucketing {
   /** Range-partition + sort `df` on `sortCol` and write it as parquet —
     * the ingest layout that turns parquet row-group/page min-max stats
     * into real skipping for range predicates on `sortCol`. Measured in
-    * `tools/LayoutBench` (and pinned in BucketingSpec): a 1% time-window
+    * `tools/LayoutBench` at 8a861d8 (and pinned in BucketingSpec): a 1% time-window
     * query over the same rows decodes ~51x fewer rows from this layout
     * than from arrival (hash) order, and that decode ratio IS the cost
     * ratio of the query at 100 TB. Reference anchor: the engine's own
@@ -83,7 +83,7 @@ object Bucketing {
     * Z-clustering makes every one of those ranges tight simultaneously, so
     * a box predicate (`x BETWEEN .. AND y BETWEEN ..`) skips row groups on
     * every axis — where a single-column sort only ever skips on its one
-    * sort column. Measured in `tools/ZOrderBench` (1M events, 256 KiB
+    * sort column. Measured in `tools/ZOrderBench` at 8a861d8 (1M events, 256 KiB
     * groups) and pinned in BucketingSpec: on a 10% x 10% (ts, user) box
     * the Z layout decodes 2.7x fewer rows than the ts-sorted layout
     * (38.9k vs 103.5k); on a user-only window — the 1-D sort's blind

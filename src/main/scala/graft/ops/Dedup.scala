@@ -427,7 +427,7 @@ object Dedup {
 
   /** The ingest path's band derivation: the grouped [[lshBandTable]] over
     * a batch REPARTITIONED by doc id. The repartition does two jobs at
-    * once (tools/PeakProbe, 100× corpus):
+    * once (tools/PeakProbe at 8a861d8, 100× corpus):
     *
     *   - BOUNDS the signature aggregation's peak task. Parquet splits by
     *     COMPRESSED bytes, and a crawl-grade duplicate corpus compresses

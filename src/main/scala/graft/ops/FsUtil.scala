@@ -11,7 +11,7 @@ import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
   * [[copyTree]] exists because Hadoop's LocalFileSystem pays a
   * fork+exec'd permission shell per CREATED FILE when the native
   * libhadoop is absent (this container): `FileUtil.copy` of a
-  * 137-file / 143 KB store measured 2.3–6.7 s (tools/LateCopyProbe),
+  * 137-file / 143 KB store measured 2.3–6.7 s (tools/LateCopyProbe at 8a861d8),
   * ~20–50 ms per kilobyte-sized file — pure process-spawn overhead.
   * On the `file` scheme the copy goes through java.nio instead (raw
   * byte-identical tree, checksum sidecars included, ~ms for the same
@@ -68,7 +68,7 @@ object FsUtil {
     * write + close semantics. On the `file` scheme the write goes
     * through java.nio: `fs.create` pays the same fork+exec'd
     * permission shell as the copies above (~8 ms per call, measured —
-    * tools/LateCopyProbe FSOP table), which the sidecar/ledger writers
+    * tools/LateCopyProbe at 8a861d8 FSOP table), which the sidecar/ledger writers
     * pay on every commit. A stale checksum sidecar from an earlier
     * Hadoop-path write is deleted so a later checksummed open can
     * never verify the new bytes against the old CRC.

@@ -194,7 +194,7 @@ object IvfIndex {
     * no per-centroid column (an earlier per-centroid unrolled-column shape
     * fell off whole-stage codegen past `spark.sql.codegen.maxFields` = 100
     * columns and went super-linear: 11 s vs 0.2 s for nlist=256 on a 20k
-    * corpus, `tools/IvfAssignBench`). No window, no exchange — a 100 TB
+    * corpus, `tools/IvfAssignBench` at 8a861d8). No window, no exchange — a 100 TB
     * corpus assigns in one map pass. Ties break to the lowest cell
     * (struct comparison on (score, -cell) descending).
     *
@@ -228,7 +228,7 @@ object IvfIndex {
 
   /** Hierarchical (coarse-quantized) assignment — the production-nlist
     * route (VERDICT r12 #6): past nlist ≈ 8–16k the flat [[assign]] hits
-    * its measured cliff (`tools/IvfAssignBench`: the packed literal's
+    * its measured cliff (`tools/IvfAssignBench` at 8a861d8: the packed literal's
     * one-time planning cost turns super-linear at 4 MB/16k cells — 26 s
     * cold — and the max_by fallback pushes corpus × nlist scored rows
     * through its partial aggregate). This is the standard IVF answer:
@@ -247,7 +247,7 @@ object IvfIndex {
     * assignment is APPROXIMATE (exact within the probed coarse groups;
     * a vector whose true cell hides in an unprobed group mis-assigns —
     * measured ≥ 0.97 agreement with exact at the defaults,
-    * IvfIndexSpec/IvfAssignBench). Standard IVF practice: membership
+    * IvfIndexSpec/IvfAssignBench at 8a861d8). Standard IVF practice: membership
     * quality degrades gracefully and search correctness never depends on
     * assignment optimality — cells are just buckets. Deterministic given
     * the build seed, like [[assign]].
@@ -360,7 +360,7 @@ object IvfIndex {
     * cell list from the same rows is pushed as a LITERAL filter on the
     * corpus scan: on a [[save]]d cell-partitioned index that is
     * planning-time partition pruning — unprobed cell directories are never
-    * opened, measured (not just planned) in `tools/IvfPruneBench`.
+    * opened, measured (not just planned) in `tools/IvfPruneBench` at 8a861d8.
     * Runtime-only DPP planned but did not shrink physical reads on this
     * shape, which is why the static filter exists.
     *
@@ -404,7 +404,7 @@ object IvfIndex {
     * (`partitionBy("cell")`) so the probed-cell list every search pushes
     * as a static `cell IN (...)` predicate becomes PLANNING-TIME directory
     * pruning — unprobed cells are never listed, let alone read off disk
-    * (pinned in IvfIndexSpec, measured in `tools/IvfPruneBench`).
+    * (pinned in IvfIndexSpec, measured in `tools/IvfPruneBench` at 8a861d8).
     */
   def save(model: Model, path: String): Unit = {
     clearLayoutSidecar(model.centroids.sparkSession, path)
@@ -412,7 +412,7 @@ object IvfIndex {
     model.centroids.write.mode("overwrite").parquet(s"$path/centroids")
     // repartition BY cell before the partitioned write: an unrepartitioned
     // partitionBy emits one file per (task, cell) — measured 15,248 files
-    // for a 20k-vector/8k-cell save (tools/IvfProdBench), 65 s of commit
+    // for a 20k-vector/8k-cell save (tools/IvfProdBench at 8a861d8), 65 s of commit
     // overhead for 5 MB of data. One corpus shuffle buys one file per cell.
     model.assignments.repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
@@ -456,7 +456,7 @@ object IvfIndex {
     * the embedding column through the codegen PQ decode, [[append]]
     * encodes arrivals under the saved codebook, and every search /
     * maintenance path runs unchanged at PQ's measured recall
-    * (QuantBench/SCALE.md r8).
+    * (QuantBench at 8a861d8; SCALE.md r8).
     */
   def saveQuantizedPq(model: Model, path: String, pq: Pq.PqModel): Unit = {
     val spark = model.centroids.sparkSession
@@ -486,7 +486,7 @@ object IvfIndex {
 
   /** [[saveQuantized]]'s cell-bucketed sibling — the SQ8 counterpart of
     * [[saveQuantizedPqBucketed]] (same writer cliff: 215 s / 16k files at
-    * nlist=16384 in IvfProdBench). [[load]] reconstructs embeddings and
+    * nlist=16384 in IvfProdBench at 8a861d8). [[load]] reconstructs embeddings and
     * drops the bucket column, so the decode serving path runs unchanged;
     * the probed-cell filter pushes into row-group min/max inside the
     * constant-count bucket directories.
@@ -519,7 +519,7 @@ object IvfIndex {
   /** [[saveQuantizedPq]] in the CELL-BUCKETED layout for production cell
     * counts: one directory per cell stops scaling past nlist ≈ 1k — the
     * partitioned write commits nlist files, and every subsequent read
-    * pays partition DISCOVERY over nlist directories (tools/IvfProdBench:
+    * pays partition DISCOVERY over nlist directories (tools/IvfProdBench at 8a861d8:
     * 19.5 s warm ADC search at nlist=8192, dominated by listing ~7,600
     * dirs — and an object store pays it in LIST requests). Here cells
     * group into `cellBuckets` directories (`cbkt = cell mod B`) with
@@ -907,7 +907,7 @@ object IvfIndex {
     * The batch is assigned ONCE (shared by the watch aggregate and the
     * append write). Caller owns vec_id uniqueness and the single-writer
     * contract, and acts on [[MaintainWatch.action]] — this step never
-    * re-clusters behind the caller's back (`tools/IvfServeSoak` is the
+    * re-clusters behind the caller's back (`tools/IvfServeSoak` at 8a861d8 is the
     * measured loop: recall@10 flat across 20+ appended batches, the
     * watch firing on a planted tight modality, refine recovering it).
     *
@@ -1077,7 +1077,7 @@ object IvfIndex {
   }
 
   /** One SELF-MAINTAINING serving cycle — the composition every soak
-    * loop writes by hand (`IvfServeSoak`, `LateInterleaveSoak`), as one
+    * loop writes by hand (`IvfServeSoak` at 8a861d8, `LateInterleaveSoak` at 8a861d8), as one
     * call for production callers: ledgered append, tombstone removals,
     * then APPLY the watch's verdict with the escalation policy the
     * soaks validated (retrain from `source` on persistent drift, refine
@@ -1187,7 +1187,7 @@ object IvfIndex {
     * baseline, and under sustained drift that batch is a drifted one:
     * the poisoned (low) baseline then hid the drift from every later
     * watch, starving the retrain verdict behind an endless refine
-    * churn (the `IvfServeSoak driftflood` finding — 7 refines in 10
+    * churn (the `IvfServeSoak driftflood` finding at 8a861d8 — 7 refines in 10
     * batches, cells creeping +1-2 per batch, where one retrain
     * re-allocates the whole grid). [[retrainInPlace]] still drops it:
     * a retrain replaces the geometry wholesale.
@@ -1439,7 +1439,7 @@ object IvfIndex {
   }
 
   /** Split oversized cells IN PLACE — the rebalance the drift study
-    * (`tools/IvfDriftBench`, SCALE.md r7) shows a same-nlist retrain
+    * (`tools/IvfDriftBench` at 8a861d8, SCALE.md r7) shows a same-nlist retrain
     * cannot deliver: a tight new modality is ONE k-means cell however
     * fresh the centroids, so the fix is more centroids in the hot region,
     * not fresher ones. Every cell holding more than `maxCellRows` members
@@ -1866,7 +1866,7 @@ object IvfIndex {
     * corpus scan — the expensive full-precision column is read once per
     * batch, never per probe, and ADC's ranking error only costs recall if
     * a true neighbor falls outside the top-`cand`, a fast-shrinking tail
-    * (measured in QuantBench: the recall-vs-cand curve). With full probing
+    * (measured in QuantBench at 8a861d8: the recall-vs-cand curve). With full probing
     * and `cand` >= corpus the result equals brute force bit-for-bit
     * (spec-pinned in PqSpec).
     */

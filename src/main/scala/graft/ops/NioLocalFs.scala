@@ -11,7 +11,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `create`/`mkdirs` with a permission (i.e. every parquet part file,
   * checksum sidecar, and `_temporary` dir a Spark write task makes)
   * goes through it: ~8 ms per create, ~4 ms per mkdir, measured with
-  * `tools/LateCopyProbe` (r20). `FsUtil` bypassed the DRIVER-side
+  * `tools/LateCopyProbe` at 8a861d8 (r20). `FsUtil` bypassed the DRIVER-side
   * copies and sidecar writes; this class removes the fork from the
   * TASK-side write path too (guide §6, VERDICT r20 "Next round" #5).
   *

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * scan-bandwidth lever for vector search at 100 TB: float32 embeddings
   * become 1-byte-per-dimension codes (4× smaller raw, before parquet
   * encoding), and search runs against the reconstructed vectors with a
-  * bounded, measured recall cost (QuantizeSpec; tools/QuantBench).
+  * bounded, measured recall cost (QuantizeSpec; tools/QuantBench at 8a861d8).
   *
   * The fit is one map-combined aggregation ([[graft.functions.VecMinMaxAgg]]:
   * 2×dim floats per map partition through a single Exchange); encode and

@@ -172,7 +172,7 @@ object Similarity {
     * pair at angle θ: each of the `bits` planes separates the pair with
     * probability θ/π independently, and home+1-flip probing recovers it
     * iff AT MOST ONE plane does — P(Binomial(bits, θ/π) ≤ 1). Matches
-    * the measured EmbRecallProbe table to ~1% (SCALE.md r14).
+    * the measured EmbRecallProbe at 8a861d8 table to ~1% (SCALE.md r14).
     */
   def hammingLe1Recall(bits: Int, dupAngle: Double): Double = {
     require(bits >= 1 && dupAngle >= 0 && dupAngle <= math.Pi,
@@ -278,7 +278,7 @@ object Similarity {
     * recall r to 1-(1-r)^families at families× index rows — the move
     * when one family cannot serve both occupancy (wants bits high) and
     * recall at the duplicate angle (wants bits low); measured in
-    * SCALE.md (EmbRecallProbe).
+    * SCALE.md (EmbRecallProbe at 8a861d8).
     */
   def embBandTable(emb: DataFrame, idCol: String, embCol: String,
                    bits: Int = 8, seed: Long = 42L,

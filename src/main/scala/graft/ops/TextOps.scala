@@ -174,7 +174,7 @@ object TextOps {
     * rule, same greedy left-to-right rewrite through the serving
     * expression ([[applyMerges]]) — pinned by PropertySpec's
     * trainer-equivalence property, OpsSpec's closed-form fixtures, and
-    * the full-scale assert inside BpeScaleBench. Why it's fast:
+    * the full-scale assert inside BpeScaleBench at 8a861d8. Why it's fast:
     *
     *  - The pair-count table is maintained by EVENT-LOCAL DELTAS emitted
     *    from inside the merge pass itself ([[graft.functions.BpeDeltasF]]
@@ -222,7 +222,7 @@ object TextOps {
 
   /** [[trainPhraseMerges]] plus per-batch speculation stats:
     * (picked batch size, verified prefix length) per round — the
-    * speculation-efficiency evidence (BpeScaleBench prints the totals).
+    * speculation-efficiency evidence (BpeScaleBench at 8a861d8 prints the totals).
     */
   def trainPhraseMergesWithStats(docs: DataFrame, idCol: String, textCol: String,
                                  nMerges: Int, batch: Int = 8)

@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import graft.formats.DeckCodec
 import graft.pipeline.VoronoiMesh.Facet
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** End-to-end recomposition of the reference's two pipelines
@@ -20,8 +19,8 @@ import org.apache.spark.sql.types._
   *  facet, node and element tables come back as one local frame each.
   *
   *  `cut(...)` = `BooleanOperation.py`: import → dedup → subdivide and
-  *  rotate → cut by specimen solid → chained plane anti-filters, all in
-  *  Spark over the facet file.
+  *  rotate → cut by specimen solid → chained plane anti-filters. It and
+  *  `exportFacets` are grain-bounded and run on the driver with no Spark job.
   */
 object IcePipeline {
 
@@ -72,28 +71,32 @@ object IcePipeline {
     spark.createDataFrame(
       facets.map(f => Row.fromSeq(Seq[Any](f.grainId, f.pos) ++ f.xyz)).asJava, FacetSchema)
 
-  /** Export the facet table in the reference's facet-sink format (S6). */
+  /** Export the facet table in the reference's facet-sink format (S6) as one
+    * file at `path`, in (grain_id, pos) order. A local frame collects with no job.
+    */
   def exportFacets(facets: DataFrame, path: String): Unit =
-    DeckCodec.writeFacetQuads(
-      facets.orderBy("grain_id", "pos"), FacetCols, path)
+    DeckCodec.writeFacetQuads(facets.collect().sortBy(r => (r.getAs[Long]("grain_id"), r.getAs[Int]("pos")))
+      .map(r => FacetCols.map(r.getAs[Double])).toSeq, path)
 
-  /** The cutting pipeline over a facet file produced by [[exportFacets]]
-    * (or the reference generator): returns the final facet table.
+  // the coordinates are nullable, as the text parse that callers saw made them
+  private val CutSchema = StructType(FacetSchema.fields.take(2) ++ (StructField("strip", IntegerType,
+    nullable = false) +: FacetCols.map(StructField(_, DoubleType))))
+
+  /** The cutting pipeline over a facet file produced by [[exportFacets]] (or
+    * the reference generator, or a directory of text parts): returns the final
+    * facet table (grain_id, pos, strip, x1..z4) as a local frame, in file
+    * order, then strip order.
     */
   def cut(spark: SparkSession, facetPath: String, solid: SpecimenCut.Solid,
           planeLo: Double, planeHi: Double, rotateDeg: Double = 0.0,
           cx: Double = 0.0, cy: Double = 0.0, zStrips: Int = 10): DataFrame = {
-    // S1-style import of 12-float rows back into the facet frame
-    val parts = split(trim(col("value")), "\\s+")
-    val parsed = spark.read.text(facetPath)
-      .filter(size(parts) === 12)
-      .select(FacetCols.zipWithIndex.map { case (c, i) =>
-        element_at(parts, i + 1).cast("double").as(c)
-      } :+ monotonically_increasing_id().as("grain_id") :+ lit(0).as("pos"): _*) // synthetic face id
-    val deduped = SpecimenCut.dedupByCentroid(parsed, 1e-6)
-    val kept = SpecimenCut.strips(deduped, zStrips, rotateDeg, cx, cy, field =>
-      SpecimenCut.cutBySolid(solid)(field) && SpecimenCut.removePlaneCrossers(planeLo)(field) &&
-        SpecimenCut.removePlaneCrossers(planeHi)(field))
-    kept.select((Seq("grain_id", "pos", "strip") ++ FacetCols).map(col): _*)
+    // S1-style import of 12-float rows; the row index is the synthetic face id
+    val parsed = DeckCodec.readFacetQuads(facetPath).zipWithIndex.map { case (xyz, i) => Facet(i, 0, xyz) }
+    val kept = for {
+      f <- SpecimenCut.dedupByCentroid(parsed, 1e-6)
+      (q, j) <- SpecimenCut.strips(f, zStrips, rotateDeg, cx, cy).zipWithIndex
+      if SpecimenCut.cutBySolid(solid)(q) && Seq(planeLo, planeHi).forall(SpecimenCut.removePlaneCrossers(_)(q))
+    } yield Row.fromSeq(Seq[Any](q.grainId, q.pos, j) ++ q.xyz)
+    spark.createDataFrame(kept.asJava, CutSchema)
   }
 }

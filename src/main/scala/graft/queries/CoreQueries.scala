@@ -290,7 +290,7 @@ object CoreQueries {
     // sf0.001 bucket to a 100 TB one (where the envelope tightens toward
     // zero). The sampler is deterministic, so the verdicts are
     // reproducible facts about the keyed assignment, not a flaky draw
-    // (tools/WeibullMoments prints the calibration: worst observed
+    // (tools/WeibullMoments at 8a861d8 prints the calibration: worst observed
     // deviation across sf0.001/0.01/0.1 is ~1.6σ). Pure codegen
     // projection + one hash agg — zero extra shuffle.
     "q_weibull_strength" -> ((s, d) => {

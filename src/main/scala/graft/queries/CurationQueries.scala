@@ -519,7 +519,7 @@ object CurationQueries {
       val fs = new org.apache.hadoop.fs.Path(fix).getFileSystem(conf)
       // r20 opt: FsUtil.copyTree — FileUtil.copy of this 137-file store
       // forked a permission shell per file on LocalFileSystem (2.3–6.7 s
-      // measured, tools/LateCopyProbe) and was a third of the key's wall
+      // measured, tools/LateCopyProbe at 8a861d8) and was a third of the key's wall
       if (!graft.ops.FsUtil.copyTree(fs,
           new org.apache.hadoop.fs.Path(s"$fix/store"),
           new org.apache.hadoop.fs.Path(dir.toString), conf))

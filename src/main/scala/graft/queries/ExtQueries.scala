@@ -329,7 +329,7 @@ object ExtQueries {
     // G7 batch serving shape — many probes answered in ONE pass over the
     // inverted file (searchTopKBatch; a per-probe loop is the driver-side
     // anti-pattern at scale). Full probing keeps it oracle-exact; partial
-    // probing recall is IvfRecallBench/SCALE.md territory.
+    // probing recall is IvfRecallBench (at 8a861d8) / SCALE.md territory.
     "q_ann_batch" -> ((s, d) => {
       graft.ops.IvfIndex.searchTopKBatch(sharedModel(s, d), Seq(0L, 1L, 2L), k = 5, nprobe = 16)
         .orderBy(col("probe_id"), col("cos_sim").desc, col("vec_id"))
@@ -340,7 +340,7 @@ object ExtQueries {
     // SCALE.md; the oracle-backed keys all probe fully). One batch search
     // at nprobe=4 of nlist=16 against the exact full-probe answer, both
     // through the shared model; the verdict is BATCH-MEAN recall@10 over
-    // 10 probes >= 0.35 — calibrated by tools/AnnRecallProbe (deterministic
+    // 10 probes >= 0.35 — calibrated by tools/AnnRecallProbe at 8a861d8 (deterministic
     // seeded build; measured means 0.50–0.55 across sf0.001/0.01/0.1,
     // where broken cell RANKING would collapse toward the ~0.25 uniform-
     // cell baseline). Per-probe recall is legitimately spiky (0.2–1.0) —
@@ -692,7 +692,7 @@ object ExtQueries {
     // output (and the pair-distinct's peak task) linear in the bucket
     // under crawl-grade duplicate density. maxBucket=2 here is a
     // DEMONSTRATION cap sized so the real corpus (organic occupancy ≤ 8,
-    // tools/OccProbe) exercises both the exact and star paths in the
+    // tools/OccProbe at 8a861d8) exercises both the exact and star paths in the
     // oracle gate; production defaults to 1024.
     "q_dedup_incremental_bounded" -> ((s, d) => {
       val docs = Tables.documents(s, d)

@@ -303,7 +303,7 @@ class IntervalUnionLateProcessor(lenMs: Long)
   * micro-batch that would have fired the old session's timer, and input
   * rows are processed before expired timers, so the stale session would
   * absorb the new event and two sessions merge (found by the 10× soak —
-  * `tools/StreamSoak` asserts stream ≡ batch sessionize, which only the
+  * `tools/StreamSoak` at 8a861d8 asserts stream ≡ batch sessionize, which only the
   * hybrid contract satisfies). State per key stays one (n_events, last_ms)
   * pair + ONE armed timer for the currently-open session; closed sessions
   * leave the store entirely.
@@ -326,7 +326,7 @@ class SessionExpiryProcessor(gapMs: Long)
     // walk the batch's rows in event-time order. CONTRACT: stream ≡ batch
     // sessionize assumes per-key arrival is in order ACROSS batches —
     // i.e. watermark delay 0 / in-order sources, exactly how
-    // sessionExpiryTWS defaults and StreamSoak runs. The watermark itself
+    // sessionExpiryTWS defaults and StreamSoak at 8a861d8 runs. The watermark itself
     // does NOT guarantee this: with a nonzero delay an admitted late event
     // (ms <= last) merges into the open session below, which matches batch
     // only if no input-driven close for a later gap was already emitted —

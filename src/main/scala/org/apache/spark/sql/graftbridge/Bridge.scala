@@ -61,6 +61,12 @@ object Bridge {
       case _ => ()
     }
 
+  /** The session's unique id (`private[sql]`): unlike an identity hash, no
+    * two sessions share it, so it can key per-session memos.
+    */
+  def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[SparkSession].sessionUUID
+
   /** Drain the async listener bus — lets tests that count scheduler
     * events (e.g. the jobs-per-round pin on PageRank) observe every event
     * already posted. `listenerBus` is `private[spark]`; this shim is the

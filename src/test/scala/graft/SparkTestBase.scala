@@ -18,6 +18,25 @@ trait SparkTestBase extends AnyFunSuite {
     s
   }
 
+  /** Runs `body` and counts the Spark jobs it started. The listener bus is
+    * drained before the listener goes on (so a late event of earlier work
+    * is not counted) and again before the count is read.
+    */
+  def jobs[T](body: => T): (T, Int) = {
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        counter.incrementAndGet()
+    }
+    org.apache.spark.sql.graftbridge.Bridge.awaitListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graftbridge.Bridge.awaitListenerBusEmpty(spark.sparkContext)
+      (out, counter.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
 

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Golden-format round-trips for the reference codecs (SURVEY §5.2.2);
@@ -127,28 +128,42 @@ class FormatsSpec extends SparkTestBase {
   }
 
   test("S6 facet quad sink: %.8f CRLF round-trip") {
-    import spark.implicits._
-    val cols = (1 to 4).flatMap(v => Seq(s"x$v", s"y$v", s"z$v"))
-    val src = Seq.tabulate(5)(i =>
-      Seq.tabulate(12)(j => i * 12.0 + j + 0.12345678)).map {
-      case s => (s(0), s(1), s(2), s(3), s(4), s(5), s(6), s(7), s(8), s(9), s(10), s(11))
-    }.toDF(cols: _*)
-    val dir = Files.createTempDirectory("quads").toString + "/out"
-    DeckCodec.writeFacetQuads(src, cols, dir)
-    // CRLF check needs raw bytes: the text reader strips \r at CRLF
-    val partFile = new java.io.File(dir).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".txt")).get
-    val raw = Files.readString(partFile.toPath)
+    val src = Seq.tabulate(5)(i => Seq.tabulate(12)(j => i * 12.0 + j + 0.12345678))
+    val out = Files.createTempDirectory("quads").toString + "/out"
+    DeckCodec.writeFacetQuads(src, out)
+    // one file at the path; CRLF check needs raw bytes: the text reader strips \r at CRLF
+    assert(Files.isRegularFile(Paths.get(out)))
+    val raw = Files.readString(Paths.get(out))
     assert(raw.contains("\r\n"))                            // CRLF line ends
-    val lines = spark.read.text(dir).collect().map(_.getString(0))
+    val lines = spark.read.text(out).collect().map(_.getString(0))
     assert(lines.length === 5)
     assert(lines.head.trim.split(" ").length === 12)        // 12 floats
     assert(lines.head.contains("0.12345678"))               // 8dp fixed format
     // reader side: the cutting pipeline's import parses these vertex rows
-    val parsed = spark.read.text(dir)
-      .select(split(trim(col("value")), "\\s+").as("p"))
-      .select((1 to 12).map(i => element_at(col("p"), i).cast("double")): _*)
-    assert(parsed.count() === 5)
+    val parsed = DeckCodec.readFacetQuads(out)
+    assert(parsed.length === 5)
+    assert(parsed === src.map(_.map(v => "%.8f".formatLocal(java.util.Locale.US, v).toDouble)))
+  }
+
+  test("deck count header equals the rows written, for an empty frame and a 3-partition frame") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("deckcount")
+    def check(df: DataFrame, name: String, write: (DataFrame, String) => Unit) = {
+      val path = dir.resolve(name).toString
+      write(df, path)
+      val body = Files.readAllLines(Paths.get(path)).asScala.drop(1)
+      assert(DeckCodec.declaredCount(path) === df.count() && body.length === df.count(), name)
+      assert(Files.list(dir).iterator().asScala.forall(_.getFileName.toString.endsWith(".dat")),
+        "no temp file left behind")
+    }
+    val particles = DeckCodec.readParticles(spark, fixture("ball3d_100.dat"))
+    check(particles.limit(0), "empty.dat", DeckCodec.writeParticles)
+    check(particles.repartition(3), "three.dat", DeckCodec.writeParticles)
+    assert(particles.repartition(3).rdd.getNumPartitions === 3)
+    val materials = Seq((1, 2.0, 3.5, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0), (2, 2.5, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9e6))
+      .toDF("material_id", "a", "b", "c", "d", "e", "f", "g", "h")
+    check(materials.limit(0), "mat_empty.dat", DeckCodec.writeMaterials)
+    check(materials.repartition(3), "mat_three.dat", DeckCodec.writeMaterials)
   }
 
   test("Make Consistency: valid deck passes, corrupted deck rejected with engine semantics") {
@@ -202,7 +217,7 @@ class FormatsSpec extends SparkTestBase {
       Seq.fill(200)(math.pow(10, rnd.nextInt(20) - 10) * (rnd.nextDouble() * 2 - 1))
     val df = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
     val out = Files.createTempDirectory("numrt").resolve("vals.dat").toString
-    DeckCodec.writeDeckTable(df, Seq(vals.length.toString), out)
+    DeckCodec.writeDeckTable(df, _ => Seq(vals.length.toString), out)
     val lines = Files.readAllLines(Paths.get(out)).asScala.drop(1)
     val back = lines.map { l =>
       val a = l.split("\\s+"); (a(0).toLong, a(1).toDouble)

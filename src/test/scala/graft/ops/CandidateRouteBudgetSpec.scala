@@ -14,21 +14,6 @@ import org.apache.spark.sql.functions._
   */
 class CandidateRouteBudgetSpec extends SparkTestBase {
 
-  private def jobs[T](body: => T): (T, Int) = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    org.apache.spark.sql.graftbridge.Bridge.awaitListenerBusEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.sql.graftbridge.Bridge.awaitListenerBusEmpty(spark.sparkContext)
-      (out, counter.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   // 12 copies of one spam text (one saturated band under cap 4) plus 12
   // near-identical templated docs; even ids are indexed, odd ids arrive
   private def textDocs = {

@@ -270,21 +270,7 @@ class GraphSpec extends SparkTestBase {
     val edges = (0 until 300)
       .map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .filter(e => e._1 != e._2).toDF("src", "dst")
-    def countJobs(iters: Int): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        Graph.pageRank(edges, iters = iters).count()
-        org.apache.spark.sql.graftbridge.Bridge
-          .awaitListenerBusEmpty(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      counter.get()
-    }
+    def countJobs(iters: Int): Int = jobs(Graph.pageRank(edges, iters = iters).count())._2
     val j2 = countJobs(2)
     val j5 = countJobs(5)
     assert(j5 - j2 <= 32, s"jobs grew by ${j5 - j2} over 3 extra rounds")

@@ -1,7 +1,13 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestBase
+import graft.formats.{DeckCodec, Schemas}
 import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
@@ -26,7 +32,6 @@ class PipelineSpec extends SparkTestBase with BeforeAndAfterAll {
   private lazy val cells = VoronoiMesh.cells(relaxed._1, cfg)
   private lazy val nVertices = cells.map(_.ring.size).sum
   private lazy val quads = cells.flatMap(VoronoiMesh.facetQuads(_, cfg.extrusion))
-  private lazy val quadFrame = IcePipeline.facetFrame(spark, quads)
 
   test("G1 Lloyd: displacement trend decreases and seeds stay in the box") {
     val (seeds, disps) = relaxed
@@ -108,24 +113,23 @@ class PipelineSpec extends SparkTestBase with BeforeAndAfterAll {
   }
 
   test("subdivideZ: n strips per quad, z-extent preserved, edges interpolate") {
-    val strips = SpecimenCut.strips(quadFrame, 5)
-    assert(strips.count() === quads.size * 5)
-    val r = strips.agg(min("z1"), max("z3")).head()
-    assert(r.getDouble(0) === 0.0 && r.getDouble(1) === cfg.extrusion)
+    val strips = quads.flatMap(SpecimenCut.strips(_, 5)).map(_.xyz)
+    assert(strips.size === quads.size * 5)
+    assert(strips.map(_(2)).min === 0.0 && strips.map(_(8)).max === cfg.extrusion) // z1, z3
     // strip heights are uniform H/n
-    assert(strips.filter(abs(col("z4") - col("z1") - cfg.extrusion / 5) > 1e-9).count() === 0)
+    assert(strips.count(z => math.abs(z(11) - z(2) - cfg.extrusion / 5) > 1e-9) === 0)
   }
 
   test("SpecimenCut solids: box and sphere membership predicates") {
-    val faces = SpecimenCut.strips(quadFrame, 1)
+    val faces = quads.flatMap(SpecimenCut.strips(_, 1))
     val box = SpecimenCut.Box(10, 40, 10, 40, 0, cfg.extrusion)
-    val inBox = faces.filter(SpecimenCut.cutBySolid(box)(col))
-    assert(inBox.count() > 0 && inBox.count() < quads.size)
-    val r = inBox.agg(min(col("x1") + col("x2") + col("x3") + col("x4")) / 4).head()
-    assert(r.getDouble(0) >= 10 - 25) // centroid-based: vertices may overhang
+    val inBox = faces.filter(SpecimenCut.cutBySolid(box))
+    assert(inBox.size > 0 && inBox.size < quads.size)
+    val r = inBox.map(q => Seq(0, 3, 6, 9).map(q.xyz).sum).min / 4
+    assert(r >= 10 - 25) // centroid-based: vertices may overhang
     val sph = SpecimenCut.Sphere(cfg.width / 2, cfg.height / 2, cfg.extrusion / 2, 15)
-    val inSph = faces.filter(SpecimenCut.cutBySolid(sph)(col))
-    assert(inSph.count() > 0 && inSph.count() < inBox.count() + quads.size)
+    val inSph = faces.filter(SpecimenCut.cutBySolid(sph))
+    assert(inSph.size > 0 && inSph.size < inBox.size + quads.size)
   }
 
   test("generator parity metrics at the reference config (PARITY.md bands)") {
@@ -203,28 +207,37 @@ class PipelineSpec extends SparkTestBase with BeforeAndAfterAll {
   }
 
   test("SpecimenCut: cylinder cut + plane filters + dedup behave like the reference chain") {
-    val faces = SpecimenCut.strips(quadFrame, 1)
+    val faces = quads.flatMap(SpecimenCut.strips(_, 1))
     val cyl = SpecimenCut.CylinderZ(cfg.width / 2, cfg.height / 2, 0, cfg.extrusion, cfg.width / 4)
-    val cut = faces.filter(SpecimenCut.cutBySolid(cyl)(col))
-    assert(cut.count() > 0 && cut.count() < quads.size)
-    val filtered = cut.filter(SpecimenCut.removePlaneCrossers(2.0)(col))
-      .filter(SpecimenCut.removePlaneCrossers(cfg.extrusion - 2.0)(col))
-    assert(filtered.count() < cut.count())
+    val cut = faces.filter(SpecimenCut.cutBySolid(cyl))
+    assert(cut.size > 0 && cut.size < quads.size)
+    val filtered = cut.filter(SpecimenCut.removePlaneCrossers(2.0))
+      .filter(SpecimenCut.removePlaneCrossers(cfg.extrusion - 2.0))
+    assert(filtered.size < cut.size)
     val deduped = SpecimenCut.dedupByCentroid(filtered, 1e-6)
     // no duplicate centroids in a valid mesh -> idempotent here
-    assert(deduped.count() === filtered.count())
+    assert(deduped.size === filtered.size)
     val again = SpecimenCut.dedupByCentroid(
-      deduped.union(deduped), 1e-6) // force exact duplicates
-    assert(again.count() === deduped.count())
+      deduped ++ deduped, 1e-6) // force exact duplicates
+    assert(again.size === deduped.size)
     // near-duplicates across a cell boundary (x = 1 -/+ 2e-7 at eps 1e-6):
     // the higher id drops, a distant face stays
     def flat(g: Long, x: Double) = VoronoiMesh.Facet(g, 0, (1 to 4).flatMap(_ => Seq(x, 5.0, 1.0)))
-    val near = IcePipeline.facetFrame(spark, Seq(flat(0, 1 - 2e-7), flat(1, 1 + 2e-7), flat(2, 3.0)))
-    assert(SpecimenCut.dedupByCentroid(near, 1e-6).collect().map(_.getLong(0)).sorted.toSeq === Seq(0L, 2L))
-    val rotated = SpecimenCut.strips(quadFrame, 1, 90.0, cfg.width / 2, cfg.height / 2)
-    assert(rotated.count() === quads.size)
+    val near = Seq(flat(0, 1 - 2e-7), flat(1, 1 + 2e-7), flat(2, 3.0))
+    assert(SpecimenCut.dedupByCentroid(near, 1e-6).map(_.grainId).sorted === Seq(0L, 2L))
+    // the strips above cross both planes, so `filtered` is empty; over all
+    // quads every interior wall is built once per neighbouring grain, and
+    // dedup keeps one copy of each
+    val walls = SpecimenCut.dedupByCentroid(quads, 1e-6)
+    assert(walls.size < quads.size && 2 * walls.size > quads.size)
+    // an exact duplicate under a higher id drops too, whatever the input order
+    assert(SpecimenCut.dedupByCentroid(flat(4, 3.0) +: near, 1e-6).map(_.grainId) === Seq(0L, 2L))
+    val rotated = quads.flatMap(SpecimenCut.strips(_, 1, 90.0, cfg.width / 2, cfg.height / 2))
+    assert(rotated.size === quads.size)
     val back = SpecimenCut.translate(rotated, 5, -5, 1)
-    assert(back.count() === quads.size)
+    assert(back.size === quads.size)
+    assert(back.head.xyz.take(3) === rotated.head.xyz.take(3).zip(Seq(5.0, -5.0, 1.0)).map {
+      case (v, d) => v + d })
   }
 
   private val specimenCfg = VoronoiMesh.MeshConfig(width = 100.0, height = 100.0,
@@ -245,10 +258,9 @@ class PipelineSpec extends SparkTestBase with BeforeAndAfterAll {
 
   test("cut equals a plain-Scala reference over the facet file for every solid and rotation") {
     val res = IcePipeline.generate(spark, specimenCfg)
-    val dir = s"$tmp/cut"
-    IcePipeline.exportFacets(res.facets, dir)
-    val lines = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines().map(_.trim.split("\\s+").map(_.toDouble)).toSeq)
+    val file = s"$tmp/cut/facets.txt"
+    IcePipeline.exportFacets(res.facets, file)
+    val lines = Files.readAllLines(Paths.get(file)).asScala.map(_.trim.split("\\s+").map(_.toDouble)).toSeq
     val (h, n, mid) = (specimenCfg.extrusion, 4, specimenCfg.width / 2)
     def inside(solid: SpecimenCut.Solid, x: Double, y: Double, z: Double) = solid match {
       case SpecimenCut.Box(x1, x2, y1, y2, z1, z2) =>
@@ -277,7 +289,7 @@ class PipelineSpec extends SparkTestBase with BeforeAndAfterAll {
     val solids = Seq(SpecimenCut.Box(20, 80, 20, 80, 1, 19), SpecimenCut.Sphere(50, 50, 10, 35),
       SpecimenCut.CylinderZ(50, 50, 1, 19, 30))
     for (solid <- solids; deg <- Seq(0.0, 15.0, 30.0)) {
-      val got = IcePipeline.cut(spark, dir, solid, 2.0, h - 2.0, rotateDeg = deg,
+      val got = IcePipeline.cut(spark, file, solid, 2.0, h - 2.0, rotateDeg = deg,
           cx = mid, cy = mid, zStrips = n).collect()
         .map(r => (r.getAs[Long]("grain_id"), r.getAs[Int]("strip")) ->
           IcePipeline.FacetCols.map(r.getAs[Double])).toMap
@@ -288,26 +300,49 @@ class PipelineSpec extends SparkTestBase with BeforeAndAfterAll {
     }
   }
 
-  test("job budget: generate runs at most relaxIterations + 3 jobs, exportFacets at most 3") {
-    def jobs[T](body: => T): (T, Int) = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val out = body
-        org.apache.spark.sql.graftbridge.Bridge.awaitListenerBusEmpty(spark.sparkContext)
-        (out, counter.get())
-      } finally spark.sparkContext.removeSparkListener(listener)
+  private val solids = Seq(SpecimenCut.Box(20, 80, 20, 80, 1, 19), SpecimenCut.Sphere(50, 50, 10, 35),
+    SpecimenCut.CylinderZ(50, 50, 1, 19, 30))
+
+  test("cut over a multi-part directory written by Spark's text writer equals the cut over the file") {
+    val file = s"$tmp/multi/facets.txt"
+    IcePipeline.exportFacets(IcePipeline.generate(spark, specimenCfg).facets, file)
+    val dir = s"$tmp/multi/parts"
+    import spark.implicits._
+    spark.sparkContext.parallelize(Files.readAllLines(Paths.get(file)).asScala.toSeq, 3)
+      .toDF("value").write.text(dir)
+    assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("part-")) === 3)
+    for (solid <- solids) {
+      def run(path: String) = IcePipeline.cut(spark, path, solid, 2.0, 18.0, rotateDeg = 30.0,
+        cx = 50, cy = 50, zStrips = 4).collect().map(_.toSeq).toSeq
+      val want = run(file)
+      assert(want.nonEmpty && run(dir) === want, s"$solid")
     }
+  }
+
+  test("job budget: generate runs at most relaxIterations + 3 jobs, exportFacets at most 3") {
+    // the counts are exact: Lloyd is one job per iteration, and the export
+    // sorts and writes the local facet frame on the driver
     for (r <- Seq(1, 3)) {
       val (res, n) = jobs(IcePipeline.generate(spark, specimenCfg.copy(relaxIterations = r)))
-      assert(n <= r + 3, s"generate at $r iterations ran $n jobs")
-      val dir = s"$tmp/export$r"
-      val (_, e) = jobs(IcePipeline.exportFacets(res.facets, dir))
-      assert(e <= 3, s"exportFacets ran $e jobs")
+      assert(n === r, s"generate at $r iterations ran $n jobs")
+      val (_, e) = jobs(IcePipeline.exportFacets(res.facets, s"$tmp/export$r/facets.txt"))
+      assert(e === 0, s"exportFacets ran $e jobs")
     }
+  }
+
+  test("job budget: cut collects with no job for every solid; writeParticles runs one job per partition") {
+    val file = s"$tmp/budget/facets.txt"
+    IcePipeline.exportFacets(IcePipeline.generate(spark, specimenCfg).facets, file)
+    for (solid <- solids) {
+      val (rows, n) = jobs(IcePipeline.cut(spark, file, solid, 2.0, 18.0, rotateDeg = 15.0,
+        cx = 50, cy = 50, zStrips = 4).collect())
+      assert(rows.nonEmpty && n === 0, s"cut for $solid ran $n jobs")
+    }
+    // id; x, y, z, s4..s15 and radius; material_id; f18..f26
+    val parts = (0 until 10).map(k =>
+      Row.fromSeq(Seq[Any](k.toLong) ++ Seq.fill(16)(k * 0.5) ++ Seq[Any](k % 3) ++ Seq.fill(9)(0.0)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(parts, 3), Schemas.particle)
+    val (_, w) = jobs(DeckCodec.writeParticles(df, s"$tmp/budget/particles.dat"))
+    assert(w === 3, s"writeParticles over 3 partitions ran $w jobs")
   }
 }
