@@ -210,14 +210,13 @@ object CurationFlow {
              buckets: Int = 16, maxBucket: Int = Int.MaxValue): Staged = {
     require(cursor >= 0, s"cursor must be >= 0, got $cursor")
     val g = gateAndDedup(dir, batch, bench, buckets, maxBucket)
-    val sc = batch.sparkSession.sparkContext
-    def label(l: String): Unit = sc.setJobDescription(s"decide:$l")
     // stage 8: pack at the carried cursor (cb DIV keeps long math exact —
     // a double floor would lose integers past 2^53 on a long-lived feed).
     // The cursor advance is the pack's own phase-2 total — no separate
     // aggregate job (r17 diet).
-    val (packedRaw, tokTotal) = Packing.packSequencesWithTotal(g.kept,
-      "doc_id", col("n_tok"), budget)
+    val (packedRaw, tokTotal) = Phase.labeled("decide:pack") {
+      Packing.packSequencesWithTotal(g.kept, "doc_id", col("n_tok"), budget)
+    }
     val packed = packedRaw
       .withColumn("cb",
         lit(cursor) + col("seq_id") * lit(budget) + col("seq_offset"))
@@ -225,7 +224,6 @@ object CurationFlow {
         expr(s"cb DIV $budget").as("seq_id"),
         pmod(col("cb"), lit(budget)).as("seq_offset"))
     val newCursor = cursor + tokTotal
-    sc.setJobDescription(null)
     val decisions = g.drops
       .select(col("doc_id"), col("status"), col("matched_id"),
         lit(null).cast("long").as("n_tok"),
@@ -251,8 +249,6 @@ object CurationFlow {
   private[ops] def gateAndDedup(dir: String, batch: DataFrame,
                                 bench: DataFrame, buckets: Int = 16,
                                 maxBucket: Int = Int.MaxValue): Gated = {
-    val sc = batch.sparkSession.sparkContext
-    def label(l: String): Unit = sc.setJobDescription(s"decide:$l")
     val digestDir = dir + "/digest"
     val bandsDir = dir + "/bands"
     val all = batch.select(col("doc_id"), col("text"), col("n_chars"))
@@ -269,24 +265,24 @@ object CurationFlow {
     // a shape-failed doc is not in the pin at all). The batch election
     // window elects among rep-surviving history-survivors only —
     // verdicts byte-identical to the two-checkpoint chain.
-    label("gates-exact-ckpt")
-    val digests = all.select(col("doc_id"), md5(col("text")).as("band"))
-    val histM = Dedup.bandIndexPrunedStored(digestDir, digests, buckets)
-      .join(broadcast(digests.withColumnRenamed("doc_id", "bid")),
-        Seq("band"))
-      .groupBy(col("bid").as("doc_id"))
-      .agg(min(col("doc_id")).as("hist_matched"))
-    val wdg = org.apache.spark.sql.expressions.Window.partitionBy("dg")
-    val exact = org.apache.spark.sql.graftbridge.Bridge
-      .dropCheckpointConstraints(
+    val exact = Phase.labeled("decide:gates-exact-ckpt") {
+      val digests = all.select(col("doc_id"), md5(col("text")).as("band"))
+      val histM = Dedup.bandIndexPrunedStored(digestDir, digests, buckets)
+        .join(broadcast(digests.withColumnRenamed("doc_id", "bid")),
+          Seq("band"))
+        .groupBy(col("bid").as("doc_id"))
+        .agg(min(col("doc_id")).as("hist_matched"))
+      val wdg = org.apache.spark.sql.expressions.Window.partitionBy("dg")
+      org.apache.spark.sql.graftbridge.Bridge.dropCheckpointConstraints(
         repetitionVerdict(shapeGate(all)).drop("tk")
-        .withColumn("dg", md5(col("text")))
-        .join(broadcast(histM), Seq("doc_id"), "left")
-        .withColumn("keep_id",
-          min(when(col("rep_ok") && col("hist_matched").isNull,
-            col("doc_id"))).over(wdg))
-        .drop("dg")
-        .localCheckpoint())
+          .withColumn("dg", md5(col("text")))
+          .join(broadcast(histM), Seq("doc_id"), "left")
+          .withColumn("keep_id",
+            min(when(col("rep_ok") && col("hist_matched").isNull,
+              col("doc_id"))).over(wdg))
+          .drop("dg")
+          .localCheckpoint())
+    }
     val exHist = exact.filter(col("rep_ok") &&
         col("hist_matched").isNotNull)
       .select(col("doc_id"), col("hist_matched").as("matched_id"))
@@ -305,39 +301,38 @@ object CurationFlow {
     // serially inside the tail checkpoint. Read-only, and drained
     // before any failure of the main chain propagates (below), so a
     // failed decide leaves no scan running Spark jobs behind it.
-    val hitsF = scala.concurrent.Future {
-      sc.setJobDescription("decide:hits-ckpt")
-      try org.apache.spark.sql.graftbridge.Bridge.dropCheckpointConstraints(
+    val hitsF = Phase.fork("decide:hits-ckpt") {
+      org.apache.spark.sql.graftbridge.Bridge.dropCheckpointConstraints(
         contaminationHits(afterEx, bench)
           .withColumn("contam", lit(true)).localCheckpoint())
-      finally sc.setJobDescription(null)
-    }(scala.concurrent.ExecutionContext.global)
+    }
 
     val (overflow, batchBands, histDrop, withKeep) = try {
       // stage 5: near-dup band candidates vs stored ∪ batch (the
       // incremental-dedup probe; bounded star route under a finite cap,
       // whose overflow the probe pins BEFORE the append).
-      label("probe")
-      val (cands, batchBands) = Dedup.bandIndexProbe(bandsDir, afterEx,
-        "doc_id", "text", buckets = buckets, maxBucket = maxBucket)
+      val (cands, batchBands) = Phase.labeled("decide:probe") {
+        Dedup.bandIndexProbe(bandsDir, afterEx, "doc_id", "text",
+          buckets = buckets, maxBucket = maxBucket)
+      }
       // the pair table pins WITH its in-batch flags (r17: when only the
       // raw pairs were pinned, histDrop and edges each re-built the two
       // batchIds broadcasts per evaluation — four extra jobs a wave)
       val batchIds = afterEx.select(col("doc_id"))
-      label("flagged-ckpt")
-      val flagged = org.apache.spark.sql.graftbridge.Bridge
-        .dropCheckpointConstraints(cands.pairs
-          .join(broadcast(batchIds.select(col("doc_id").as("a_id"),
-            lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
-          .join(broadcast(batchIds.select(col("doc_id").as("b_id"),
-            lit(true).as("b_in"))), col("doc_b") === col("b_id"), "left")
-          .select(col("doc_a"), col("doc_b"), col("a_in"), col("b_in"))
-          .localCheckpoint())
+      val flagged = Phase.labeled("decide:flagged-ckpt") {
+        org.apache.spark.sql.graftbridge.Bridge.dropCheckpointConstraints(
+          cands.pairs
+            .join(broadcast(batchIds.select(col("doc_id").as("a_id"),
+              lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
+            .join(broadcast(batchIds.select(col("doc_id").as("b_id"),
+              lit(true).as("b_in"))), col("doc_b") === col("b_id"), "left")
+            .select(col("doc_a"), col("doc_b"), col("a_in"), col("b_in"))
+            .localCheckpoint())
+      }
       // pinned like exBatchDrop: the min-keeper aggregate now feeds the
       // survivor anti-join AND the decisions union
-      label("histdrop-ckpt")
-      val histDrop = org.apache.spark.sql.graftbridge.Bridge
-        .dropCheckpointConstraints(
+      val histDrop = Phase.labeled("decide:histdrop-ckpt") {
+        org.apache.spark.sql.graftbridge.Bridge.dropCheckpointConstraints(
           flagged.filter(col("a_in").isNull || col("b_in").isNull)
             .select(when(col("a_in").isNotNull, col("doc_a"))
                 .otherwise(col("doc_b")).as("doc_id"),
@@ -345,6 +340,7 @@ object CurationFlow {
                 .otherwise(col("doc_a")).as("stored_id"))
             .groupBy("doc_id").agg(min(col("stored_id")).as("matched_id"))
             .localCheckpoint())
+      }
       val afterNdHist = afterEx.join(histDrop.select("doc_id"),
         Seq("doc_id"), "left_anti")
 
@@ -357,20 +353,20 @@ object CurationFlow {
       // probe, once inside the CC collect — at ~27 jobs per evaluation
       // (each broadcast build is its own job). One pinned evaluation;
       // the probe and the CC read materialized blocks.
-      label("edges-ckpt")
-      val edges = org.apache.spark.sql.graftbridge.Bridge
-        .dropCheckpointConstraints(flagged
-          .filter(col("a_in").isNotNull && col("b_in").isNotNull)
-          .select(col("doc_a"), col("doc_b"))
-          .join(broadcast(rem.select(col("doc_id").as("doc_a"))), Seq("doc_a"),
-            "left_semi")
-          .join(broadcast(rem.select(col("doc_id").as("doc_b"))), Seq("doc_b"),
-            "left_semi")
-          .localCheckpoint())
+      val edges = Phase.labeled("decide:edges-ckpt") {
+        org.apache.spark.sql.graftbridge.Bridge.dropCheckpointConstraints(
+          flagged
+            .filter(col("a_in").isNotNull && col("b_in").isNotNull)
+            .select(col("doc_a"), col("doc_b"))
+            .join(broadcast(rem.select(col("doc_id").as("doc_a"))),
+              Seq("doc_a"), "left_semi")
+            .join(broadcast(rem.select(col("doc_id").as("doc_b"))),
+              Seq("doc_b"), "left_semi")
+            .localCheckpoint())
+      }
       // a clean batch (no internal band pairs — the common case on a
       // healthy corpus) skips the CC machinery entirely
-      label("edges-empty-probe")
-      val memb =
+      val memb = Phase.labeled("decide:edges-empty-probe") {
         if (edges.isEmpty) afterNdHist.withColumn("grp", col("doc_id"))
         else {
           val labels = Graph.batchComponents(
@@ -380,6 +376,7 @@ object CurationFlow {
               Seq("doc_id"), "left")
             .withColumn("grp", coalesce(col("component"), col("doc_id")))
         }
+      }
       // stages 6-7 land in ONE checkpointed TAIL frame (r15 diet): the
       // keeper election via a grp-window (single lineage — the old
       // groupBy + self-join duplicated the whole anti-join chain inside
@@ -410,13 +407,14 @@ object CurationFlow {
     // with the probe chain (the hitsF fork above) — join its pin here.
     val hits = scala.concurrent.Await.result(hitsF,
       scala.concurrent.duration.Duration.Inf)
-    label("tail-ckpt")
-    val tail = org.apache.spark.sql.graftbridge.Bridge
-      .dropCheckpointConstraints(withKeep
-        .join(broadcast(hits), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("text"), col("n_chars"), col("n_tok"),
-          col("keep_id"), coalesce(col("contam"), lit(false)).as("contam"))
-        .localCheckpoint())
+    val tail = Phase.labeled("decide:tail-ckpt") {
+      org.apache.spark.sql.graftbridge.Bridge.dropCheckpointConstraints(
+        withKeep
+          .join(broadcast(hits), Seq("doc_id"), "left")
+          .select(col("doc_id"), col("text"), col("n_chars"), col("n_tok"),
+            col("keep_id"), coalesce(col("contam"), lit(false)).as("contam"))
+          .localCheckpoint())
+    }
     val ndBatchDrop = tail.filter(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id"), col("keep_id").as("matched_id"))
     val keepersT = tail.filter(col("doc_id") === col("keep_id"))
@@ -427,7 +425,6 @@ object CurationFlow {
     val kept = nonBench.filter(!col("contam"))
       .select(col("doc_id"), col("text"), col("n_chars"), col("n_tok"))
 
-    sc.setJobDescription(null)
     // drop rows carry the duplicate map (r16): matched_id = the keeper
     // that beat the doc on the dedup stages, null on gate verdicts
     val nullM = lit(null).cast("long").as("matched_id")
@@ -467,7 +464,7 @@ object CurationFlow {
     // sequential pair was a fixed ~1 s of every batch wall). Failures
     // surface only after BOTH sides finished, so a caller's retry never
     // races an orphaned writer (the r16 ADVICE rule).
-    awaitLabeled(
+    Phase.all(
       ("commit:digest", () => Dedup.bandIndexAppend(dir + "/digest",
         kept.select(col("doc_id"), md5(col("text")).as("band")), buckets)),
       // a decide-supplied pinned band table skips the second minhash
@@ -476,36 +473,6 @@ object CurationFlow {
       ("commit:bands", () => Dedup.bandIndexAppend(dir + "/bands",
         keptBands.getOrElse(Dedup.ingestBands(kept, "doc_id", "text")),
         buckets)))
-  }
-
-  /** Run independent store mutations concurrently; rethrow the FIRST
-    * failure only after EVERY side has finished (an early rethrow lets a
-    * foreachBatch retry replay the batch against dirs an orphaned thread
-    * is still mutating — the r16 ADVICE single-writer rule). Shared by
-    * the flow commits ([[commit]], [[graft.ops.VectorFlow.commit]],
-    * [[graft.ops.UnifiedFlow.commit]]).
-    */
-  private[ops] def awaitBoth(sides: (() => Unit)*): Unit =
-    awaitLabeled(sides.map(s => ("", s)): _*)
-
-  /** [[awaitBoth]] with a job-description label per side — the pool
-    * threads do NOT inherit the caller's description (thread-locals
-    * attach at thread creation), so unlabeled store mutations show up
-    * as "?" in the per-job profiles (r21 observability; no behavior
-    * change).
-    */
-  private[ops] def awaitLabeled(sides: (String, () => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val sc = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext)
-    val done = sides.map { case (lbl, s) => Future {
-      if (lbl.nonEmpty) sc.foreach(_.setJobDescription(lbl))
-      try s() finally if (lbl.nonEmpty) sc.foreach(_.setJobDescription(null))
-    }}.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    done.foreach(_.get)
   }
 
   /** The TEXT KEEPER-META store (r17, the late-text correction's stored

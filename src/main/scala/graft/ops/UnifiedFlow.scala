@@ -79,8 +79,6 @@ object UnifiedFlow {
              maxBucket: Int = Int.MaxValue,
              vec: VectorFlow.Params = VectorFlow.Params()): Staged = {
     require(cursor >= 0, s"cursor must be >= 0, got $cursor")
-    val sc = batch.sparkSession.sparkContext
-    def label(l: String): Unit = sc.setJobDescription(s"udecide:$l")
     // a NULL text is a PENDING modality (r17, the late-text symmetry):
     // the doc enters on its embedding alone — no text gates run (there
     // is nothing to gate yet), no packing, no text indexing — and a
@@ -113,15 +111,15 @@ object UnifiedFlow {
     // that flow's `invalid` decisions branch (the status filter below
     // constant-folds it to an empty relation), and the broadcast side
     // here is a filter of the pinned text tail.
-    label("vecin")
-    val vecIn = batch
-      .filter(col("embedding").isNotNull)
-      .select(col("doc_id").as("vec_id"), col("embedding"))
-      .join(broadcast(g.kept.select(col("doc_id").as("vec_id"))
-        .unionByName(textless.select(col("doc_id").as("vec_id")))),
-        Seq("vec_id"), "left_semi")
-    val v = VectorFlow.decide(dir + "/vec", vecIn, 0L, vec,
-      countCursor = false)
+    val v = Phase.labeled("udecide:vecin") {
+      val vecIn = batch
+        .filter(col("embedding").isNotNull)
+        .select(col("doc_id").as("vec_id"), col("embedding"))
+        .join(broadcast(g.kept.select(col("doc_id").as("vec_id"))
+          .unionByName(textless.select(col("doc_id").as("vec_id")))),
+          Seq("vec_id"), "left_semi")
+      VectorFlow.decide(dir + "/vec", vecIn, 0L, vec, countCursor = false)
+    }
     // the semantic verdicts, the FINAL kept frame, AND the pending-text
     // docs' verdicts land in ONE pinned frame (r17 diet — the r16 shape
     // pinned semDrops and kept separately, and the first late-text cut
@@ -140,16 +138,17 @@ object UnifiedFlow {
           .when(col("status") === "neardup_history", "semdup_history")
           .otherwise("semdup_batch").as("sem_status"),
         col("matched_id").as("sem_matched"))
-    label("semflag-ckpt")
-    val semFlag = ckpt(g.kept.withColumn("pending", lit(false))
-      .unionByName(textless.select(col("doc_id"),
-        lit(null).cast("string").as("text"),
-        lit(null).cast("long").as("n_chars"),
-        lit(null).cast("long").as("n_tok"),
-        lit(true).as("pending")))
-      .join(broadcast(vDrops), Seq("doc_id"), "left")
-      .join(broadcast(v.kept.select(col("vec_id").as("doc_id"),
-        lit(true).as("vk"))), Seq("doc_id"), "left"))
+    val semFlag = Phase.labeled("udecide:semflag-ckpt") {
+      ckpt(g.kept.withColumn("pending", lit(false))
+        .unionByName(textless.select(col("doc_id"),
+          lit(null).cast("string").as("text"),
+          lit(null).cast("long").as("n_chars"),
+          lit(null).cast("long").as("n_tok"),
+          lit(true).as("pending")))
+        .join(broadcast(vDrops), Seq("doc_id"), "left")
+        .join(broadcast(v.kept.select(col("vec_id").as("doc_id"),
+          lit(true).as("vk"))), Seq("doc_id"), "left"))
+    }
     val kept = semFlag.filter(!col("pending") && col("sem_status").isNull)
       .select(col("doc_id"), col("text"), col("n_chars"), col("n_tok"))
     val semDrops = semFlag.filter(!col("pending") &&
@@ -159,9 +158,9 @@ object UnifiedFlow {
 
     // pack the FINAL kept set at the carried cursor (the text flow's
     // exact tail — cb DIV keeps long math exact)
-    label("pack")
-    val (packedRaw, tokTotal) = Packing.packSequencesWithTotal(kept,
-      "doc_id", col("n_tok"), budget)
+    val (packedRaw, tokTotal) = Phase.labeled("udecide:pack") {
+      Packing.packSequencesWithTotal(kept, "doc_id", col("n_tok"), budget)
+    }
     val packed = packedRaw
       .withColumn("cb",
         lit(cursor) + col("seq_id") * lit(budget) + col("seq_offset"))
@@ -172,7 +171,6 @@ object UnifiedFlow {
     // the cursor advance is the pack's own phase-2 total (r17 diet —
     // the separate aggregate job over the same pinned frame is gone)
     val newCursor = cursor + tokTotal
-    sc.setJobDescription(null)
 
     val nulls = Seq(lit(null).cast("long").as("n_tok"),
       lit(null).cast("long").as("seq_id"),
@@ -295,8 +293,6 @@ object UnifiedFlow {
                      maxBucket: Int = Int.MaxValue): LateTextStaged = {
     require(cursor >= 0, s"cursor must be >= 0, got $cursor")
     val spark = late.sparkSession
-    def label(l: String): Unit =
-      spark.sparkContext.setJobDescription(s"ltext:$l")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(new org.apache.hadoop.fs.Path(dir + "/textmeta")),
@@ -316,18 +312,19 @@ object UnifiedFlow {
     // cut pinned them separately); a late text failing the gates means
     // the doc retroactively never qualified
     val wdg = org.apache.spark.sql.expressions.Window.partitionBy("dg")
-    label("ltgates-ckpt")
-    val flags = ckpt(CurationFlow.repetitionVerdict(
-        CurationFlow.shapeGate(withPrio
-          .select(col("doc_id"), col("text"), col("n_chars"))))
-      .drop("tk")
-      .join(broadcast(withPrio.select(col("doc_id"), col("prio"))),
-        Seq("doc_id"))
-      .withColumn("dg", md5(col("text")))
-      .withColumn("__mk", min(when(col("rep_ok"),
-        struct(col("prio"), col("doc_id")))).over(wdg))
-      .withColumn("keep_id", col("__mk").getField("doc_id"))
-      .drop("__mk", "dg"))
+    val flags = Phase.labeled("ltext:ltgates-ckpt") {
+      ckpt(CurationFlow.repetitionVerdict(
+          CurationFlow.shapeGate(withPrio
+            .select(col("doc_id"), col("text"), col("n_chars"))))
+        .drop("tk")
+        .join(broadcast(withPrio.select(col("doc_id"), col("prio"))),
+          Seq("doc_id"))
+        .withColumn("dg", md5(col("text")))
+        .withColumn("__mk", min(when(col("rep_ok"),
+          struct(col("prio"), col("doc_id")))).over(wdg))
+        .withColumn("keep_id", col("__mk").getField("doc_id"))
+        .drop("__mk", "dg"))
+    }
     val shapeDrop = withPrio
       .join(broadcast(flags.select("doc_id")), Seq("doc_id"), "left_anti")
       .select("doc_id")
@@ -343,23 +340,25 @@ object UnifiedFlow {
     // candidates vs stored: exact digest matches + LSH band pairs, both
     // pinned BEFORE any commit mutates the indexes
     val digests = afterExB.select(col("doc_id"), md5(col("text")).as("band"))
-    label("ltexhist-ckpt")
-    val exHistPairs = ckpt(
-      Dedup.bandIndexPrunedStored(dir + "/digest", digests, buckets)
+    val exHistPairs = Phase.labeled("ltext:ltexhist-ckpt") {
+      ckpt(Dedup.bandIndexPrunedStored(dir + "/digest", digests, buckets)
         .join(broadcast(digests.withColumnRenamed("doc_id", "l_id")),
           Seq("band"))
         .select(col("l_id"), col("doc_id").as("s_id")).distinct())
-    label("ltprobe")
-    val (cands, lateBands) = Dedup.bandIndexProbe(dir + "/bands",
-      afterExB, "doc_id", "text", buckets = buckets, maxBucket = maxBucket)
+    }
+    val (cands, lateBands) = Phase.labeled("ltext:ltprobe") {
+      Dedup.bandIndexProbe(dir + "/bands", afterExB, "doc_id", "text",
+        buckets = buckets, maxBucket = maxBucket)
+    }
     val batchIds = afterExB.select(col("doc_id"))
-    label("ltpairs-ckpt")
-    val flagged = ckpt(cands.pairs
-      .join(broadcast(batchIds.select(col("doc_id").as("a_id"),
-        lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
-      .join(broadcast(batchIds.select(col("doc_id").as("b_id"),
-        lit(true).as("b_in"))), col("doc_b") === col("b_id"), "left")
-      .select(col("doc_a"), col("doc_b"), col("a_in"), col("b_in")))
+    val flagged = Phase.labeled("ltext:ltpairs-ckpt") {
+      ckpt(cands.pairs
+        .join(broadcast(batchIds.select(col("doc_id").as("a_id"),
+          lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
+        .join(broadcast(batchIds.select(col("doc_id").as("b_id"),
+          lit(true).as("b_in"))), col("doc_b") === col("b_id"), "left")
+        .select(col("doc_a"), col("doc_b"), col("a_in"), col("b_in")))
+    }
     val nearHist = flagged.filter(col("a_in").isNull || col("b_in").isNull)
       .select(
         when(col("a_in").isNotNull, col("doc_a")).otherwise(col("doc_b"))
@@ -374,11 +373,12 @@ object UnifiedFlow {
       .select(col("l_id").as("doc_id")).distinct()
 
     // stored-side election metadata + eviction handles, one pruned fetch
-    label("ltmeta-ckpt")
-    val meta = ckpt(CurationFlow.textMetaFetch(spark, dir + "/textmeta",
-      exHistPairs.select(col("s_id").as("doc_id"))
-        .unionByName(nearHist.select(col("s_id").as("doc_id")))
-        .distinct(), buckets))
+    val meta = Phase.labeled("ltext:ltmeta-ckpt") {
+      ckpt(CurationFlow.textMetaFetch(spark, dir + "/textmeta",
+        exHistPairs.select(col("s_id").as("doc_id"))
+          .unionByName(nearHist.select(col("s_id").as("doc_id")))
+          .distinct(), buckets))
+    }
     val sMeta = meta.select(col("doc_id").as("s_id"),
       col("prio").as("s_prio"), col("n_chars").as("s_nch"))
     val lMeta = afterExB.select(col("doc_id").as("l_id"),
@@ -399,9 +399,8 @@ object UnifiedFlow {
     // stage A: late rows beaten by earlier-keyed stored keepers — ONE
     // pinned frame with exact beats taking precedence over near (the
     // on-time stage order; the precedence rank leads the winner key)
-    label("ltlostA-ckpt")
-    val lostA = ckpt(
-      exEff.filter(sKeyEx < lKeyEx)
+    val lostA = Phase.labeled("ltext:ltlostA-ckpt") {
+      ckpt(exEff.filter(sKeyEx < lKeyEx)
         .select(col("l_id"), col("s_id"), col("s_prio"), col("s_nch"),
           lit(true).as("x"))
         .unionByName(nearEff.filter(sKeyN < lKeyN)
@@ -414,6 +413,7 @@ object UnifiedFlow {
             col("s_id"))).as("wn"))
         .select(col("doc_id"), col("wn.m").as("matched_id"),
           col("wn.x").as("is_exact")))
+    }
 
     // stage B: batch-internal band components among the survivors;
     // keeper = min (prio, -n_chars, id) — on-time first-wins across
@@ -428,8 +428,7 @@ object UnifiedFlow {
         Seq("doc_a"), "left_semi")
       .join(broadcast(surv.select(col("doc_id").as("doc_b"))),
         Seq("doc_b"), "left_semi")
-    label("ltedges-empty-probe")
-    val memb =
+    val memb = Phase.labeled("ltext:ltedges-empty-probe") {
       if (edgesRem.isEmpty) surv.withColumn("grp", col("doc_id"))
       else {
         val labels = Graph.batchComponents(ckpt(
@@ -438,6 +437,7 @@ object UnifiedFlow {
             Seq("doc_id"), "left")
           .withColumn("grp", coalesce(col("component"), col("doc_id")))
       }
+    }
     // keeper election AND decontamination (on-time stage 7: a
     // benchmark/contaminated winner neither attaches nor evicts — on
     // time it never entered the corpus) in ONE pinned tail. The hits
@@ -445,16 +445,17 @@ object UnifiedFlow {
     // main flow's r17 shape — extra non-winner hit rows are inert.
     val hits = CurationFlow.contaminationHits(afterExB, bench)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("grp")
-    label("lttail-ckpt")
-    val tail = ckpt(memb
-      .withColumn("keep_id", min_by(col("doc_id"),
-        struct(col("prio"), (-col("n_chars")).as("n"), col("doc_id")))
-        .over(w))
-      .join(broadcast(hits.withColumn("contam", lit(true))),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"), col("text"), col("n_chars"), col("n_tok"),
-        col("prio"), col("keep_id"),
-        coalesce(col("contam"), lit(false)).as("contam")))
+    val tail = Phase.labeled("ltext:lttail-ckpt") {
+      ckpt(memb
+        .withColumn("keep_id", min_by(col("doc_id"),
+          struct(col("prio"), (-col("n_chars")).as("n"), col("doc_id")))
+          .over(w))
+        .join(broadcast(hits.withColumn("contam", lit(true))),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"), col("text"), col("n_chars"), col("n_tok"),
+          col("prio"), col("keep_id"),
+          coalesce(col("contam"), lit(false)).as("contam")))
+    }
     val lostB = tail.filter(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id"), col("keep_id").as("matched_id"))
     val wtail = tail.filter(col("doc_id") === col("keep_id"))
@@ -468,9 +469,8 @@ object UnifiedFlow {
 
     // stage C: stored rows beaten by an ATTACHING winner — exact beats
     // take precedence over near (the on-time stage order)
-    label("ltevict-ckpt")
-    val evictWin = ckpt(
-      exEff.join(broadcast(attach.select(col("doc_id").as("l_id"))),
+    val evictWin = Phase.labeled("ltext:ltevict-ckpt") {
+      ckpt(exEff.join(broadcast(attach.select(col("doc_id").as("l_id"))),
           Seq("l_id"), "left_semi")
         .filter(lKeyEx < sKeyEx)
         .select(col("s_id"), col("l_id"), col("l_prio"), col("l_nch"),
@@ -487,6 +487,7 @@ object UnifiedFlow {
             (-col("l_nch")).as("n"), col("l_id"))).as("wn"))
         .select(col("doc_id"), col("wn.m").as("matched_id"),
           col("wn.x").as("is_exact")))
+    }
     val evictText = meta.join(broadcast(evictWin.select("doc_id")),
       Seq("doc_id"), "left_semi")
 
@@ -501,9 +502,9 @@ object UnifiedFlow {
 
     // pack the attachers at the carried cursor (pack fields ride the
     // `attached` correction rows; the on-time divergence is documented)
-    label("ltpack")
-    val (packedRaw, tokTotal) = Packing.packSequencesWithTotal(attach,
-      "doc_id", col("n_tok"), budget)
+    val (packedRaw, tokTotal) = Phase.labeled("ltext:ltpack") {
+      Packing.packSequencesWithTotal(attach, "doc_id", col("n_tok"), budget)
+    }
     val packed = packedRaw
       .withColumn("cb",
         lit(cursor) + col("seq_id") * lit(budget) + col("seq_offset"))
@@ -511,7 +512,6 @@ object UnifiedFlow {
         lit(null).cast("long").as("matched_id"), col("n_tok"),
         expr(s"cb DIV $budget").as("seq_id"),
         pmod(col("cb"), lit(budget)).as("seq_offset"))
-    spark.sparkContext.setJobDescription(null)
 
     val nulls = Seq(lit(null).cast("long").as("n_tok"),
       lit(null).cast("long").as("seq_id"),
@@ -580,8 +580,8 @@ object UnifiedFlow {
     // the non-meta mutations touch disjoint dirs — digest/, bands/, and
     // the vec/ subtree (whose own three removals keep their store-LAST
     // internal order through evictStored) — so they run concurrently,
-    // failures surfaced only after every side finished (awaitBoth's
-    // single-writer rationale); the keeper-meta mutation runs strictly
+    // failures surfaced only after every side finished (Phase.all's
+    // single-writer rule); the keeper-meta mutation runs strictly
     // AFTER its phase's barrier (the store-LAST replay proof above).
     // pin the text-eviction rows once (r21): the emptiness probe and
     // both band removals each re-ran the meta semi-join otherwise
@@ -590,7 +590,7 @@ object UnifiedFlow {
     val evictVecs = VectorFlow.vectorStoreFetch(spark,
       dir + "/vec/vectors",
       evictVecIds.select(col("doc_id").as("vec_id")), vec.buckets)
-    CurationFlow.awaitLabeled(
+    Phase.all(
       ("ltcommit:evict-digest", () => if (anyEvict) Dedup.bandIndexRemove(
         dir + "/digest",
         evictTextP.select(col("doc_id"), col("dg").as("band")),
@@ -651,12 +651,12 @@ object UnifiedFlow {
     // CONCURRENTLY (r16 diet: the five sequential store writes were a
     // fixed ~1.5 s of the batch wall; Spark schedules jobs from both
     // threads side by side)
-    // awaitBoth (r16 ADVICE): a failure surfaces only after BOTH modal
+    // Phase.all (r16 ADVICE): a failure surfaces only after BOTH modal
     // commits finished — an early rethrow would let a foreachBatch retry
     // replay the batch concurrently with the orphaned sibling writer.
     // The modal commits are themselves internally concurrent (r17), so
     // all five disjoint-dir appends run side by side.
-    CurationFlow.awaitLabeled(
+    Phase.all(
       ("ucommit:text", () => CurationFlow.commit(dir, staged.kept, buckets,
         Some(staged.keptBands))),
       ("ucommit:vec", () => VectorFlow.commit(dir + "/vec", staged.keptVecs, vec,
@@ -713,7 +713,7 @@ object UnifiedFlow {
       CurationFlow.textMetaFetch(spark, dir + "/textmeta",
         keptText.select("doc_id"), buckets).select("doc_id"),
       Seq("doc_id"), "left_anti")
-    CurationFlow.awaitLabeled(
+    Phase.all(
       ("ucommit:text", () => CurationFlow.commit(dir, keptText, buckets,
         Some(bands))),
       ("ucommit:vec", () => VectorFlow.commit(dir + "/vec",

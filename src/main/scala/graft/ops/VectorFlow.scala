@@ -177,8 +177,6 @@ object VectorFlow {
              params: Params, countCursor: Boolean): Staged = {
     require(cursor >= 0, s"cursor must be >= 0, got $cursor")
     val spark = batch.sparkSession
-    def label(l: String): Unit =
-      spark.sparkContext.setJobDescription(s"vdecide:$l")
     val all = batch.select(col("vec_id"), col("embedding"))
 
     // stage 1: validity gate. The flow params freeze in the sidecar on
@@ -188,17 +186,17 @@ object VectorFlow {
     // probe is LAZY (r16 diet): once the sidecar exists — every batch
     // after the first — no job runs to infer what the stamp already
     // knows.
-    lazy val inferred = {
-      label("infer-dim")
+    lazy val inferred = Phase.labeled("vdecide:infer-dim") {
       if (params.dim > 0) Some(params.dim)
       else Similarity.inferDimOpt(all, "embedding")
     }
     val d = freezeParams(spark, dir, params, inferred, stamp = true)
       .orElse(inferred).getOrElse(1)
-    label("valid-ckpt")
-    val valid = ckpt(all.filter(col("embedding").isNotNull &&
-      size(col("embedding")) === d &&
-      Similarity.l2Norm(col("embedding")) > 0d))
+    val valid = Phase.labeled("vdecide:valid-ckpt") {
+      ckpt(all.filter(col("embedding").isNotNull &&
+        size(col("embedding")) === d &&
+        Similarity.l2Norm(col("embedding")) > 0d))
+    }
 
     // stages 2-3 — exact vs history AND exact within batch — in ONE
     // pinned frame (r17 diet, the text flow's shape): `hist_matched` =
@@ -208,22 +206,23 @@ object VectorFlow {
     // rows because a digest group is hist-matched all-or-nothing (same
     // digest ⇒ same stored match) — verdicts byte-identical to the old
     // three-checkpoint chain, at a third of the sync points.
-    val digests = valid.select(col("vec_id"), digestOf(spark).as("band"))
-    val histM = Dedup.bandIndexPrunedStored(dir + "/digest",
-        digests.select(col("vec_id").as("doc_id"), col("band")),
-        params.buckets)
-      .join(broadcast(digests.select(col("band"), col("vec_id").as("bid"))),
-        Seq("band"))
-      .groupBy(col("bid").as("vec_id"))
-      .agg(min(col("doc_id")).as("hist_matched"))
-    val wdg = org.apache.spark.sql.expressions.Window.partitionBy("dg")
-    label("exact-ckpt")
-    val exact = ckpt(valid
-      .withColumn("dg", digestOf(spark))
-      .join(broadcast(histM), Seq("vec_id"), "left")
-      .withColumn("keep_id",
-        min(when(col("hist_matched").isNull, col("vec_id"))).over(wdg))
-      .drop("dg"))
+    val exact = Phase.labeled("vdecide:exact-ckpt") {
+      val digests = valid.select(col("vec_id"), digestOf(spark).as("band"))
+      val histM = Dedup.bandIndexPrunedStored(dir + "/digest",
+          digests.select(col("vec_id").as("doc_id"), col("band")),
+          params.buckets)
+        .join(broadcast(digests.select(col("band"), col("vec_id").as("bid"))),
+          Seq("band"))
+        .groupBy(col("bid").as("vec_id"))
+        .agg(min(col("doc_id")).as("hist_matched"))
+      val wdg = org.apache.spark.sql.expressions.Window.partitionBy("dg")
+      ckpt(valid
+        .withColumn("dg", digestOf(spark))
+        .join(broadcast(histM), Seq("vec_id"), "left")
+        .withColumn("keep_id",
+          min(when(col("hist_matched").isNull, col("vec_id"))).over(wdg))
+        .drop("dg"))
+    }
     val exHist = exact.filter(col("hist_matched").isNotNull)
       .select(col("vec_id"), col("hist_matched").as("matched_id"))
     val exBatch = exact.filter(col("hist_matched").isNull &&
@@ -237,22 +236,13 @@ object VectorFlow {
     // (read-only — only KEPT vectors ever index, at commit). Bounded
     // star route under a finite cap; both routes checkpoint before the
     // later commit can append the batch's own rows.
-    label("signed-ckpt")
-    val (home, probes) = Similarity.signedBatch(afterEx, "vec_id",
-      "embedding", params.bits, params.seed, d, params.families)
-    val cands = Similarity.embIndexProbe(dir + "/bands", home, probes,
-      params.buckets, params.maxBucket)
-    // the pair table pins WITH its in-batch flags (r17: the raw-pairs
-    // pin left the two batchIds broadcasts to be re-built by every
-    // downstream evaluation)
+    val (home, cands) = Phase.labeled("vdecide:signed-ckpt") {
+      val (home, probes) = Similarity.signedBatch(afterEx, "vec_id",
+        "embedding", params.bits, params.seed, d, params.families)
+      (home, Similarity.embIndexProbe(dir + "/bands", home, probes,
+        params.buckets, params.maxBucket))
+    }
     val batchIds = afterEx.select(col("vec_id"))
-    label("flagged-ckpt")
-    val flagged = ckpt(cands.pairs
-      .join(broadcast(batchIds.select(col("vec_id").as("a_id"),
-        lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
-      .join(broadcast(batchIds.select(col("vec_id").as("b_id"),
-        lit(true).as("b_in"))), col("doc_b") === col("b_id"), "left")
-      .select(col("doc_a"), col("doc_b"), col("a_in"), col("b_in")))
 
     // stages 4-5 verification in ONE checkpointed pass (r15 diet): every
     // candidate pair — history pairs against the vbkt-pruned store
@@ -264,51 +254,64 @@ object VectorFlow {
     // candidates at all (clean corpus — the common case) skips the
     // verification, fetch, and CC machinery entirely: `flagged` is
     // checkpointed, so the probe is one cheap take(1).
-    val (ndHist, edges) =
+    val (ndHist, edges) = Phase.labeled("vdecide:flagged-ckpt") {
+      // the pair table pins WITH its in-batch flags (r17: the raw-pairs
+      // pin left the two batchIds broadcasts to be re-built by every
+      // downstream evaluation)
+      val flagged = ckpt(cands.pairs
+        .join(broadcast(batchIds.select(col("vec_id").as("a_id"),
+          lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
+        .join(broadcast(batchIds.select(col("vec_id").as("b_id"),
+          lit(true).as("b_in"))), col("doc_b") === col("b_id"), "left")
+        .select(col("doc_a"), col("doc_b"), col("a_in"), col("b_in")))
       if (flagged.isEmpty) (emptyLongPairs(spark, "vec_id", "matched_id"),
         emptyLongPairs(spark, "doc_a", "doc_b"))
-    else {
-      val histCand = flagged.filter(col("a_in").isNull || col("b_in").isNull)
-        .select(
-          when(col("a_in").isNotNull, col("doc_a")).otherwise(col("doc_b"))
-            .as("doc_a"),
-          when(col("a_in").isNotNull, col("doc_b")).otherwise(col("doc_a"))
-            .as("doc_b"))
-      label("store-fetch")
-      val storedEmb = vectorStoreFetch(spark, dir + "/vectors",
-        histCand.select(col("doc_b").as("vec_id")).distinct(),
-        params.buckets)
-      // batch-embedding broadcast GUARD (r15 verdict #2): the three
-      // verification joins ship the batch's (vec_id, embedding) rows —
-      // fine at micro-batch scale, ~400 MB of driver memory at
-      // 100k × 1024-dim. `valid` is checkpoint-pinned, so the count
-      // reads materialized blocks (no recompute); an over-bound batch
-      // takes the shuffle-join route, decisions identical.
-      label("bcast-guard-count")
-      val embBc: DataFrame => DataFrame =
-        if (valid.count() <= params.maxBatchBroadcastRows) broadcast
-        else (df: DataFrame) => df
-      label("verified-ckpt")
-      val verified = ckpt(histCand
-        .join(embBc(valid.select(col("vec_id").as("doc_a"),
-          col("embedding").as("emb_a"))), Seq("doc_a"))
-        .join(storedEmb.select(col("vec_id").as("doc_b"),
-          col("embedding").as("emb_b")), Seq("doc_b"))
-        .withColumn("hist", lit(true))
-        .unionByName(flagged
-          .filter(col("a_in").isNotNull && col("b_in").isNotNull)
-          .select(col("doc_a"), col("doc_b"))
-          .join(embBc(valid.select(col("vec_id").as("doc_a"),
-            col("embedding").as("emb_a"))), Seq("doc_a"))
-          .join(embBc(valid.select(col("vec_id").as("doc_b"),
-            col("embedding").as("emb_b"))), Seq("doc_b"))
-          .withColumn("hist", lit(false)))
-        .filter(Similarity.cosine(col("emb_a"), col("emb_b")) >= params.minCos)
-        .select(col("doc_a"), col("doc_b"), col("hist")))
-      (verified.filter(col("hist"))
-        .groupBy(col("doc_a").as("vec_id"))
-        .agg(min(col("doc_b")).as("matched_id")),
-        verified.filter(!col("hist")).select(col("doc_a"), col("doc_b")))
+      else {
+        val histCand = flagged.filter(col("a_in").isNull || col("b_in").isNull)
+          .select(
+            when(col("a_in").isNotNull, col("doc_a")).otherwise(col("doc_b"))
+              .as("doc_a"),
+            when(col("a_in").isNotNull, col("doc_b")).otherwise(col("doc_a"))
+              .as("doc_b"))
+        val storedEmb = Phase.labeled("vdecide:store-fetch") {
+          vectorStoreFetch(spark, dir + "/vectors",
+            histCand.select(col("doc_b").as("vec_id")).distinct(),
+            params.buckets)
+        }
+        // batch-embedding broadcast GUARD (r15 verdict #2): the three
+        // verification joins ship the batch's (vec_id, embedding) rows —
+        // fine at micro-batch scale, ~400 MB of driver memory at
+        // 100k × 1024-dim. `valid` is checkpoint-pinned, so the count
+        // reads materialized blocks (no recompute); an over-bound batch
+        // takes the shuffle-join route, decisions identical.
+        val embBc: DataFrame => DataFrame =
+          if (Phase.labeled("vdecide:bcast-guard-count")(valid.count()) <=
+              params.maxBatchBroadcastRows) broadcast
+          else (df: DataFrame) => df
+        val verified = Phase.labeled("vdecide:verified-ckpt") {
+          ckpt(histCand
+            .join(embBc(valid.select(col("vec_id").as("doc_a"),
+              col("embedding").as("emb_a"))), Seq("doc_a"))
+            .join(storedEmb.select(col("vec_id").as("doc_b"),
+              col("embedding").as("emb_b")), Seq("doc_b"))
+            .withColumn("hist", lit(true))
+            .unionByName(flagged
+              .filter(col("a_in").isNotNull && col("b_in").isNotNull)
+              .select(col("doc_a"), col("doc_b"))
+              .join(embBc(valid.select(col("vec_id").as("doc_a"),
+                col("embedding").as("emb_a"))), Seq("doc_a"))
+              .join(embBc(valid.select(col("vec_id").as("doc_b"),
+                col("embedding").as("emb_b"))), Seq("doc_b"))
+              .withColumn("hist", lit(false)))
+            .filter(Similarity.cosine(col("emb_a"), col("emb_b")) >=
+              params.minCos)
+            .select(col("doc_a"), col("doc_b"), col("hist")))
+        }
+        (verified.filter(col("hist"))
+          .groupBy(col("doc_a").as("vec_id"))
+          .agg(min(col("doc_b")).as("matched_id")),
+          verified.filter(!col("hist")).select(col("doc_a"), col("doc_b")))
+      }
     }
     val afterNdHist = afterEx.join(broadcast(ndHist), Seq("vec_id"), "left_anti")
 
@@ -323,8 +326,7 @@ object VectorFlow {
         "left_semi")
       .join(broadcast(rem.select(col("vec_id").as("doc_b"))), Seq("doc_b"),
         "left_semi")
-    label("edges-empty-probe")
-    val memb =
+    val memb = Phase.labeled("vdecide:edges-empty-probe") {
       if (edgesRem.isEmpty) afterNdHist.withColumn("grp", col("vec_id"))
       else {
         val labels = Graph.batchComponents(ckpt(
@@ -334,6 +336,7 @@ object VectorFlow {
             Seq("vec_id"), "left")
           .withColumn("grp", coalesce(col("component"), col("vec_id")))
       }
+    }
     // keeper election per params.keeper: min id (the CC label itself —
     // first wins inside the batch too, the default) or SemDeDup's
     // diversity rule (lowest cosine to the component MEAN, ties by min
@@ -358,9 +361,9 @@ object VectorFlow {
               .over(w))
           .drop("cmean", "cos_c")
     }
-    label("tail-ckpt")
-    val tail = ckpt(withKeep
-      .select(col("vec_id"), col("embedding"), col("keep_id")))
+    val tail = Phase.labeled("vdecide:tail-ckpt") {
+      ckpt(withKeep.select(col("vec_id"), col("embedding"), col("keep_id")))
+    }
     val ndBatch = tail.filter(col("vec_id") =!= col("keep_id"))
       .select(col("vec_id"), col("keep_id").as("matched_id"))
     val kept = tail.filter(col("vec_id") === col("keep_id"))
@@ -368,11 +371,7 @@ object VectorFlow {
 
     val newCursor =
       if (!countCursor) cursor
-      else {
-        label("cursor-count")
-        cursor + kept.count()
-      }
-    spark.sparkContext.setJobDescription(null)
+      else cursor + Phase.labeled("vdecide:cursor-count")(kept.count())
     def reason(ids: DataFrame, r: String): DataFrame =
       ids.select(col("vec_id"), lit(r).as("status"),
         col("matched_id").cast("long").as("matched_id"))
@@ -421,8 +420,8 @@ object VectorFlow {
     // the three appends touch DISJOINT dirs, each with its own staged
     // swap, and replay never depends on their relative order — run them
     // CONCURRENTLY, surfacing failures only after all three finished
-    // (r17 diet; CurationFlow.awaitBoth's single-writer rationale)
-    CurationFlow.awaitLabeled(
+    // (r17 diet; Phase.all's single-writer rule)
+    Phase.all(
       ("vcommit:digest", () => Dedup.bandIndexAppend(dir + "/digest",
         clean.select(col("vec_id").as("doc_id"), digestOf(spark).as("band")),
         params.buckets)),
@@ -511,8 +510,6 @@ object VectorFlow {
   def lateDecide(dir: String, late: DataFrame,
                  params: Params = Params()): LateStaged = {
     val spark = late.sparkSession
-    def label(l: String): Unit =
-      spark.sparkContext.setJobDescription(s"vlate:$l")
     val withPrio =
       if (late.columns.contains("prio"))
         late.select(col("vec_id"), col("embedding"),
@@ -523,17 +520,17 @@ object VectorFlow {
 
     // gate (decide's stage 1, sidecar-frozen dim authoritative; lazy
     // head probe — the sidecar almost always exists for a late feed)
-    lazy val inferred = {
-      label("infer-dim")
+    lazy val inferred = Phase.labeled("vlate:infer-dim") {
       if (params.dim > 0) Some(params.dim)
       else Similarity.inferDimOpt(withPrio, "embedding")
     }
     val d = freezeParams(spark, dir, params, inferred, stamp = true)
       .orElse(inferred).getOrElse(1)
-    label("valid-ckpt")
-    val valid = ckpt(withPrio.filter(col("embedding").isNotNull &&
-      size(col("embedding")) === d &&
-      Similarity.l2Norm(col("embedding")) > 0d))
+    val valid = Phase.labeled("vlate:valid-ckpt") {
+      ckpt(withPrio.filter(col("embedding").isNotNull &&
+        size(col("embedding")) === d &&
+        Similarity.l2Norm(col("embedding")) > 0d))
+    }
 
     // in-batch exact dedup first (decide's stage 3, min-KEY keeper)
     val dg = valid.select(col("vec_id"), col("prio"),
@@ -544,169 +541,177 @@ object VectorFlow {
     val exBatch = dg.join(dgKeep, Seq("dg"))
       .filter(col("vec_id") =!= col("keep_id"))
       .select(col("vec_id"), col("keep_id").as("matched_id"))
-    label("afterexb-ckpt")
-    val afterExB = ckpt(valid.join(broadcast(exBatch.select("vec_id")),
-      Seq("vec_id"), "left_anti"))
+    val afterExB = Phase.labeled("vlate:afterexb-ckpt") {
+      ckpt(valid.join(broadcast(exBatch.select("vec_id")),
+        Seq("vec_id"), "left_anti"))
+    }
 
     // candidates vs history: exact digest matches + Hamming≤1 probes
     val digests = afterExB.select(col("vec_id"), digestOf(spark).as("band"))
-    label("exhist-ckpt")
-    val exHistPairs = ckpt(
-      Dedup.bandIndexPrunedStored(dir + "/digest",
-          digests.select(col("vec_id").as("doc_id"), col("band")),
-          params.buckets)
-        .join(broadcast(digests.select(col("band"),
-          col("vec_id").as("l_id"))), Seq("band"))
-        .select(col("l_id"), col("doc_id").as("s_id")).distinct())
-    label("signed-ckpt")
-    val (home, probes) = Similarity.signedBatch(afterExB, "vec_id",
-      "embedding", params.bits, params.seed, d, params.families)
-    val cands = Similarity.embIndexProbe(dir + "/bands", home, probes,
-      params.buckets, params.maxBucket)
-    label("near-ckpt")
-    val nearPairs = ckpt(cands.pairs)
+    val exHistPairs = Phase.labeled("vlate:exhist-ckpt") {
+      ckpt(
+        Dedup.bandIndexPrunedStored(dir + "/digest",
+            digests.select(col("vec_id").as("doc_id"), col("band")),
+            params.buckets)
+          .join(broadcast(digests.select(col("band"),
+            col("vec_id").as("l_id"))), Seq("band"))
+          .select(col("l_id"), col("doc_id").as("s_id")).distinct())
+    }
+    val (home, cands) = Phase.labeled("vlate:signed-ckpt") {
+      val (home, probes) = Similarity.signedBatch(afterExB, "vec_id",
+        "embedding", params.bits, params.seed, d, params.families)
+      (home, Similarity.embIndexProbe(dir + "/bands", home, probes,
+        params.buckets, params.maxBucket))
+    }
+    val nearPairs = Phase.labeled("vlate:near-ckpt")(ckpt(cands.pairs))
 
-    label("empty-probe")
     val (lostA, lostB, attach, evictWin, evictRows, redundant) =
-      if (exHistPairs.isEmpty && nearPairs.isEmpty) {
-        // no candidates anywhere (the common clean-feed case): nothing
-        // drops, nothing evicts, every gated survivor attaches
-        val noLoss = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("vec_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("matched_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("is_exact",
-              org.apache.spark.sql.types.BooleanType))))
-        (noLoss, noLoss.drop("is_exact"), afterExB, noLoss,
-          vectorStoreFetch(spark, dir + "/vectors",
-            afterExB.select("vec_id").limit(0), params.buckets),
-          noLoss.select("vec_id"))
-      } else {
-        // a REDELIVERED embedding (id already in the corpus, identical
-        // content) self-matches through the digest index: it needs no
-        // decision and must neither re-append nor evict — corrections
-        // say `redundant_late` (the cross-batch analog of the ledger's
-        // replay dedupe; a same-id redelivery with DIFFERENT content is
-        // outside the feed contract and would attach a second vector)
-        val selfIds = ckpt(exHistPairs.filter(col("l_id") === col("s_id"))
-          .select(col("l_id").as("vec_id")).distinct())
-        // orient the near pairs: (late, stored) and (late, late)
-        val batchIds = afterExB.select(col("vec_id"))
-        val flagged = nearPairs
-          .join(broadcast(batchIds.select(col("vec_id").as("a_id"),
-            lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
-          .join(broadcast(batchIds.select(col("vec_id").as("b_id"),
-            lit(true).as("b_in"))), col("doc_b") === col("b_id"), "left")
-        val nearHist = flagged
-          .filter(col("a_in").isNull || col("b_in").isNull)
-          .select(
-            when(col("a_in").isNotNull, col("doc_a")).otherwise(col("doc_b"))
-              .as("l_id"),
-            when(col("a_in").isNotNull, col("doc_b")).otherwise(col("doc_a"))
-              .as("s_id"))
-        // one pruned fetch serves verification AND the eviction rows
-        label("store-fetch")
-        val storedEmb = ckpt(vectorStoreFetch(spark, dir + "/vectors",
-          exHistPairs.select(col("s_id").as("vec_id"))
-            .unionByName(nearHist.select(col("s_id").as("vec_id")))
-            .distinct(),
-          params.buckets))
-        label("bcast-guard-count")
-        val embBc: DataFrame => DataFrame =
-          if (valid.count() <= params.maxBatchBroadcastRows) broadcast
-          else (df: DataFrame) => df
-        // verified (late, stored) pairs with both keys and the pair kind
-        label("histpairs-ckpt")
-        val histPairs = ckpt(exHistPairs.withColumn("is_exact", lit(true))
-          .unionByName(nearHist.withColumn("is_exact", lit(false)))
-          .join(embBc(afterExB.select(col("vec_id").as("l_id"),
-            col("embedding").as("emb_l"), col("prio").as("l_prio"))),
-            Seq("l_id"))
-          .join(storedEmb.select(col("vec_id").as("s_id"),
-            col("embedding").as("emb_s"), col("prio").as("s_prio")),
-            Seq("s_id"))
-          .filter(col("is_exact") ||
-            Similarity.cosine(col("emb_l"), col("emb_s")) >= params.minCos)
-          .groupBy("l_id", "s_id", "l_prio", "s_prio")
-          .agg(max(col("is_exact")).as("is_exact")))
-        // redundant rows decide nothing: drop their pairs' LATE side
-        // (they may still stand as the STORED side other rows lose to)
-        val histEff = histPairs.filter(col("l_id") =!= col("s_id"))
-          .join(broadcast(selfIds.select(col("vec_id").as("l_id"))),
-            Seq("l_id"), "left_anti")
-        // stage A: a late row beaten by an earlier-keyed stored keeper
-        val lKey = struct(col("l_prio"), col("l_id"))
-        val sKey = struct(col("s_prio"), col("s_id"))
-        label("losta-ckpt")
-        val lostA = ckpt(histEff.filter(sKey < lKey)
-          .groupBy(col("l_id").as("vec_id"))
-          .agg(min_by(struct(col("s_id").as("m"),
-              col("is_exact").as("x")),
-            struct(col("s_prio"), col("s_id"))).as("w"))
-          .select(col("vec_id"), col("w.m").as("matched_id"),
-            col("w.x").as("is_exact")))
-        // stage B: batch-internal verified components of the survivors
-        val lateCand = flagged
-          .filter(col("a_in").isNotNull && col("b_in").isNotNull)
-          .select(col("doc_a"), col("doc_b"))
-        label("lateverified-ckpt")
-        val lateVerified = ckpt(lateCand
-          .join(embBc(afterExB.select(col("vec_id").as("doc_a"),
-            col("embedding").as("emb_a"))), Seq("doc_a"))
-          .join(embBc(afterExB.select(col("vec_id").as("doc_b"),
-            col("embedding").as("emb_b"))), Seq("doc_b"))
-          .filter(Similarity.cosine(col("emb_a"), col("emb_b")) >=
-            params.minCos)
-          .select(col("doc_a"), col("doc_b")))
-        val surv = afterExB.join(broadcast(lostA.select("vec_id")),
-            Seq("vec_id"), "left_anti")
-          .join(broadcast(selfIds), Seq("vec_id"), "left_anti")
-        val edgesRem = lateVerified
-          .join(broadcast(surv.select(col("vec_id").as("doc_a"))),
-            Seq("doc_a"), "left_semi")
-          .join(broadcast(surv.select(col("vec_id").as("doc_b"))),
-            Seq("doc_b"), "left_semi")
-        label("edges-empty-probe")
-        val memb =
-          if (edgesRem.isEmpty) surv.withColumn("grp", col("vec_id"))
-          else {
-            val labels = Graph.batchComponents(ckpt(
-              edgesRem.select(col("doc_a").as("src"), col("doc_b").as("dst"))))
-            surv.join(labels.withColumnRenamed("node_id", "vec_id"),
-                Seq("vec_id"), "left")
-              .withColumn("grp", coalesce(col("component"), col("vec_id")))
+      Phase.labeled("vlate:empty-probe") {
+        if (exHistPairs.isEmpty && nearPairs.isEmpty) {
+          // no candidates anywhere (the common clean-feed case): nothing
+          // drops, nothing evicts, every gated survivor attaches
+          val noLoss = spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("vec_id",
+                org.apache.spark.sql.types.LongType),
+              org.apache.spark.sql.types.StructField("matched_id",
+                org.apache.spark.sql.types.LongType),
+              org.apache.spark.sql.types.StructField("is_exact",
+                org.apache.spark.sql.types.BooleanType))))
+          (noLoss, noLoss.drop("is_exact"), afterExB, noLoss,
+            vectorStoreFetch(spark, dir + "/vectors",
+              afterExB.select("vec_id").limit(0), params.buckets),
+            noLoss.select("vec_id"))
+        } else {
+          // a REDELIVERED embedding (id already in the corpus, identical
+          // content) self-matches through the digest index: it needs no
+          // decision and must neither re-append nor evict — corrections
+          // say `redundant_late` (the cross-batch analog of the ledger's
+          // replay dedupe; a same-id redelivery with DIFFERENT content is
+          // outside the feed contract and would attach a second vector)
+          val selfIds = ckpt(exHistPairs.filter(col("l_id") === col("s_id"))
+            .select(col("l_id").as("vec_id")).distinct())
+          // orient the near pairs: (late, stored) and (late, late)
+          val batchIds = afterExB.select(col("vec_id"))
+          val flagged = nearPairs
+            .join(broadcast(batchIds.select(col("vec_id").as("a_id"),
+              lit(true).as("a_in"))), col("doc_a") === col("a_id"), "left")
+            .join(broadcast(batchIds.select(col("vec_id").as("b_id"),
+              lit(true).as("b_in"))), col("doc_b") === col("b_id"), "left")
+          val nearHist = flagged
+            .filter(col("a_in").isNull || col("b_in").isNull)
+            .select(
+              when(col("a_in").isNotNull, col("doc_a")).otherwise(col("doc_b"))
+                .as("l_id"),
+              when(col("a_in").isNotNull, col("doc_b")).otherwise(col("doc_a"))
+                .as("s_id"))
+          // one pruned fetch serves verification AND the eviction rows
+          val storedEmb = Phase.labeled("vlate:store-fetch") {
+            ckpt(vectorStoreFetch(spark, dir + "/vectors",
+              exHistPairs.select(col("s_id").as("vec_id"))
+                .unionByName(nearHist.select(col("s_id").as("vec_id")))
+                .distinct(),
+              params.buckets))
           }
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("grp")
-        label("tail-ckpt")
-        val tail = ckpt(memb
-          .withColumn("keep_id",
-            min_by(col("vec_id"), struct(col("prio"), col("vec_id")))
-              .over(w))
-          .select(col("vec_id"), col("embedding"), col("prio"),
-            col("keep_id")))
-        val lostB = tail.filter(col("vec_id") =!= col("keep_id"))
-          .select(col("vec_id"), col("keep_id").as("matched_id"))
-        val attach = tail.filter(col("vec_id") === col("keep_id"))
-          .select(col("vec_id"), col("embedding"), col("prio"))
-        // stage C: stored rows beaten by an ATTACHING winner are evicted
-        label("evict-ckpt")
-        val evictWin = ckpt(histEff
-          .join(broadcast(attach.select(col("vec_id").as("l_id"))),
-            Seq("l_id"), "left_semi")
-          .filter(lKey < sKey)
-          .groupBy(col("s_id"))
-          .agg(min_by(struct(col("l_id").as("m"), col("is_exact").as("x")),
-            struct(col("l_prio"), col("l_id"))).as("w"))
-          .select(col("s_id").as("vec_id"), col("w.m").as("matched_id"),
-            col("w.x").as("is_exact")))
-        val evictRows = storedEmb.join(broadcast(evictWin.select("vec_id")),
-          Seq("vec_id"), "left_semi")
-        (lostA, lostB, attach, evictWin, evictRows, selfIds)
+          val embBc: DataFrame => DataFrame =
+            if (Phase.labeled("vlate:bcast-guard-count")(valid.count()) <=
+                params.maxBatchBroadcastRows) broadcast
+            else (df: DataFrame) => df
+          // verified (late, stored) pairs with both keys and the pair kind
+          val histPairs = Phase.labeled("vlate:histpairs-ckpt") {
+            ckpt(exHistPairs.withColumn("is_exact", lit(true))
+              .unionByName(nearHist.withColumn("is_exact", lit(false)))
+              .join(embBc(afterExB.select(col("vec_id").as("l_id"),
+                col("embedding").as("emb_l"), col("prio").as("l_prio"))),
+                Seq("l_id"))
+              .join(storedEmb.select(col("vec_id").as("s_id"),
+                col("embedding").as("emb_s"), col("prio").as("s_prio")),
+                Seq("s_id"))
+              .filter(col("is_exact") ||
+                Similarity.cosine(col("emb_l"), col("emb_s")) >= params.minCos)
+              .groupBy("l_id", "s_id", "l_prio", "s_prio")
+              .agg(max(col("is_exact")).as("is_exact")))
+          }
+          // redundant rows decide nothing: drop their pairs' LATE side
+          // (they may still stand as the STORED side other rows lose to)
+          val histEff = histPairs.filter(col("l_id") =!= col("s_id"))
+            .join(broadcast(selfIds.select(col("vec_id").as("l_id"))),
+              Seq("l_id"), "left_anti")
+          // stage A: a late row beaten by an earlier-keyed stored keeper
+          val lKey = struct(col("l_prio"), col("l_id"))
+          val sKey = struct(col("s_prio"), col("s_id"))
+          val lostA = Phase.labeled("vlate:losta-ckpt") {
+            ckpt(histEff.filter(sKey < lKey)
+              .groupBy(col("l_id").as("vec_id"))
+              .agg(min_by(struct(col("s_id").as("m"),
+                  col("is_exact").as("x")),
+                struct(col("s_prio"), col("s_id"))).as("w"))
+              .select(col("vec_id"), col("w.m").as("matched_id"),
+                col("w.x").as("is_exact")))
+          }
+          // stage B: batch-internal verified components of the survivors
+          val lateCand = flagged
+            .filter(col("a_in").isNotNull && col("b_in").isNotNull)
+            .select(col("doc_a"), col("doc_b"))
+          val lateVerified = Phase.labeled("vlate:lateverified-ckpt") {
+            ckpt(lateCand
+              .join(embBc(afterExB.select(col("vec_id").as("doc_a"),
+                col("embedding").as("emb_a"))), Seq("doc_a"))
+              .join(embBc(afterExB.select(col("vec_id").as("doc_b"),
+                col("embedding").as("emb_b"))), Seq("doc_b"))
+              .filter(Similarity.cosine(col("emb_a"), col("emb_b")) >=
+                params.minCos)
+              .select(col("doc_a"), col("doc_b")))
+          }
+          val surv = afterExB.join(broadcast(lostA.select("vec_id")),
+              Seq("vec_id"), "left_anti")
+            .join(broadcast(selfIds), Seq("vec_id"), "left_anti")
+          val edgesRem = lateVerified
+            .join(broadcast(surv.select(col("vec_id").as("doc_a"))),
+              Seq("doc_a"), "left_semi")
+            .join(broadcast(surv.select(col("vec_id").as("doc_b"))),
+              Seq("doc_b"), "left_semi")
+          val memb = Phase.labeled("vlate:edges-empty-probe") {
+            if (edgesRem.isEmpty) surv.withColumn("grp", col("vec_id"))
+            else {
+              val labels = Graph.batchComponents(ckpt(edgesRem
+                .select(col("doc_a").as("src"), col("doc_b").as("dst"))))
+              surv.join(labels.withColumnRenamed("node_id", "vec_id"),
+                  Seq("vec_id"), "left")
+                .withColumn("grp", coalesce(col("component"), col("vec_id")))
+            }
+          }
+          val w = org.apache.spark.sql.expressions.Window.partitionBy("grp")
+          val tail = Phase.labeled("vlate:tail-ckpt") {
+            ckpt(memb
+              .withColumn("keep_id",
+                min_by(col("vec_id"), struct(col("prio"), col("vec_id")))
+                  .over(w))
+              .select(col("vec_id"), col("embedding"), col("prio"),
+                col("keep_id")))
+          }
+          val lostB = tail.filter(col("vec_id") =!= col("keep_id"))
+            .select(col("vec_id"), col("keep_id").as("matched_id"))
+          val attach = tail.filter(col("vec_id") === col("keep_id"))
+            .select(col("vec_id"), col("embedding"), col("prio"))
+          // stage C: stored rows beaten by an ATTACHING winner are evicted
+          val evictWin = Phase.labeled("vlate:evict-ckpt") {
+            ckpt(histEff
+              .join(broadcast(attach.select(col("vec_id").as("l_id"))),
+                Seq("l_id"), "left_semi")
+              .filter(lKey < sKey)
+              .groupBy(col("s_id"))
+              .agg(min_by(struct(col("l_id").as("m"), col("is_exact").as("x")),
+                struct(col("l_prio"), col("l_id"))).as("w"))
+              .select(col("s_id").as("vec_id"), col("w.m").as("matched_id"),
+                col("w.x").as("is_exact")))
+          }
+          val evictRows = storedEmb.join(broadcast(evictWin.select("vec_id")),
+            Seq("vec_id"), "left_semi")
+          (lostA, lostB, attach, evictWin, evictRows, selfIds)
+        }
       }
-    spark.sparkContext.setJobDescription(null)
 
     val nullM = lit(null).cast("long").as("matched_id")
     def kindStatus(df: DataFrame): DataFrame =
@@ -773,7 +778,7 @@ object VectorFlow {
       // staged swap — run them concurrently (guide §2.6, r21); the
       // vector store stays strictly LAST (the fetch-first replay
       // contract above)
-      CurationFlow.awaitLabeled(
+      Phase.all(
         ("vevict:digest", () => Dedup.bandIndexRemove(dir + "/digest",
           ev.select(col("vec_id").as("doc_id"),
             digestOf(spark).as("band")), params.buckets)),

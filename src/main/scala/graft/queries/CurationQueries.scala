@@ -318,7 +318,7 @@ object CurationQueries {
     // hyperplane family); contracts pinned in UnifiedFlowSpec — driver
     // records the rows-only check. PRICE NOTE: this is the catalog's
     // largest composition — two waves × (full text chain + full vector
-    // chain + five-store commit); FlowProfile shows the cost is
+    // chain + five-store commit); KeyProfile shows the cost is
     // ADDITIVE (per wave ≈ text 5.5 s + vector 2.5 s + commit 2 s at
     // sf0.1), the composition itself adding only broadcast semi-joins.
     "q_unified_curation" -> ((s, d) => {

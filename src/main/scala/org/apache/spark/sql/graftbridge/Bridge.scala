@@ -74,4 +74,11 @@ object Bridge {
     */
   def awaitListenerBusEmpty(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The JVM's running SparkContext, if any (`getActive` is
+    * `private[spark]`). Unlike a thread's active session, which a pool
+    * thread inherits at its creation and may outlive, this is never stale.
+    */
+  def activeContext: Option[org.apache.spark.SparkContext] =
+    org.apache.spark.SparkContext.getActive
 }

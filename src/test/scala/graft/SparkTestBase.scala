@@ -18,22 +18,33 @@ trait SparkTestBase extends AnyFunSuite {
     s
   }
 
-  /** Runs `body` and counts the Spark jobs it started. The listener bus is
-    * drained before the listener goes on (so a late event of earlier work
-    * is not counted) and again before the count is read.
+  /** One Spark job, as its start event carried it: its description
+    * (None when it ran unlabeled) and its job tags.
     */
-  def jobs[T](body: => T): (T, Int) = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+  final case class Job(description: Option[String], tags: Set[String])
+
+  /** Runs `body` and returns the Spark jobs it started, in start order;
+    * their count is the job budget. The listener bus is drained before the
+    * listener goes on (so a late event of earlier work is not counted) and
+    * again before the jobs are read.
+    */
+  def jobs[T](body: => T): (T, Seq[Job]) = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(j.properties)
+        started.add(Job(p.flatMap(x => Option(x.getProperty("spark.job.description"))),
+          p.flatMap(x => Option(x.getProperty("spark.job.tags")))
+            .fold(Set.empty[String])(_.split(",").filter(_.nonEmpty).toSet)))
+      }
     }
     org.apache.spark.sql.graftbridge.Bridge.awaitListenerBusEmpty(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = body
       org.apache.spark.sql.graftbridge.Bridge.awaitListenerBusEmpty(spark.sparkContext)
-      (out, counter.get())
+      import scala.jdk.CollectionConverters._
+      (out, started.asScala.toVector)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

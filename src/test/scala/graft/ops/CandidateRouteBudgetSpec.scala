@@ -46,7 +46,7 @@ class CandidateRouteBudgetSpec extends SparkTestBase {
     val (b, call) = jobs(run)
     val (np, p) = jobs(b.pairs.collect().length)
     val (no, o) = jobs(b.overflow.collect().length)
-    (call, (p, np), (o, no))
+    (call.size, (p.size, np), (o.size, no))
   }
 
   test("job budget: bandIndexProbe exact and capped") {

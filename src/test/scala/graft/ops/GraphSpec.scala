@@ -270,7 +270,7 @@ class GraphSpec extends SparkTestBase {
     val edges = (0 until 300)
       .map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .filter(e => e._1 != e._2).toDF("src", "dst")
-    def countJobs(iters: Int): Int = jobs(Graph.pageRank(edges, iters = iters).count())._2
+    def countJobs(iters: Int): Int = jobs(Graph.pageRank(edges, iters = iters).count())._2.size
     val j2 = countJobs(2)
     val j5 = countJobs(5)
     assert(j5 - j2 <= 32, s"jobs grew by ${j5 - j2} over 3 extra rounds")

@@ -46,45 +46,54 @@ class UnifiedFlowSpec extends SparkTestBase {
 
   private val noEmb = null.asInstanceOf[Seq[Float]]
 
-  test("two waves over both modalities: text dup first, semantic second, missing modality passes, pack continues") {
-    val vec = VectorFlow.Params(minCos = 0.99, dim = Dim)
-    val dir = java.nio.file.Files.createTempDirectory("uni").toString + "/c"
-    val bench = CurationFlow.benchShingles(
-      df(Seq((100L, goodText("bench"), noEmb))))
-    // wave 1: 1 kept (text+emb); 2 text-copies 1 (exact_batch — the
-    // TEXT stage wins before semantics ever see it); 3 kept text-only;
-    // 4 fails shape; 5 kept with an embedding ORTHOGONAL to 1's
-    val w1 = UnifiedFlow.ingest(dir, df(Seq(
-      (1L, goodText("a"), rot(0)),
-      (2L, goodText("a"), rot(0.001)),
-      (3L, goodText("c"), noEmb),
-      (4L, "too short", noEmb),
-      (5L, goodText("e"), { val v = Array.fill(Dim)(0f); v(3) = 1f; v.toSeq }))),
-      bench, cursor = 0L, vec = vec)
-    assert(statuses(w1.decisions) === Map(1L -> "kept", 2L -> "exact_batch",
-      3L -> "kept", 4L -> "shape", 5L -> "kept"))
-    // text-stage drops carry the duplicate map too (r16)
-    assert(matches(w1.decisions) === Map(2L -> 1L))
-    assert(w1.cursor === 66L, s"3 kept x 22 tokens, got ${w1.cursor}")
+  // wave 1: 1 kept (text+emb); 2 text-copies 1 (exact_batch — the
+  // TEXT stage wins before semantics ever see it); 3 kept text-only;
+  // 4 fails shape; 5 kept with an embedding ORTHOGONAL to 1's
+  private def wave1 = df(Seq(
+    (1L, goodText("a"), rot(0)),
+    (2L, goodText("a"), rot(0.001)),
+    (3L, goodText("c"), noEmb),
+    (4L, "too short", noEmb),
+    (5L, goodText("e"), { val v = Array.fill(Dim)(0f); v(3) = 1f; v.toSeq })))
 
-    // wave 2: 11 = paraphrase of 1 (fresh text, near emb) →
-    // semdup_history matched 1; 12 = fresh text + EXACT emb of 1 →
-    // embdup_history matched 1; 13 = text copy of 3 → exact_history
-    // (text stage, though it has a fresh embedding); 14 kept (fresh
-    // both); 15/16 = fresh texts with near-identical NEW embeddings →
-    // one kept, one semdup_batch; 17 = fresh text, null emb → kept
+  // wave 2: 11 = paraphrase of 1 (fresh text, near emb) →
+  // semdup_history matched 1; 12 = fresh text + EXACT emb of 1 →
+  // embdup_history matched 1; 13 = text copy of 3 → exact_history
+  // (text stage, though it has a fresh embedding); 14 kept (fresh
+  // both); 15/16 = fresh texts with near-identical NEW embeddings →
+  // one kept, one semdup_batch; 17 = fresh text, null emb → kept
+  private def wave2 = {
     val eNew = { val v = Array.fill(Dim)(0f); v(5) = 1f; v.toSeq }
     val eNew2 = { val v = Array.fill(Dim)(0f)
       v(5) = math.cos(0.02).toFloat; v(6) = math.sin(0.02).toFloat; v.toSeq }
-    val w2 = UnifiedFlow.ingest(dir, df(Seq(
+    df(Seq(
       (11L, goodText("k"), rot(0.02)),
       (12L, goodText("l"), rot(0)),
       (13L, goodText("c"), rot(1.2)),
       (14L, goodText("n"), rot(2.8)),
       (15L, goodText("p"), eNew),
       (16L, goodText("q"), eNew2),
-      (17L, goodText("r"), noEmb))),
-      bench, cursor = w1.cursor, vec = vec)
+      (17L, goodText("r"), noEmb)))
+  }
+
+  private def benchOf = CurationFlow.benchShingles(
+    df(Seq((100L, goodText("bench"), noEmb))))
+
+  private val Description = "spark.job.description"
+
+  test("two waves over both modalities: text dup first, semantic second, missing modality passes, pack continues") {
+    val vec = VectorFlow.Params(minCos = 0.99, dim = Dim)
+    val dir = java.nio.file.Files.createTempDirectory("uni").toString + "/c"
+    val bench = benchOf
+    val w1 = UnifiedFlow.ingest(dir, wave1, bench, cursor = 0L, vec = vec)
+    assert(statuses(w1.decisions) === Map(1L -> "kept", 2L -> "exact_batch",
+      3L -> "kept", 4L -> "shape", 5L -> "kept"))
+    // text-stage drops carry the duplicate map too (r16)
+    assert(matches(w1.decisions) === Map(2L -> 1L))
+    assert(w1.cursor === 66L, s"3 kept x 22 tokens, got ${w1.cursor}")
+
+    val w2 = UnifiedFlow.ingest(dir, wave2, bench, cursor = w1.cursor,
+      vec = vec)
     assert(statuses(w2.decisions) === Map(11L -> "semdup_history",
       12L -> "embdup_history", 13L -> "exact_history", 14L -> "kept",
       15L -> "kept", 16L -> "semdup_batch", 17L -> "kept"))
@@ -350,5 +359,69 @@ class UnifiedFlowSpec extends SparkTestBase {
           s"hits job $id was still running when decide threw")
       }
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("decide and commit leave the caller's job description in place, also when decide throws after its fork") {
+    val sc = spark.sparkContext
+    val vec = VectorFlow.Params(minCos = 0.99, dim = Dim)
+    val dir = java.nio.file.Files.createTempDirectory("uni_label").toString + "/c"
+    val bench = benchOf
+    sc.setJobDescription("caller")
+    try {
+      val staged = UnifiedFlow.decide(dir, wave1, bench, 0L, vec = vec)
+      assert(sc.getLocalProperty(Description) === "caller")
+      UnifiedFlow.commit(dir, staged, vec = vec)
+      assert(sc.getLocalProperty(Description) === "caller")
+      // the drain scenario: a bands/ store stamped with 8 buckets fails
+      // decide's 16-bucket band probe after the contamination scan forked
+      val bad = java.nio.file.Files.createTempDirectory("uni_label_bad").toString + "/c"
+      LayoutSidecar.stamp(new org.apache.hadoop.fs.Path(bad)
+        .getFileSystem(sc.hadoopConfiguration), bad + "/bands", 8)
+      val e = intercept[IllegalArgumentException] {
+        UnifiedFlow.decide(bad, wave1, bench, 0L, vec = vec)
+      }
+      assert(e.getMessage.contains("frozen"), e.getMessage)
+      assert(sc.getLocalProperty(Description) === "caller")
+    } finally sc.setJobDescription(null)
+  }
+
+  test("commit's forked store writes carry the caller's job tags") {
+    val sc = spark.sparkContext
+    val vec = VectorFlow.Params(minCos = 0.99, dim = Dim)
+    val dir = java.nio.file.Files.createTempDirectory("uni_tags").toString + "/c"
+    val staged = UnifiedFlow.decide(dir, wave1, benchOf, 0L, vec = vec)
+    val tag = "unified-commit-caller"
+    sc.addJobTag(tag)
+    val (_, started) = try jobs(UnifiedFlow.commit(dir, staged, vec = vec))
+      finally sc.removeJobTag(tag)
+    assert(started.nonEmpty)
+    val untagged = started.filterNot(_.tags.contains(tag))
+    assert(untagged.isEmpty, s"jobs without the caller's tag: $untagged")
+  }
+
+  test("job budget: the planted second wave's decide and commit, and the vector flow's decide alone, every job labeled") {
+    val vec = VectorFlow.Params(minCos = 0.99, dim = Dim)
+    val dir = java.nio.file.Files.createTempDirectory("uni_budget").toString + "/c"
+    val bench = benchOf
+    val w1 = UnifiedFlow.ingest(dir, wave1, bench, 0L, vec = vec)
+    val (staged, decideJobs) = jobs(UnifiedFlow.decide(dir, wave2, bench,
+      w1.cursor, vec = vec))
+    val (_, commitJobs) = jobs(UnifiedFlow.commit(dir, staged, vec = vec))
+    // the vector flow on its own store, fed the same waves' embeddings
+    val vdir = java.nio.file.Files.createTempDirectory("vec_budget").toString + "/v"
+    def vecs(wave: org.apache.spark.sql.DataFrame) =
+      wave.filter(col("embedding").isNotNull)
+        .select(col("doc_id").as("vec_id"), col("embedding"))
+    VectorFlow.ingest(vdir, vecs(wave1), 0L, vec)
+    val (_, vecJobs) = jobs(VectorFlow.decide(vdir, vecs(wave2), 0L, vec))
+    for ((call, started) <- Seq("UnifiedFlow.decide" -> decideJobs,
+        "UnifiedFlow.commit" -> commitJobs, "VectorFlow.decide" -> vecJobs))
+      assert(started.forall(_.description.isDefined),
+        s"$call ran unlabeled jobs: ${started.filter(_.description.isEmpty)}")
+    // the exact counts: a change that adds or saves a job must say so here
+    def byLabel(started: Seq[Job]) = started.groupBy(_.description.orNull)
+      .map { case (d, js) => s"$d ${js.size}" }.toSeq.sorted
+    assert((decideJobs.size, commitJobs.size, vecJobs.size) === (75, 19, 44),
+      Seq(decideJobs, commitJobs, vecJobs).map(byLabel))
   }
 }

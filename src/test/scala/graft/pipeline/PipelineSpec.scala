@@ -319,14 +319,14 @@ class PipelineSpec extends SparkTestBase with BeforeAndAfterAll {
     }
   }
 
-  test("job budget: generate runs at most relaxIterations + 3 jobs, exportFacets at most 3") {
+  test("job budget: generate runs one job per Lloyd step, exportFacets none") {
     // the counts are exact: Lloyd is one job per iteration, and the export
     // sorts and writes the local facet frame on the driver
     for (r <- Seq(1, 3)) {
       val (res, n) = jobs(IcePipeline.generate(spark, specimenCfg.copy(relaxIterations = r)))
-      assert(n === r, s"generate at $r iterations ran $n jobs")
+      assert(n.size === r, s"generate at $r iterations ran ${n.size} jobs")
       val (_, e) = jobs(IcePipeline.exportFacets(res.facets, s"$tmp/export$r/facets.txt"))
-      assert(e === 0, s"exportFacets ran $e jobs")
+      assert(e.isEmpty, s"exportFacets ran ${e.size} jobs")
     }
   }
 
@@ -336,13 +336,13 @@ class PipelineSpec extends SparkTestBase with BeforeAndAfterAll {
     for (solid <- solids) {
       val (rows, n) = jobs(IcePipeline.cut(spark, file, solid, 2.0, 18.0, rotateDeg = 15.0,
         cx = 50, cy = 50, zStrips = 4).collect())
-      assert(rows.nonEmpty && n === 0, s"cut for $solid ran $n jobs")
+      assert(rows.nonEmpty && n.isEmpty, s"cut for $solid ran ${n.size} jobs")
     }
     // id; x, y, z, s4..s15 and radius; material_id; f18..f26
     val parts = (0 until 10).map(k =>
       Row.fromSeq(Seq[Any](k.toLong) ++ Seq.fill(16)(k * 0.5) ++ Seq[Any](k % 3) ++ Seq.fill(9)(0.0)))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(parts, 3), Schemas.particle)
     val (_, w) = jobs(DeckCodec.writeParticles(df, s"$tmp/budget/particles.dat"))
-    assert(w === 3, s"writeParticles over 3 partitions ran $w jobs")
+    assert(w.size === 3, s"writeParticles over 3 partitions ran ${w.size} jobs")
   }
 }
