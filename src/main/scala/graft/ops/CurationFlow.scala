@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Incremental ([[ingest]]): the same stages per arriving batch under
   * FIRST-WINS crawl semantics against persisted state — a digest index
   * and an LSH band index (both the bucketed, crash-safe
-  * [[Dedup.bandIndexAppend]] machinery), plus a carried
+  * [[Dedup.BandIndex]] machinery), plus a carried
   * token cursor so packed sequence ids continue across batches. The
   * 100 TB shape is the band-index contract: the arriving batch
   * broadcasts, history is a bucket-PRUNED scan-local read, and per-batch
@@ -163,7 +163,7 @@ object CurationFlow {
     *
     * Scale shape: gates are stateless row maps; both history probes are
     * batch-broadcast joins against bucket-pruned index reads
-    * ([[Dedup.bandIndexPrunedStored]] / [[Dedup.bandIndexProbe]]); the
+    * ([[BucketedStore.pruned]] / [[Dedup.bandIndexProbe]]); the
     * batch-internal CC is batch-bounded; packing is the two-phase
     * prefix sum. History never shuffles. Decision inputs that read the
     * indexes are CHECKPOINTED before the kept rows are appended —
@@ -267,7 +267,7 @@ object CurationFlow {
     // verdicts byte-identical to the two-checkpoint chain.
     val exact = Phase.labeled("decide:gates-exact-ckpt") {
       val digests = all.select(col("doc_id"), md5(col("text")).as("band"))
-      val histM = Dedup.bandIndexPrunedStored(digestDir, digests, buckets)
+      val histM = Dedup.BandIndex.pruned(digestDir, digests, buckets)
         .join(broadcast(digests.withColumnRenamed("doc_id", "bid")),
           Seq("band"))
         .groupBy(col("bid").as("doc_id"))
@@ -465,133 +465,36 @@ object CurationFlow {
     // surface only after BOTH sides finished, so a caller's retry never
     // races an orphaned writer (the r16 ADVICE rule).
     Phase.all(
-      ("commit:digest", () => Dedup.bandIndexAppend(dir + "/digest",
+      ("commit:digest", () => Dedup.BandIndex.append(dir + "/digest",
         kept.select(col("doc_id"), md5(col("text")).as("band")), buckets)),
       // a decide-supplied pinned band table skips the second minhash
       // derivation; the no-bands form (the streaming REPLAY path, which
       // reconstructs kept from the recorded decisions) re-derives
-      ("commit:bands", () => Dedup.bandIndexAppend(dir + "/bands",
+      ("commit:bands", () => Dedup.BandIndex.append(dir + "/bands",
         keptBands.getOrElse(Dedup.ingestBands(kept, "doc_id", "text")),
         buckets)))
   }
 
   /** The TEXT KEEPER-META store (r17, the late-text correction's stored
     * side): one row per text-kept document under a unified corpus —
-    * (doc_id, n_chars, prio, dg, bands) — bucketed by id hash exactly
-    * like the vector store, so the late pass fetches a candidate set's
-    * election metadata (keep order + length) and eviction handles (the
-    * digest and band strings a removal needs) through a planning-time
-    * pruned read, never an index scan. Maintained by
-    * [[graft.ops.UnifiedFlow.commit]]; rows leave via [[textMetaRemove]]
-    * when a retroactive correction evicts their doc.
+    * (doc_id, n_chars, prio, dg, bands) — bucketed by id hash under
+    * `mbkt=` directories ([[BucketedStore]], like the vector store), so
+    * the late pass fetches a candidate set's election metadata (keep
+    * order + length) and eviction handles (the digest and band strings a
+    * removal needs) through a planning-time pruned read, never an index
+    * scan. Maintained by [[graft.ops.UnifiedFlow.commit]]; rows leave
+    * when a retroactive correction evicts their doc. A corpus written
+    * before r17 has no meta store and fetches nothing; the late-text
+    * pass requires it and refuses upstream.
     */
-  private[ops] val textMetaSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_chars",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("prio",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("dg",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("bands",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType)),
-    org.apache.spark.sql.types.StructField("mbkt",
-      org.apache.spark.sql.types.IntegerType)))
-
-  private def mbktOf(buckets: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(col("doc_id")), lit(buckets.toLong)).cast("int")
-
-  /** Append keeper-meta rows ((doc_id, n_chars, prio, dg, bands)). */
-  private[ops] def textMetaAppend(path: String, rows: DataFrame,
-                                  buckets: Int): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
-    Dedup.recoverBandIndex(fs, path)
-    LayoutSidecar.check(fs, path, buckets,
+  val KeeperMeta: BucketedStore = {
+    import org.apache.spark.sql.types._
+    BucketedStore(new StructType().add("doc_id", LongType)
+        .add("n_chars", LongType).add("prio", LongType).add("dg", StringType)
+        .add("bands", ArrayType(StringType)).add("mbkt", IntegerType),
+      key = "doc_id", bkt = "mbkt",
       legacyHint = "text-meta store without a layout sidecar — rewrite " +
         "the corpus dir with UnifiedFlow.commit")
-    LayoutSidecar.stampAhead(fs, path, buckets)
-    rows.select(col("doc_id"), col("n_chars"), col("prio"), col("dg"),
-        col("bands"))
-      .withColumn("mbkt", mbktOf(buckets))
-      .repartition(col("mbkt"))
-      .write.mode("append").partitionBy("mbkt").parquet(path)
-  }
-
-  /** Fetch keeper-meta rows by id — bucket-pruned like the vector
-    * store's fetch. Returns the empty shape when the store is absent
-    * (a corpus written before r17 has no meta; the late-text pass
-    * REQUIRES it and refuses upstream).
-    */
-  private[graft] def textMetaFetch(spark: org.apache.spark.sql.SparkSession,
-                                   path: String, ids: DataFrame,
-                                   buckets: Int): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Dedup.recoverBandIndex(fs, path)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(textMetaSchema.dropRight(1)))
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) empty
-    else {
-      LayoutSidecar.check(fs, path, buckets,
-        legacyHint = "text-meta store without a layout sidecar — rewrite " +
-          "the corpus dir with UnifiedFlow.commit")
-      val touched = ids.select(mbktOf(buckets).as("mbkt")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (touched.isEmpty) empty
-      else spark.read.schema(textMetaSchema).parquet(path)
-        .filter(col("mbkt").isInCollection(touched.toSeq))
-        .join(broadcast(ids), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("n_chars"),
-          coalesce(col("prio"), lit(0L)).as("prio"), col("dg"),
-          col("bands"))
-    }
-  }
-
-  /** Remove keeper-meta rows by id (staged per-bucket swap — the
-    * vector store's eviction discipline).
-    */
-  private[ops] def textMetaRemove(spark: org.apache.spark.sql.SparkSession,
-                                  path: String, ids: DataFrame,
-                                  buckets: Int): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Dedup.recoverBandIndex(fs, path)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return
-    LayoutSidecar.check(fs, path, buckets,
-      legacyHint = "text-meta store without a layout sidecar — rewrite " +
-        "the corpus dir with UnifiedFlow.commit")
-    val touched = ids.select(mbktOf(buckets).as("mbkt")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    Dedup.bucketedRemove(spark, path, textMetaSchema, "mbkt", "doc_id",
-      ids, touched.toSeq)
-  }
-
-  /** Scheduled file compaction of the keeper-meta store — the bucketed
-    * staged-swap core shared with the band indexes and the vector store
-    * ([[graft.ops.Dedup.compactSwap]]): one file per non-empty bucket,
-    * fetch-identical, a torn swap healed at every entry. Absent-safe
-    * (a text-only corpus predating the meta store compacts nothing).
-    */
-  private[graft] def textMetaCompact(spark: org.apache.spark.sql.SparkSession,
-                                     path: String,
-                                     targetParts: Int = 1): Unit = {
-    require(targetParts >= 1, s"targetParts must be >= 1, got $targetParts")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Dedup.recoverBandIndex(fs, path)
-    val stamped = LayoutSidecar.requireStamped(fs, path,
-      "text-meta store without a layout sidecar — rewrite the corpus " +
-        "dir with UnifiedFlow.commit")
-    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-      Dedup.compactSwap(spark, path, textMetaSchema, "mbkt", targetParts,
-        stamped)
   }
 
   /** The streaming cursor LEDGER: one record (batchId, startCursor,

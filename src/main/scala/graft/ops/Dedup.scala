@@ -229,6 +229,28 @@ object Dedup {
       .select(col("doc_id"), explode(array(bandKeys: _*)).as("band"))
   }
 
+  /** The persisted band index: `(doc_id, band)` rows bucketed by band
+    * hash under `bkt=` directories ([[BucketedStore]] — its layout, frozen
+    * bucket count and crash contracts). Candidate pairs only arise on
+    * EQUAL band hashes and the bucket is a pure function of the band, so a
+    * probe reads only its batch's touched buckets ([[BucketedStore.pruned]];
+    * OpsSpec pins the executed scan's partition count). The index is not
+    * text-specific: any (doc_id, band-string) derivation can live in one —
+    * [[ingestBands]] rows for text, hyperplane home signatures for
+    * embeddings ([[Similarity.embIndexIngest]]), content digests for the
+    * flows' exact-duplicate lookups. A removal passes ALL of each doc's
+    * bands (digest = one row; home signatures = `families` rows). A
+    * pre-r14 flat index is refused until `BandIndex.migrate` rewrites it.
+    */
+  val BandIndex: BucketedStore = {
+    import org.apache.spark.sql.types._
+    BucketedStore(new StructType().add("doc_id", LongType)
+        .add("band", StringType).add("bkt", IntegerType),
+      key = "band", bkt = "bkt",
+      legacyHint = "pre-r14 flat band index — rewrite it with " +
+        "Dedup.BandIndex.migrate(spark, path, buckets)")
+  }
+
   /** One full ingest step against a PERSISTED band index at `path`:
     * compute the arriving batch's bands, probe them against the stored
     * index, and append them INTO the index so the next batch sees this
@@ -244,90 +266,46 @@ object Dedup {
     *
     * Ordering safety: the stored read freezes its file listing BEFORE the
     * append (Spark's InMemoryFileIndex lists at read time), so the
-    * returned candidates never see the batch through the index side; the
-    * batch's bands are evaluated twice (once into the append, once under
-    * the returned plan) and the derivation is hash-deterministic, so both
-    * evaluations are identical — no checkpoint, nothing pinned in
-    * executor storage across ingest batches (r13 review find). The stored
-    * read passes the band schema EXPLICITLY: an all-short-docs or empty
-    * first batch appends a directory with no data files, and
-    * schema-INFERENCE over it would throw on every later ingest —
-    * permanently poisoning the index path (r13 review find; OpsSpec pins
-    * the empty-first-batch sequence).
+    * returned candidates never see the batch through the index side. The
+    * batch's bands are pinned once ([[ckptBands]]) for their three
+    * consumers. The stored read passes the band schema EXPLICITLY: an
+    * all-short-docs or empty first batch appends a directory with no data
+    * files, and schema-INFERENCE over it would throw on every later
+    * ingest (r13 review find; OpsSpec pins the empty-first-batch
+    * sequence).
     *
     * BAND DERIVATION (r14): the batch's bands come from [[ingestBands]] —
     * the grouped derivation over an id-repartitioned batch, which bounds
     * the signature aggregation's peak task under compression-skewed input
     * AND lets ReuseExchange compute the derivation once across the probe
     * plan's references (rationale and measurements on [[ingestBands]]).
-    *
-    * ON-DISK LAYOUT (r14): the index is hive-partitioned by
-    * `bkt = xxhash64(band) mod buckets` — band-hash buckets, the parquet
-    * analog of `bucketBy` without a metastore. The probe prunes its read
-    * to the batch's touched buckets at PLANNING time (static partition
-    * filter), so per-batch probe I/O is proportional to the touched slice
-    * of the index, not the whole corpus history. `buckets` is part of the
-    * index contract (frozen at creation, like the banding parameters);
-    * per-batch file count rises to ≤ buckets small files, which is what
-    * [[bandIndexCompact]] exists to fold back to one file per bucket.
-    *
-    * Writers are SINGLE-WRITER: see the contract on [[bandIndexCompact]] —
-    * ingest and compact on one index must be serialized by the caller.
+    * `buckets` is part of the index contract, like the banding
+    * parameters; per-batch appends add up to `buckets` small files, which
+    * `BandIndex.compact` folds back to one file per bucket.
     */
   def bandIndexIngest(path: String, arrivals: DataFrame,
                       idCol: String, textCol: String,
                       numBands: Int = 2, rowsPerBand: Int = 2,
                       shingleN: Int = 3, buckets: Int = 16,
                       maxBucket: Int = Int.MaxValue): BoundedCandidates = {
-    val spark = arrivals.sparkSession
     val newBands = ckptBands(ingestBands(arrivals, idCol, textCol,
-      numBands, rowsPerBand, shingleN).withColumn("bkt", bktOf(buckets)))
+      numBands, rowsPerBand, shingleN))
     val candidates = symmetricCandidates(
-      prunedStored(spark, path, newBands, buckets),
-      newBands.select("doc_id", "band"), maxBucket)
-    stampLayout(spark, path, buckets) // BEFORE the append: see stampAhead
-    appendBands(newBands, path)
+      BandIndex.pruned(path, newBands, buckets), newBands, maxBucket)
+    BandIndex.append(path, newBands, buckets)
     candidates
-  }
-
-  /** Write-only [[bandIndexIngest]]: append a PRECOMPUTED `(doc_id,
-    * band)` table into the index WITHOUT probing — the bulk-load /
-    * bootstrap shape, and the commit half of a decide-then-commit flow.
-    * The index is not text-specific: any (doc_id, band-string)
-    * derivation can live in one — [[ingestBands]] rows for text,
-    * hyperplane home
-    * signatures for embeddings ([[Similarity.embIndexIngest]]). One
-    * bucketed write; no touched-bucket collect, no candidate plan.
-    */
-  def bandIndexAppend(path: String, bands: DataFrame,
-                      buckets: Int = 16): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val spark = bands.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverBandIndex(fs, path)
-    bandLayout(fs, path, buckets)
-    LayoutSidecar.stampAhead(fs, path, buckets)
-    appendBands(bands.select(col("doc_id"), col("band"))
-      .withColumn("bkt", bktOf(buckets)), path)
   }
 
   /** Read-only [[bandIndexIngest]]: probe `arrivals` against the stored
     * index WITHOUT appending them — serving-side duplicate lookup and the
     * decide half of a decide-then-commit flow. Same pruned read, same
     * candidate contract and cap. Also RETURNS the batch's checkpointed
-    * band table `(doc_id, band, bkt)` (r15 diet): a flow that probes in
+    * band table `(doc_id, band)` (r15 diet): a flow that probes in
     * `decide` and appends the kept slice in a later `commit` hands it to
-    * [[bandIndexAppend]] instead of deriving the minhash bands twice —
+    * `BandIndex.append` instead of deriving the minhash bands twice —
     * the heaviest per-doc CPU in the whole chain. Under a finite cap the
     * overflow report is checkpointed too: it reads the index, so it must
     * be pinned before that commit appends.
-    *
-    * Bucketed probe (VERDICT r13 #1): candidate pairs only arise on EQUAL
-    * band hashes, and bkt is a pure function of the band, so the stored
-    * side is pruned to the batch's touched buckets BEFORE any join
-    * ([[prunedStored]]). OpsSpec pins partitionCount == touched-bucket
-    * count on the executed scan.
     */
   def bandIndexProbe(path: String, arrivals: DataFrame,
                      idCol: String, textCol: String,
@@ -335,94 +313,10 @@ object Dedup {
                      shingleN: Int = 3, buckets: Int = 16,
                      maxBucket: Int = Int.MaxValue)
       : (BoundedCandidates, DataFrame) = {
-    val spark = arrivals.sparkSession
     val newBands = ckptBands(ingestBands(arrivals, idCol, textCol,
-      numBands, rowsPerBand, shingleN).withColumn("bkt", bktOf(buckets)))
-    (symmetricCandidates(prunedStored(spark, path, newBands, buckets),
-      newBands.select("doc_id", "band"), maxBucket, pinOverflow = true),
-      newBands)
-  }
-
-  /** The pruned stored-index read: heal, collect the batch's touched
-    * buckets (<= buckets ints — bounded like the broadcast batch itself)
-    * and push them as a static `bkt IN (...)` partition filter —
-    * planning-time directory pruning, so a probe against a 100 TB index
-    * lists and reads only the band buckets this batch can possibly
-    * collide in (same discipline as IvfIndex.save's cell-partitioned
-    * inverted file). Returns a (doc_id, band) frame.
-    */
-  private def prunedStored(spark: org.apache.spark.sql.SparkSession,
-                           path: String, newBands: DataFrame,
-                           buckets: Int): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverBandIndex(fs, path) // heal a crashed compact before reading
-    bandLayout(fs, path, buckets)
-    val touched = newBands.select("bkt").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) // all-short batch: zero bands, zero candidates
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bandSchema)
-    else if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(bandSchemaBkt).parquet(path)
-        .filter(col("bkt").isInCollection(touched.toSeq))
-        .select("doc_id", "band")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bandSchema)
-  }
-
-  /** The band-bucket partition key: a fixed hash of the band string into
-    * `buckets` directories. Part of the index contract like the banding
-    * parameters themselves — every ingest/compact on one index must use
-    * the same bucket count, and that count is PERSISTED in the layout
-    * sidecar ([[LayoutSidecar]]) so a mismatched caller fails loudly
-    * instead of silently pruning away colliding buckets (r14 review).
-    */
-  private def bktOf(buckets: Int): Column =
-    pmod(xxhash64(col("band")), lit(buckets.toLong)).cast("int")
-
-  /** Validate-or-stamp the index's bucket count; throws on a caller
-    * mismatch AND on a pre-r14 flat-layout index (whose rows the bucketed
-    * reader would silently drop — migrate with [[bandIndexMigrate]]).
-    */
-  private def stampLayout(spark: org.apache.spark.sql.SparkSession,
-                          path: String, buckets: Int): Unit =
-    LayoutSidecar.stampAhead(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), path, buckets)
-
-  private def bandLayout(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                         buckets: Int): Unit =
-    LayoutSidecar.check(fs, path, buckets,
-      legacyHint = "pre-r14 flat band index — rewrite it with " +
-        "Dedup.bandIndexMigrate(spark, path, buckets) before probing")
-
-  /** One-time migration of a pre-r14 FLAT band index into the bucketed
-    * layout: same staged swap as [[bandIndexCompact]] (crash-recoverable
-    * via [[recoverBandIndex]] at every entry point), rewriting the rows
-    * under `bkt=` directories and stamping the layout sidecar. Without
-    * this, a flat index probed by the bucketed reader returns an EMPTY
-    * stored side (the missing bkt column reads null and the partition
-    * filter drops every row) — silent candidate loss (r14 review).
-    */
-  def bandIndexMigrate(spark: org.apache.spark.sql.SparkSession,
-                       path: String, buckets: Int = 16): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverBandIndex(fs, path)
-    if (fs.exists(p)) {
-      val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-      spark.read.schema(bandSchema).parquet(path)
-        .withColumn("bkt", bktOf(buckets))
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt").parquet(tmp.toString)
-      LayoutSidecar.stamp(fs, tmp.toString, buckets)
-      val aside = new org.apache.hadoop.fs.Path(path + ".aside")
-      renameOrThrow(fs, p, aside)
-      renameOrThrow(fs, tmp, p)
-      fs.delete(aside, true)
-    }
+      numBands, rowsPerBand, shingleN))
+    (symmetricCandidates(BandIndex.pruned(path, newBands, buckets),
+      newBands, maxBucket, pinOverflow = true), newBands)
   }
 
   /** The ingest path's band derivation: the grouped [[lshBandTable]] over
@@ -444,7 +338,7 @@ object Dedup {
     *     measured 2.3× the wall here — recomputed per reference).
     *
     * The shuffled payload is the batch's raw text — bounded by the
-    * ingest-batch contract, never the corpus. [[bandIndexAppend]] takes
+    * ingest-batch contract, never the corpus. `BandIndex.append` takes
     * these rows to bulk-load a text corpus without probing.
     */
   def ingestBands(arrivals: DataFrame, idCol: String, textCol: String,
@@ -470,224 +364,6 @@ object Dedup {
   private def ckptBands(nb: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.Bridge.dropCheckpointConstraints(
       nb.localCheckpoint())
-
-  /** Append a batch's bands into the bucketed index with ONE file per
-    * touched bucket: a partitionBy write from N shuffle partitions
-    * otherwise emits up to N files per bucket per ingest (measured 2,048
-    * files after one sf0.1 ingest — the many-small-files degradation the
-    * compactor exists to fix, created in a single batch). The repartition
-    * is one exchange of the batch's band rows — batch-bounded.
-    */
-  private def appendBands(newBands: DataFrame, path: String): Unit =
-    newBands.repartition(col("bkt"))
-      .write.mode("append").partitionBy("bkt").parquet(path)
-
-  /** Compact the band index: [[bandIndexIngest]] appends one small
-    * parquet file per batch, and a long ingest degrades the probe scan
-    * into a many-small-files read — the same lifecycle problem
-    * [[IvfIndex.compact]] solves for the inverted file. Rewrites the
-    * index into `targetParts` files via a STAGED SWAP:
-    *
-    *   1. write the compacted copy to `<path>.tmp` (idempotent overwrite);
-    *   2. rename `<path>` → `<path>.aside`;
-    *   3. rename `<path>.tmp` → `<path>`;
-    *   4. delete the aside.
-    *
-    * A crash at any point is recoverable and NEVER loses the index:
-    * after 1 the live index is untouched (stale tmp is overwritten next
-    * time); after 2 the complete tmp plus the aside exist — recovery
-    * promotes the tmp; after 3 only the aside lingers — recovery deletes
-    * it. [[recoverBandIndex]] runs the recovery on entry to BOTH compact
-    * and ingest, so an ingest after a crashed compact heals first
-    * (OpsSpec pins the after-2 crash state end to end).
-    *
-    * SINGLE-WRITER CONTRACT (ADVICE r13): the index admits ONE writer at a
-    * time — ingest and compact must be serialized by the caller (the same
-    * contract every log-structured index write path carries; a streaming
-    * ingest's natural home is the single-threaded `foreachBatch` loop with
-    * compaction between batches). A concurrent ingest's append between the
-    * compacted snapshot read and the swap would be discarded with the
-    * aside, and a concurrent process's [[recoverBandIndex]] would delete
-    * this compactor's in-flight tmp. Readers need no coordination: probes
-    * freeze their file listing at read time and both swap renames are
-    * atomic directory moves.
-    */
-  def bandIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                       path: String, targetParts: Int = 1): Unit = {
-    require(targetParts >= 1, s"targetParts must be >= 1, got $targetParts")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverBandIndex(fs, path)
-    val stamped = LayoutSidecar.requireStamped(fs, path,
-      "pre-r14 flat band index — rewrite it with Dedup.bandIndexMigrate " +
-        "before compacting")
-    if (fs.exists(p))
-      compactSwap(spark, path, bandSchemaBkt, "bkt", targetParts, stamped)
-  }
-
-  /** The staged-swap compaction core, schema-generic (r15): shared by the
-    * band index and [[VectorFlow]]'s kept-vector store — any
-    * hive-partitioned bucket layout with a frozen sidecar count. The
-    * crash contract is [[recoverBandIndex]]'s: tmp written fully, live
-    * renamed aside, tmp promoted, aside dropped.
-    */
-  private[graft] def compactSwap(spark: org.apache.spark.sql.SparkSession,
-                                 path: String,
-                                 schema: org.apache.spark.sql.types.StructType,
-                                 bktCol: String, targetParts: Int,
-                                 stamped: Option[Int]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val aside = new org.apache.hadoop.fs.Path(path + ".aside")
-    // repartition BY the bucket column: each bucket lands wholly in one
-    // task, so the partitionBy write emits exactly one file per non-empty
-    // bucket — the ideal compacted state for the pruned probe
-    // (targetParts only bounds the shuffle width)
-    spark.read.schema(schema).parquet(path)
-      .repartition(targetParts, col(bktCol))
-      .write.mode("overwrite").partitionBy(bktCol).parquet(tmp.toString)
-    stamped.foreach(b => LayoutSidecar.stamp(fs, tmp.toString, b))
-    renameOrThrow(fs, p, aside)
-    renameOrThrow(fs, tmp, p)
-    fs.delete(aside, true)
-  }
-
-  /** `FileSystem.rename` signals failure by returning FALSE on several
-    * implementations (HDFS semantics), not by throwing — an unchecked
-    * rename in the staged swap would silently proceed to the aside delete
-    * with the index left in the aside state (VERDICT r13 #2). Throwing
-    * converts a failed swap step into a crash at a recoverable point: the
-    * tmp copy is complete, so the next [[recoverBandIndex]] heals.
-    */
-  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-                            src: org.apache.hadoop.fs.Path,
-                            dst: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(
-        s"band index swap: rename $src -> $dst returned false")
-
-  /** The (doc_id, band) index schema — explicit so reads never run
-    * schema inference (a data-file-less directory would fail it).
-    */
-  private[graft] val bandSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.StringType)))
-
-  /** [[bandSchema]] plus the `bkt` partition column of the bucketed
-    * on-disk layout ([[bandIndexIngest]]). Partition columns resolve by
-    * name against the directory structure when passed in an explicit
-    * read schema.
-    */
-  private[graft] val bandSchemaBkt = org.apache.spark.sql.types.StructType(
-    bandSchema.fields :+ org.apache.spark.sql.types.StructField("bkt",
-      org.apache.spark.sql.types.IntegerType))
-
-  /** Heal a band index left mid-[[bandIndexCompact]] by a crash: promote
-    * a complete tmp when the live dir is gone, then clear leftovers.
-    * Also heals a torn [[bucketedRemove]] (r16): a bucket whose live dir
-    * is missing gets its aside restored — the removal UNDOES, and the
-    * caller's replay contract re-runs it (idempotent: removing absent
-    * rows is a no-op); leftover stage dirs are dropped.
-    */
-  private[graft] def recoverBandIndex(fs: org.apache.hadoop.fs.FileSystem,
-                                      path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val aside = new org.apache.hadoop.fs.Path(path + ".aside")
-    if (!fs.exists(p) && fs.exists(tmp)) renameOrThrow(fs, tmp, p)
-    if (fs.exists(aside)) fs.delete(aside, true)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    val rmAside = new org.apache.hadoop.fs.Path(path, RmAside)
-    if (fs.exists(rmAside)) {
-      fs.listStatus(rmAside).foreach { st =>
-        val live = new org.apache.hadoop.fs.Path(p, st.getPath.getName)
-        if (fs.exists(live)) fs.delete(st.getPath, true)
-        else renameOrThrow(fs, st.getPath, live)
-      }
-      fs.delete(rmAside, true)
-    }
-    val rmTmp = new org.apache.hadoop.fs.Path(path, RmTmp)
-    if (fs.exists(rmTmp)) fs.delete(rmTmp, true)
-  }
-
-  // removal stage dirs live INSIDE the index (dot-prefixed — hidden from
-  // parquet listings), so the whole-dir compact swap carries them along
-  private val RmTmp = ".rm_tmp"
-  private val RmAside = ".rm_aside"
-
-  /** Remove every row of `ids` from the TOUCHED buckets of a bucketed
-    * index — the surgical DELETE the retroactive late-embedding
-    * correction needs ([[VectorFlow]]'s eviction path): only the buckets
-    * the removed docs' keys hash to are read and rewritten, never the
-    * index (the probe side's pruning discipline applied to mutation).
-    * Schema-generic like [[compactSwap]].
-    *
-    * Crash contract, per touched bucket: the replacement is written
-    * FULLY under `.rm_tmp/` first, then live→`.rm_aside/`, tmp→live,
-    * aside dropped. [[recoverBandIndex]] (called at every index entry
-    * point) restores the aside of any bucket left live-less — a torn
-    * removal UNDOES, never loses surviving rows, and the caller's
-    * replay re-runs it (removing already-removed ids is a no-op). A
-    * bucket emptied entirely by the removal has no tmp dir and simply
-    * loses its live dir (explicit-schema reads tolerate missing
-    * buckets). Single-writer contract like every index mutation here.
-    */
-  private[graft] def bucketedRemove(spark: org.apache.spark.sql.SparkSession,
-                                    path: String,
-                                    schema: org.apache.spark.sql.types.StructType,
-                                    bktCol: String, idCol: String,
-                                    ids: DataFrame,
-                                    touched: Seq[Int]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (touched.isEmpty || !fs.exists(p)) return
-    val remain = spark.read.schema(schema).parquet(path)
-      .filter(col(bktCol).isInCollection(touched))
-      .join(broadcast(ids.select(col(idCol)).distinct()), Seq(idCol),
-        "left_anti")
-    val tmpRoot = new org.apache.hadoop.fs.Path(p, RmTmp)
-    val asideRoot = new org.apache.hadoop.fs.Path(p, RmAside)
-    remain.repartition(col(bktCol))
-      .write.mode("overwrite").partitionBy(bktCol)
-      .parquet(tmpRoot.toString)
-    fs.mkdirs(asideRoot)
-    touched.foreach { b =>
-      val liveB = new org.apache.hadoop.fs.Path(p, s"$bktCol=$b")
-      val asideB = new org.apache.hadoop.fs.Path(asideRoot, s"$bktCol=$b")
-      val tmpB = new org.apache.hadoop.fs.Path(tmpRoot, s"$bktCol=$b")
-      if (fs.exists(liveB)) renameOrThrow(fs, liveB, asideB)
-      if (fs.exists(tmpB)) renameOrThrow(fs, tmpB, liveB)
-      if (fs.exists(asideB)) fs.delete(asideB, true)
-    }
-    fs.delete(asideRoot, true)
-    fs.delete(tmpRoot, true)
-  }
-
-  /** [[bucketedRemove]] over a band index: drop every row of the
-    * removal docs from the buckets their band strings hash to. The
-    * caller supplies ALL of each doc's bands (digest = one row; home
-    * signatures = `families` rows) — they define the touched-bucket
-    * set, so an incomplete band list would leave orphan rows in
-    * untouched buckets.
-    */
-  def bandIndexRemove(path: String, removals: DataFrame,
-                      buckets: Int = 16): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val spark = removals.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverBandIndex(fs, path)
-    bandLayout(fs, path, buckets)
-    val touched = removals.select(col("band"))
-      .withColumn("bkt", bktOf(buckets))
-      .select("bkt").distinct().collect().map(_.getInt(0)).sorted
-    bucketedRemove(spark, path, bandSchemaBkt, "bkt", "doc_id",
-      removals.select("doc_id"), touched.toSeq)
-  }
 
   /** [[lshIncrementalCandidatesBounded]]'s result: the candidate pairs
     * plus a per-hot-band accounting of what the cap suppressed —
@@ -790,20 +466,6 @@ object Dedup {
     val overflow = hot.select(col("band"), col("occupancy"), col("n_new"),
       emitted.as("emitted"), (touching - emitted).as("suppressed"))
     BoundedCandidates(pairs, overflow)
-  }
-
-  /** The bucket-PRUNED stored read for precomputed PROBE bands: heals,
-    * validates the layout, lists only the probe's touched buckets.
-    * Returns (doc_id, band) — the caller owns the candidate join (the
-    * embedding path's [[multiProbeCandidates]], the flows' digest
-    * lookups).
-    */
-  def bandIndexPrunedStored(path: String, probeBands: DataFrame,
-                            buckets: Int = 16): DataFrame = {
-    val spark = probeBands.sparkSession
-    prunedStored(spark, path,
-      probeBands.select(col("doc_id"), col("band"))
-        .withColumn("bkt", bktOf(buckets)), buckets)
   }
 
   /** The SYMMETRIC candidate route (text bands: the batch's member rows

@@ -941,9 +941,7 @@ object IvfIndex {
                      maxTombstoneFrac: Double = 0.2,
                      lane: String = ""): MaintainWatch = {
     require(maxCellRows >= 1, s"maxCellRows must be >= 1, got $maxCellRows")
-    recoverIndexSwap(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StagedSwap.heal(spark, path)
     val centroids = spark.read.parquet(s"$path/centroids")
     val assigned = ckpt(assignBy(route)(batch, centroids))
     val occPath = s"$path/occupancy"
@@ -1195,7 +1193,7 @@ object IvfIndex {
   def refineInPlace(spark: SparkSession, path: String, maxCellRows: Long,
                     splitInto: Int = 2, iters: Int = 2,
                     seed: Long = 43L): Unit = {
-    recoverIndexSwap(spark, path)
+    StagedSwap.heal(spark, path)
     val refined = refine(load(spark, path), maxCellRows, splitInto, iters,
       seed)
     swapModelInPlace(spark, path, refined)
@@ -1216,7 +1214,7 @@ object IvfIndex {
     * occupancy re-seeds to the post-purge physical counts.
     */
   def purgeInPlace(spark: SparkSession, path: String): Unit = {
-    recoverIndexSwap(spark, path)
+    StagedSwap.heal(spark, path)
     swapModelInPlace(spark, path, load(spark, path))
   }
 
@@ -1224,14 +1222,13 @@ object IvfIndex {
     * [[purgeInPlace]]: save `model` to a tmp sibling in the live
     * index's own encoding/layout, re-seed occupancy from its
     * assignments, carry the maintain ledger and drift baseline, then
-    * aside→promote ([[recoverIndexSwap]] heals a tear at every entry).
+    * promote through the [[StagedSwap]] (healed at every entry).
     */
   private def swapModelInPlace(spark: SparkSession, path: String,
                                model: Model): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = path + ".tmp"
-    val aside = path + ".aside"
+    val tmp = StagedSwap.tmp(path)
     val sq = quantParams(spark, path)
     val pq = pqParams(spark, path)
     val cellBuckets = layoutCellBuckets(spark, path)
@@ -1257,14 +1254,7 @@ object IvfIndex {
       FsUtil.copyTree(fs, mfile,
         new org.apache.hadoop.fs.Path(tmp, "_graft_maintain.json"),
         spark.sparkContext.hadoopConfiguration)
-    def mv(a: String, b: String): Unit =
-      if (!fs.rename(new org.apache.hadoop.fs.Path(a),
-          new org.apache.hadoop.fs.Path(b)))
-        throw new java.io.IOException(s"index swap rename failed: $a -> $b")
-    fs.delete(new org.apache.hadoop.fs.Path(aside), true)
-    mv(path, aside)
-    mv(tmp, path)
-    fs.delete(new org.apache.hadoop.fs.Path(aside), true)
+    StagedSwap.promote(fs, path)
   }
 
   /** Logical DELETE for a maintained serving index (r17 — the corpus
@@ -1290,7 +1280,7 @@ object IvfIndex {
     */
   def maintainRemove(spark: SparkSession, path: String,
                      ids: DataFrame): Unit = {
-    recoverIndexSwap(spark, path)
+    StagedSwap.heal(spark, path)
     ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
       .repartition(1)
       .write.mode("append").parquet(s"$path/tombstones")
@@ -1386,9 +1376,7 @@ object IvfIndex {
                      source: Option[DataFrame] = None, nlist: Int = -1,
                      iters: Int = 3, seed: Long = 44L,
                      route: AssignRoute = FlatAssign): Unit = {
-    recoverIndexSwap(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StagedSwap.heal(spark, path)
     val model = load(spark, path)
     val decoded = model.assignments
       .select(col("vec_id"), col("embedding").as("__dec"))
@@ -1405,8 +1393,7 @@ object IvfIndex {
     })
     val n = if (nlist > 0) nlist else model.centroids.count().toInt
     val rebuilt = build(emb, n, iters, seed, route = route)
-    val tmp = path + ".tmp"
-    val aside = path + ".aside"
+    val tmp = StagedSwap.tmp(path)
     val cellBuckets = layoutCellBuckets(spark, path)
     (quantParams(spark, path), pqParams(spark, path)) match {
       case (Some(_), _) =>
@@ -1427,14 +1414,7 @@ object IvfIndex {
       .agg(count(lit(1)).as("cnt"))
       .write.mode("overwrite").parquet(s"$tmp/occupancy")
     carryMaintainLedgers(spark, path, tmp)
-    def mv(a: String, b: String): Unit =
-      if (!fs.rename(new org.apache.hadoop.fs.Path(a),
-          new org.apache.hadoop.fs.Path(b)))
-        throw new java.io.IOException(s"retrain swap rename failed: $a -> $b")
-    fs.delete(new org.apache.hadoop.fs.Path(aside), true)
-    mv(path, aside)
-    mv(tmp, path)
-    fs.delete(new org.apache.hadoop.fs.Path(aside), true)
+    StagedSwap.promote(fs, path)
     org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(emb)
   }
 
@@ -1682,36 +1662,12 @@ object IvfIndex {
     (done, before, after)
   }
 
-  /** Load a [[save]]d index. The partition column comes back via directory
+  /** Load a [[save]]d index, healing a torn in-place rebuild first
+    * ([[StagedSwap.heal]]). The partition column comes back via directory
     * inference — restore its long type so search joins stay key-compatible.
     */
-  /** Heal an index left mid-[[refineInPlace]] swap: the staging copy is
-    * only renamed in AFTER it is complete, so a live-less path with a
-    * complete tmp promotes it; any aside left behind is the pre-swap
-    * state and drops once a live dir exists. Called from [[load]] and
-    * [[maintainAppend]] — every maintenance entry point.
-    */
-  private def recoverIndexSwap(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val aside = new org.apache.hadoop.fs.Path(path + ".aside")
-    if (!fs.exists(p) && fs.exists(tmp) &&
-        !fs.rename(tmp, p))
-      throw new java.io.IOException(s"index swap recovery failed: $tmp -> $p")
-    if (fs.exists(p)) {
-      if (fs.exists(aside)) fs.delete(aside, true)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-    } else if (fs.exists(aside)) {
-      // tmp was incomplete or missing: restore the pre-swap state
-      if (!fs.rename(aside, p))
-        throw new java.io.IOException(
-          s"index swap recovery failed: $aside -> $p")
-    }
-  }
-
   def load(spark: SparkSession, path: String): Model = {
-    recoverIndexSwap(spark, path)
+    StagedSwap.heal(spark, path)
     val asg = spark.read.parquet(s"$path/assignments")
       .drop("cbkt") // bucketed layout's partition column; no-op otherwise
       .withColumn("cell", col("cell").cast("long"))

@@ -270,7 +270,7 @@ object Similarity {
 
   /** The (doc_id, band) HOME-bucket table of an embedding frame — the
     * embedding analog of [[Dedup.lshBandTable]], sharing the same
-    * persisted-index machinery ([[Dedup.bandIndexAppend]]).
+    * persisted-index machinery ([[Dedup.BandIndex]]).
     * One row per (vector, family); band = that family's `bits`-bit
     * hyperplane signature as a string. `families > 1` is the
     * OR-amplification dial (the text index's numBands shape): a pair is
@@ -380,9 +380,9 @@ object Similarity {
     val (home, probes) =
       signedBatch(arrivals, idCol, embCol, bits, seed, dim, families)
     val candidates = Dedup.multiProbeCandidates(
-      Dedup.bandIndexPrunedStored(path, probes, buckets), home, probes,
+      Dedup.BandIndex.pruned(path, probes, buckets), home, probes,
       maxBucket)
-    Dedup.bandIndexAppend(path, home, buckets)
+    Dedup.BandIndex.append(path, home, buckets)
     candidates
   }
 
@@ -399,7 +399,7 @@ object Similarity {
                     buckets: Int = 16,
                     maxBucket: Int = Int.MaxValue): Dedup.BoundedCandidates =
     Dedup.multiProbeCandidates(
-      Dedup.bandIndexPrunedStored(path, probes, buckets), home, probes,
+      Dedup.BandIndex.pruned(path, probes, buckets), home, probes,
       maxBucket, pinOverflow = true)
 
   /** Keeper rule for [[semanticDedup]]: which member of a duplicate

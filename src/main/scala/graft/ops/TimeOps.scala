@@ -189,51 +189,20 @@ object TimeOps {
     untouched.unionByName(recomputed)
   }
 
-  /** The key-bucketed archive layout [[stateRunsMergeBucketed]] reads:
-    * hive-partitioned by `ubkt = xxhash64(user_id) mod buckets` — the
-    * same metastore-free bucketing the band index uses. Only the merge's
-    * four contract columns are archived; the schema is explicit so reads
-    * never run inference.
+  /** The key-bucketed archive [[stateRunsMergeBucketed]] reads: the
+    * merge's four contract columns, bucketed by `user_id` hash under
+    * `ubkt=` directories ([[BucketedStore]]), the bucket count frozen at
+    * creation. Events enter through `Archive.append`.
     */
-  private[graft] val archiveSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("user_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("ts_ms",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("event_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("event_type",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ubkt",
-      org.apache.spark.sql.types.IntegerType)))
-
-  /** Append events into a key-bucketed archive at `path` (one file per
-    * touched bucket per append). `buckets` is frozen at archive creation,
-    * like the band index's.
-    */
-  def writeKeyBucketedArchive(events: DataFrame, path: String,
-                              buckets: Int = 64): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(events.sparkSession.sparkContext.hadoopConfiguration)
-    archiveLayout(fs, path, buckets)
-    LayoutSidecar.stampAhead(fs, path, buckets)
-    events.select(col("user_id"), col("ts_ms"), col("event_id"), col("event_type"))
-      .withColumn("ubkt",
-        pmod(xxhash64(col("user_id")), lit(buckets.toLong)).cast("int"))
-      .repartition(col("ubkt"))
-      .write.mode("append").partitionBy("ubkt").parquet(path)
-  }
-
-  /** The archive's frozen bucket count, stamped at creation and validated
-    * on every write/read (r14 review: a modulus mismatch would silently
-    * prune directories that DO hold affected-key history).
-    */
-  private def archiveLayout(fs: org.apache.hadoop.fs.FileSystem,
-                            path: String, buckets: Int): Unit =
-    LayoutSidecar.check(fs, path, buckets,
+  val Archive: BucketedStore = {
+    import org.apache.spark.sql.types._
+    BucketedStore(new StructType().add("user_id", LongType)
+        .add("ts_ms", LongType).add("event_id", LongType)
+        .add("event_type", StringType).add("ubkt", IntegerType),
+      key = "user_id", bkt = "ubkt",
       legacyHint = "archive written without a layout sidecar — rewrite it " +
-        "with TimeOps.writeKeyBucketedArchive into a fresh path")
+        "with TimeOps.Archive.append into a fresh path")
+  }
 
   /** [[stateRunsMerge]] against a key-bucketed archive — the pruned-read
     * form of step 3 that the flat merge's scaladoc promises (VERDICT r13
@@ -253,13 +222,10 @@ object TimeOps {
                              lateEvents: DataFrame,
                              buckets: Int = 64): DataFrame = {
     val spark = lateEvents.sparkSession
-    archiveLayout(new org.apache.hadoop.fs.Path(archivePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      archivePath, buckets)
+    Archive.open(spark, archivePath, buckets)
     val cols = Seq("user_id", "ts_ms", "event_id", "event_type").map(col)
     val touched = lateEvents
-      .select(col("user_id"),
-        pmod(xxhash64(col("user_id")), lit(buckets.toLong)).cast("int").as("ubkt"))
+      .select(col("user_id"), Archive.bucketOf(buckets).as("ubkt"))
       .distinct().collect()
     if (touched.isEmpty) return existingRuns // empty correction batch
     val keys = touched.map(_.getLong(0)).toIndexedSeq
@@ -267,9 +233,8 @@ object TimeOps {
     val affected = lateEvents.select(col("user_id")).distinct()
     val untouched = existingRuns
       .join(broadcast(affected), Seq("user_id"), "left_anti")
-    val archive = spark.read.schema(archiveSchema).parquet(archivePath)
-      .filter(col("ubkt").isInCollection(bkts) &&
-        col("user_id").isInCollection(keys))
+    val archive = Archive.scan(spark, archivePath, bkts)
+      .filter(col("user_id").isInCollection(keys))
       .select(cols: _*)
     val recomputed = stateRuns(archive.unionByName(lateEvents.select(cols: _*)))
     untouched.unionByName(recomputed)

@@ -341,7 +341,7 @@ object UnifiedFlow {
     // pinned BEFORE any commit mutates the indexes
     val digests = afterExB.select(col("doc_id"), md5(col("text")).as("band"))
     val exHistPairs = Phase.labeled("ltext:ltexhist-ckpt") {
-      ckpt(Dedup.bandIndexPrunedStored(dir + "/digest", digests, buckets)
+      ckpt(Dedup.BandIndex.pruned(dir + "/digest", digests, buckets)
         .join(broadcast(digests.withColumnRenamed("doc_id", "l_id")),
           Seq("band"))
         .select(col("l_id"), col("doc_id").as("s_id")).distinct())
@@ -374,10 +374,11 @@ object UnifiedFlow {
 
     // stored-side election metadata + eviction handles, one pruned fetch
     val meta = Phase.labeled("ltext:ltmeta-ckpt") {
-      ckpt(CurationFlow.textMetaFetch(spark, dir + "/textmeta",
+      ckpt(CurationFlow.KeeperMeta.fetch(dir + "/textmeta",
         exHistPairs.select(col("s_id").as("doc_id"))
           .unionByName(nearHist.select(col("s_id").as("doc_id")))
-          .distinct(), buckets))
+          .distinct(), buckets)
+        .withColumn("prio", coalesce(col("prio"), lit(0L))))
     }
     val sMeta = meta.select(col("doc_id").as("s_id"),
       col("prio").as("s_prio"), col("n_chars").as("s_nch"))
@@ -574,7 +575,6 @@ object UnifiedFlow {
                                          evictVecIds: DataFrame,
                                          buckets: Int,
                                          vec: VectorFlow.Params): Unit = {
-    val spark = attach.sparkSession
     // evictions first, appends second (an attach append must never be
     // visible while its beaten rival still serves). WITHIN each phase
     // the non-meta mutations touch disjoint dirs — digest/, bands/, and
@@ -585,38 +585,46 @@ object UnifiedFlow {
     // AFTER its phase's barrier (the store-LAST replay proof above).
     // pin the text-eviction rows once (r21): the emptiness probe and
     // both band removals each re-ran the meta semi-join otherwise
-    val evictTextP = ckpt(evictText)
-    val anyEvict = !evictTextP.isEmpty
-    val evictVecs = VectorFlow.vectorStoreFetch(spark,
-      dir + "/vec/vectors",
-      evictVecIds.select(col("doc_id").as("vec_id")), vec.buckets)
+    val (evictTextP, anyEvict) = Phase.labeled("ltcommit:evict-ckpt") {
+      val p = ckpt(evictText)
+      (p, !p.isEmpty)
+    }
+    val evictVecs = Phase.labeled("ltcommit:evict-vec-fetch") {
+      VectorFlow.KeptVectors.fetch(dir + "/vec/vectors",
+        evictVecIds.select(col("doc_id").as("vec_id")), vec.buckets)
+    }
     Phase.all(
-      ("ltcommit:evict-digest", () => if (anyEvict) Dedup.bandIndexRemove(
+      ("ltcommit:evict-digest", () => if (anyEvict) Dedup.BandIndex.remove(
         dir + "/digest",
         evictTextP.select(col("doc_id"), col("dg").as("band")),
         buckets)),
-      ("ltcommit:evict-bands", () => if (anyEvict) Dedup.bandIndexRemove(
+      ("ltcommit:evict-bands", () => if (anyEvict) Dedup.BandIndex.remove(
         dir + "/bands",
         evictTextP.select(col("doc_id"),
           explode(col("bands")).as("band")), buckets)),
       ("ltcommit:evict-vecs",
         () => VectorFlow.evictStored(dir + "/vec", evictVecs, vec)))
-    if (anyEvict) CurationFlow.textMetaRemove(spark,
-      dir + "/textmeta", evictTextP.select("doc_id"), buckets)
-    val bands = attachBands.getOrElse(
-      ckpt(Dedup.lshBandTable(attach, "doc_id", "text")))
+    if (anyEvict) Phase.labeled("ltcommit:evict-meta") {
+      CurationFlow.KeeperMeta.remove(dir + "/textmeta",
+        evictTextP.select("doc_id"), buckets)
+    }
+    val bands = attachBands.getOrElse(Phase.labeled("ltcommit:bands-ckpt") {
+      ckpt(Dedup.lshBandTable(attach, "doc_id", "text"))
+    })
     CurationFlow.commit(dir,
       attach.select(col("doc_id"), col("text"), col("n_chars"),
         col("n_tok")), buckets, Some(bands))
-    CurationFlow.textMetaAppend(dir + "/textmeta",
-      attach
-        .withColumn("dg", md5(col("text")))
-        .join(bands.groupBy("doc_id")
-          .agg(array_sort(collect_list(col("band"))).as("bands")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_chars"), col("prio"), col("dg"),
-          col("bands")),
-      buckets)
+    Phase.labeled("ltcommit:meta") {
+      CurationFlow.KeeperMeta.append(dir + "/textmeta",
+        attach
+          .withColumn("dg", md5(col("text")))
+          .join(bands.groupBy("doc_id")
+            .agg(array_sort(collect_list(col("band"))).as("bands")),
+            Seq("doc_id"), "left")
+          .select(col("doc_id"), col("n_chars"), col("prio"), col("dg"),
+            col("bands")),
+        buckets)
+    }
   }
 
   /** [[lateTextDecide]] then [[lateTextCommit]] — the batch-job form;
@@ -666,7 +674,7 @@ object UnifiedFlow {
       // stored side. Idempotent like the band appends (duplicate meta
       // rows change no election: the fetch dedupes through the
       // election aggregates).
-      ("ucommit:meta", () => CurationFlow.textMetaAppend(dir + "/textmeta",
+      ("ucommit:meta", () => CurationFlow.KeeperMeta.append(dir + "/textmeta",
         staged.kept
           .withColumn("dg", md5(col("text")))
           .join(staged.keptBands.groupBy("doc_id")
@@ -704,13 +712,12 @@ object UnifiedFlow {
                                   vec: VectorFlow.Params =
                                     VectorFlow.Params(),
                                   prio: Long = 0L): Unit = {
-    val spark = kept.sparkSession
     val keptText = kept.filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"), col("n_chars"))
     // one band derivation, shared by the index append and the meta rows
     val bands = ckpt(Dedup.lshBandTable(keptText, "doc_id", "text"))
     val metaNew = keptText.join(
-      CurationFlow.textMetaFetch(spark, dir + "/textmeta",
+      CurationFlow.KeeperMeta.fetch(dir + "/textmeta",
         keptText.select("doc_id"), buckets).select("doc_id"),
       Seq("doc_id"), "left_anti")
     Phase.all(
@@ -719,7 +726,7 @@ object UnifiedFlow {
       ("ucommit:vec", () => VectorFlow.commit(dir + "/vec",
         kept.select(col("doc_id").as("vec_id"), col("embedding")), vec,
         prio = prio)),
-      ("ucommit:meta", () => CurationFlow.textMetaAppend(dir + "/textmeta",
+      ("ucommit:meta", () => CurationFlow.KeeperMeta.append(dir + "/textmeta",
         metaNew
           .withColumn("dg", md5(col("text")))
           .join(bands.groupBy("doc_id")

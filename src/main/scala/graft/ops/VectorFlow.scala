@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Persisted state under `dir` (all three on the bucketed, planning-time
   * pruned, crash-safe machinery):
   *   - `digest/` — a band index of embedding content digests
-  *     (exact-duplicate lookups; [[Dedup.bandIndexAppend]]);
+  *     (exact-duplicate lookups; [[Dedup.BandIndex]]);
   *   - `bands/`  — the hyperplane home-signature band index
   *     (near-duplicate candidates, Hamming≤1 multi-probe contract);
   *   - `vectors/` — the kept vectors themselves, hive-partitioned by
@@ -139,7 +139,7 @@ object VectorFlow {
   }
 
   /** [[decide]] then [[commit]] — the batch-job form. `prio` stamps the
-    * kept vectors' keep order in the store (see [[vectorStoreAppend]]).
+    * kept vectors' keep order in the store (see [[KeptVectors]]).
     */
   def ingest(dir: String, batch: DataFrame, cursor: Long,
              params: Params = Params(), prio: Long = 0L): Result = {
@@ -208,7 +208,7 @@ object VectorFlow {
     // three-checkpoint chain, at a third of the sync points.
     val exact = Phase.labeled("vdecide:exact-ckpt") {
       val digests = valid.select(col("vec_id"), digestOf(spark).as("band"))
-      val histM = Dedup.bandIndexPrunedStored(dir + "/digest",
+      val histM = Dedup.BandIndex.pruned(dir + "/digest",
           digests.select(col("vec_id").as("doc_id"), col("band")),
           params.buckets)
         .join(broadcast(digests.select(col("band"), col("vec_id").as("bid"))),
@@ -274,7 +274,7 @@ object VectorFlow {
             when(col("a_in").isNotNull, col("doc_b")).otherwise(col("doc_a"))
               .as("doc_b"))
         val storedEmb = Phase.labeled("vdecide:store-fetch") {
-          vectorStoreFetch(spark, dir + "/vectors",
+          KeptVectors.fetch(dir + "/vectors",
             histCand.select(col("doc_b").as("vec_id")).distinct(),
             params.buckets)
         }
@@ -422,20 +422,21 @@ object VectorFlow {
     // CONCURRENTLY, surfacing failures only after all three finished
     // (r17 diet; Phase.all's single-writer rule)
     Phase.all(
-      ("vcommit:digest", () => Dedup.bandIndexAppend(dir + "/digest",
+      ("vcommit:digest", () => Dedup.BandIndex.append(dir + "/digest",
         clean.select(col("vec_id").as("doc_id"), digestOf(spark).as("band")),
         params.buckets)),
       // a decide-supplied pinned home-band table skips the second
       // hyperplane-signature derivation; the no-bands form (the streaming
       // REPLAY path) re-derives
-      ("vcommit:bands", () => Dedup.bandIndexAppend(dir + "/bands",
+      ("vcommit:bands", () => Dedup.BandIndex.append(dir + "/bands",
         keptBands.map(_.select(col("doc_id"), col("band")))
           .getOrElse(Similarity.embBandTable(clean, "vec_id", "embedding",
             params.bits, params.seed,
             dAuth.getOrElse(params.dim), params.families)),
         params.buckets)),
       ("vcommit:vectors",
-        () => vectorStoreAppend(dir + "/vectors", clean, params.buckets, prio)))
+        () => KeptVectors.append(dir + "/vectors", keepOrder(clean, prio),
+          params.buckets)))
   }
 
   /** [[lateDecide]]'s return: the correction rows plus the three
@@ -475,7 +476,7 @@ object VectorFlow {
     *   - `embdup_late` / `semdup_late` on a STORED row — an arriving
     *     earlier-keyed vector beat it: the row is EVICTED from all
     *     three vector stores (touched-bucket staged-swap removals,
-    *     [[Dedup.bucketedRemove]]);
+    *     [[BucketedStore.remove]]);
     *   - `attached` — the late vector joins the corpus (all three
     *     stores, at its prio);
     *   - `redundant_late` — the id is ALREADY in the corpus with this
@@ -510,12 +511,7 @@ object VectorFlow {
   def lateDecide(dir: String, late: DataFrame,
                  params: Params = Params()): LateStaged = {
     val spark = late.sparkSession
-    val withPrio =
-      if (late.columns.contains("prio"))
-        late.select(col("vec_id"), col("embedding"),
-          coalesce(col("prio"), lit(0L)).as("prio"))
-      else late.select(col("vec_id"), col("embedding"),
-        lit(0L).as("prio"))
+    val withPrio = keepOrder(late, 0L)
     val key = struct(col("prio"), col("vec_id"))
 
     // gate (decide's stage 1, sidecar-frozen dim authoritative; lazy
@@ -550,7 +546,7 @@ object VectorFlow {
     val digests = afterExB.select(col("vec_id"), digestOf(spark).as("band"))
     val exHistPairs = Phase.labeled("vlate:exhist-ckpt") {
       ckpt(
-        Dedup.bandIndexPrunedStored(dir + "/digest",
+        Dedup.BandIndex.pruned(dir + "/digest",
             digests.select(col("vec_id").as("doc_id"), col("band")),
             params.buckets)
           .join(broadcast(digests.select(col("band"),
@@ -580,7 +576,7 @@ object VectorFlow {
               org.apache.spark.sql.types.StructField("is_exact",
                 org.apache.spark.sql.types.BooleanType))))
           (noLoss, noLoss.drop("is_exact"), afterExB, noLoss,
-            vectorStoreFetch(spark, dir + "/vectors",
+            KeptVectors.fetch(dir + "/vectors",
               afterExB.select("vec_id").limit(0), params.buckets),
             noLoss.select("vec_id"))
         } else {
@@ -606,13 +602,15 @@ object VectorFlow {
                 .as("l_id"),
               when(col("a_in").isNotNull, col("doc_b")).otherwise(col("doc_a"))
                 .as("s_id"))
-          // one pruned fetch serves verification AND the eviction rows
+          // one pruned fetch serves verification AND the eviction rows;
+          // a pre-r16 row's null keep order elects as the earliest
           val storedEmb = Phase.labeled("vlate:store-fetch") {
-            ckpt(vectorStoreFetch(spark, dir + "/vectors",
+            ckpt(KeptVectors.fetch(dir + "/vectors",
               exHistPairs.select(col("s_id").as("vec_id"))
                 .unionByName(nearHist.select(col("s_id").as("vec_id")))
                 .distinct(),
-              params.buckets))
+              params.buckets)
+              .withColumn("prio", coalesce(col("prio"), lit(0L))))
           }
           val embBc: DataFrame => DataFrame =
             if (Phase.labeled("vlate:bcast-guard-count")(valid.count()) <=
@@ -779,15 +777,15 @@ object VectorFlow {
       // vector store stays strictly LAST (the fetch-first replay
       // contract above)
       Phase.all(
-        ("vevict:digest", () => Dedup.bandIndexRemove(dir + "/digest",
+        ("vevict:digest", () => Dedup.BandIndex.remove(dir + "/digest",
           ev.select(col("vec_id").as("doc_id"),
             digestOf(spark).as("band")), params.buckets)),
-        ("vevict:bands", () => Dedup.bandIndexRemove(dir + "/bands",
+        ("vevict:bands", () => Dedup.BandIndex.remove(dir + "/bands",
           Similarity.embBandTable(ev, "vec_id", "embedding",
             params.bits, params.seed, dAuth.getOrElse(params.dim),
             params.families), params.buckets)))
-      vectorStoreRemove(spark, dir + "/vectors",
-        ev.select("vec_id"), params.buckets)
+      KeptVectors.remove(dir + "/vectors", ev.select("vec_id"),
+        params.buckets)
     }
   }
 
@@ -798,17 +796,24 @@ object VectorFlow {
     val spark = attach.sparkSession
     val dAuth = freezeParams(spark, dir, params, inferred = None,
       stamp = false)
-    evictStored(dir, evict, params)
-    Dedup.bandIndexAppend(dir + "/digest",
-      attach.select(col("vec_id").as("doc_id"),
-        digestOf(spark).as("band")), params.buckets)
-    Dedup.bandIndexAppend(dir + "/bands",
-      attachBands.map(_.select(col("doc_id"), col("band")))
-        .getOrElse(Similarity.embBandTable(attach, "vec_id", "embedding",
-          params.bits, params.seed, dAuth.getOrElse(params.dim),
-          params.families)),
-      params.buckets)
-    vectorStoreAppend(dir + "/vectors", attach, params.buckets)
+    Phase.labeled("vlcommit:evict")(evictStored(dir, evict, params))
+    Phase.labeled("vlcommit:digest") {
+      Dedup.BandIndex.append(dir + "/digest",
+        attach.select(col("vec_id").as("doc_id"),
+          digestOf(spark).as("band")), params.buckets)
+    }
+    Phase.labeled("vlcommit:bands") {
+      Dedup.BandIndex.append(dir + "/bands",
+        attachBands.map(_.select(col("doc_id"), col("band")))
+          .getOrElse(Similarity.embBandTable(attach, "vec_id", "embedding",
+            params.bits, params.seed, dAuth.getOrElse(params.dim),
+            params.families)),
+        params.buckets)
+    }
+    Phase.labeled("vlcommit:vectors") {
+      KeptVectors.append(dir + "/vectors", keepOrder(attach, 0L),
+        params.buckets)
+    }
   }
 
   /** [[lateDecide]] then [[lateCommit]] — the batch-job form; returns
@@ -933,127 +938,33 @@ object VectorFlow {
   private def digestOf(spark: org.apache.spark.sql.SparkSession): Column =
     md5(graft.functions.FloatBitsF.floatBits(spark, "embedding"))
 
-  /** The kept-vector store's bucket key. */
-  private def vbktOf(buckets: Int): Column =
-    pmod(xxhash64(col("vec_id")), lit(buckets.toLong)).cast("int")
-
-  private val vectorSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("vec_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("embedding",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType)),
-    org.apache.spark.sql.types.StructField("prio",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("vbkt",
-      org.apache.spark.sql.types.IntegerType)))
-
-  /** Append kept (vec_id, embedding, prio) rows under `vbkt=`
-    * directories — the band index's layout discipline (frozen bucket
-    * count via the sidecar, stamped BEFORE the first append, one file
-    * per touched bucket per batch). `prio` is the doc's original KEEP
-    * ORDER (the ingest batch id) — the tiebreak the late-embedding
-    * correction elects winners by ([[lateDecide]]); stores written
-    * before r16 lack the column and read as null = 0 (earliest — a
-    * legacy keeper always wins, preserving pre-correction first-wins).
-    */
-  private[graft] def vectorStoreAppend(path: String, kept: DataFrame,
-                                       buckets: Int,
-                                       prio: Long = 0L): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(kept.sparkSession.sparkContext.hadoopConfiguration)
-    Dedup.recoverBandIndex(fs, path) // heal a crashed compact
-    LayoutSidecar.check(fs, path, buckets,
-      legacyHint = "vector store written without a layout sidecar — " +
-        "rewrite it into a fresh path with VectorFlow.commit")
-    LayoutSidecar.stampAhead(fs, path, buckets)
-    val withPrio =
-      if (kept.columns.contains("prio"))
-        kept.select(col("vec_id"), col("embedding"),
-          coalesce(col("prio"), lit(0L)).as("prio"))
-      else kept.select(col("vec_id"), col("embedding"),
-        lit(prio).as("prio"))
-    withPrio
-      .withColumn("vbkt", vbktOf(buckets))
-      .repartition(col("vbkt"))
-      .write.mode("append").partitionBy("vbkt").parquet(path)
-  }
-
-  /** Fetch the stored embeddings of `ids` (one column `vec_id`,
-    * batch-bounded): collect the touched buckets (≤ buckets ints), read
-    * ONLY those partition directories — planning-time pruning, the
-    * probe-side discipline of [[Dedup]]'s prunedStored — then semi-join
-    * the broadcast id set.
-    */
-  private[graft] def vectorStoreFetch(spark: org.apache.spark.sql.SparkSession,
-                                      path: String, ids: DataFrame,
-                                      buckets: Int): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Dedup.recoverBandIndex(fs, path) // heal a crashed compact
-    LayoutSidecar.check(fs, path, buckets,
-      legacyHint = "vector store written without a layout sidecar — " +
-        "rewrite it into a fresh path with VectorFlow.commit")
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(vectorSchema.dropRight(1)))
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) empty
-    else {
-      val touched = ids.select(vbktOf(buckets).as("vbkt")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (touched.isEmpty) empty
-      else spark.read.schema(vectorSchema).parquet(path)
-        .filter(col("vbkt").isInCollection(touched.toSeq))
-        .join(broadcast(ids), Seq("vec_id"), "left_semi")
-        .select(col("vec_id"), col("embedding"),
-          coalesce(col("prio"), lit(0L)).as("prio"))
-    }
-  }
-
-  /** Remove stored vectors by id — the eviction half of the late
-    * correction: rewrite ONLY the buckets the ids hash to
-    * ([[Dedup.bucketedRemove]]'s staged per-bucket swap, undo-safe,
-    * idempotent under replay).
-    */
-  private[graft] def vectorStoreRemove(spark: org.apache.spark.sql.SparkSession,
-                                       path: String, ids: DataFrame,
-                                       buckets: Int): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Dedup.recoverBandIndex(fs, path)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return
-    LayoutSidecar.check(fs, path, buckets,
-      legacyHint = "vector store written without a layout sidecar — " +
-        "rewrite it into a fresh path with VectorFlow.commit")
-    val touched = ids.select(vbktOf(buckets).as("vbkt")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    Dedup.bucketedRemove(spark, path, vectorSchema, "vbkt", "vec_id",
-      ids, touched.toSeq)
-  }
-
-  /** Fold the kept-vector store back to one file per bucket — the band
-    * index's compaction discipline on the `vbkt` layout ([[Dedup
-    * .bandIndexCompact]]'s staged swap, crash-recoverable at every store
-    * entry point). Single-writer like the appends; the streaming loop
-    * schedules it between batches ([[graft.streaming.StreamOps
+  /** The kept-vector store: (vec_id, embedding, prio) rows bucketed by
+    * id hash under `vbkt=` directories ([[BucketedStore]]). `prio` is the
+    * doc's original KEEP ORDER (the ingest batch id) — the tiebreak the
+    * late-embedding correction elects winners by ([[lateDecide]]); stores
+    * written before r16 lack the column and read it as null, which the
+    * election takes as 0 (earliest — a legacy keeper always wins,
+    * preserving pre-correction first-wins). The streaming loop schedules
+    * its compaction between batches ([[graft.streaming.StreamOps
     * .vectorCurationIngestStream]]'s `compactEvery`).
     */
-  def vectorStoreCompact(spark: org.apache.spark.sql.SparkSession,
-                         path: String, targetParts: Int = 1): Unit = {
-    require(targetParts >= 1, s"targetParts must be >= 1, got $targetParts")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Dedup.recoverBandIndex(fs, path)
-    val stamped = LayoutSidecar.requireStamped(fs, path,
-      "vector store without a layout sidecar — rewrite it into a fresh " +
-        "path with VectorFlow.commit")
-    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-      Dedup.compactSwap(spark, path, vectorSchema, "vbkt", targetParts,
-        stamped)
+  val KeptVectors: BucketedStore = {
+    import org.apache.spark.sql.types._
+    BucketedStore(new StructType().add("vec_id", LongType)
+        .add("embedding", ArrayType(FloatType)).add("prio", LongType)
+        .add("vbkt", IntegerType),
+      key = "vec_id", bkt = "vbkt",
+      legacyHint = "vector store written without a layout sidecar — " +
+        "rewrite it into a fresh path with VectorFlow.commit")
   }
+
+  /** `rows`' (vec_id, embedding) with their keep order: a `prio` column's
+    * nulls read as 0, and rows without one take `prio`.
+    */
+  private def keepOrder(rows: DataFrame, prio: Long): DataFrame =
+    rows.select(col("vec_id"), col("embedding"),
+      (if (rows.columns.contains("prio")) coalesce(col("prio"), lit(0L))
+       else lit(prio)).as("prio"))
 
   private def ckpt(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.Bridge

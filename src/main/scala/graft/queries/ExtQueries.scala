@@ -574,7 +574,7 @@ object ExtQueries {
       val (arrHome, arrProbes) = Similarity.signedBatch(arrivals,
         "vec_id", "embedding", bits = 8, seed = 42L, dim = dim,
         families = 1)
-      Dedup.bandIndexAppend(dir.toString, home)
+      Dedup.BandIndex.append(dir.toString, home, 16)
       val direct = home.unionByName(arrHome)
         .join(arrProbes
           .select(col("doc_id").as("doc_n"), col("band").as("band_n")),
@@ -680,8 +680,8 @@ object ExtQueries {
       // arrivals probed through the pruned read (static bkt IN (...)
       // partition filter — the probe lists only touched buckets)
       val dir = CoreQueries.pidScopedDir("graft_band_index", d)
-      Dedup.bandIndexAppend(dir.toString,
-        Dedup.ingestBands(history, "doc_id", "text"))
+      Dedup.BandIndex.append(dir.toString,
+        Dedup.ingestBands(history, "doc_id", "text"), 16)
       Dedup.bandIndexProbe(dir.toString, arrivals, "doc_id", "text")
         ._1.pairs.orderBy("doc_a", "doc_b")
     }),
@@ -699,8 +699,8 @@ object ExtQueries {
       val history = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
       val arrivals = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
       val dir = CoreQueries.pidScopedDir("graft_band_bounded", d)
-      Dedup.bandIndexAppend(dir.toString,
-        Dedup.ingestBands(history, "doc_id", "text"))
+      Dedup.BandIndex.append(dir.toString,
+        Dedup.ingestBands(history, "doc_id", "text"), 16)
       Dedup.bandIndexIngest(dir.toString, arrivals, "doc_id", "text",
           maxBucket = 2)
         .pairs.orderBy("doc_a", "doc_b")

@@ -665,7 +665,7 @@ object StreamOps {
           .pairs.withColumn("batch_id", lit(id))
           .write.mode("append").parquet(outPath)
         if (dueForCompact(compactEvery, id))
-          graft.ops.Dedup.bandIndexCompact(batch.sparkSession, indexPath)
+          graft.ops.Dedup.BandIndex.compact(batch.sparkSession, indexPath)
       }.start()
 
   /** Index-growth housekeeping for the foreachBatch loops (r14 verdict
@@ -864,7 +864,7 @@ object StreamOps {
           .pairs.withColumn("batch_id", lit(id))
           .write.mode("append").parquet(outPath)
         if (dueForCompact(compactEvery, id))
-          graft.ops.Dedup.bandIndexCompact(batch.sparkSession, indexPath)
+          graft.ops.Dedup.BandIndex.compact(batch.sparkSession, indexPath)
       }.start()
 
   /** G5 — gap-based sessionization via the built-in `session_window`
@@ -967,8 +967,8 @@ object StreamOps {
           Some(staged.keptBands))
     }
     if (dueForCompact(compactEvery, id)) {
-      graft.ops.Dedup.bandIndexCompact(spark, indexPath + "/digest")
-      graft.ops.Dedup.bandIndexCompact(spark, indexPath + "/bands")
+      graft.ops.Dedup.BandIndex.compact(spark, indexPath + "/digest")
+      graft.ops.Dedup.BandIndex.compact(spark, indexPath + "/bands")
       rootsPath.foreach(p => compactRoots(spark, p))
     }
   }
@@ -1015,9 +1015,9 @@ object StreamOps {
           lane = "ing"))
     }
     if (dueForCompact(compactEvery, id)) {
-      graft.ops.Dedup.bandIndexCompact(spark, indexPath + "/digest")
-      graft.ops.Dedup.bandIndexCompact(spark, indexPath + "/bands")
-      graft.ops.VectorFlow.vectorStoreCompact(spark, indexPath + "/vectors")
+      graft.ops.Dedup.BandIndex.compact(spark, indexPath + "/digest")
+      graft.ops.Dedup.BandIndex.compact(spark, indexPath + "/bands")
+      graft.ops.VectorFlow.KeptVectors.compact(spark, indexPath + "/vectors")
       rootsPath.foreach(p => compactRoots(spark, p))
     }
   }
@@ -1100,11 +1100,11 @@ object StreamOps {
           lane = "ing"))
     }
     if (dueForCompact(compactEvery, id)) {
-      graft.ops.Dedup.bandIndexCompact(spark, indexPath + "/digest")
-      graft.ops.Dedup.bandIndexCompact(spark, indexPath + "/bands")
-      graft.ops.Dedup.bandIndexCompact(spark, indexPath + "/vec/digest")
-      graft.ops.Dedup.bandIndexCompact(spark, indexPath + "/vec/bands")
-      graft.ops.VectorFlow.vectorStoreCompact(spark,
+      graft.ops.Dedup.BandIndex.compact(spark, indexPath + "/digest")
+      graft.ops.Dedup.BandIndex.compact(spark, indexPath + "/bands")
+      graft.ops.Dedup.BandIndex.compact(spark, indexPath + "/vec/digest")
+      graft.ops.Dedup.BandIndex.compact(spark, indexPath + "/vec/bands")
+      graft.ops.VectorFlow.KeptVectors.compact(spark,
         indexPath + "/vec/vectors")
       rootsPath.foreach(p => compactRoots(spark, p))
     }
@@ -1177,13 +1177,13 @@ object StreamOps {
           cor.filter(col("status") === "attached")
             .select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
         val attachNew = attach.join(
-          graft.ops.VectorFlow.vectorStoreFetch(spark, vdir + "/vectors",
+          graft.ops.VectorFlow.KeptVectors.fetch(vdir + "/vectors",
             attach.select("vec_id"), vec.buckets).select("vec_id"),
           Seq("vec_id"), "left_anti")
         val evictIds = cor.filter(col("status").isin("embdup_late",
             "semdup_late")).select(col("doc_id").as("vec_id"))
           .join(lateIn.select("vec_id"), Seq("vec_id"), "left_anti")
-        val evictRows = graft.ops.VectorFlow.vectorStoreFetch(spark,
+        val evictRows = graft.ops.VectorFlow.KeptVectors.fetch(
           vdir + "/vectors", evictIds, vec.buckets)
         graft.ops.VectorFlow.lateCommitParts(vdir, attachNew, None,
           evictRows, vec)
@@ -1216,9 +1216,9 @@ object StreamOps {
     // the ingest loop's schedule to bound its files (r17): the late
     // feed compacts the stores IT mutates, roots fold included
     if (dueForCompact(compactEvery, id)) {
-      graft.ops.Dedup.bandIndexCompact(spark, vdir + "/digest")
-      graft.ops.Dedup.bandIndexCompact(spark, vdir + "/bands")
-      graft.ops.VectorFlow.vectorStoreCompact(spark, vdir + "/vectors")
+      graft.ops.Dedup.BandIndex.compact(spark, vdir + "/digest")
+      graft.ops.Dedup.BandIndex.compact(spark, vdir + "/bands")
+      graft.ops.VectorFlow.KeptVectors.compact(spark, vdir + "/vectors")
       rootsPath.foreach(p => compactRoots(spark, p))
     }
   }
@@ -1305,7 +1305,7 @@ object StreamOps {
           .join(attached.select(col("doc_id"), col("n_tok")),
             Seq("doc_id"))
         val attachNew = attachAll.join(
-          graft.ops.CurationFlow.textMetaFetch(spark,
+          graft.ops.CurationFlow.KeeperMeta.fetch(
             indexPath + "/textmeta", attachAll.select("doc_id"), buckets)
             .select("doc_id"),
           Seq("doc_id"), "left_anti")
@@ -1313,7 +1313,7 @@ object StreamOps {
           .filter(col("status").isin("exact_late", "neardup_late"))
           .select("doc_id")
           .join(withPrio.select("doc_id"), Seq("doc_id"), "left_anti")
-        val evictText = graft.ops.CurationFlow.textMetaFetch(spark,
+        val evictText = graft.ops.CurationFlow.KeeperMeta.fetch(
           indexPath + "/textmeta", evictIds, buckets)
         val vecDrop = cor.filter(col("status").isin("shape",
             "repetition", "benchmark", "contaminated", "exact_late",
@@ -1350,10 +1350,10 @@ object StreamOps {
     // the stores this feed mutates: the text indexes, the keeper-meta
     // store, the vec store (pending-vector drops), and the roots view
     if (dueForCompact(compactEvery, id)) {
-      graft.ops.Dedup.bandIndexCompact(spark, indexPath + "/digest")
-      graft.ops.Dedup.bandIndexCompact(spark, indexPath + "/bands")
-      graft.ops.CurationFlow.textMetaCompact(spark, indexPath + "/textmeta")
-      graft.ops.VectorFlow.vectorStoreCompact(spark,
+      graft.ops.Dedup.BandIndex.compact(spark, indexPath + "/digest")
+      graft.ops.Dedup.BandIndex.compact(spark, indexPath + "/bands")
+      graft.ops.CurationFlow.KeeperMeta.compact(spark, indexPath + "/textmeta")
+      graft.ops.VectorFlow.KeptVectors.compact(spark,
         indexPath + "/vec/vectors")
       rootsPath.foreach(p => compactRoots(spark, p))
     }

@@ -48,6 +48,21 @@ trait SparkTestBase extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** Asserts a job budget: every call in `budget` ran exactly its
+    * pinned number of jobs, none of them unlabeled. Job counts are
+    * deterministic, so a change that adds or saves one job fails here and
+    * the message lists each call's jobs per label.
+    */
+  def assertJobBudget(budget: (String, Seq[Job], Int)*): Unit = {
+    val report = budget.map { case (call, started, _) =>
+      call + ": " + started.groupBy(_.description.getOrElse("UNLABELED"))
+        .map { case (d, js) => s"$d ${js.size}" }.toSeq.sorted.mkString(", ")
+    }
+    assert(budget.forall(_._2.forall(_.description.isDefined)),
+      s"unlabeled jobs: $report")
+    assert(budget.map(_._2.size) === budget.map(_._3), report)
+  }
+
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
 

@@ -52,8 +52,9 @@ class CandidateRouteBudgetSpec extends SparkTestBase {
   test("job budget: bandIndexProbe exact and capped") {
     def probe(cap: Int) = {
       val dir = tmpIndex("route_text")
-      Dedup.bandIndexAppend(dir, Dedup.ingestBands(
-        textDocs.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", "text"))
+      Dedup.BandIndex.append(dir, Dedup.ingestBands(
+        textDocs.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", "text"),
+        16)
       val arrivals = textDocs.filter(pmod(col("doc_id"), lit(2)) === 1)
       measure(Dedup.bandIndexProbe(dir, arrivals, "doc_id", "text",
         maxBucket = cap)._1)
@@ -65,9 +66,9 @@ class CandidateRouteBudgetSpec extends SparkTestBase {
   test("job budget: embIndexIngest exact and capped") {
     def ingest(cap: Int) = {
       val dir = tmpIndex("route_emb")
-      Dedup.bandIndexAppend(dir, Similarity.embBandTable(
+      Dedup.BandIndex.append(dir, Similarity.embBandTable(
         vecs.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id",
-        "embedding", dim = 16))
+        "embedding", dim = 16), 16)
       val arrivals = vecs.filter(pmod(col("vec_id"), lit(2)) === 1)
       measure(Similarity.embIndexIngest(dir, arrivals, dim = 16,
         maxBucket = cap))

@@ -190,6 +190,20 @@ class CurationFlowSpec extends SparkTestBase {
     assert(got(7L)._1 === "contaminated")
   }
 
+  test("job budget: the second wave's decide and commit, every job labeled") {
+    val docs = docsDf(fixture)
+    val dir = java.nio.file.Files.createTempDirectory("cur_budget").toString
+    val benchDf = CurationFlow.benchShingles(docs)
+    val r1 = CurationFlow.ingest(dir, docs.filter(col("doc_id") % 2 === 0),
+      benchDf, cursor = 0L)
+    val (staged, decideJobs) = jobs(CurationFlow.decide(dir,
+      docs.filter(col("doc_id") % 2 === 1), benchDf, r1.cursor))
+    val (_, commitJobs) = jobs(CurationFlow.commit(dir, staged.kept,
+      keptBands = Some(staged.keptBands)))
+    assertJobBudget(("CurationFlow.decide", decideJobs, 37),
+      ("CurationFlow.commit", commitJobs, 5))
+  }
+
   test("single-batch ingest kept rows == the batch pipeline's packed output (composition pin)") {
     val docs = docsDf(fixture)
     val dir = java.nio.file.Files.createTempDirectory("cur_one").toString

@@ -114,7 +114,7 @@ class OpsSpec extends SparkTestBase {
       ._1.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val wantPairs = probe()
     assert(wantPairs.nonEmpty, "fixture produced no candidates — vacuous")
-    Dedup.bandIndexCompact(spark, dir)
+    Dedup.BandIndex.compact(spark, dir)
     assert(dataFiles() === bktDirs(),
       "compact must coalesce to one file per non-empty bucket")
     assert(dataFiles() <= before, "compact must not grow the file count")
@@ -182,7 +182,7 @@ class OpsSpec extends SparkTestBase {
     // and pruning loses nothing: pruned probe == probe over the full read
     val got = probe.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val full = Dedup.lshIncrementalCandidates(
-        spark.read.schema(Dedup.bandSchemaBkt).parquet(dir).select("doc_id", "band"),
+        spark.read.schema(Dedup.BandIndex.schema).parquet(dir).select("doc_id", "band"),
         Dedup.lshBandTable(batch, "doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.nonEmpty && got === full)
@@ -275,11 +275,11 @@ class OpsSpec extends SparkTestBase {
     // layout — it must refuse instead (r14 review #1)
     val e1 = intercept[IllegalStateException] {
       Dedup.bandIndexProbe(dir, probe2, "doc_id", "text") }
-    assert(e1.getMessage.contains("bandIndexMigrate"))
-    intercept[IllegalStateException] { Dedup.bandIndexCompact(spark, dir) }
+    assert(e1.getMessage.contains("BandIndex.migrate"))
+    intercept[IllegalStateException] { Dedup.BandIndex.compact(spark, dir) }
     // migration rewrites into the bucketed layout; the probe then finds
     // the cross-batch duplicate it would have silently lost
-    Dedup.bandIndexMigrate(spark, dir)
+    Dedup.BandIndex.migrate(spark, dir, 16)
     val got = Dedup.bandIndexProbe(dir, probe2, "doc_id", "text")
       ._1.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((1L, 2L)), s"post-migration probe lost pairs: $got")
@@ -291,7 +291,7 @@ class OpsSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       Dedup.bandIndexIngest(dir, probe2, "doc_id", "text", buckets = 8) }
     // compact preserves the stamped layout across the staged swap
-    Dedup.bandIndexCompact(spark, dir)
+    Dedup.BandIndex.compact(spark, dir)
     assert(Dedup.bandIndexProbe(dir, probe2, "doc_id", "text")
       ._1.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
   }
@@ -306,7 +306,7 @@ class OpsSpec extends SparkTestBase {
     // and died before appending any data — a sidecar-only directory
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    LayoutSidecar.stampAhead(fs, dir, 16)
+    BucketedStore.stamp(fs, dir, 16)
     // it reads as an EMPTY index (not a legacy-flat refusal): the probe
     // still finds the within-batch pair and the bucket count is frozen
     assert(Dedup.bandIndexProbe(dir, docs, "doc_id", "text")
@@ -328,7 +328,7 @@ class OpsSpec extends SparkTestBase {
       Dedup.symmetricCandidates(
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          Dedup.bandSchema),
+          Dedup.BandIndex.dataSchema),
         Dedup.ingestBands(d, "doc_id", "text"),
         maxBucket)
     val docs = Tables.documents(spark, Sf0001)
@@ -541,7 +541,7 @@ class OpsSpec extends SparkTestBase {
     val onTime = e.filter(pmod(col("user_id"), lit(101)) =!= 3)
     assert(late.count() > 0 && onTime.count() > 0, "vacuous split")
     val dir = java.nio.file.Files.createTempDirectory("scd2_arch").toString + "/arch"
-    TimeOps.writeKeyBucketedArchive(onTime, dir)
+    TimeOps.Archive.append(dir, onTime, 64)
     val merged = TimeOps.stateRunsMergeBucketed(
       TimeOps.stateRuns(onTime), dir, late)
     // plan evidence on the archive scan (static pruning, pushed keys)
@@ -773,11 +773,11 @@ class OpsSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("bktrm").toString + "/idx"
     // 40 docs x 1 band each across 4 buckets
     val bands = (0L until 40L).map(i => (i, s"band_$i")).toDF("doc_id", "band")
-    Dedup.bandIndexAppend(dir, bands, buckets = 4)
+    Dedup.BandIndex.append(dir, bands, 4)
     val victims = Seq(3L, 17L, 31L)
     val vbands = bands.filter(col("doc_id").isInCollection(victims))
-    Dedup.bandIndexRemove(dir, vbands, buckets = 4)
-    def served(): Set[Long] = spark.read.schema(Dedup.bandSchemaBkt)
+    Dedup.BandIndex.remove(dir, vbands, 4)
+    def served(): Set[Long] = spark.read.schema(Dedup.BandIndex.schema)
       .parquet(dir).select("doc_id").as[Long].collect().toSet
     assert(served() === (0L until 40L).toSet -- victims)
     // TORN swap: stage a bucket as if a crash hit between live->aside
@@ -788,13 +788,13 @@ class OpsSpec extends SparkTestBase {
     fs.mkdirs(new Path(dir, ".rm_aside"))
     assert(fs.rename(someBkt, new Path(dir + "/.rm_aside", someBkt.getName)))
     assert(!fs.exists(someBkt))
-    // any index entry point heals (the probe path calls recoverBandIndex)
-    Dedup.bandIndexAppend(dir,
-      Seq((100L, "band_x")).toDF("doc_id", "band"), buckets = 4)
+    // any index entry point heals
+    Dedup.BandIndex.append(dir,
+      Seq((100L, "band_x")).toDF("doc_id", "band"), 4)
     assert(fs.exists(someBkt), "torn removal must restore the aside bucket")
     assert(served() === ((0L until 40L).toSet -- victims) + 100L)
     // and a REPLAYED removal of already-removed ids is a no-op
-    Dedup.bandIndexRemove(dir, vbands, buckets = 4)
+    Dedup.BandIndex.remove(dir, vbands, 4)
     assert(served() === ((0L until 40L).toSet -- victims) + 100L)
   }
 

@@ -125,13 +125,13 @@ class SimilaritySpec extends SparkTestBase {
       "a pair surfaced in two batches")
     // probe-only twin: arrival-restricted contract, nothing appended
     val probeBatch = batches(2)
-    val before = spark.read.schema(Dedup.bandSchemaBkt).parquet(dir).count()
+    val before = spark.read.schema(Dedup.BandIndex.schema).parquet(dir).count()
     val got = probeRaw(dir, probeBatch)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val arrivals = probeBatch.select("vec_id").collect().map(_.getLong(0)).toSet
     assert(got === full.filter { case (a, b) =>
       arrivals.contains(a) || arrivals.contains(b) })
-    assert(spark.read.schema(Dedup.bandSchemaBkt).parquet(dir).count() === before,
+    assert(spark.read.schema(Dedup.BandIndex.schema).parquet(dir).count() === before,
       "probe must not append")
   }
 
@@ -143,10 +143,10 @@ class SimilaritySpec extends SparkTestBase {
     val arrivals = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
     val base = java.nio.file.Files.createTempDirectory("emb_bnd").toString
     val dirA = base + "/a"; val dirB = base + "/b"
-    Dedup.bandIndexAppend(dirA,
-      Similarity.embBandTable(history, "vec_id", "embedding", dim = 16))
-    Dedup.bandIndexAppend(dirB,
-      Similarity.embBandTable(history, "vec_id", "embedding", dim = 16))
+    Dedup.BandIndex.append(dirA,
+      Similarity.embBandTable(history, "vec_id", "embedding", dim = 16), 16)
+    Dedup.BandIndex.append(dirB,
+      Similarity.embBandTable(history, "vec_id", "embedding", dim = 16), 16)
     val exact = probeRaw(dirA, arrivals)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val high = Similarity.embIndexIngest(dirB, arrivals, dim = 16,
@@ -164,9 +164,9 @@ class SimilaritySpec extends SparkTestBase {
     }
     val hotAll = (0L until 30L).map(i => (i, same))
     val dirC = base + "/c"
-    Dedup.bandIndexAppend(dirC, Similarity.embBandTable(
+    Dedup.BandIndex.append(dirC, Similarity.embBandTable(
       hotAll.filter(_._1 % 2 == 0).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", dim = 16))
+      "vec_id", "embedding", dim = 16), 16)
     val bounded = Similarity.embIndexIngest(dirC,
       hotAll.filter(_._1 % 2 == 1).toDF("vec_id", "embedding"),
       dim = 16, maxBucket = 8)
@@ -216,13 +216,13 @@ class SimilaritySpec extends SparkTestBase {
       .limit(50)
     val dir = java.nio.file.Files.createTempDirectory("emb_empty").toString + "/idx"
     Similarity.embIndexIngest(dir, emb, dim = 16)
-    val before = spark.read.schema(Dedup.bandSchemaBkt).parquet(dir)
+    val before = spark.read.schema(Dedup.BandIndex.schema).parquet(dir)
       .collect().map(_.toSeq).toSet
     val empty = emb.filter(lit(false))
     assert(Similarity.embIndexIngest(dir, empty).pairs.count() === 0)
     assert(Similarity.embIndexIngest(dir, empty, maxBucket = 1024)
       .pairs.count() === 0)
-    assert(spark.read.schema(Dedup.bandSchemaBkt).parquet(dir)
+    assert(spark.read.schema(Dedup.BandIndex.schema).parquet(dir)
       .collect().map(_.toSeq).toSet === before, "empty ingest must not mutate")
   }
 
@@ -448,7 +448,7 @@ class SimilaritySpec extends SparkTestBase {
     val before = probeRaw(dir, probe)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val nBefore = files()
-    Dedup.bandIndexCompact(spark, dir)
+    Dedup.BandIndex.compact(spark, dir)
     assert(files() < nBefore, s"compaction must fold files ($nBefore -> ${files()})")
     val after = probeRaw(dir, probe)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

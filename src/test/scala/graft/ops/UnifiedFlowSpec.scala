@@ -275,6 +275,33 @@ class UnifiedFlowSpec extends SparkTestBase {
       metaIds(dirB) === Set(1L, 3L, 5L, 22L))
   }
 
+  test("job budget: the late-text pass over a corpus with two pending docs, every job labeled") {
+    import spark.implicits._
+    val vec = VectorFlow.Params(minCos = 0.99, dim = Dim)
+    val dir = java.nio.file.Files.createTempDirectory("unilate_budget")
+      .toString + "/c"
+    val bench = benchOf
+    // the late-texts scenario's world B: 3 and 5 arrive textless, 21 and
+    // 23 are their text copies, so the pass attaches two and evicts two
+    val T3 = goodText("c")
+    val T5 = goodText("e") + " tail99"
+    val nullText = null.asInstanceOf[String]
+    val b1 = UnifiedFlow.ingest(dir, df(Seq((1L, goodText("a"), rot(0)),
+      (3L, nullText, rot(2.0)), (5L, nullText, rot(4.0)))), bench, 0L,
+      vec = vec, prio = 0L)
+    val b2 = UnifiedFlow.ingest(dir, df(Seq((21L, T3, rot(1.0)),
+      (23L, goodText("e"), rot(3.0)), (22L, goodText("m"), rot(5.0)))),
+      bench, b1.cursor, vec = vec, prio = 1L)
+    val late = Seq((3L, T3, 0L), (5L, T5, 0L)).toDF("doc_id", "text", "prio")
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .select("doc_id", "text", "n_chars", "prio")
+    val (cor, lateJobs) = jobs(UnifiedFlow.lateTexts(dir, late, bench,
+      b2.cursor, vec = vec))
+    assert(statuses(cor.decisions) === Map(3L -> "attached",
+      5L -> "attached", 21L -> "exact_late", 23L -> "neardup_late"))
+    assertJobBudget(("UnifiedFlow.lateTexts", lateJobs, 115))
+  }
+
   test("unifiedStep: ledger replay re-commits BOTH stores; pre-ledger crash exactly-once") {
     import spark.implicits._
     val vec = VectorFlow.Params(minCos = 0.99, dim = Dim)
@@ -324,7 +351,7 @@ class UnifiedFlowSpec extends SparkTestBase {
     // layout check (the digest probe before the fork sees no index)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    LayoutSidecar.stamp(fs, dir + "/bands", 8)
+    BucketedStore.stamp(fs, dir + "/bands", 8)
     // a scan that outlasts the failing probe: the bench's one partition
     // takes 3 s to produce its (never matching) shingle, on one core of
     // four, so the probe's own jobs are not starved behind it
@@ -375,7 +402,7 @@ class UnifiedFlowSpec extends SparkTestBase {
       // the drain scenario: a bands/ store stamped with 8 buckets fails
       // decide's 16-bucket band probe after the contamination scan forked
       val bad = java.nio.file.Files.createTempDirectory("uni_label_bad").toString + "/c"
-      LayoutSidecar.stamp(new org.apache.hadoop.fs.Path(bad)
+      BucketedStore.stamp(new org.apache.hadoop.fs.Path(bad)
         .getFileSystem(sc.hadoopConfiguration), bad + "/bands", 8)
       val e = intercept[IllegalArgumentException] {
         UnifiedFlow.decide(bad, wave1, bench, 0L, vec = vec)
@@ -414,14 +441,9 @@ class UnifiedFlowSpec extends SparkTestBase {
         .select(col("doc_id").as("vec_id"), col("embedding"))
     VectorFlow.ingest(vdir, vecs(wave1), 0L, vec)
     val (_, vecJobs) = jobs(VectorFlow.decide(vdir, vecs(wave2), 0L, vec))
-    for ((call, started) <- Seq("UnifiedFlow.decide" -> decideJobs,
-        "UnifiedFlow.commit" -> commitJobs, "VectorFlow.decide" -> vecJobs))
-      assert(started.forall(_.description.isDefined),
-        s"$call ran unlabeled jobs: ${started.filter(_.description.isEmpty)}")
     // the exact counts: a change that adds or saves a job must say so here
-    def byLabel(started: Seq[Job]) = started.groupBy(_.description.orNull)
-      .map { case (d, js) => s"$d ${js.size}" }.toSeq.sorted
-    assert((decideJobs.size, commitJobs.size, vecJobs.size) === (75, 19, 44),
-      Seq(decideJobs, commitJobs, vecJobs).map(byLabel))
+    assertJobBudget(("UnifiedFlow.decide", decideJobs, 75),
+      ("UnifiedFlow.commit", commitJobs, 19),
+      ("VectorFlow.decide", vecJobs, 44))
   }
 }

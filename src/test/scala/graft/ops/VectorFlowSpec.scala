@@ -318,12 +318,12 @@ class VectorFlowSpec extends SparkTestBase {
     assert(matches(cor) === Map(200L -> 110L, 500L -> 501L,
       100L -> 50L, 120L -> 60L))
     // the evicted rows are gone from ALL three stores; attachers are in
-    val stored = VectorFlow.vectorStoreFetch(spark, s"$dir/vectors",
+    val stored = VectorFlow.KeptVectors.fetch(s"$dir/vectors",
       Seq(100L, 110L, 120L, 50L, 60L, 300L, 500L, 501L, 200L).toDF("vec_id"),
       p.buckets).select("vec_id").as[Long].collect().toSet
     assert(stored === Set(110L, 50L, 60L, 300L, 501L))
     for (idx <- Seq("digest", "bands")) {
-      val ids = spark.read.schema(Dedup.bandSchemaBkt)
+      val ids = spark.read.schema(Dedup.BandIndex.schema)
         .parquet(s"$dir/$idx").select("doc_id").as[Long].collect().toSet
       assert(!ids.contains(100L) && !ids.contains(120L),
         s"evicted ids must leave the $idx index: $ids")
@@ -355,6 +355,26 @@ class VectorFlowSpec extends SparkTestBase {
     assert(matches(next.decisions) === Map(20L -> 10L))
   }
 
+  test("job budget: the second wave's commit and a late pass that attaches and evicts, every job labeled") {
+    val p = VectorFlow.Params(minCos = 0.99, dim = Dim)
+    val dir = tmp("vbudget")
+    VectorFlow.ingest(dir, df(Seq(100L -> rot(0), 110L -> rot(1.5),
+      120L -> rot(0.7))), 0L, p, prio = 2L)
+    val staged = VectorFlow.decide(dir, df(Seq(130L -> rot(2.4),
+      131L -> rot(0.02), 132L -> rot(4.0))), 0L, p)
+    val (_, commitJobs) = jobs(VectorFlow.commit(dir, staged.kept, p,
+      Some(staged.keptBands), prio = 3L))
+    // 50 evicts 100, 60 evicts 120, 200 loses to 110, 300 attaches clean
+    val (cor, lateJobs) = jobs(VectorFlow.lateIngest(dir, dfP(Seq(
+      (50L, rot(0.05), 1L), (200L, rot(1.52), 4L), (60L, rot(0.7), 1L),
+      (300L, rot(3.0), 1L))), p))
+    assert(statuses(cor) === Map(50L -> "attached", 60L -> "attached",
+      300L -> "attached", 200L -> "semdup_late", 100L -> "semdup_late",
+      120L -> "embdup_late"))
+    assertJobBudget(("VectorFlow.commit", commitJobs, 7),
+      ("VectorFlow.lateIngest", lateJobs, 78))
+  }
+
   test("vector store: bucket count frozen; fetch prunes to touched buckets") {
     val p = VectorFlow.Params(dim = Dim, buckets = 8)
     val dir = tmp("vstore")
@@ -370,7 +390,7 @@ class VectorFlowSpec extends SparkTestBase {
     // the fetch reads only the probed ids' buckets
     import spark.implicits._
     val ids = Seq(3L, 11L).toDF("vec_id")
-    val fetched = VectorFlow.vectorStoreFetch(spark, s"$dir/vectors", ids, 8)
+    val fetched = VectorFlow.KeptVectors.fetch(s"$dir/vectors", ids, 8)
     assert(fetched.select("vec_id").as[Long].collect().toSet === Set(3L, 11L))
     val want = ids.select(pmod(xxhash64(col("vec_id")), lit(8L))
         .cast("int").as("b"))

@@ -1280,14 +1280,14 @@ class StreamingSpec extends SparkTestBase {
     StreamOps.correctRoots(s"$base/roots", staged.corrections, 0L)
     graft.ops.CurationFlow.writeLedger(spark, s"$base/idx/ltext", 0L, e2,
       staged.cursor)
-    assert(graft.ops.CurationFlow.textMetaFetch(spark,
+    assert(graft.ops.CurationFlow.KeeperMeta.fetch(
       s"$base/idx/textmeta", Seq(42L).toDF("doc_id"), 16).count() === 1L,
       "precondition: the crash window left 42's keeper-meta in place")
     // replay: fetch-first reconstruction must evict 42 (meta-guided
     // handles), attach+pack 8, and correct the roots view
     StreamOps.lateTextStep(s"$base/idx", s"$base/ltout", bench, 256L, 16,
       vec = vec, rootsPath = roots)(late, 0L)
-    def metaIds = graft.ops.CurationFlow.textMetaFetch(spark,
+    def metaIds = graft.ops.CurationFlow.KeeperMeta.fetch(
       s"$base/idx/textmeta", Seq(1L, 8L, 42L).toDF("doc_id"), 16)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(metaIds === Seq(1L, 8L))
@@ -1525,13 +1525,13 @@ class StreamingSpec extends SparkTestBase {
       staged.cursor)
     graft.ops.CurationFlow.commit(s"$base/idx", staged.kept, 16,
       Some(staged.keptBands))
-    assert(graft.ops.CurationFlow.textMetaFetch(spark,
+    assert(graft.ops.CurationFlow.KeeperMeta.fetch(
       s"$base/idx/textmeta", Seq(3L).toDF("doc_id"), 16).isEmpty,
       "precondition: the crash lost 3's keeper-meta row")
     // replay must heal the meta store (the late-text pass depends on it)
     StreamOps.unifiedStep(s"$base/idx", s"$base/out", bench, 256L, 16,
       vec = vec)(batch1, 1L)
-    val meta = graft.ops.CurationFlow.textMetaFetch(spark,
+    val meta = graft.ops.CurationFlow.KeeperMeta.fetch(
       s"$base/idx/textmeta", Seq(3L).toDF("doc_id"), 16)
     assert(meta.count() === 1L)
     assert(meta.select("prio").as[Long].head() === 1L,
@@ -1622,7 +1622,7 @@ class StreamingSpec extends SparkTestBase {
     // the vector store after two fold/compact cycles holds exactly the
     // surviving vectors: 1 (kept with its vector), 2 (late-attached);
     // 25 dropped at ingest (exact copy of 1), 21 and 3 evicted late
-    val stored = graft.ops.VectorFlow.vectorStoreFetch(spark,
+    val stored = graft.ops.VectorFlow.KeptVectors.fetch(
       s"$base/idx/vec/vectors", Seq(1L, 2L, 3L, 21L, 25L).toDF("vec_id"),
       vec.buckets).select("vec_id").as[Long].collect().sorted.toSeq
     assert(stored === Seq(1L, 2L))
