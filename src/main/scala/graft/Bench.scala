@@ -35,8 +35,7 @@ object Bench {
       // setPermission is java.nio, not a forked chmod shell — removes the
       // measured ~8 ms/file create fork from task-side store part files.
       // Harness contract untouched: env vars, master, timing methodology,
-      // and output format are byte-identical; SPARK_GRAFT_STOCK_LOCALFS=1
-      // restores the stock class for A/B.
+      // and output format are byte-identical.
       .config("spark.hadoop.fs.file.impl", graft.ops.FsUtil.localFsImpl)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

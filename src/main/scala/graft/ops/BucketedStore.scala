@@ -249,72 +249,7 @@ object BucketedStore {
       s"""{"buckets":$buckets}""".getBytes("UTF-8"))
 
   /** The stamped bucket count, if the sidecar exists. */
-  private[graft] def stamped(fs: FileSystem, path: String): Option[Int] = {
-    val f = new Path(path, Sidecar)
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      // readAllBytes loops to EOF: a short first read must not truncate
-      // the digits of the bucket count
-      val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      "\"buckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(body).map(_.group(1).toInt)
-    }
-  }
-}
-
-/** The staged whole-directory swap that replaces `<path>` with a complete
-  * copy, shared by [[BucketedStore]]'s compaction and migration and
-  * [[IvfIndex]]'s in-place rebuilds:
-  *
-  *   1. the caller writes the copy to `<path>.tmp` (idempotent overwrite);
-  *   2. rename `<path>` → `<path>.aside`;
-  *   3. rename `<path>.tmp` → `<path>`;
-  *   4. delete the aside.
-  *
-  * A crash at any point is recoverable and never loses the directory:
-  * after 1 the live dir is untouched (a stale tmp is overwritten next
-  * time); after 2 the complete tmp and the aside exist, and [[heal]]
-  * promotes the tmp; after 3 only the aside lingers and [[heal]] deletes
-  * it. With neither live dir nor tmp, [[heal]] restores the aside: the
-  * pre-swap state is the only complete copy left.
-  */
-private[graft] object StagedSwap {
-
-  def tmp(path: String): String = path + ".tmp"
-
-  private def aside(path: String) = new Path(path + ".aside")
-
-  /** Steps 2-4, after the caller wrote `tmp(path)` in full. */
-  def promote(fs: FileSystem, path: String): Unit = {
-    fs.delete(aside(path), true)
-    rename(fs, new Path(path), aside(path))
-    rename(fs, new Path(tmp(path)), new Path(path))
-    fs.delete(aside(path), true)
-  }
-
-  /** Heal a swap a crash tore (see the object doc); returns the
-    * directory's file system. Runs on entry to every reader and writer.
-    */
-  def heal(spark: SparkSession, path: String): FileSystem = {
-    val live = new Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = new Path(tmp(path))
-    if (!fs.exists(live) && fs.exists(staged)) rename(fs, staged, live)
-    if (fs.exists(live)) {
-      fs.delete(aside(path), true)
-      fs.delete(staged, true)
-    } else if (fs.exists(aside(path))) rename(fs, aside(path), live)
-    fs
-  }
-
-  /** `FileSystem.rename` signals failure by returning false on several
-    * implementations (HDFS semantics), not by throwing; an unchecked
-    * rename would let a swap go on to delete the aside with the directory
-    * left in the aside state. Throwing stops the swap at a point [[heal]]
-    * recovers from.
-    */
-  def rename(fs: FileSystem, src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(
-        s"staged swap: rename $src -> $dst returned false")
+  private[graft] def stamped(fs: FileSystem, path: String): Option[Int] =
+    FsUtil.readString(fs, new Path(path, Sidecar)).flatMap(
+      "\"buckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(_).map(_.group(1).toInt))
 }

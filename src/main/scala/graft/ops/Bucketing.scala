@@ -140,9 +140,10 @@ object Bucketing {
     * the whole directory on the Z curve so the box-pruning the layout was
     * chosen for keeps working. One read + one shuffle (the same shuffle
     * any layout write pays); file count is sized from the directory's
-    * actual bytes. Swap is the staged-rename protocol of
-    * `Sketches.maintain` (single-writer; readers retry on transient
-    * missing-path during the rename pair).
+    * actual bytes. The rewrite replaces the directory through
+    * [[StagedSwap]] (staged at `path + "__zcompact"`, the live layout
+    * aside at `path + "__old"`, healed first; single-writer; readers
+    * retry on transient missing-path during the rename pair).
     *
     * Returns (data files before, data files after).
     */
@@ -152,12 +153,9 @@ object Bucketing {
     import org.apache.hadoop.fs.Path
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(path + "__old")
-    // crash recovery: a death inside the rename pair leaves only __old —
-    // the sole copy of the facts; restore before reading
-    if (!fs.exists(p) && fs.exists(old)) {
-      require(fs.rename(old, p), s"could not restore crashed layout $path")
-    }
+    val swap = StagedSwap.Stages(p, new Path(path + "__zcompact"),
+      new Path(path + "__old"))
+    StagedSwap.heal(fs, swap)
     def dataFiles(dir: Path) = fs.listStatus(dir).filter { st =>
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
@@ -166,19 +164,9 @@ object Bucketing {
     val before = files.length
     val parts = math.max(1,
       math.ceil(files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-    val staged = new Path(path + "__zcompact_" +
-      java.util.UUID.randomUUID().toString.take(8))
-    try {
-      writeZOrdered(spark.read.parquet(path), staged.toString, zCols, bits,
-        parts, options)
-      if (fs.exists(old)) fs.delete(old, true)
-      require(fs.rename(p, old), s"could not stage aside $path")
-      require(fs.rename(staged, p), s"could not swap compacted layout into $path")
-      fs.delete(old, true)
-    } finally {
-      // a failed rewrite must not accumulate orphan staging dirs
-      if (fs.exists(staged)) fs.delete(staged, true)
-    }
+    writeZOrdered(spark.read.parquet(path), swap.staged.toString, zCols, bits,
+      parts, options)
+    StagedSwap.promote(fs, swap)
     (before, dataFiles(p).length)
   }
 

@@ -498,65 +498,30 @@ object CurationFlow {
   }
 
   /** The streaming cursor LEDGER: one record (batchId, startCursor,
-    * endCursor) under `dir/_cursor`, staged-rename swapped. A replayed
-    * foreachBatch id reuses its recorded START cursor (never
+    * endCursor) under `dir/_cursor`, replaced through
+    * [[StagedSwap.writeRecord]] and healed by [[StagedSwap.readRecord]]. A
+    * replayed foreachBatch id reuses its recorded START cursor (never
     * double-advancing); a fresh batch starts at the recorded END.
-    * Crash recovery: the swap writes `_cursor.tmp` FULLY before deleting
-    * the live record, so a read that finds only a parseable tmp promotes
-    * it (the interrupted-swap window); a live record that does not parse
-    * is refused loudly rather than guessed at.
     */
   def readLedger(spark: org.apache.spark.sql.SparkSession,
                  dir: String): Option[(Long, Long, Long)] = {
     val fin = new org.apache.hadoop.fs.Path(dir, "_cursor")
-    val tmp = new org.apache.hadoop.fs.Path(dir, "_cursor.tmp")
-    val fs = fin.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parse(p: org.apache.hadoop.fs.Path): Option[(Long, Long, Long)] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val line = try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
-        line.split(",") match {
-          case Array(b, s, e) =>
-            try Some((b.toLong, s.toLong, e.toLong))
-            catch { case _: NumberFormatException => None }
-          case _ => None
-        }
+    StagedSwap.readRecord(
+      fin.getFileSystem(spark.sparkContext.hadoopConfiguration), fin) {
+      _.trim.split(",") match {
+        case Array(b, s, e) =>
+          scala.util.Try((b.toLong, s.toLong, e.toLong)).toOption
+        case _ => None
       }
-    parse(fin) match {
-      case some @ Some(_) => some
-      case None if fs.exists(fin) =>
-        throw new java.io.IOException(s"corrupt cursor ledger: $fin")
-      case None =>
-        parse(tmp) match {
-          case some @ Some(_) =>
-            // interrupted swap: tmp was complete (the live record is only
-            // ever deleted AFTER tmp closes) — promote it
-            if (!fs.rename(tmp, fin))
-              throw new java.io.IOException(
-                s"ledger recovery rename failed: $tmp -> $fin")
-            some
-          case None => None // no ledger yet (torn tmp without a live
-          // record can only be the very first write — nothing committed)
-        }
     }
   }
 
-  /** Write the ledger record (tmp + checked rename — the band-index swap
-    * discipline).
-    */
+  /** Write the ledger record. */
   def writeLedger(spark: org.apache.spark.sql.SparkSession, dir: String,
                   batchId: Long, start: Long, end: Long): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val fin = new org.apache.hadoop.fs.Path(dir, "_cursor")
-    val tmp = new org.apache.hadoop.fs.Path(dir, "_cursor.tmp")
-    val fs = fin.getFileSystem(conf)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    FsUtil.writeBytes(fs, tmp, s"$batchId,$start,$end".getBytes("UTF-8"))
-    if (fs.exists(fin) && !fs.delete(fin, false))
-      throw new java.io.IOException(s"ledger delete failed: $fin")
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"ledger rename failed: $tmp -> $fin")
+    StagedSwap.writeRecord(
+      fin.getFileSystem(spark.sparkContext.hadoopConfiguration), fin,
+      s"$batchId,$start,$end")
   }
 }

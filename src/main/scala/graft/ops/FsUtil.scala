@@ -1,5 +1,6 @@
 package graft.ops
 
+import java.io.FileNotFoundException
 import java.nio.file.{FileVisitResult, Files, Path => JPath, Paths, SimpleFileVisitor}
 import java.nio.file.attribute.BasicFileAttributes
 
@@ -24,14 +25,9 @@ object FsUtil {
     * (Bench/Verify/Dev/PlanCheck, the test base, the profiling tools):
     * [[NioLocalFileSystem]] — the `file`-scheme filesystem whose
     * `setPermission` is java.nio instead of a forked `chmod` shell
-    * (~8 ms per created file with libhadoop absent; see the class
-    * doc). `SPARK_GRAFT_STOCK_LOCALFS=1` restores the stock class for
-    * A/B measurement.
+    * (~8 ms per created file with libhadoop absent; see the class doc).
     */
-  def localFsImpl: String =
-    if (sys.env.get("SPARK_GRAFT_STOCK_LOCALFS").contains("1"))
-      "org.apache.hadoop.fs.LocalFileSystem"
-    else classOf[NioLocalFileSystem].getName
+  def localFsImpl: String = classOf[NioLocalFileSystem].getName
 
   /** Copy the directory tree (or single file) at `src` to the
     * NONEXISTENT path `dst` — the `FileUtil.copy` case where the
@@ -85,4 +81,15 @@ object FsUtil {
       try out.write(bytes) finally out.close()
     }
   }
+
+  /** The UTF-8 text of the file at `p`, or `None` when there is none: one
+    * open, no existence probe (the sidecar readers run on every store and
+    * flow entry). `readAllBytes` loops to EOF, so a short first read
+    * cannot truncate a record.
+    */
+  def readString(fs: FileSystem, p: Path): Option[String] =
+    try {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    } catch { case _: FileNotFoundException => None }
 }

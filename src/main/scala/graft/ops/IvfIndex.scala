@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -721,65 +722,64 @@ object IvfIndex {
     if (lane.isEmpty) "_maintain_ledger" else s"_maintain_ledger_$lane"
 
   /** The maintain batch ledger (`_maintain_ledger`, per lane): the last
-    * APPLIED ledgered batch id, tmp+checked-rename like the flow
-    * cursors. A batch id at or below the recorded one is already fully
-    * in the stores and must not mutate again.
+    * APPLIED ledgered batch id, a [[StagedSwap.writeRecord]] record like
+    * the flow cursors. A batch id at or below the recorded one is already
+    * fully in the stores and must not mutate again.
     */
-  private def readMaintainLedger(spark: SparkSession, path: String,
-                                 lane: String = ""): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path, ledgerName(lane))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val line = try scala.io.Source.fromInputStream(in).mkString.trim
-      finally in.close()
-      try Some(line.toLong)
-      catch { case _: NumberFormatException =>
-        throw new java.io.IOException(s"corrupt maintain ledger $p: $line") }
+  private[graft] def readMaintainLedger(fs: FileSystem, path: String,
+                                        lane: String): Option[Long] =
+    StagedSwap.readRecord(fs, new Path(path, ledgerName(lane)))(
+      s => scala.util.Try(s.trim.toLong).toOption)
+
+  private[graft] def writeMaintainLedger(fs: FileSystem, path: String,
+                                         id: Long, lane: String): Unit =
+    StagedSwap.writeRecord(fs, new Path(path, ledgerName(lane)), id.toString)
+
+  /** The drift sidecar (`_graft_maintain.json`): the maintained baseline
+    * cosine and the consecutive-drift streak, a [[StagedSwap.writeRecord]]
+    * record.
+    */
+  private[graft] def readMaintainSidecar(
+      fs: FileSystem, path: String): Option[(Double, Long)] =
+    StagedSwap.readRecord(fs, new Path(path, MaintainSidecar)) { body =>
+      """"baselineCos"\s*:\s*(-?[0-9.eE+-]+)""".r.findFirstMatchIn(body)
+        .map { m =>
+          // pre-streak sidecars read streak 0 (stamped by earlier rounds)
+          val s = """"driftStreak"\s*:\s*([0-9]+)""".r.findFirstMatchIn(body)
+            .map(_.group(1).toLong).getOrElse(0L)
+          (m.group(1).toDouble, s)
+        }
     }
-  }
 
-  private def writeMaintainLedger(spark: SparkSession, path: String,
-                                  id: Long, lane: String = ""): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fin = new org.apache.hadoop.fs.Path(path, ledgerName(lane))
-    val tmp = new org.apache.hadoop.fs.Path(path, ledgerName(lane) + ".tmp")
-    val fs = fin.getFileSystem(conf)
-    FsUtil.writeBytes(fs, tmp, id.toString.getBytes("UTF-8"))
-    if (fs.exists(fin) && !fs.delete(fin, false))
-      throw new java.io.IOException(s"maintain ledger delete failed: $fin")
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"maintain ledger rename failed: $fin")
-  }
+  private[graft] def writeMaintainSidecar(fs: FileSystem, path: String,
+                                          baseline: Double,
+                                          streak: Long): Unit =
+    StagedSwap.writeRecord(fs, new Path(path, MaintainSidecar),
+      s"""{"baselineCos":$baseline,"driftStreak":$streak}""")
 
-  /** Copy every lane's maintain ledger (`_maintain_ledger*`) into a
-    * staged swap tmp — the new index CONTAINS every ledgered batch from
-    * every lane, so forgetting any one would let a crash-replay
-    * double-insert it.
+  private val MaintainSidecar = "_graft_maintain.json"
+
+  /** Carry every lane's maintain ledger (`_maintain_ledger*`, a tmp-only
+    * one healed first) into a staged swap tmp — the new index CONTAINS
+    * every ledgered batch from every lane, so forgetting any one would
+    * let a crash-replay double-insert it.
     */
-  private def carryMaintainLedgers(spark: SparkSession, path: String,
-                                   tmp: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(path, "_maintain_ledger*")))
+  private def carryMaintainLedgers(fs: FileSystem, path: String,
+                                   tmp: String): Unit =
+    Option(fs.globStatus(new Path(path, "_maintain_ledger*")))
       .getOrElse(Array.empty)
-      .filterNot(_.getPath.getName.endsWith(".tmp"))
-      .foreach { st =>
-        // FsUtil.copyTree: local-scheme copies skip the per-file
-        // permission fork FileUtil.copy pays (r20 opt, ~20-50 ms/file)
-        FsUtil.copyTree(fs, st.getPath,
-          new org.apache.hadoop.fs.Path(tmp, st.getPath.getName), conf)
-      }
-  }
+      .map(_.getPath.getName.stripSuffix(".tmp")
+        .stripPrefix("_maintain_ledger").stripPrefix("_"))
+      .distinct
+      .foreach(lane => readMaintainLedger(fs, path, lane)
+        .foreach(writeMaintainLedger(fs, tmp, _, lane)))
 
   /** Remove every file a previous (possibly torn) attempt of ledgered
     * batch `id` left behind: the deterministic `maint-[<lane>-]b<id>-*`
     * part files under assignments and the batch's occupancy delta file.
     */
   private def wipeBatchFootprint(spark: SparkSession, path: String,
-                                 id: Long, lane: String = ""): Unit = {
+                                 id: Long, lane: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     val tag = laneTag(lane)
@@ -802,7 +802,7 @@ object IvfIndex {
     */
   private def writeOccupancyDelta(spark: SparkSession, path: String,
                                   id: Long, counts: DataFrame,
-                                  lane: String = ""): Unit = {
+                                  lane: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     val tag = laneTag(lane)
@@ -815,8 +815,7 @@ object IvfIndex {
         s"occupancy delta write produced no parquet file under $tmpDir"))
     val fin = new org.apache.hadoop.fs.Path(
       s"$path/occupancy/delta-${tag}b$id.parquet")
-    if (!fs.rename(part, fin))
-      throw new java.io.IOException(s"occupancy delta rename failed: $fin")
+    StagedSwap.rename(fs, part, fin)
     fs.delete(tmpDir, true)
   }
 
@@ -827,7 +826,7 @@ object IvfIndex {
     */
   private def stagedAssignAppend(spark: SparkSession, path: String,
                                  assigned: DataFrame, id: Long,
-                                 lane: String = ""): Unit = {
+                                 lane: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     val tag = laneTag(lane)
@@ -849,8 +848,7 @@ object IvfIndex {
       fs.mkdirs(destDir)
       val dest = new org.apache.hadoop.fs.Path(destDir,
         s"maint-${tag}b$id-$k.parquet")
-      if (!fs.rename(src, dest))
-        throw new java.io.IOException(s"maintain append move failed: $dest")
+      StagedSwap.rename(fs, src, dest)
     }
     fs.delete(pendingPath, true)
   }
@@ -961,55 +959,14 @@ object IvfIndex {
       .head()
     val appended = stats.getLong(0)
     val meanCos = if (appended == 0) 1.0 else stats.getDouble(1)
-    val mf = new org.apache.hadoop.fs.Path(path, "_graft_maintain.json")
-    val mfTmp = new org.apache.hadoop.fs.Path(path,
-      "_graft_maintain.json.tmp")
-    def writeSidecar(b: Double, streak: Long): Unit = {
-      FsUtil.writeBytes(fs, mfTmp,
-        s"""{"baselineCos":$b,"driftStreak":$streak}""".getBytes("UTF-8"))
-      // rename refuses an existing destination on local-FS semantics;
-      // the delete→rename window is healed by the tmp promotion below
-      if (fs.exists(mf)) fs.delete(mf, false)
-      if (!fs.rename(mfTmp, mf))
-        throw new java.io.IOException(s"maintain sidecar rename failed: $mf")
+    // no sidecar yet: the first non-empty batch stamps its cosine as the
+    // baseline (an empty batch reads 1.0 and stamps nothing)
+    val (baseline, prevStreak) = readMaintainSidecar(fs, path).getOrElse {
+      if (appended > 0) writeMaintainSidecar(fs, path, meanCos, 0L)
+      (meanCos, 0L)
     }
-    def parseSidecar(p: org.apache.hadoop.fs.Path): Option[(Double, Long)] = {
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in).mkString
-      finally in.close()
-      """"baselineCos"\s*:\s*(-?[0-9.eE+-]+)""".r
-        .findFirstMatchIn(body)
-        .map(_.group(1).toDouble)
-        .map { b =>
-          // pre-streak sidecars read streak 0 (stamped by earlier rounds)
-          val s = """"driftStreak"\s*:\s*([0-9]+)""".r.findFirstMatchIn(body)
-            .map(_.group(1).toLong).getOrElse(0L)
-          (b, s)
-        }
-    }
-    // heal a crash between the delete and the rename of a streak update —
-    // but VALIDATE first: fs.create→write→close is not atomic, so a crash
-    // mid-write on the FIRST stamp (live file never existed) leaves a
-    // partial/empty tmp; promoting that blindly would make every later
-    // maintainAppend throw "corrupt maintain sidecar" until manual
-    // cleanup. An unparsable tmp is deleted and the fresh-stamp path
-    // below re-creates the sidecar from this batch's stats.
-    if (!fs.exists(mf) && fs.exists(mfTmp)) {
-      if (parseSidecar(mfTmp).isDefined) {
-        if (!fs.rename(mfTmp, mf))
-          throw new java.io.IOException(s"maintain sidecar recovery failed: $mf")
-      } else fs.delete(mfTmp, false)
-    }
-    val (baseline, prevStreak) =
-      if (fs.exists(mf))
-        parseSidecar(mf).getOrElse(throw new java.io.IOException(
-          s"corrupt maintain sidecar $mf"))
-      else if (appended > 0) {
-        writeSidecar(meanCos, 0L)
-        (meanCos, 0L)
-      } else (1.0, 0L)
     val applied = batchId >= 0 &&
-      readMaintainLedger(spark, path, lane).exists(_ >= batchId)
+      readMaintainLedger(fs, path, lane).exists(_ >= batchId)
     if (appended > 0 && !applied) {
       if (batchId >= 0) {
         // exactly-once ledgered mutation; see the scaladoc contract
@@ -1018,7 +975,7 @@ object IvfIndex {
           assigned.groupBy(col("cell").cast("long").as("cell"))
             .agg(count(lit(1)).as("cnt")), lane)
         stagedAssignAppend(spark, path, assigned, batchId, lane)
-        writeMaintainLedger(spark, path, batchId, lane)
+        writeMaintainLedger(fs, path, batchId, lane)
       } else {
         // legacy one-shot path: delta FIRST (a torn batch over-counts
         // transiently; delete occupancy/ to re-seed), appends second —
@@ -1063,8 +1020,8 @@ object IvfIndex {
     // occupancy ledger's torn-batch convention).
     val drifted = appended > 0 && meanCos < baseline - driftMargin
     val streak = if (drifted) prevStreak + 1 else 0L
-    if (appended > 0 && streak != prevStreak && fs.exists(mf))
-      writeSidecar(baseline, streak)
+    if (appended > 0 && streak != prevStreak)
+      writeMaintainSidecar(fs, path, baseline, streak)
     val action =
       if (drifted && (hot == 0 || streak >= 2)) "retrain"
       else if (hot > 0) "refine"
@@ -1141,7 +1098,7 @@ object IvfIndex {
     val boot = path + ".boot"
     fs.delete(new org.apache.hadoop.fs.Path(boot), true)
     save(build(batch, nlist, iters, seed), boot)
-    writeMaintainLedger(spark, boot, batchId, lane)
+    writeMaintainLedger(fs, boot, batchId, lane)
     // destination guard (r19 ADVICE): on HDFS, rename onto an EXISTING
     // dir nests boot INSIDE it — a live path with no top-level
     // centroids that every caller's `centroids`-absence probe re-
@@ -1157,9 +1114,7 @@ object IvfIndex {
             "bootstrap must run under the index's single-writer lock")
       fs.delete(dest, true)
     }
-    if (!fs.rename(new org.apache.hadoop.fs.Path(boot), dest))
-      throw new java.io.IOException(
-        s"serving bootstrap promote failed: $boot -> $path")
+    StagedSwap.rename(fs, new org.apache.hadoop.fs.Path(boot), dest)
   }
 
   /** Apply the `refine` action to a PERSISTED index: load, split the
@@ -1242,18 +1197,14 @@ object IvfIndex {
     model.assignments.groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("cnt"))
       .write.mode("overwrite").parquet(s"$tmp/occupancy")
-    // carry the maintain batch ledgers (every lane) across the swap:
-    // the new index CONTAINS every ledgered batch, so forgetting one
-    // would let a crash-replay double-insert it
-    carryMaintainLedgers(spark, path, tmp)
-    // the drift baseline survives a refine/purge (see the scaladoc — a
-    // dropped baseline re-stamps on the NEXT batch, which under
-    // sustained drift poisons the signal the retrain verdict needs)
-    val mfile = new org.apache.hadoop.fs.Path(path, "_graft_maintain.json")
-    if (fs.exists(mfile))
-      FsUtil.copyTree(fs, mfile,
-        new org.apache.hadoop.fs.Path(tmp, "_graft_maintain.json"),
-        spark.sparkContext.hadoopConfiguration)
+    // the maintain ledgers and the drift baseline survive a refine/purge
+    // (see the scaladoc — a dropped baseline re-stamps on the NEXT batch,
+    // which under sustained drift poisons the signal the retrain verdict
+    // needs)
+    carryMaintainLedgers(fs, path, tmp)
+    readMaintainSidecar(fs, path).foreach { case (b, streak) =>
+      writeMaintainSidecar(fs, tmp, b, streak)
+    }
     StagedSwap.promote(fs, path)
   }
 
@@ -1413,7 +1364,7 @@ object IvfIndex {
     rebuilt.assignments.groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("cnt"))
       .write.mode("overwrite").parquet(s"$tmp/occupancy")
-    carryMaintainLedgers(spark, path, tmp)
+    carryMaintainLedgers(fs, path, tmp)
     StagedSwap.promote(fs, path)
     org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(emb)
   }
@@ -1582,38 +1533,34 @@ object IvfIndex {
     * compaction cost is proportional to the appended (hot) region, never
     * the corpus. Each hot cell is rewritten into
     * ceil(bytes / targetFileBytes) files via a per-cell read → coalesce →
-    * write into a sibling staging directory, then swapped in (delete old
-    * files, move new in). The swap is not transactional — run it in the
-    * same offline maintenance window as [[refine]]/retrain (the standard
-    * parquet-compaction contract); a concurrent reader mid-swap can see a
-    * partial cell. Membership, search results, and the probed-cell
+    * write into a sibling staging directory, then swapped in through
+    * [[StagedSwap]] (healed on the next call). The swap is not
+    * transactional — run it in the same offline maintenance window as
+    * [[refine]]/retrain (the standard parquet-compaction contract); a
+    * concurrent reader mid-swap can see a partial cell. Membership, search results, and the probed-cell
     * partition pruning are unchanged (spec-pinned in IvfIndexSpec).
     *
     * Returns (cells compacted, files before, files after).
     */
   def compact(spark: SparkSession, path: String, maxFilesPerCell: Int = 8,
               targetFileBytes: Long = 128L << 20): (Int, Int, Int) = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(s"$path/assignments")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dataFiles(dir: Path) = fs.listStatus(dir).filter { st =>
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
-    // crash recovery FIRST: a death inside a prior swap's rename pair
-    // leaves only the aside copy (.compact_old_cell=N) — restore it
-    // before compacting (pre-r9 the swap deleted old files before the
-    // new ones were in place, so that window LOST the cell's rows)
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(".compact_old_"))
-      .foreach { aside =>
-        val cellName = aside.getPath.getName.stripPrefix(".compact_old_")
-        val live = new Path(root, cellName)
-        if (!fs.exists(live)) {
-          require(fs.rename(aside.getPath, live),
-            s"could not restore crashed cell $cellName")
-        } else fs.delete(aside.getPath, true) // stale duplicate
-      }
+    // each cell swaps on its own, staged at .compact_<cell> with the live
+    // cell aside at .compact_old_<cell>
+    def stages(cell: String) = StagedSwap.Stages(new Path(root, cell),
+      new Path(root, s".compact_$cell"), new Path(root, s".compact_old_$cell"))
+    // heal FIRST: a crash inside a prior swap can leave the aside as the
+    // cell's only copy (pre-r9 the swap deleted old files before the new
+    // ones were in place, so that window LOST the cell's rows)
+    fs.listStatus(root).map(_.getPath.getName)
+      .filter(_.startsWith(".compact_"))
+      .map(n => n.stripPrefix(".compact_").stripPrefix("old_")).distinct
+      .foreach(cell => StagedSwap.heal(fs, stages(cell)))
     // per-cell layout lists cell= dirs; the bucketed layout's cbkt= dirs
     // compact identically (read dir, coalesce, whole-dir rename swap)
     val cells = fs.listStatus(root)
@@ -1628,35 +1575,26 @@ object IvfIndex {
       else {
         val bytes = files.map(_.getLen).sum
         val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+        val s = stages(c.getPath.getName)
         // read THIS cell's rows only (directory read — the cell column is
         // the directory name, not in the files) and rewrite coalesced;
-        // coalesce not repartition: a narrow merge, no shuffle
-        val staged = new Path(c.getPath.getParent, s".compact_${c.getPath.getName}")
-        val aside = new Path(c.getPath.getParent, s".compact_old_${c.getPath.getName}")
-        try {
-          // bucketed dirs must keep cell-sorted files: the layout's
-          // row-group min/max cell skipping depends on it (r14 review —
-          // a plain coalesce interleaves cell ranges across row groups)
-          val rows = spark.read.parquet(c.getPath.toString).coalesce(nOut)
-          val resorted =
-            if (c.getPath.getName.startsWith("cbkt="))
-              rows.sortWithinPartitions("cell")
-            else rows
-          resorted.write.mode("overwrite").parquet(staged.toString)
-          val nNew = dataFiles(staged).length
-          // whole-directory rename-aside swap: the cell is never a
-          // mixture of old and new files, and the aside copy survives a
-          // crash between the renames (recovered on the next call; a
-          // reader in the window sees the cell missing — retry contract,
-          // same as Sketches.maintain)
-          require(fs.rename(c.getPath, aside), s"could not stage aside ${c.getPath}")
-          require(fs.rename(staged, c.getPath), s"could not swap ${c.getPath}")
-          fs.delete(aside, true)
-          done += 1
-          after += nNew
-        } finally {
-          if (fs.exists(staged)) fs.delete(staged, true)
-        }
+        // coalesce not repartition: a narrow merge, no shuffle. Bucketed
+        // dirs must keep cell-sorted files: the layout's row-group
+        // min/max cell skipping depends on it (r14 review — a plain
+        // coalesce interleaves cell ranges across row groups)
+        val rows = spark.read.parquet(c.getPath.toString).coalesce(nOut)
+        val resorted =
+          if (c.getPath.getName.startsWith("cbkt="))
+            rows.sortWithinPartitions("cell")
+          else rows
+        resorted.write.mode("overwrite").parquet(s.staged.toString)
+        val nNew = dataFiles(s.staged).length
+        // whole-directory swap: the cell is never a mixture of old and
+        // new files (a reader in the rename window sees the cell missing
+        // — retry contract, same as Sketches.maintain)
+        StagedSwap.promote(fs, s)
+        done += 1
+        after += nNew
       }
     }
     (done, before, after)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -91,13 +92,11 @@ object Sketches {
     * O(delta + summary) — the whole point; re-aggregating history to
     * absorb a day's ingest is the anti-pattern this replaces.
     *
-    * Swap protocol (SINGLE-WRITER contract — concurrent maintainers must
-    * be serialized upstream, e.g. by the streaming foreachBatch loop):
-    * write the merged summary to a unique staging dir, rename the live
-    * summary aside to `path + "__old"`, rename staging in, delete the
-    * aside. A crash can strand `__old` (live summary intact — delete the
-    * orphan) or, in the one non-atomic window, leave only `__old` (recover
-    * by renaming it back). A reader never sees a HALF-WRITTEN summary;
+    * The merged summary replaces the live one through [[StagedSwap]]
+    * (staged at `path + "__staging"`, the live summary aside at
+    * `path + "__old"`), healed first. SINGLE-WRITER contract: concurrent
+    * maintainers must be serialized upstream, e.g. by the streaming
+    * foreachBatch loop. A reader never sees a HALF-WRITTEN summary;
     * during the rename window it can transiently see the path missing, so
     * retry-on-missing is the reader contract on stores without atomic
     * rename pairs.
@@ -106,35 +105,21 @@ object Sketches {
                keys: Seq[String], valueCol: String, distinctCol: String,
                lgK: Int = 12, hist: Option[HistSpec] = None,
                kllK: Option[Int] = None): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    // crash recovery FIRST: a death inside the rename pair leaves only
-    // __old — it is the sole surviving copy of the accumulated summary,
-    // so restore it before reading (deleting it here, as pre-r9 code did,
-    // would silently reset the summary to the current delta)
-    if (!fs.exists(p) && fs.exists(old)) {
-      require(fs.rename(old, p), s"could not restore crashed summary $path")
-    }
+    val swap = StagedSwap.Stages(p, new Path(path + "__staging"),
+      new Path(path + "__old"))
+    // heal FIRST: a crash in the rename window leaves __old as the sole
+    // copy of the accumulated summary, which must be restored before
+    // reading (deleting it, as pre-r9 code did, would silently reset the
+    // summary to the current delta)
+    StagedSwap.heal(fs, swap)
     val delta = summarize(batch, keys, valueCol, distinctCol, lgK, hist, kllK)
     val merged =
       if (fs.exists(p)) merge(spark.read.parquet(path).unionByName(delta), keys)
       else merge(delta, keys)
-    val tmp = new org.apache.hadoop.fs.Path(
-      path + "__staging_" + java.util.UUID.randomUUID().toString.take(8))
-    try {
-      merged.write.mode("overwrite").parquet(tmp.toString)
-      // any __old here is a stale duplicate (p exists past recovery above)
-      if (fs.exists(old)) fs.delete(old, true)
-      if (fs.exists(p)) {
-        require(fs.rename(p, old), s"could not stage aside live summary $path")
-      }
-      require(fs.rename(tmp, p), s"could not swap staged summary into $path")
-      if (fs.exists(old)) fs.delete(old, true)
-    } finally {
-      // a failed write/swap must not litter staging dirs next to the data
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-    }
+    merged.write.mode("overwrite").parquet(swap.staged.toString)
+    StagedSwap.promote(fs, swap)
   }
 
   /** Streaming twin of [[maintain]]: fold each micro-batch of a stream

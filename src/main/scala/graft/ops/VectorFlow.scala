@@ -512,7 +512,6 @@ object VectorFlow {
                  params: Params = Params()): LateStaged = {
     val spark = late.sparkSession
     val withPrio = keepOrder(late, 0L)
-    val key = struct(col("prio"), col("vec_id"))
 
     // gate (decide's stage 1, sidecar-frozen dim authoritative; lazy
     // head probe — the sidecar almost always exists for a late feed)
@@ -842,64 +841,62 @@ object VectorFlow {
   private def freezeParams(spark: org.apache.spark.sql.SparkSession,
                            dir: String, p: Params,
                            inferred: => Option[Int],
-                           stamp: Boolean): Option[Int] = {
-    val f = new org.apache.hadoop.fs.Path(dir, "_graft_vecflow.json")
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(f)) {
-      // stamp only with dimension EVIDENCE (explicit param or a non-null
-      // row): an empty or all-null first batch must not freeze dim=1
-      val dOpt = if (p.dim > 0) Some(p.dim) else inferred
-      if (stamp && dOpt.isDefined) {
-        val mine = s"""{"bits":${p.bits},"seed":${p.seed},""" +
-          s""""dim":${dOpt.get},"families":${p.families},""" +
-          s""""buckets":${p.buckets},"digestv":$DigestVersion}"""
-        // tmp + checked rename (the cursor ledger's swap discipline,
-        // r15 ADVICE): an in-place create torn by a crash left a
-        // corrupt sidecar every later entry refused with no recovery
-        // path; a torn TMP is invisible — the next decide re-stamps
-        val tmp = new org.apache.hadoop.fs.Path(dir,
-          "_graft_vecflow.json.tmp")
-        FsUtil.writeBytes(fs, tmp, mine.getBytes("UTF-8"))
-        if (!fs.rename(tmp, f))
-          throw new java.io.IOException(
-            s"params sidecar rename failed: $tmp -> $f")
-      }
-      dOpt
-    } else {
-      val in = fs.open(f)
-      val body = try {
-        val buf = new java.io.ByteArrayOutputStream(256)
-        val b = new Array[Byte](256)
-        var n = in.read(b)
-        while (n >= 0) { buf.write(b, 0, n); n = in.read(b) }
-        buf.toString("UTF-8")
-      } finally in.close()
-      def fieldOpt(k: String): Option[Long] =
+                           stamp: Boolean): Option[Int] =
+    readFrozen(spark, dir) match {
+      case None =>
+        // stamp only with dimension EVIDENCE (explicit param or a non-null
+        // row): an empty or all-null first batch must not freeze dim=1
+        val dOpt = if (p.dim > 0) Some(p.dim) else inferred
+        if (stamp) dOpt.foreach { d =>
+          val f = new org.apache.hadoop.fs.Path(dir, FrozenSidecar)
+          StagedSwap.writeRecord(
+            f.getFileSystem(spark.sparkContext.hadoopConfiguration), f,
+            s"""{"bits":${p.bits},"seed":${p.seed},"dim":$d,""" +
+              s""""families":${p.families},"buckets":${p.buckets},""" +
+              s""""digestv":$DigestVersion}""")
+        }
+        dOpt
+      case Some(frozen) =>
+        // digest-format version gate: a store stamped before r16 keyed
+        // its digest index on Spark's float-to-string rendering; probing
+        // it with binary-bit digests would silently miss every
+        // historical exact duplicate — refuse loudly instead
+        require(frozen("digestv") == DigestVersion,
+          s"$dir was built with digest format v${frozen("digestv")} " +
+            s"(pre-binary-digest); this build writes v$DigestVersion — " +
+            "rebuild the corpus into a fresh dir (the digest index keys " +
+            "are incompatible)")
+        require(frozen("bits") == p.bits && frozen("seed") == p.seed &&
+          frozen("families") == p.families &&
+          frozen("buckets") == p.buckets &&
+          (p.dim <= 0 || p.dim.toLong == frozen("dim")),
+          s"$dir is a VectorFlow corpus frozen at $frozen but the caller " +
+            s"passed bits=${p.bits} seed=${p.seed} dim=${p.dim} " +
+            s"families=${p.families} buckets=${p.buckets} — these are " +
+            "index parameters, frozen at creation")
+        // the stamped dim is AUTHORITATIVE for a dim-delegating caller: a
+        // batch inferring a different width gets its rows invalidated by
+        // the gate instead of silently banding in a different space
+        Some(frozen("dim").toInt)
+    }
+
+  private val FrozenSidecar = "_graft_vecflow.json"
+
+  /** The frozen-params sidecar's fields through
+    * [[StagedSwap.readRecord]]: every frozen field, plus `digestv` (1 on a
+    * sidecar stamped before the field existed). A sidecar missing a
+    * frozen field is corrupt and refused.
+    */
+  private def readFrozen(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): Option[Map[String, Long]] = {
+    val f = new org.apache.hadoop.fs.Path(dir, FrozenSidecar)
+    StagedSwap.readRecord(
+      f.getFileSystem(spark.sparkContext.hadoopConfiguration), f) { body =>
+      val keys = Seq("bits", "seed", "dim", "families", "buckets")
+      val got = (keys :+ "digestv").flatMap(k =>
         (s""""$k"\\s*:\\s*(-?\\d+)""").r.findFirstMatchIn(body)
-          .map(_.group(1).toLong)
-      def field(k: String): Long = fieldOpt(k)
-        .getOrElse(throw new java.io.IOException(
-          s"corrupt VectorFlow params sidecar $f: $body"))
-      // digest-format version gate: a store stamped before r16 keyed
-      // its digest index on Spark's float-to-string rendering; probing
-      // it with binary-bit digests would silently miss every historical
-      // exact duplicate — refuse loudly instead
-      require(fieldOpt("digestv").getOrElse(1L) == DigestVersion,
-        s"$dir was built with digest format v" +
-          s"${fieldOpt("digestv").getOrElse(1L)} (pre-binary-digest); " +
-          s"this build writes v$DigestVersion — rebuild the corpus into " +
-          "a fresh dir (the digest index keys are incompatible)")
-      require(field("bits") == p.bits && field("seed") == p.seed &&
-        field("families") == p.families && field("buckets") == p.buckets &&
-        (p.dim <= 0 || p.dim.toLong == field("dim")),
-        s"$dir is a VectorFlow corpus frozen at $body but the caller " +
-          s"passed bits=${p.bits} seed=${p.seed} dim=${p.dim} " +
-          s"families=${p.families} buckets=${p.buckets} — these are " +
-          "index parameters, frozen at creation")
-      // the stamped dim is AUTHORITATIVE for a dim-delegating caller: a
-      // batch inferring a different width gets its rows invalidated by
-      // the gate instead of silently banding in a different space
-      Some(field("dim").toInt)
+          .map(m => k -> m.group(1).toLong)).toMap
+      if (keys.forall(got.contains)) Some(got.withDefaultValue(1L)) else None
     }
   }
 
@@ -909,18 +906,8 @@ object VectorFlow {
     * dim-mismatched vectors are never stored) without re-running it.
     */
   private[graft] def frozenDim(spark: org.apache.spark.sql.SparkSession,
-                               dir: String): Option[Int] = {
-    val f = new org.apache.hadoop.fs.Path(dir, "_graft_vecflow.json")
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      val body = try scala.io.Source.fromInputStream(in).mkString
-      finally in.close()
-      """"dim"\s*:\s*(-?\d+)""".r.findFirstMatchIn(body)
-        .map(_.group(1).toInt)
-    }
-  }
+                               dir: String): Option[Int] =
+    readFrozen(spark, dir).map(_("dim").toInt)
 
   /** Content digest of the embedding column: md5 over the array's raw
     * IEEE-754 bit image ([[graft.functions.FloatBitsF]] — 4 big-endian

@@ -52,7 +52,9 @@ private[sources] class SoABinBatchWrite(dir: String, schema: StructType)
       case SoABinCommit(files) => files.foreach { case (tmp, fin) =>
         val dst = new Path(fin)
         if (fs.exists(dst)) fs.delete(dst, false)
-        fs.rename(new Path(tmp), dst)
+        // checked: a false return throws, and Spark's abort then drops
+        // the task's tmp files instead of leaving them behind
+        graft.ops.StagedSwap.rename(fs, new Path(tmp), dst)
       }
       case _ =>
     }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TimeMode,
   TimerValues, TTLConfig, ValueState}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType, StringType,
+  StructField, StructType}
 
 /** Per-key state for [[StreamOps.runningMaxPerUserTWS]]: one `ValueState`
   * double (the running max), no TTL, no timers — the minimal
@@ -1166,7 +1167,7 @@ object StreamOps {
       col("prio"))
     graft.ops.CurationFlow.readLedger(spark, vdir) match {
       case Some((bid, _, _)) if bid == id =>
-        val cor = recordedCorrections(spark, outPath, id)
+        val cor = recordedCorrections(spark, outPath, id, CorrCols: _*)
         // fetch-first on the ATTACH side too (r16 ADVICE): an attached
         // id already present in the vector store proves the original
         // attempt's three appends completed (lateCommitParts appends
@@ -1298,7 +1299,8 @@ object StreamOps {
         lit(0L).as("prio"))
     graft.ops.CurationFlow.readLedger(spark, ltdir) match {
       case Some((bid, _, _)) if bid == id =>
-        val cor = recordedCorrectionsWide(spark, outPath, id)
+        val cor = recordedCorrections(spark, outPath, id,
+          CorrCols :+ StructField("n_tok", LongType): _*)
         val attached = cor.filter(col("status") === "attached")
         val attachAll = withPrio
           .join(attached.select("doc_id"), Seq("doc_id"), "left_semi")
@@ -1384,73 +1386,48 @@ object StreamOps {
         buckets, maxBucket, vec, rootsPath, compactEvery, serving) _)
       .start()
 
-  /** [[recordedCorrections]] with the late-TEXT replay's extra columns
-    * ((doc_id, status, n_tok) — the attach reconstruction needs the
-    * recorded token counts; same explicit-schema/absent-path
-    * discipline).
-    */
-  private def recordedCorrectionsWide(
-      spark: org.apache.spark.sql.SparkSession,
-      outPath: String, id: Long): DataFrame = {
-    import org.apache.spark.sql.types._
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val shape = StructType(Seq(StructField("doc_id", LongType),
-      StructField("status", StringType),
-      StructField("n_tok", LongType)))
-    if (!fs.exists(p))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], shape)
-    else spark.read.schema(StructType(shape.fields :+
-        StructField("batch_id", LongType))).parquet(outPath)
-      .filter(col("batch_id") === id)
-      .select("doc_id", "status", "n_tok").distinct()
-  }
-
   /** The replay path's read of a ledger-committed late batch's
-    * correction rows ((doc_id, status) — [[recordedKeptIds]]'s
-    * explicit-schema and absent-path discipline).
+    * correction rows: `cols` ((doc_id, status), plus n_tok for the
+    * late-TEXT replay's attach reconstruction) of batch `id`.
     */
   private def recordedCorrections(spark: org.apache.spark.sql.SparkSession,
-                                  outPath: String, id: Long): DataFrame = {
-    import org.apache.spark.sql.types._
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val shape = StructType(Seq(StructField("doc_id", LongType),
-      StructField("status", StringType)))
-    if (!fs.exists(p))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], shape)
-    else spark.read.schema(StructType(shape.fields :+
-        StructField("batch_id", LongType))).parquet(outPath)
+                                  outPath: String, id: Long,
+                                  cols: StructField*): DataFrame =
+    readOrEmpty(spark, outPath,
+        StructType(cols :+ StructField("batch_id", LongType)))
       .filter(col("batch_id") === id)
-      .select("doc_id", "status").distinct()
-  }
+      .select(cols.map(f => col(f.name)): _*).distinct()
+
+  private val CorrCols = Seq(StructField("doc_id", LongType),
+    StructField("status", StringType))
 
   /** The replay path's read of a ledger-committed batch's kept ids.
     * Guarded for the first-ever-EMPTY-batch crash window (r15 review):
     * an empty batch writes no decisions partition but DOES commit its
-    * ledger, so a replay of batch 0 can find `outPath` absent (or
-    * data-less) — a bare `spark.read.parquet` would fail on
-    * path-not-found / schema inference where the correct answer is "no
-    * kept ids". The explicit schema also fixes the partition column to
-    * LONG (inference reads `batch_id=3` as int).
+    * ledger, so a replay of batch 0 can find `outPath` absent — the
+    * correct answer there is "no kept ids".
     */
   private def recordedKeptIds(spark: org.apache.spark.sql.SparkSession,
                               outPath: String, id: Long,
-                              idCol: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val idField = StructType(Seq(StructField(idCol, LongType)))
-    if (!fs.exists(p))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], idField)
-    else spark.read.schema(StructType(Seq(StructField(idCol, LongType),
+                              idCol: String): DataFrame =
+    readOrEmpty(spark, outPath, StructType(Seq(StructField(idCol, LongType),
         StructField("status", StringType),
-        StructField("batch_id", LongType)))).parquet(outPath)
+        StructField("batch_id", LongType))))
       .filter(col("batch_id") === id && col("status") === "kept")
       .select(idCol).distinct()
+
+  /** The absent-safe explicit-schema parquet read behind the replay and
+    * roots-view readers: no schema inference (a data-less dir reads, and
+    * a `batch_id=3` partition stays LONG where inference reads int), and
+    * a missing dir reads as no rows.
+    */
+  private def readOrEmpty(spark: org.apache.spark.sql.SparkSession,
+                          path: String, shape: StructType): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.schema(shape).parquet(path)
+    else spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), shape)
   }
 
   /** The idempotent per-batch decisions write: one `batch_id=` partition
@@ -1729,7 +1706,7 @@ object StreamOps {
     org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(resolved)
     if (fs.exists(foldDir)) fs.delete(foldDir, true)
     fs.mkdirs(foldDir)
-    renameRootsOrThrow(fs, foldTmp,
+    graft.ops.StagedSwap.rename(fs, foldTmp,
       new org.apache.hadoop.fs.Path(foldDir, "batch_id=-1"))
     plainParts.foreach(fs.delete(_, true))
     corrParts.foreach(fs.delete(_, true))
@@ -1773,9 +1750,9 @@ object StreamOps {
       val tmpComplete = fs.exists(
         new org.apache.hadoop.fs.Path(legacyTmp, "_SUCCESS"))
       if (!fs.exists(p)) {
-        if (tmpComplete) renameRootsOrThrow(fs, legacyTmp, p)
+        if (tmpComplete) graft.ops.StagedSwap.rename(fs, legacyTmp, p)
         else if (fs.exists(legacyAside))
-          renameRootsOrThrow(fs, legacyAside, p)
+          graft.ops.StagedSwap.rename(fs, legacyAside, p)
       }
       if (fs.exists(legacyTmp)) fs.delete(legacyTmp, true)
       if (fs.exists(legacyAside)) fs.delete(legacyAside, true)
@@ -1792,56 +1769,25 @@ object StreamOps {
         new org.apache.hadoop.fs.Path(foldTmp, "_SUCCESS"))
       if (complete && !fs.exists(foldPart)) {
         fs.mkdirs(foldDir)
-        renameRootsOrThrow(fs, foldTmp, foldPart)
+        graft.ops.StagedSwap.rename(fs, foldTmp, foldPart)
       } else fs.delete(foldTmp, true)
     }
   }
 
-  /** `FileSystem.rename` returns FALSE on failure under HDFS semantics
-    * (the band-index swap's lesson, VERDICT r13): throwing converts a
-    * failed swap step into a crash at a recoverable point.
-    */
-  private def renameRootsOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-                                 src: org.apache.hadoop.fs.Path,
-                                 dst: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(
-        s"roots view swap: rename $src -> $dst returned false")
-
-  /** Absent-safe explicit-schema read of the correction sibling
-    * ((doc_id, root_id, seq) + the (feed, batch_id) partition pair —
-    * [[readRootRows]]' discipline).
+  /** The correction sibling's rows ((doc_id, root_id, seq) + the (feed,
+    * batch_id) partition pair).
     */
   private def readCorrRows(spark: org.apache.spark.sql.SparkSession,
-                           path: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val shape = StructType(Seq(StructField("doc_id", LongType),
+                           path: String): DataFrame =
+    readOrEmpty(spark, path, StructType(Seq(StructField("doc_id", LongType),
       StructField("root_id", LongType), StructField("seq", LongType),
-      StructField("feed", StringType), StructField("batch_id", LongType)))
-    if (!fs.exists(p))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], shape)
-    else spark.read.schema(shape).parquet(path)
-  }
+      StructField("feed", StringType), StructField("batch_id", LongType))))
 
-  /** Absent-safe explicit-schema read of a roots dir ((doc_id, root_id,
-    * batch_id) — [[recordedKeptIds]]'s discipline: no schema inference,
-    * a missing dir is an empty view, the partition column pinned LONG).
-    */
+  /** A roots dir's rows ((doc_id, root_id, batch_id)). */
   private def readRootRows(spark: org.apache.spark.sql.SparkSession,
-                           path: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val shape = StructType(Seq(StructField("doc_id", LongType),
-      StructField("root_id", LongType), StructField("batch_id", LongType)))
-    if (!fs.exists(p))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], shape)
-    else spark.read.schema(shape).parquet(path)
-  }
+                           path: String): DataFrame =
+    readOrEmpty(spark, path, StructType(Seq(StructField("doc_id", LongType),
+      StructField("root_id", LongType), StructField("batch_id", LongType))))
 
   /** The CONTINUOUS corpus build as a stream — `q_curation_incremental`'s
     * arrival loop unbounded: each micro-batch of (doc_id, text, n_chars)

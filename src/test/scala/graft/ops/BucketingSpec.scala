@@ -208,6 +208,44 @@ class BucketingSpec extends SparkTestBase {
       s"compacted z layout must skip most of the corpus on a 1% box: decoded $scanned of $n")
   }
 
+  test("compactZOrdered heals a torn swap: a stranded __old is restored, a stale __old is dropped") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val n = 2000L
+    val df = spark.range(n).select(col("id").as("row_id"),
+      pmod(xxhash64(col("id")), lit(n)).as("x"),
+      pmod(xxhash64(col("id"), lit(7)), lit(n)).as("y"))
+    def littered(tag: String): String = {
+      val path = java.nio.file.Files.createTempDirectory(tag).toString + "/facts"
+      (0 until 4).foreach(i =>
+        df.filter(pmod(col("row_id"), lit(4)) === i).coalesce(1)
+          .write.mode("append").parquet(path))
+      path
+    }
+    def rowIds(path: String) = spark.read.parquet(path)
+      .select("row_id").collect().map(_.getLong(0)).sorted.toSeq
+    val want = (0L until n).toSeq
+    val conf = spark.sparkContext.hadoopConfiguration
+    // a crash between rename(live -> __old) and rename(staged -> live):
+    // __old is the only copy of the facts
+    val stranded = littered("zcompact_stranded")
+    val fs = new Path(stranded).getFileSystem(conf)
+    assert(fs.rename(new Path(stranded), new Path(stranded + "__old")))
+    val (before, after) = Bucketing.compactZOrdered(spark, stranded,
+      Seq("x", "y"))
+    assert(before === 4 && after === 1, s"$before -> $after")
+    assert(rowIds(stranded) === want, "the stranded facts must be restored")
+    assert(!fs.exists(new Path(stranded + "__old")))
+    // a crash after the swap, before the aside was deleted: __old is a
+    // stale copy beside the live dir, and restoring it would roll back
+    val stale = littered("zcompact_stale")
+    FileUtil.copy(fs, new Path(stale), fs, new Path(stale + "__old"), false,
+      conf)
+    Bucketing.compactZOrdered(spark, stale, Seq("x", "y"))
+    assert(rowIds(stale) === want, "every row exactly once")
+    assert(!fs.exists(new Path(stale + "__old")),
+      "a stale __old must be dropped")
+  }
+
   test("writeZOrdered rejects empty / all-null z-columns with a clear error") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("zguard_spec").toString

@@ -1424,5 +1424,16 @@ class IvfIndexSpec extends SparkTestBase {
       batchId = 0L, lane = "lemb")
     assert(rows() === 260L,
       "every lane's ledger must survive the purge swap")
+    // a lane's ledger torn between its delete and its rename (tmp only)
+    // still records the batch: a refine swap carries it, and the replay
+    // after the swap skips
+    assert(fs.rename(
+      new org.apache.hadoop.fs.Path(dir, "_maintain_ledger_lemb"),
+      new org.apache.hadoop.fs.Path(dir, "_maintain_ledger_lemb.tmp")))
+    IvfIndex.refineInPlace(spark, dir, maxCellRows = 500)
+    IvfIndex.maintainAppend(spark, dir, df(unit(3, 30)), 500,
+      batchId = 0L, lane = "lemb")
+    assert(rows() === 260L,
+      "a tmp-only lane ledger must survive the refine swap")
   }
 }

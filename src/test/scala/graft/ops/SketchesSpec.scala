@@ -249,6 +249,28 @@ class SketchesSpec extends SparkTestBase {
     assert(!fs.exists(old), "stale aside must be deleted, not restored")
   }
 
+  test("maintain drops a torn first write: a staged copy with no live summary and no aside") {
+    // a crash in the FIRST maintain, before its staged summary was
+    // renamed in, leaves only `__staging`: nothing was ever live, and the
+    // copy may be incomplete — it is dropped, not promoted
+    val dir = java.nio.file.Files.createTempDirectory("summarytorn")
+      .toString + "/s"
+    val batches = Seq(0, 1).map(i => events.filter(col("event_id") % 2 === i))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new org.apache.hadoop.fs.Path(dir + "__staging")
+    Sketches.summarize(batches(0), Keys, "value", "user_id")
+      .write.parquet(staging.toString)
+    Sketches.maintain(spark, dir, batches(1), Keys, "value", "user_id")
+    def counts(df: org.apache.spark.sql.DataFrame) = Sketches.report(df)
+      .select(col("event_type"), col("n_rows")).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toMap
+    assert(counts(spark.read.parquet(dir)) ===
+      counts(Sketches.summarize(batches(1), Keys, "value", "user_id")),
+      "the summary after a torn first write is the delta alone")
+    assert(!fs.exists(staging), "the torn staged copy must be dropped")
+  }
+
   test("KLL k=32 replay (n=1047, seeds 0/1): error within the k-dependent envelope") {
     // The r11 flaky-red replay cases: at k=32 these measure ~3.4%/3.7% rank
     // error — EXPECTED within KLL's O(1/k) envelope (max(0.02, 2.8/k) =

@@ -53,6 +53,19 @@ class SoABinSourceSpec extends SparkTestBase {
     assert(back.except(src).isEmpty && src.except(back).isEmpty)
   }
 
+  test("DSv2 write: a rename that returns false fails the write and leaves no tmp file") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("soarefuse").toString
+    val src = Seq((0L, 0L, 1f, 2f, 3f, 1f), (0L, 1L, 4f, 5f, 6f, 1f))
+      .toDF("step", "particle_id", "ux", "uy", "uz", "flag")
+    intercept[Exception] {
+      src.write.format("graft.sources.SoABinSource")
+        .option("path", s"refuserename://$dir").mode("append").save()
+    }
+    // no snapshot published, and the aborted write dropped its tmp files
+    assert(new java.io.File(dir).list().toSeq === Nil)
+  }
+
   test("column pruning reaches the scan (PosItem.ini-style projection)") {
     assume(Files.exists(Paths.get(golden)))
     val pruned = viaV2(golden).select("uy")

@@ -2044,25 +2044,51 @@ class StreamingSpec extends SparkTestBase {
       === Some((1L, 0L, 1L)))
   }
 
-  test("curation cursor ledger: interrupted swap (tmp only) recovers; corrupt live record refuses loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("curledger").toString
-    graft.ops.CurationFlow.writeLedger(spark, dir, 3L, 100L, 250L)
-    assert(graft.ops.CurationFlow.readLedger(spark, dir)
-      === Some((3L, 100L, 250L)))
-    // crash between the delete and the rename: only a complete tmp left
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fin = new org.apache.hadoop.fs.Path(dir, "_cursor")
-    val tmp = new org.apache.hadoop.fs.Path(dir, "_cursor.tmp")
-    assert(fs.rename(fin, tmp))
-    assert(graft.ops.CurationFlow.readLedger(spark, dir)
-      === Some((3L, 100L, 250L))) // promoted
-    assert(fs.exists(fin) && !fs.exists(tmp))
-    // a live record that does not parse is refused, not guessed at
-    val out = fs.create(fin, true)
-    out.write("not,a".getBytes("UTF-8")); out.close()
-    intercept[java.io.IOException] {
-      graft.ops.CurationFlow.readLedger(spark, dir)
+  test("small records (cursor ledger, maintain ledger, maintain sidecar, vecflow params): a tmp-only record is promoted, an unparseable tmp-only one reads absent, a corrupt live one is refused") {
+    import org.apache.hadoop.fs.Path
+    val fsOf = (d: String) =>
+      new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    import spark.implicits._
+    val one = Seq((1L, Seq(1f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+    // each record: its file, its real writer and its real reader
+    val records: Seq[(String, String => Unit, String => Option[Any])] = Seq(
+      ("_cursor",
+        d => graft.ops.CurationFlow.writeLedger(spark, d, 3L, 100L, 250L),
+        d => graft.ops.CurationFlow.readLedger(spark, d)),
+      ("_maintain_ledger_ing",
+        d => graft.ops.IvfIndex.writeMaintainLedger(fsOf(d), d, 7L, "ing"),
+        d => graft.ops.IvfIndex.readMaintainLedger(fsOf(d), d, "ing")),
+      ("_graft_maintain.json",
+        d => graft.ops.IvfIndex.writeMaintainSidecar(fsOf(d), d, 0.75, 2L),
+        d => graft.ops.IvfIndex.readMaintainSidecar(fsOf(d), d)),
+      ("_graft_vecflow.json",
+        d => graft.ops.VectorFlow.ingest(d, one, 0L,
+          graft.ops.VectorFlow.Params(dim = 4)),
+        d => graft.ops.VectorFlow.frozenDim(spark, d)))
+    def put(fs: org.apache.hadoop.fs.FileSystem, p: Path, body: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    for ((file, write, read) <- records) {
+      val dir = java.nio.file.Files.createTempDirectory("record").toString
+      val fs = fsOf(dir)
+      val (live, tmp) = (new Path(dir, file), new Path(dir, file + ".tmp"))
+      write(dir)
+      val want = read(dir)
+      assert(want.isDefined, s"$file: the writer left no record")
+      // crash between the delete and the rename: only a complete tmp left
+      assert(fs.rename(live, tmp))
+      assert(read(dir) === want, s"$file: a complete tmp was not promoted")
+      assert(fs.exists(live) && !fs.exists(tmp), s"$file: promote left a tmp")
+      // a torn first write: no live record, a tmp that does not parse
+      assert(fs.delete(live, false))
+      put(fs, tmp, "{")
+      assert(read(dir) === None, s"$file: a torn tmp must read as absent")
+      assert(!fs.exists(tmp), s"$file: a torn tmp must be dropped")
+      // a live record that does not parse is refused, not guessed at
+      put(fs, live, "not,a")
+      intercept[java.io.IOException](read(dir))
     }
   }
 }
